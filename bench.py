@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from facebook_ads_bigquery_etl_spark.operators import dedup as dd  # noqa: E402
+from facebook_ads_bigquery_etl_spark.operators.materialize import invocation  # noqa: E402
 from facebook_ads_bigquery_etl_spark.operators import similarity as sim  # noqa: E402
 from facebook_ads_bigquery_etl_spark.plans import QUERIES  # noqa: E402
 from facebook_ads_bigquery_etl_spark.plans.registry import load_tables  # noqa: E402
@@ -39,12 +40,16 @@ from facebook_ads_bigquery_etl_spark.session import get_spark  # noqa: E402
 # The registered minhash/ann queries are ACCURACY AUDITS (they also run
 # the exact quadratic baseline so the driver can hash-check recall);
 # benching them would time the baseline the sketch exists to avoid.
-# The bench times the scale-path operators directly instead.
+# The bench times the scale-path operators directly instead. Each is
+# wrapped like a registered query: one call is one materialization
+# invocation (operators/materialize).
+@invocation
 def _minhash_lsh_pairs(spark, sf_dir):
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     return dd.minhash_dup_pairs(docs, threshold=0.7, num_perm=64, bands=16, ngram=3)
 
 
+@invocation
 def _ann_lsh_topk(spark, sf_dir):
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     return sim.lsh_cosine_topk(
@@ -52,24 +57,28 @@ def _ann_lsh_topk(spark, sf_dir):
     )
 
 
+@invocation
 def _keep_best_scale(spark, sf_dir):
     from facebook_ads_bigquery_etl_spark.plans.llm import dedup_keep_best_scale
 
     return dedup_keep_best_scale(spark, sf_dir)
 
 
+@invocation
 def _semantic_dedup_scale(spark, sf_dir):
     from facebook_ads_bigquery_etl_spark.plans.llm import semantic_dedup_scale
 
     return semantic_dedup_scale(spark, sf_dir)
 
 
+@invocation
 def _semantic_dedup_ivf_scale(spark, sf_dir):
     from facebook_ads_bigquery_etl_spark.plans.llm import semantic_dedup_ivf_scale
 
     return semantic_dedup_ivf_scale(spark, sf_dir)
 
 
+@invocation
 def _ann_ivfpq_serve(spark, sf_dir):
     # serving path ONLY (train + encode + probe + ADC + re-rank): the
     # registered ann_ivfpq_topk is the recall AUDIT, which also runs

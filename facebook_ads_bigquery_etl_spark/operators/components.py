@@ -48,9 +48,9 @@ duplicate-free and carries no self-loops.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from .dedup import tracked_local_checkpoint
 from pyspark.sql import functions as F
+
+from .materialize import checkpoint
 
 
 def connected_components(
@@ -77,7 +77,7 @@ def connected_components(
     # first round reads it several times); the pair frame is released
     # once sym is materialized.
     e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).persist()
-    sym = e.union(e.select(F.col("dst"), F.col("src"))).transform(tracked_local_checkpoint)
+    sym = e.union(e.select(F.col("dst"), F.col("src"))).transform(checkpoint)
     e.unpersist(blocking=False)
 
     maps: list[DataFrame] = []
@@ -97,7 +97,7 @@ def connected_components(
         labels = (
             labels.join(step, "comp", "left")
             .select("node", F.coalesce("c2", "comp").alias("comp"))
-            .transform(tracked_local_checkpoint)
+            .transform(checkpoint)
         )
         maps.append(labels)
         # contract: map both endpoints through the labels, keep only
@@ -112,7 +112,7 @@ def connected_components(
             .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
             .where(F.col("src") != F.col("dst"))
             .distinct()
-            .transform(tracked_local_checkpoint)
+            .transform(checkpoint)
         )
         if nxt.limit(1).count() == 0:
             break

@@ -23,224 +23,12 @@ deterministic across runs, no Python in the row path.
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import materialize
 from .exprs import let
 from .text import tokens, with_fingerprint
-
-
-# Tracked materialization barriers. persist() is the only barrier that
-# reliably frees from PySpark (localCheckpoint blocks are held by
-# JVM-side Dataset references the Python GC never releases — verified
-# empirically: a checkpointed, dereferenced frame survives 20 System.gc
-# passes). The cost of persist() is the CacheManager entry leaking for
-# the session's lifetime if nobody unpersists — so every barrier is
-# registered here, the registry is LRU-capped (a long-lived session
-# running thousands of dedup queries bleeds AT MOST _BARRIER_CAP small
-# frames, not one per query), and ``release_caches()`` drops everything
-# for session teardown / tests. Evicting a not-yet-consumed barrier is
-# safe: the query recomputes (slower, never wrong).
-_BARRIER_CAP = 8
-_BARRIERS: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-
-
-def _barrier(df: DataFrame) -> DataFrame:
-    # Lazy persist only. When a barrier's consumers include SEVERAL
-    # BroadcastExchange subtrees of one query, Spark's parallel
-    # broadcast builder threads race on the not-yet-materialized cache
-    # and each recompute the whole subtree (first-writer-wins cache
-    # puts — correct but N× the cluster work). The fix for that shape
-    # is NOT an eager persist here — measured as a wall-clock LOSS at
-    # both multi-broadcast sites (minhash 1.27→1.58 s, covariance
-    # variants, r14) because the serial arming pass costs more than
-    # the parallel duplicate work hides — but materializing the SMALL
-    # derived frames the broadcasts actually consume (see
-    # linalg.moment_sums), which arms this cache as a side effect of
-    # the first small materialization and keeps every later consumer
-    # on materialized data.
-    # Keyed by the analyzed plan's semantic hash: persist() on a plan
-    # that is already in the CacheManager is a no-op (one shared cache
-    # entry), so holding TWO live registrations of the same plan would
-    # let an LRU eviction of the old one unpersist the new one's cache
-    # out from under it (observed as a vanished InMemoryTableScan in
-    # the plan audit when the same query ran twice in one session).
-    # Same plan → same registry slot; the hit path below retires the
-    # old registration before installing the new one.
-    #
-    # The key must ALSO carry the output column names: semanticHash
-    # canonicalizes aliases away, so two queries computing the same
-    # frame under different names (doc_perplexity_filter's
-    # `cross_entropy` vs perplexity_curriculum_mix's `ce`, r13) hash
-    # identically — returning the cached twin would silently rename
-    # the caller's columns and every downstream reference breaks
-    # (observed as UNRESOLVED_COLUMN in the plan audit). Alias twins
-    # get separate registry slots; the CacheManager still shares one
-    # underlying InMemoryRelation via sameResult, and an eviction of
-    # one twin merely re-arms (or recomputes) the other — slower,
-    # never wrong, per this registry's contract.
-    try:
-        key = (
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            tuple(df.columns),
-        )
-    except Exception:
-        key = (id(df), tuple(df.columns))
-    # Retire EVERY live registration sharing this plan's semanticHash —
-    # not just the exact (hash, columns) key. A same-key hit means the
-    # SAME canonical plan was registered by an earlier query invocation
-    # (the bench's best-of-N loop): serving that entry's ARMED cache
-    # would hand invocation N the data invocation N-1 computed —
-    # cross-invocation result memoization, which the bench contract
-    # forbids (every invocation must compute from the parquet inputs;
-    # measured r13: a barrier family read ~1.0 s with the stale cache
-    # vs ~2.2 s honestly recomputed). An ALIAS TWIN (same hash,
-    # different column names) is the same leak one step removed: it
-    # occupies a different registry slot, but its armed
-    # InMemoryRelation matches this plan via sameResult, so the
-    # df.persist() below would be a CacheManager no-op against it and
-    # this invocation would read the twin's materialized data (r14,
-    # ADVICE r13). Retiring by hash closes both paths; the
-    # single-registration invariant still holds (no two live
-    # registrations share one CacheManager entry, so LRU eviction can
-    # never unpersist a newer twin's cache), and within one invocation
-    # consumers reuse the ONE returned frame, which is where the
-    # legitimate reuse lives.
-    for stale in [k for k in _BARRIERS if k[0] == key[0]]:
-        _BARRIERS.pop(stale).unpersist(blocking=False)
-    out = df.persist()
-    _BARRIERS[key] = out
-    while len(_BARRIERS) > _BARRIER_CAP:
-        _, old = _BARRIERS.popitem(last=False)
-        old.unpersist(blocking=False)
-    return out
-
-
-# Public face of the registry for plan modules pinning float-derived
-# rank inputs (orders_pareto / customer_rfm_segments /
-# perplexity_curriculum_mix): a bare .persist() there leaked a
-# CacheManager entry per run (advisor r10). Determinism note: those
-# pins must stay live until the caller collects the returned frame;
-# the LRU cap (8) far exceeds the barriers registered between one
-# query's construction and its collection in any driver/bench flow
-# (queries run construct→collect serially), so eviction-in-flight is
-# a non-issue there — and even then the recompute is merely the same
-# double-rounding risk the pin narrows, never a crash.
-tracked_persist = _barrier
-
-
-def release_caches() -> int:
-    """Unpersist every live barrier and tracked checkpoint this module
-    has registered; returns how many were released. Call after a query
-    sweep (or rely on the LRU caps for steady-state bounds)."""
-    n = 0
-    while _BARRIERS:
-        _, df = _BARRIERS.popitem()
-        df.unpersist(blocking=False)
-        n += 1
-    while _CKPTS:
-        _, rdd = _CKPTS.popitem()
-        try:
-            rdd.unpersist(False)
-        except Exception:
-            pass  # context already stopped: blocks are gone anyway
-        n += 1
-    return n
-
-
-# Tracked LOCAL CHECKPOINTS. localCheckpoint is the measured-fastest
-# honest materialize-once primitive for the plan-level reuse barriers
-# (r13 change 20: registry persist pays semanticHash analysis +
-# columnar encode + churn; LAZY persist under parallel
-# BroadcastExchange consumers recomputes the subtree N×). Its cost is
-# the leak the r13 advisor flagged: checkpoint blocks are pinned by
-# JVM-side Dataset references PySpark never releases, so every bench
-# iteration / sweep invocation abandoned its predecessor's
-# MEMORY_AND_DISK blocks for the session lifetime. This registry holds
-# the checkpointed plan's underlying RDD handle keyed like _BARRIERS
-# ((pre-checkpoint semanticHash, columns)); re-registering the same
-# plan — the same query invoked again — unpersists the PREVIOUS
-# invocation's blocks (verified: RDDStorageInfo drops to zero), so a
-# long session holds at most one live checkpoint per (plan, site) plus
-# the _CKPT_CAP LRU backstop for never-re-registered plans (e.g. the
-# contraction loop's LogicalRDD-rooted rounds, whose hash embeds the
-# per-invocation RDD and never repeats).
-#
-# UNLIKE a persisted barrier, freeing a checkpoint is destructive: the
-# lineage is truncated, so a consumer reading a freed checkpoint
-# CRASHES (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) instead of recomputing.
-# Two guards make that unreachable in every driver flow: (1) retire
-# happens only when the SAME plan is re-registered, and query
-# invocations run construct→collect serially (bench, oracle drive,
-# tests — nothing overlaps two invocations of one query); (2) the LRU
-# cap is set far above the maximum checkpoints one invocation holds
-# live at once (≤ ~15, the contraction loop's worst case), so cap
-# eviction only ever reaps frames from completed invocations.
-_CKPT_CAP = 64
-_CKPTS: "OrderedDict[tuple, object]" = OrderedDict()
-
-
-def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` whose blocks are freed when the same
-    plan is checkpointed again (the next invocation of the same query)
-    instead of leaking for the session lifetime — see the registry
-    note above. Never serves a cached frame: every call materializes
-    the caller's own computation (the bench-honesty contract)."""
-    try:
-        key = (
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            tuple(df.columns),
-        )
-    except Exception:
-        key = (object(), tuple(df.columns))  # unique: cap-bounded only
-    out = df.localCheckpoint()
-    # retire by hash (any columns): an alias twin's blocks are equally
-    # dead once its invocation completed — same reasoning as _barrier
-    for stale in [k for k in _CKPTS if k[0] == key[0]]:
-        old = _CKPTS.pop(stale)
-        try:
-            old.unpersist(False)
-        except Exception:
-            pass
-    try:
-        # the LogicalRDD under the checkpointed Dataset IS the
-        # persisted RDD; holding its py4j handle lets release free the
-        # blocks explicitly
-        _CKPTS[key] = out._jdf.queryExecution().analyzed().rdd()
-    except Exception:
-        return out  # untracked (non-LogicalRDD shape): old behavior
-    while len(_CKPTS) > _CKPT_CAP:
-        _, old = _CKPTS.popitem(last=False)
-        try:
-            old.unpersist(False)
-        except Exception:
-            pass
-    return out
-
-
-# Plan-audit / measurement switch: with SPARK_GRAFT_NO_MATERIALIZE set,
-# the plan-level reuse barriers become pass-throughs so
-# scripts/gen_plans.py can assert the PRE-materialization physical
-# shape (vocab broadcast joins, filter pushdowns, Generates) that the
-# materialized final plan no longer witnesses (r14, ADVICE r13), and so
-# A/B measurement can time the no-reuse form without a worktree. Never
-# set in any query/bench/driver flow; algorithmic checkpoints (the
-# contraction loop, _spread, the rank pins) do NOT honor it — only the
-# multi-consumer reuse sites, where disabling merely replays subtrees
-# (slower, never wrong).
-_NO_MATERIALIZE_ENV = "SPARK_GRAFT_NO_MATERIALIZE"
-
-
-def materialize_once(df: DataFrame) -> DataFrame:
-    """Reuse barrier for a subtree consumed by 2+ downstream branches
-    of one query: eager tracked localCheckpoint (see above), or a
-    no-op under ``SPARK_GRAFT_NO_MATERIALIZE`` (plan audits / A/B)."""
-    if os.environ.get(_NO_MATERIALIZE_ENV):
-        return df
-    return tracked_local_checkpoint(df)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -256,8 +44,8 @@ def _spread(df: DataFrame) -> DataFrame:
     single input partition — observed 6× slowdown. An InMemoryRelation
     is a barrier the optimizer does not cross, so downstream compute
     genuinely runs on `target` partitions. Only narrow inputs pay the
-    (tiny) cache, and the barrier registry (see ``_barrier``) bounds
-    its lifetime.
+    (tiny) cache, which lives until the next query invocation opens
+    (operators/materialize).
 
     Width probe: ``inputFiles()`` (a file-index lookup on the analyzed
     plan), NOT ``df.rdd.getNumPartitions()`` — materializing the RDD
@@ -270,7 +58,7 @@ def _spread(df: DataFrame) -> DataFrame:
     except Exception:
         width = 0  # non-file source: assume narrow, spread
     if width < target:
-        return _barrier(df.repartition(target))
+        return materialize.persist(df.repartition(target))
     return df
 
 
@@ -506,7 +294,7 @@ def jaccard_pairs_prefix(
     # carried duplicate (a_id, b_id) rows with conflicting jaccard
     # values, breaking the documented result-set identity with
     # jaccard_pairs. On clean input the groupBy collapses nothing.
-    base = _barrier(
+    base = materialize.persist(
         _spread(df)
         .select(F.col(id_col), word_shingles(text_col, ngram).alias("sh"))
         .filter(F.size("sh") > 0)
@@ -633,8 +421,8 @@ def minhash_dup_pairs(
             f" num_perm={num_perm} exactly"
         )
     rows_per_band = num_perm // bands
-    # Materialize the hashed-shingle frame once (tracked _barrier —
-    # see its registry notes): BOTH downstream branches (banding,
+    # Materialize the hashed-shingle frame once (a lazy
+    # materialize.persist): BOTH downstream branches (banding,
     # exact-verify) consume it, and without the materialization
     # barrier each branch re-runs tokenize→shingle→hash AND compiles
     # its own copy of the nested expression tree (measured 10×
@@ -647,7 +435,7 @@ def minhash_dup_pairs(
     # the oracles use, so the LSH path and its exact-verify see one
     # set per document. On clean input the groupBy collapses nothing;
     # its exchange rides the id key the band join shuffles anyway.
-    sh_df = _barrier(
+    sh_df = materialize.persist(
         _spread(df)
         .select(F.col(id_col), _shingle_hashes(text_col, ngram).alias("shh"))
         .filter(F.size("shh") > 0)
@@ -666,7 +454,7 @@ def minhash_dup_pairs(
         F.sequence(F.lit(0), F.lit(num_perm - 1)),
         lambda i: F.array_min(F.transform(F.col("shh"), lambda h: F.xxhash64(h, i))),
     )
-    sig_df = _barrier(sh_df.select(id_col, sig.alias("signature")))
+    sig_df = materialize.persist(sh_df.select(id_col, sig.alias("signature")))
     band_arr = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.xxhash64(
@@ -813,7 +601,7 @@ def simhash_exact_pairs(
     self-join — the correctness baseline :func:`simhash_candidates` is
     audited against. O(n²) pair space: gate/test use only, never the
     100 TB path (the pigeonhole bucketing is)."""
-    sk = _barrier(simhash(df, text_col, id_col))
+    sk = materialize.persist(simhash(df, text_col, id_col))
     ham = F.aggregate(
         F.zip_with("ca", "cb", lambda x, y: F.bit_count(x.bitwiseXOR(y))),
         F.lit(0),

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import materialize
+
 _PARTIAL_SCHEMA = "n long, s array<double>, g array<double>"
 
 
@@ -79,13 +81,14 @@ def moment_sums(
     DataFrames: ``counts`` (1 row: n), ``sums`` (d rows: i, s) and
     ``grams`` (d² rows: k, g) — ``k = i*d + j`` row-major. All three
     derive from ONE mapInPandas pass; the explode/group frames are
-    partial-count-sized, not data-sized. The partials frame is
-    persisted through the shared barrier registry (operators/dedup):
+    partial-count-sized, not data-sized. The partials frame is a lazy
+    ``materialize.persist`` entry of the current query invocation:
     without it each of the three aggregates — plus pca_audit's
     reconstruction pass — re-executes the full corpus scan (ADVICE
-    r3); with it the vectors are read exactly once per moment set."""
-    from .dedup import _barrier, materialize_once
-
+    r3); with it the vectors are read exactly once per moment set.
+    Two moment sets over the same frame in one invocation (the
+    covariance_probe and pca_audit shapes) are separate entries that
+    stay readable until the next invocation opens."""
     # r14 fix for a measured 5× work amplification: covariance_probe
     # fans the moment frames into FIVE BroadcastExchange subtrees
     # (s_i, s_j, g_ii, g_ij, counts). Spark builds broadcasts on a
@@ -100,14 +103,14 @@ def moment_sums(
     # corpus pass exactly once. Measured best-wall across the three
     # forms (lazy / eager partials / this): this one wins while
     # cutting summed job time ~5×.
-    p = _barrier(gram_partials(df, col, dim))
-    counts = materialize_once(p.agg(F.sum("n").alias("n")))
-    sums = materialize_once(
+    p = materialize.persist(gram_partials(df, col, dim))
+    counts = materialize.checkpoint(p.agg(F.sum("n").alias("n")))
+    sums = materialize.checkpoint(
         p.select(F.posexplode("s").alias("i", "v"))
         .groupBy("i")
         .agg(F.sum("v").alias("s"))
     )
-    grams = materialize_once(
+    grams = materialize.checkpoint(
         p.select(F.posexplode("g").alias("k", "v"))
         .groupBy("k")
         .agg(F.sum("v").alias("g"))

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators import casting as cst
-from ..operators.dedup import materialize_once
+from ..operators import materialize
 from ..operators.asof import asof_join
 from ..operators.exprs import knuth_bucket
 from ..operators.rank import with_global_ntile
@@ -1979,24 +1979,23 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each stage frame is consumed twice (the next stage's join + its
     # own count) — materialize the user-grain stage frames once (r13
     # optimization, guide §5: eager checkpoint, the honest-fastest
-    # barrier measured; the registry-persist variant paid semanticHash
-    # analysis + cache churn per run) so the events scan runs once per
-    # stage instead of once per consumer chain; the frames are one
-    # timestamp per surviving user, tiny at any scale. The view-stage
-    # pushdown now lives in the materialization pass — witnessed in
-    # plans/r13/funnel_conversion_before.txt.
+    # barrier measured) so the events scan runs once per stage instead
+    # of once per consumer chain; the frames are one timestamp per
+    # surviving user, tiny at any scale. The view-stage pushdown now
+    # lives in the materialization pass — asserted there by
+    # scripts/gen_plans.py PRE_AUDITS.
     v = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-    ).transform(materialize_once)
+    ).transform(materialize.checkpoint)
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-    ).transform(materialize_once)
+    ).transform(materialize.checkpoint)
     p = (
         ev.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")
@@ -2310,10 +2309,10 @@ def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev value straddling a rounding/bucket boundary could otherwise
     change buckets between the counts action and the window action
     (advisor r9 finding). All actions now read one pinned
-    materialization, matching customer_rfm_segments; the pin rides
-    the tracked barrier registry (advisor r10: a bare persist() here
-    leaked a CacheManager entry per run)."""
-    from ..operators.dedup import tracked_persist
+    materialization, matching customer_rfm_segments; the pin is a
+    ``materialize.persist`` entry, freed when the next query invocation
+    opens (advisor r10: a bare persist() here leaked a CacheManager
+    entry per run)."""
     from ..operators.rank import with_global_cumsum
 
     orders = load_tables(spark, sf_dir, "orders")["orders"].withColumn(
@@ -2321,7 +2320,7 @@ def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         # input (r11 extremes sweep)
         "o_totalprice", cst.finite_or_null(F.col("o_totalprice"))
     )
-    per_cust = tracked_persist(
+    per_cust = materialize.persist(
         orders.groupBy("o_custkey")
         .agg(
             F.round(F.sum("o_totalprice"), 2)
@@ -3165,7 +3164,7 @@ def copurchase_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select("l_orderkey", "l_partkey").distinct()
     baskets = b.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    ).transform(materialize_once)
+    ).transform(materialize.checkpoint)
     n_ord = baskets.agg(F.count(F.lit(1)).alias("n"))
     item = (
         baskets.select(F.explode("ps").alias("l_partkey"))
@@ -3273,22 +3272,21 @@ def copurchase_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch replayed the full basket-pair generation from the base
     # scan — 44 parquet scans of lineitem and 68 exchanges in one plan
     # (r13 optimization, guide §5: reuse ≫ recompute). Materialize it
-    # once (eager checkpoint — measured faster than the registry
-    # persist, whose semanticHash analysis + columnar encode + cache
-    # churn cost more per run than the replay it saves at this frame
-    # size); every consumer then reads the materialized edge
-    # partitions. Same for the degree table, which is
+    # once (eager checkpoint — measured faster than a lazy persist,
+    # whose columnar encode costs more per run than the replay it
+    # saves at this frame size); every consumer then reads the
+    # materialized edge partitions. Same for the degree table, which is
     # consumed four times (two orientation sides, the rank map, the
     # wedge-count readout). At scale the edge list is the dominant
     # intermediate — recomputing it per branch is the textbook reuse
     # failure, not a local quirk.
-    e = e.transform(materialize_once)
+    e = e.transform(materialize.checkpoint)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select("v"))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
-    ).transform(materialize_once)
+    ).transform(materialize.checkpoint)
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     # orient: lower (degree, id) -> higher (degree, id)
@@ -3946,12 +3944,12 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle exact. ``base`` is persisted because each score runs
     count + quantile + offset actions over it; the skinny
     (custkey, score) frames join back on the unique customer key. The
-    pin rides the tracked barrier registry (advisor r10: bare
-    persist() leaked a CacheManager entry per run)."""
-    from ..operators.dedup import tracked_persist
+    pin is a ``materialize.persist`` entry, freed when the next query
+    invocation opens (advisor r10: bare persist() leaked a
+    CacheManager entry per run)."""
 
     orders = load_tables(spark, sf_dir, "orders")["orders"]
-    base = tracked_persist(
+    base = materialize.persist(
         orders.groupBy("o_custkey").agg(
             F.datediff(
                 F.lit("1998-12-31").cast("date"),

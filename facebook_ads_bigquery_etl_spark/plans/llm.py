@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators import components as cc
 from ..operators import dedup as dd
-from ..operators.dedup import materialize_once
+from ..operators import materialize
 from ..operators import mixing as mx
 from ..operators import multimodal as mm
 from ..operators import packing as pk
@@ -199,10 +199,10 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= 8)
         .select("a_id", "b_id")
     )
-    # Tracked barrier, not a bare persist(): both audits consume the
-    # exact-pair frame, and the dedup barrier registry bounds the cache
-    # lifetime (a bare persist() here leaked an entry per run).
-    true_pairs = dd._barrier(dd.simhash_exact_pairs(docs, max_hamming=8))
+    # Invocation-scoped persist, not a bare persist(): both audits
+    # consume the exact-pair frame, and the next query invocation frees
+    # the cache (a bare persist() here leaked an entry per run).
+    true_pairs = materialize.persist(dd.simhash_exact_pairs(docs, max_hamming=8))
     audit = _pair_set_audit(
         found, true_pairs.select("a_id", "b_id"), recall_floor_pct=40
     )
@@ -575,7 +575,7 @@ def _ann_recall_audit(
     # reuse shape as the r13 materialize-once sites; the frame is
     # queries×k rows, tiny at any scale, while the replay it removes is
     # corpus-sized)
-    exact = materialize_once(
+    exact = materialize.checkpoint(
         sim.cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=k)
     )
     hits = (
@@ -2209,9 +2209,9 @@ def doc_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vocab-sized and doc-sized; eager checkpoint); the token stream
     # then runs exactly twice — once to count, once to score (r13
     # optimization, guide §5). The vocab broadcast join now lives in
-    # the materialization pass — witnessed in
-    # plans/r13/doc_perplexity_filter_before.txt.
-    wc = tok.groupBy("w").agg(F.count("*").alias("c")).transform(materialize_once)
+    # the materialization pass — asserted there by
+    # scripts/gen_plans.py PRE_AUDITS.
+    wc = tok.groupBy("w").agg(F.count("*").alias("c")).transform(materialize.checkpoint)
     tot = wc.agg(F.sum("c").alias("t"))
     lp = wc.join(F.broadcast(tot)).select(
         "w", F.log(F.col("c") / F.col("t")).alias("logp")
@@ -2223,7 +2223,7 @@ def doc_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_tokens"),
             F.round(-F.avg("logp"), 4).alias("cross_entropy"),
         )
-    ).transform(materialize_once)
+    ).transform(materialize.checkpoint)
     thr = per_doc.agg(F.round(F.avg("cross_entropy"), 4).alias("mean_ce"))
     return per_doc.join(F.broadcast(thr)).select(
         "doc_id",
@@ -3189,7 +3189,7 @@ def curation_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("digit_ratio"),
     )
-    m = m.transform(materialize_once)
+    m = m.transform(materialize.checkpoint)
     q = m.where(
         F.col("n_words").between(50, 100000)
         & F.col("mwl").between(2.0, 10.0)
@@ -3443,7 +3443,7 @@ def bloom_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once (eager checkpoint); the 100× stress already showed the hash
     # stage is the dominant term, so at scale the 3× replay is 3 full
     # corpus passes.
-    hashed = hashed.transform(materialize_once)
+    hashed = hashed.transform(materialize.checkpoint)
     bench = hashed.filter(F.col("doc_id") < 20)
     bench_bits = (
         bench.select(F.explode(F.array("b1", "b2", "b3")).alias("bit"))
@@ -3622,9 +3622,9 @@ def perplexity_curriculum_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = wc.join(F.broadcast(tot)).select(
         "w", F.log(F.col("c") / F.col("t")).alias("logp")
     )
-    # pin rides the tracked barrier registry (advisor r10: bare
-    # persist() leaked a CacheManager entry per run)
-    pd_ = dd.tracked_persist(
+    # the pin is freed when the next query invocation opens (advisor
+    # r10: bare persist() leaked a CacheManager entry per run)
+    pd_ = materialize.persist(
         tok.join(F.broadcast(lp), "w")
         .groupBy("doc_id")
         .agg(
@@ -4403,9 +4403,9 @@ def embedding_outlier_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the vec-grain frame once (eager checkpoint) instead
     # of replaying the two exploded-vector passes per consumer (r13
     # optimization, guide §5); the posexplode fan-out now lives in the
-    # materialization pass — witnessed in
-    # plans/r13/embedding_outlier_quarantine_before.txt
-    dist = dist.transform(materialize_once)
+    # materialization pass — asserted there by scripts/gen_plans.py
+    # PRE_AUDITS
+    dist = dist.transform(materialize.checkpoint)
     thr = dist.groupBy("label").agg(
         F.round(F.avg("mdist") + 2 * F.stddev_pop("mdist"), 4).alias("cut")
     )
@@ -5114,7 +5114,7 @@ def bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize once (eager checkpoint) — same 3-consumer replay as
     # bloom_decontaminate_13gram (r13 optimization, guide §5)
-    hashed = hashed.transform(materialize_once)
+    hashed = hashed.transform(materialize.checkpoint)
     bench = hashed.filter(F.col("doc_id") < 20)
     bench_bits = (
         bench.select(F.explode(F.array("b1", "b2", "b3")).alias("bit"))
@@ -5359,11 +5359,11 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference df table, the scored side) — materialize it once
     # (eager checkpoint) instead of replaying tokenize + shingle +
     # explode per consumer (r13 optimization, guide §5); the gram
-    # Generate now lives in the materialization pass — witnessed in
-    # plans/r13/ngram_novelty_scores_before.txt
+    # Generate now lives in the materialization pass — asserted there
+    # by scripts/gen_plans.py PRE_AUDITS
     grams = docs.select(
         "doc_id", F.explode(let(tokens("text"), _shingle)).alias("g")
-    ).transform(materialize_once)
+    ).transform(materialize.checkpoint)
     ref_grams = grams.filter(F.col("doc_id") % 7 < 2)
     n_ref = ref_grams.select("doc_id").distinct().count()
     ref = ref_grams.groupBy("g").agg(
@@ -5497,7 +5497,7 @@ def doc_kl_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization, guide §5; same shape as trigram_lm_train)
     tc = (
         ref_tri.groupBy("a", "b", "c").agg(F.count("*").alias("c3"))
-    ).transform(materialize_once)
+    ).transform(materialize.checkpoint)
     bc = tc.groupBy("a", "b").agg(F.sum("c3").alias("c2"))
     vocab = (
         docs.filter(F.col("doc_id") % 7 < 2)

@@ -25,15 +25,19 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.materialize import invocation
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and its oracle SQL) to the registry."""
+    """Decorator: add a query (and its oracle SQL) to the registry.
+    Each call of the query is one materialization invocation
+    (operators/materialize)."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
+        fn = QUERIES[name] = invocation(fn)
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -34,7 +34,7 @@ from ..streaming import (
     user_profile_stateful,
     user_running_totals,
 )
-from ..operators.dedup import materialize_once
+from ..operators import materialize
 from ..operators.exprs import knuth_bucket
 from ..operators.integrity import round_double_sql
 from .registry import load_tables, register
@@ -1258,7 +1258,7 @@ def stream_partial_session_eviction(
     # order and the staged batch files stay byte-identical (r13
     # optimization, guide §5.1; the writes were already sequential, so
     # unlike a parallel-subtree query nothing loses concurrency here)
-    ev = ev.transform(materialize_once)
+    ev = ev.transform(materialize.checkpoint)
 
     src = tempfile.mkdtemp(prefix="partial_sess_src_")
     try:

@@ -26,7 +26,7 @@ Usage: python scripts/dates_sweep.py [name ...]
        (writes /tmp/dates_sweep_r11.json)
 """
 import sys, os, math, json, datetime
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq

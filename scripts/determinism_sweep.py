@@ -27,7 +27,7 @@ Usage: python scripts/determinism_sweep.py [name ...]
        (writes /tmp/determinism_sweep_r11.json)
 """
 import sys, os, math, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SRC = os.environ.get("SPARK_GRAFT_DET_SF", "/root/testdata/sf0.001")
 

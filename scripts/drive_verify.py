@@ -7,9 +7,9 @@ partitions).
 
 Run from anywhere:  python scripts/drive_verify.py
 """
-import sys, tempfile, shutil
+import os, sys, tempfile, shutil
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
@@ -253,7 +253,6 @@ for name in SAMPLE:
 # 3. ETL write-path probe (exactly-once + quarantine + day partitions)
 from facebook_ads_bigquery_etl_spark.etl.facebook import run_facebook_pipeline
 from facebook_ads_bigquery_etl_spark.fixtures import FB_FIXTURE
-import os
 
 wh = tempfile.mkdtemp()
 try:

@@ -44,7 +44,7 @@ Usage: python scripts/duplicates_sweep.py [name ...]
        (writes /tmp/duplicates_sweep_r11.json)
 """
 import sys, os, math, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq

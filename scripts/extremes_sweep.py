@@ -32,7 +32,7 @@ Usage: python scripts/extremes_sweep.py [name ...]
        (writes /tmp/extremes_sweep_r11.json)
 """
 import sys, os, math, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import numpy as np
 import pyarrow as pa

@@ -670,15 +670,13 @@ AUDITS: dict[str, tuple[str, list[str], list[str]]] = {
 }
 
 
-# PRE-MATERIALIZATION audits (r14, ADVICE r13): the materialize-once
-# barriers (operators/dedup.materialize_once) move a subtree's plan
-# text out of the final EXPLAIN, so the properties below — which the
-# r13 audit deferred to static plans/r13/*_before.txt snapshots CI
-# never regenerates — are asserted on the query built with
-# SPARK_GRAFT_NO_MATERIALIZE=1 (the barrier becomes a pass-through; the
-# full lineage stays visible). A regression INSIDE the materialization
-# pass (a lost pushdown, a broadcast degrading) now fails the audit
-# again. query → (why, [plan substrings that MUST be present]).
+# PRE-MATERIALIZATION audits: a reuse barrier (operators/materialize)
+# moves a subtree's plan text out of the final EXPLAIN, so the
+# properties below are asserted on the plans of the frames the query's
+# invocation materialized — the plans that actually ran, barriers on.
+# A regression INSIDE the materialization pass (a lost pushdown, a
+# broadcast degrading) fails the audit.
+# query → (why, [plan substrings that MUST be present]).
 PRE_AUDITS: dict[str, tuple[str, list[str]]] = {
     "funnel_conversion": (
         "the view/click stage frames are materialized once; their "
@@ -714,13 +712,12 @@ PRE_AUDITS: dict[str, tuple[str, list[str]]] = {
 
 
 def pre_materialization_plan(queries, name, spark, sf):
-    """Build ``name`` with the reuse barriers disabled and return its
-    formatted plan (see PRE_AUDITS)."""
-    os.environ["SPARK_GRAFT_NO_MATERIALIZE"] = "1"
-    try:
-        return plan_of(queries[name](spark, sf))
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_MATERIALIZE", None)
+    """Build ``name`` and return the formatted plans of the frames its
+    invocation materialized (see PRE_AUDITS)."""
+    from facebook_ads_bigquery_etl_spark.operators import materialize
+
+    queries[name](spark, sf)
+    return "\n".join(plan_of(df) for df in materialize.inputs())
 
 
 def plan_of(df) -> str:
@@ -778,9 +775,8 @@ def main() -> int:
     out.append("## Pre-materialization audits")
     out.append("")
     out.append(
-        "Properties the materialize-once barriers move out of the final "
-        "plan, asserted on the query built with "
-        "`SPARK_GRAFT_NO_MATERIALIZE=1` (full lineage visible)."
+        "Properties the reuse barriers move out of the final plan, "
+        "asserted on the plans of the frames each query materialized."
     )
     out.append("")
     for name, (why, must) in PRE_AUDITS.items():

@@ -9,7 +9,7 @@ fixture build is duplicated small here).
 """
 import sys, os, math, json
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq

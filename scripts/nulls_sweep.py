@@ -49,7 +49,7 @@ Fast regression subset: tests/test_nulls_inputs.py (permanent gate).
 Usage: python scripts/nulls_sweep.py  (writes /tmp/nulls_sweep_r10.json)
 """
 import sys, os, math, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq

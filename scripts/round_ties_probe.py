@@ -34,10 +34,11 @@ Usage: python scripts/round_ties_probe.py
 Writes /tmp/round_ties_probe.json.
 """
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

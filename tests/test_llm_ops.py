@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from facebook_ads_bigquery_etl_spark.operators import dedup as dd
+from facebook_ads_bigquery_etl_spark.operators import materialize as mat
 from facebook_ads_bigquery_etl_spark.operators import packing as pk
 from facebook_ads_bigquery_etl_spark.operators import similarity as sim
 from facebook_ads_bigquery_etl_spark.operators.text import with_fingerprint, with_lang_id
@@ -693,12 +694,11 @@ class TestDocChunking:
 
 
 class TestBarrierCacheHygiene:
-    """The dedup family's materialization barriers used to be bare
-    ``persist()`` calls nobody ever unpersisted — every dedup/shingle
-    query leaked a CacheManager entry for the session's lifetime. They
-    now run through a tracked registry: LRU-capped (steady-state bleed
-    is bounded at _BARRIER_CAP small frames no matter how many queries
-    run) with ``release_caches()`` for full teardown."""
+    """operators/materialize: every reuse barrier is an entry of the
+    current query invocation. Opening the next invocation frees them
+    all and nothing else frees one (``release()`` is teardown), so
+    frames of one invocation never free each other and no invocation
+    reads a predecessor's cache."""
 
     def test_spread_still_widens_to_default_parallelism(self, spark, docs):
         spread = dd._spread(docs)
@@ -707,116 +707,116 @@ class TestBarrierCacheHygiene:
             == spark.sparkContext.defaultParallelism
         )
 
-    def test_registry_is_capped_and_release_empties_everything(self, spark, docs):
-        dd.release_caches()
+    def test_release_empties_everything(self, spark, docs):
+        mat.release()
         sc = spark.sparkContext
         baseline = sc._jsc.sc().getPersistentRDDs().size()
-        for _ in range(dd._BARRIER_CAP + 3):  # > cap ⇒ eviction engages
-            dd.minhash_dup_pairs(docs, threshold=0.7).count()
-        assert len(dd._BARRIERS) <= dd._BARRIER_CAP
-        released = dd.release_caches()
-        assert released > 0 and not dd._BARRIERS
-        # nothing this sweep persisted outlives the release
+        dd.minhash_dup_pairs(docs, threshold=0.7).count()
+        assert mat.release() > 0 and not mat.inputs()
+        # nothing this query persisted outlives the release
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         assert sc._jsc.sc().getPersistentRDDs().size() <= baseline
 
     def test_evicted_barrier_still_computes_correctly(self, spark, docs):
-        """Evicting a barrier before its consumer runs must only cost
+        """A persist entry freed before its consumer runs costs only
         recompute, never correctness."""
-        mh = dd.minhash_dup_pairs(docs, threshold=0.7)
-        dd.release_caches()  # evict BEFORE the action
+        mh = mat.invocation(dd.minhash_dup_pairs)(docs, threshold=0.7)
+        mat.invocation(lambda: None)()  # the next invocation frees mh's caches
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         expect = {(r["a_id"], r["b_id"]) for r in dd.minhash_dup_pairs(docs, 0.7).collect()}
         got = {(r["a_id"], r["b_id"]) for r in mh.collect()}
         assert got == expect and got
 
     def test_alias_twin_barriers_keep_their_own_column_names(self, spark, docs):
-        """semanticHash canonicalizes aliases away, so two queries
-        computing the same frame under DIFFERENT output names hash
-        identically; the registry must not hand the first twin's frame
-        (and column names) to the second (r13: doc_perplexity_filter's
-        `cross_entropy` vs perplexity_curriculum_mix's `ce` collided
-        and every downstream reference to `ce` failed analysis)."""
-        from pyspark.sql import functions as F
-
-        dd.release_caches()
-        a = dd._barrier(
-            docs.groupBy("lang").agg(F.count("*").alias("n_docs"))
-        )
-        b = dd._barrier(
-            docs.groupBy("lang").agg(F.count("*").alias("cnt"))
-        )
+        """Two frames with the same plan under DIFFERENT output names
+        must each keep their own names (r13: doc_perplexity_filter's
+        `cross_entropy` vs perplexity_curriculum_mix's `ce`)."""
+        mat.release()
+        a = mat.persist(docs.groupBy("lang").agg(F.count("*").alias("n_docs")))
+        b = mat.persist(docs.groupBy("lang").agg(F.count("*").alias("cnt")))
         assert a.columns == ["lang", "n_docs"]
         assert b.columns == ["lang", "cnt"]
         # both stay consumable under their own names
         assert a.select("n_docs").count() == b.select("cnt").count()
-        dd.release_caches()
+        mat.release()
 
-    def test_alias_twin_registration_retires_the_armed_twin(self, spark, docs):
-        """Registering an alias twin (same semanticHash, different
-        column names) must RETIRE the earlier twin's registry entry —
-        an armed InMemoryRelation the new persist() would no-op
-        against via sameResult, serving invocation N the data
-        invocation N-1 materialized (r14, ADVICE r13)."""
-        from pyspark.sql import functions as F
+    def test_same_hash_moment_frames_stay_readable_in_one_invocation(
+        self, spark, emb
+    ):
+        """covariance_probe and pca_audit checkpoint moment frames with
+        the same plan; building both in one invocation and only then
+        collecting the first must not find its checkpoint freed."""
+        from facebook_ads_bigquery_etl_spark.operators import linalg as la
 
-        dd.release_caches()
-        a = dd._barrier(docs.groupBy("lang").agg(F.count("*").alias("n_docs")))
-        a.count()  # arm the first twin's cache
-        assert len(dd._BARRIERS) == 1
-        b = dd._barrier(docs.groupBy("lang").agg(F.count("*").alias("cnt")))
-        # one live registration: the armed twin was popped + unpersisted
-        assert len(dd._BARRIERS) == 1
-        assert next(iter(dd._BARRIERS.values())) is b
-        # the retired twin still computes (recompute path, never wrong)
-        assert a.count() == b.count()
-        dd.release_caches()
+        cov, pca = mat.invocation(lambda: (la.covariance_probe(emb), la.pca_audit(emb)))()
+        got = sorted(map(tuple, cov.collect()))
+        audit = pca.collect()[0]
+        assert audit["recon_matches_tail"] and audit["n_vectors"] > 0
+        alone = mat.invocation(la.covariance_probe)(emb)
+        assert got == sorted(map(tuple, alone.collect())) and len(got) == 64
 
     def test_tracked_checkpoint_frees_previous_invocation_blocks(
         self, spark, docs
     ):
-        """Re-checkpointing the same plan (the same query invoked
-        again) must free the PREVIOUS invocation's localCheckpoint
-        blocks instead of leaking them for the session lifetime (r14,
-        ADVICE r13: each bench iteration abandoned its predecessor's
-        MEMORY_AND_DISK blocks)."""
-        from pyspark.sql import functions as F
-
-        dd.release_caches()
+        """Opening the next invocation frees the previous one's
+        checkpoint blocks and caches: RDD storage and the CacheManager
+        return to baseline instead of growing per run."""
         sc = spark.sparkContext
+        cache = spark._jsparkSession.sharedState().cacheManager()
 
         def n_stored():
             return len(sc._jsc.sc().getRDDStorageInfo())
 
-        baseline = n_stored()
-        frame = docs.groupBy("lang").agg(F.count("*").alias("n"))
-        c1 = dd.tracked_local_checkpoint(frame)
-        assert n_stored() == baseline + 1
-        rows1 = c1.collect()
-        # invocation 2 of the same plan: blocks stay bounded at one
-        c2 = dd.tracked_local_checkpoint(
-            docs.groupBy("lang").agg(F.count("*").alias("n"))
-        )
-        assert n_stored() == baseline + 1
-        assert sorted(map(tuple, c2.collect())) == sorted(map(tuple, rows1))
-        released = dd.release_caches()
-        assert released >= 1 and n_stored() == baseline
+        @mat.invocation
+        def query():
+            counts = docs.groupBy("lang").agg(F.count("*").alias("n"))
+            return mat.checkpoint(mat.persist(counts).filter(F.col("n") > 0))
 
-    def test_materialize_once_is_a_passthrough_under_audit_switch(
+        mat.invocation(lambda: None)()
+        baseline = n_stored()
+        assert cache.isEmpty()
+        rows = sorted(map(tuple, query().collect()))
+        held = n_stored()
+        assert held > baseline and not cache.isEmpty()
+        # invocation 2 of the same query: storage stays bounded
+        assert sorted(map(tuple, query().collect())) == rows
+        assert n_stored() == held
+        mat.invocation(lambda: None)()
+        assert n_stored() == baseline and cache.isEmpty()
+
+    def test_registered_query_calling_another_stays_one_invocation(
         self, spark, docs, monkeypatch
     ):
-        """SPARK_GRAFT_NO_MATERIALIZE (plan audits / A/B measurement)
-        must make the plan-level reuse barrier a no-op so the
-        pre-materialization physical shape stays assertable."""
-        from pyspark.sql import functions as F
+        """A registered query that calls another joins the outer
+        invocation: the inner call frees nothing, so the first inner
+        result's checkpoint is still readable after the second call."""
+        from facebook_ads_bigquery_etl_spark.plans import registry
 
-        frame = docs.groupBy("lang").agg(F.count("*").alias("n"))
-        monkeypatch.setenv(dd._NO_MATERIALIZE_ENV, "1")
-        assert dd.materialize_once(frame) is frame
-        monkeypatch.delenv(dd._NO_MATERIALIZE_ENV)
-        out = dd.materialize_once(frame)
-        assert out is not frame  # checkpointed
-        assert out.count() == frame.count()
-        dd.release_caches()
+        monkeypatch.setattr(registry, "QUERIES", {})
+
+        @registry.register("inner")
+        def inner(spark, sf_dir):
+            return mat.checkpoint(docs.groupBy("lang").agg(F.count("*").alias("n")))
+
+        @registry.register("outer")
+        def outer(spark, sf_dir):
+            first = registry.QUERIES["inner"](spark, sf_dir)
+            second = inner(spark, sf_dir).withColumnRenamed("n", "n2")
+            return first.join(second, "lang")
+
+        rows = registry.QUERIES["outer"](spark, SF_SMOKE).collect()
+        assert rows and all(r["n"] == r["n2"] for r in rows)
+        assert len(mat.inputs()) == 2
+
+        @registry.register("failing")
+        def failing(spark, sf_dir):
+            raise RuntimeError("boom")
+
+        with pytest.raises(RuntimeError):
+            failing(spark, SF_SMOKE)
+        # the depth counter unwound: the next call opens a new invocation
+        inner(spark, SF_SMOKE)
+        assert len(mat.inputs()) == 1
 
 
 class TestPrefixFilterJoin:

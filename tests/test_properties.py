@@ -588,11 +588,13 @@ def test_bench_line_tail_recoverable():
     first. Reconstructs bench.py's exact line shape from the committed
     r13 per-family history and asserts tail-recoverability."""
     import json
+    import os
     import re
 
     import bench
 
-    with open("/root/repo/bench_full_r13.json") as fh:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "bench_full_r13.json")) as fh:
         hist = json.load(fh)["queries"]
     # every headline family present, mirroring main()'s `times` map
     times = {name: float(hist[name]) for name in bench.HEADLINE}
@@ -620,3 +622,24 @@ def test_bench_line_tail_recoverable():
     parsed = json.loads(line)
     assert set(parsed) == {"metric", "unit", "queries", "value", "sf"}
     assert parsed["unit"] == "sec" and len(parsed["queries"]) == len(times)
+
+
+def test_local_checkpoint_lives_only_in_materialize():
+    """A destructive checkpoint free is safe only under the invocation
+    lifecycle of operators/materialize, so no other library module may
+    call ``localCheckpoint(`` directly (scoped persist()/unpersist()
+    pairs elsewhere are non-destructive and allowed)."""
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    root = pathlib.Path(lib.__file__).parent
+    allowed = root / "operators" / "materialize.py"
+    offenders = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if path != allowed
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line
+    ]
+    assert not offenders, offenders

@@ -250,9 +250,9 @@ class TestPlanAudit:
             for frag in must_not:
                 if frag in plan:
                     problems.append(f"{name}: unexpected {frag!r}")
-        # pre-materialization shapes (r14, ADVICE r13): properties the
-        # reuse barriers move out of the final plan, asserted with the
-        # barriers disabled so a regression inside the materialization
+        # pre-materialization shapes: properties the reuse barriers move
+        # out of the final plan, asserted on the plans of the frames the
+        # query materialized so a regression inside the materialization
         # pass still fails here
         for name, (_, must) in gp.PRE_AUDITS.items():
             plan = gp.pre_materialization_plan(QUERIES, name, spark, SF_ORACLE)

@@ -15,10 +15,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.casting import split_required_violations
+from ..operators.casting import required_violation_predicate
 from ..schemas import (
     FACEBOOK_CLUSTERING_FIELDS,
     FACEBOOK_PARTITION_FIELD,
@@ -59,25 +59,29 @@ def run_facebook_job(
         .load()
         .drop("ad_account")
     )
-    valid, quarantined = split_required_violations(
-        transform_insights(raw), SCHEMA_FACEBOOK_STAT
-    )
+    stat = transform_insights(raw)
+    bad = required_violation_predicate(SCHEMA_FACEBOOK_STAT)
     path = f"{warehouse_root}/facebook_stat"
-    write_day_partitioned(
-        valid,
+    # One connector pull: the sink counts written and rejected rows on
+    # the write's own pass.
+    n_written, n_quarantined = write_day_partitioned(
+        stat,
         path,
         partition_field=FACEBOOK_PARTITION_FIELD,
         clustering_fields=FACEBOOK_CLUSTERING_FIELDS,
+        reject=bad,
     )
-    n_quarantined = quarantined.count()
     if n_quarantined:
-        # Rejected rows land in a side table with the raw (pre-cast)
-        # values intact — the reference loses these to opaque BigQuery
-        # insert errors (main.py:86-89); here they stay queryable.
-        quarantined.withColumn("_quarantined_on", F.lit(d)).write.mode("append").parquet(
-            f"{warehouse_root}/quarantine/facebook_stat"
-        )
-    return JobResult("get_facebook", d, valid.count(), n_quarantined, path)
+        # Rejected rows land in a side table in the target schema, as
+        # cast: a value that failed its cast (clicks 'oops') is NULL
+        # there, every other column keeps its typed value. The
+        # reference loses these rows to opaque BigQuery insert errors
+        # (main.py:86-89); here they stay queryable. This rare path
+        # pulls the day from the connector a second time.
+        stat.filter(bad).withColumn("_quarantined_on", F.lit(d)).write.mode(
+            "append"
+        ).parquet(f"{warehouse_root}/quarantine/facebook_stat")
+    return JobResult("get_facebook", d, n_written, n_quarantined, path)
 
 
 def run_currency_job(
@@ -94,8 +98,8 @@ def run_currency_job(
         .load()
     )
     path = f"{warehouse_root}/exchange_rate"
-    write_day_partitioned(fx, path, partition_field="date")
-    return JobResult("get_currency", d, fx.count(), 0, path)
+    n_written, _ = write_day_partitioned(fx, path, partition_field="date")
+    return JobResult("get_currency", d, n_written, 0, path)
 
 
 def handle_event(

@@ -31,10 +31,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession tuned for this engine.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or,
+    when that is unset, the CPUs this process may run on — so a bare
+    run never oversubscribes the host.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 

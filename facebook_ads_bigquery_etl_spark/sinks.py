@@ -29,7 +29,9 @@ import time
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_day_partitioned(
@@ -40,8 +42,11 @@ def write_day_partitioned(
     mode: str = "overwrite",
     fmt: str = "parquet",
     max_records_per_file: int | None = None,
-) -> None:
-    """Exactly-once write of the day partitions present in ``df``.
+    reject: Column | None = None,
+) -> tuple[int, int]:
+    """Exactly-once write of the day partitions present in ``df``;
+    returns ``(rows_written, rows_rejected)``.
+
     ``partition_field`` may be a list for sub-partitioned layouts
     (e.g. the streaming sink's ``[date, __sink_batch]``); dynamic
     overwrite then replaces only the exact combinations present.
@@ -59,6 +64,12 @@ def write_day_partitioned(
     knob a compaction pass uses so a hot day (or a 100 TB partition)
     never produces a single unsplittable giant file while cold days
     still coalesce to one.
+
+    ``reject`` is a row predicate: rows where it is true are counted
+    as rejected and not written (NULL counts as false). Both counts
+    come from an Observation on the write's own pass, so counting
+    costs no extra job and never re-reads the source; a caller that
+    wants the rejected rows themselves filters ``df`` again.
     """
     pfields = (
         [partition_field] if isinstance(partition_field, str) else list(partition_field)
@@ -78,17 +89,37 @@ def write_day_partitioned(
     # whole in one task), bin-pack path = exactly ceil(rows/N) per
     # value. The count tracks the session's cluster-sized
     # shuffle.partitions, not a local constant; surplus tasks are
-    # empty and write nothing.
-    n_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # empty and write nothing. The conf may legally be non-integer on
+    # some platforms ("auto"); default parallelism stands in for it.
+    spark = df.sparkSession
+    try:
+        n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        n_tasks = spark.sparkContext.defaultParallelism
     out = df.repartition(max(1, n_tasks), *pfields)
     if clustering_fields:
         out = out.sortWithinPartitions(*clustering_fields)
+    # The observation sits ABOVE the exchange: below it, AQE replaces
+    # an empty day's shuffle stage and the metrics are lost with it.
+    bad = F.lit(False) if reject is None else F.coalesce(reject, F.lit(False))
+    obs = Observation()
+    out = out.observe(
+        obs, F.count(F.lit(1)).alias("rows"), F.count_if(bad).alias("rejected")
+    ).filter(~bad)
     writer = out.write.mode(mode).format(fmt).option(
         "partitionOverwriteMode", "dynamic"
     )
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.partitionBy(*pfields).save(path)
+    try:
+        counts = obs.get
+    except Py4JJavaError:
+        # A constant-true ``reject`` folds the whole write to an empty
+        # relation at plan time, dropping the observation with it:
+        # nothing was written, and the rejected rows need their own pass.
+        return 0, df.filter(bad).count()
+    return counts["rows"] - counts["rejected"], counts["rejected"]
 
 
 def insert_rows(
@@ -1470,8 +1501,6 @@ def publish_tables_atomic_once(
     ``batch_id`` was already published; True otherwise. ``build``
     must derive its DataFrames (aligned with ``targets``) from
     committed table state when invoked, not capture them eagerly."""
-    from pyspark.sql import functions as F
-
     resolved: list[str] = []
     for p in list(targets) + [meta_table]:
         try:

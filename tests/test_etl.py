@@ -165,7 +165,83 @@ class TestEndToEndRunner:
             spark, req, str(tmp_path), transport="fixture", until="2025-01-02"
         )
         assert res.rows_written == 7  # both fixture days, minus 'oops'
+        assert res.rows_written == spark.read.parquet(res.warehouse_path).count()
         assert res.rows_quarantined == 1
         q = spark.read.parquet(str(tmp_path / "quarantine" / "facebook_stat"))
         assert q.count() == 1
-        assert q.first()["ad_id"] == "9999"  # raw values preserved
+        row = q.first()
+        assert row["ad_id"] == "9999"
+        # quarantined rows are stored as cast: the failed 'oops' cast is NULL
+        assert row["clicks"] is None and row["impressions"] == 100
+
+    @pytest.mark.parametrize("day, transport", [
+        ("2030-06-01", "fixture"),  # a day the fixture has no rows for
+        ("2025-01-02", "synthetic:0"),
+    ])
+    def test_empty_day_counts_zero(self, spark, tmp_path, day, transport):
+        from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
+
+        event = {"data": "Z2V0X2ZhY2Vib29r", "attributes": {"date": day}}
+        res = handle_event(spark, event, str(tmp_path), transport=transport)
+        assert (res.rows_written, res.rows_quarantined) == (0, 0)
+        assert not os.path.exists(str(tmp_path / "quarantine"))
+
+    @pytest.mark.parametrize("clicks", [
+        "runtime",  # NULL for every row, decided per row at run time
+        "absent",  # a REQUIRED column missing from the batch: a typed NULL literal
+    ])
+    def test_all_rejected_batch_lands_in_quarantine(self, spark, tmp_path, monkeypatch, clicks):
+        from pyspark.sql import functions as F
+
+        from facebook_ads_bigquery_etl_spark.etl import runner
+
+        transform = runner.transform_insights
+
+        def nulled_clicks(raw):
+            df = transform(raw)
+            if clicks == "runtime":
+                return df.withColumn("clicks", F.when(F.col("ad_id") == "none", F.col("clicks")))
+            return df.withColumn("clicks", F.lit(None).cast("long"))
+
+        monkeypatch.setattr(runner, "transform_insights", nulled_clicks)
+        event = {"data": "Z2V0X2ZhY2Vib29r", "attributes": {"date": "2025-01-01"}}
+        res = runner.handle_event(spark, event, str(tmp_path), transport="fixture")
+        assert (res.rows_written, res.rows_quarantined) == (0, 4)
+        q = spark.read.parquet(str(tmp_path / "quarantine" / "facebook_stat"))
+        assert q.count() == 4
+
+    @pytest.mark.parametrize("day, rows", [("2025-01-01", 4), ("2030-06-01", 0)])
+    def test_event_runs_only_the_write_jobs(self, spark, tmp_path, day, rows):
+        """Row counts come from the write's own pass: an event without
+        rejected rows runs exactly the jobs of one plain sink write of
+        as many rows. A count after the write, or a lost observation
+        that falls back to counting, pulls the day from the connector
+        again and adds jobs."""
+        import uuid
+
+        from pyspark.sql import Row
+        from pyspark.sql import functions as F
+
+        from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
+        from facebook_ads_bigquery_etl_spark.sinks import write_day_partitioned
+
+        sc = spark.sparkContext
+
+        def jobs_of(fn):
+            group = f"single-pass-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return out, sc.statusTracker().getJobIdsForGroup(group)
+
+        event = {"data": "Z2V0X2ZhY2Vib29r", "attributes": {"date": day}}
+        res, event_jobs = jobs_of(
+            lambda: handle_event(spark, event, str(tmp_path / "wh"), transport="fixture")
+        )
+        assert (res.rows_written, res.rows_quarantined) == (rows, 0)
+        frame = spark.createDataFrame([Row(date=day, n=i) for i in range(4)]).where(F.col("n") < rows)
+        got, write_jobs = jobs_of(lambda: write_day_partitioned(frame, str(tmp_path / "bare")))
+        assert got == (rows, 0) and len(write_jobs) > 0
+        assert len(event_jobs) == len(write_jobs)

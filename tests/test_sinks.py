@@ -80,6 +80,66 @@ class TestFormatSwap:
         assert via_pq == via_bq == _rows(frame)
 
 
+class TestObservedWriteCounts:
+    """write_day_partitioned counts what it writes on the write's own
+    pass and returns (rows_written, rows_rejected)."""
+
+    def test_counts_match_landed_rows(self, spark, tmp_path, frame):
+        path = str(tmp_path / "t")
+        got = write_day_partitioned(
+            frame, path, clustering_fields=["campaign_id"], reject=F.col("spend") > 2.0
+        )
+        assert got == (1, 2)
+        assert _rows(spark.read.parquet(path)) == [("2025-01-01", "c1", 1.5)]
+        assert write_day_partitioned(frame, path) == (3, 0)
+        assert spark.read.parquet(path).count() == 3
+
+    def test_all_rejected_and_null_predicates(self, spark, tmp_path, frame):
+        path = str(tmp_path / "t")
+        assert write_day_partitioned(frame, path, reject=F.col("spend") > 0) == (0, 3)
+        # NULL counts as false: the row is written, not rejected
+        reject = F.when(F.col("campaign_id") == "c2", True)
+        assert write_day_partitioned(frame, path, reject=reject) == (2, 1)
+
+    @pytest.mark.parametrize("empty", [
+        lambda df: df.limit(0),
+        lambda df: df.where("false"),
+        lambda df: df.where(F.col("spend") < 0),
+    ])
+    def test_empty_writes_count_zero(self, spark, tmp_path, frame, empty):
+        path = str(tmp_path / "t")
+        write_day_partitioned(frame, path)
+        assert write_day_partitioned(empty(frame), path, mode="append") == (0, 0)
+        assert write_day_partitioned(
+            empty(frame), path, mode="append", reject=F.col("spend") > 2.0
+        ) == (0, 0)
+        assert spark.read.parquet(path).count() == 3
+
+    @pytest.mark.parametrize("reject, want", [(True, (0, 3)), (False, (3, 0))])
+    def test_literal_predicates_count(self, spark, tmp_path, frame, reject, want):
+        """A constant-true predicate folds the write away at plan time,
+        observation included; the sink still returns the counts."""
+        path = str(tmp_path / "t")
+        reject = F.lit(reject)
+        assert write_day_partitioned(frame, path, reject=reject) == want
+        assert write_day_partitioned(frame.limit(0), path, reject=reject) == (0, 0)
+
+    def test_non_integer_shuffle_partitions_conf(self, spark, tmp_path, frame, monkeypatch):
+        """A legal non-integer value ("auto" on some platforms) falls
+        back to the default parallelism instead of raising."""
+        conf_get = spark.conf.get
+
+        def get(key, *default):
+            if key == "spark.sql.shuffle.partitions":
+                return "auto"
+            return conf_get(key, *default)
+
+        monkeypatch.setattr(frame.sparkSession.conf, "get", get)
+        path = str(tmp_path / "t")
+        assert write_day_partitioned(frame, path) == (3, 0)
+        assert _rows(spark.read.parquet(path)) == _rows(frame)
+
+
 class TestInsertRowsManagedTable:
     def test_single_day_load_keeps_other_partitions(self, spark, frame):
         """insert_rows(exactly_once=True) must replace only the day

@@ -246,6 +246,45 @@ def _query(name):
     return EXTRA.get(name) or QUERIES[name]
 
 
+def bench_output(times: dict[str, float], sf_dir: str) -> tuple[dict, str]:
+    """The result dict and the ONE stdout line it prints as, from the
+    per-family best times and the SF directory they ran on.
+
+    Tail-proofing (r14, VERDICT r13 item 2): the harness that runs
+    this file keeps only a 2000-char TAIL of stdout, and the 83-family
+    queries map alone is >2300 chars compact-encoded, so the full line CANNOT
+    fit any 2000-char tail without renaming or dropping registered
+    families (both forbidden). Mitigation, tested in
+    tests/test_properties.py::test_bench_line_tail_recoverable:
+
+    * compact separators + a short metric token (same schema keys,
+      same value semantics — wall-clock seconds over the same
+      queries, unchanged methodology);
+    * the queries map ordered CHEAPEST-FIRST, so a truncated head
+      loses only the cheapest families;
+    * the scalar fields (value / sf) LAST, so any 2000-char tail
+      always carries the headline total, the SF, and the ~70 most
+      expensive families, regex-recoverable exactly as the r12
+      reconstruction did.
+
+    bench_full_latest.json (snapshotted per round as
+    bench_full_r{N}.json) remains the full-fidelity channel.
+    """
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        sf_val: float | str = float(sf)
+    except ValueError:
+        sf_val = sf
+    out = {
+        "metric": f"headline_wall_clock_{len(times)}_queries",
+        "unit": "sec",
+        "queries": dict(sorted(times.items(), key=lambda kv: kv[1])),
+        "value": round(sum(times.values()), 3),
+        "sf": sf_val,
+    }
+    return out, json.dumps(out, separators=(",", ":"))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
@@ -280,36 +319,8 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         times[name] = round(best, 3)
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-    # Tail-proofing (r14, VERDICT r13 item 2): the driver's artifact
-    # keeps only a 2000-char TAIL of stdout, and the 83-family queries
-    # map alone is >2300 chars compact-encoded, so the full line CANNOT
-    # fit any 2000-char tail without renaming or dropping registered
-    # families (both forbidden). Mitigation, tested in
-    # tests/test_properties.py::test_bench_line_tail_recoverable:
-    #   * compact separators + a short metric token (same schema keys,
-    #     same value semantics — wall-clock seconds over the same
-    #     queries, unchanged methodology);
-    #   * the queries map ordered CHEAPEST-FIRST, so a truncated head
-    #     loses only the cheapest families;
-    #   * the scalar fields (value / sf) LAST, so any 2000-char tail
-    #     always carries the headline total, the SF, and the ~70 most
-    #     expensive families, regex-recoverable exactly as the r12
-    #     reconstruction did.
-    # bench_full_latest.json (snapshotted per round as
-    # bench_full_r{N}.json) remains the full-fidelity channel.
-    out = {
-        "metric": f"headline_wall_clock_{len(times)}_queries",
-        "unit": "sec",
-        "queries": dict(sorted(times.items(), key=lambda kv: kv[1])),
-        "value": round(sum(times.values()), 3),
-        "sf": sf_val,
-    }
-    print(json.dumps(out, separators=(",", ":")))
+    out, line = bench_output(times, sf_dir)
+    print(line)
     # The driver's BENCH artifact keeps only a 2000-char tail, which
     # truncated the per-family map and made cross-round comparison
     # possible on a subset only (round-7 verdict). Persist the full

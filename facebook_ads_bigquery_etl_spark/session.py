@@ -12,6 +12,17 @@ defaults below are the ones that matter at 100 TB:
 * Session timezone pinned UTC so date/timestamp semantics are stable
   across engines (and match the DuckDB oracle).
 * Arrow enabled for any pandas interchange (vectorized UDF path).
+* Python workers start with the ``_pyworker`` bootstrap on their
+  ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, which reaches both
+  the task-worker daemons and the data-source planner daemons). Every
+  task and every planner call ends in ``importlib.invalidate_caches()``,
+  which on CPython 3.11 makes each zip importer re-read ``pyspark.zip``'s
+  whole central directory — about 0.14 s per round trip on a 4-vCPU
+  VM, against milliseconds of work for a connector page. The
+  bootstrap re-reads an archive only when its ``(st_mtime_ns,
+  st_size)`` changed since the last read, relying on an archive's
+  stat changing whenever its bytes do; then it runs the next
+  ``sitecustomize`` on the path, if any.
 """
 
 from __future__ import annotations
@@ -21,6 +32,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP = "facebook_ads_bigquery_etl_spark"
+WORKER_BOOTSTRAP_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pyworker")
 
 
 def get_spark(
@@ -60,7 +72,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
-    for k, v in (extra_conf or {}).items():
+    # The bootstrap goes first, so its sitecustomize runs and then
+    # chains to one on the caller's worker PYTHONPATH.
+    extra_conf = dict(extra_conf or {})
+    caller_path = extra_conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [WORKER_BOOTSTRAP_DIR, *(p for p in caller_path if p and p != WORKER_BOOTSTRAP_DIR)]
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

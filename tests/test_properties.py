@@ -585,8 +585,9 @@ def test_bench_line_tail_recoverable():
     forbidden); what MUST hold instead is that the tail alone carries
     the headline total, the SF, and the expensive families — i.e. the
     scalar fields come last and the queries map is sorted cheapest
-    first. Reconstructs bench.py's exact line shape from the committed
-    r13 per-family history and asserts tail-recoverability."""
+    first. Feeds the committed r13 per-family history through
+    bench.py's own line shaping (``bench_output``, which ``main()``
+    prints) and asserts tail-recoverability."""
     import json
     import os
     import re
@@ -598,14 +599,7 @@ def test_bench_line_tail_recoverable():
         hist = json.load(fh)["queries"]
     # every headline family present, mirroring main()'s `times` map
     times = {name: float(hist[name]) for name in bench.HEADLINE}
-    out = {
-        "metric": f"headline_wall_clock_{len(times)}_queries",
-        "unit": "sec",
-        "queries": dict(sorted(times.items(), key=lambda kv: kv[1])),
-        "value": round(sum(times.values()), 3),
-        "sf": 0.1,
-    }
-    line = json.dumps(out, separators=(",", ":"))
+    out, line = bench.bench_output(times, "/data/sf0.1")
     tail = line[-2000:]
     # scalars always inside the tail, regex-recoverable
     assert re.search(r'"value":\d+(\.\d+)?,"sf":0\.1\}$', tail)
@@ -620,6 +614,7 @@ def test_bench_line_tail_recoverable():
         assert name in recovered, f"{name} lost from the 2000-char tail"
     # and the full line is itself valid JSON with the driver's keys
     parsed = json.loads(line)
+    assert parsed == out
     assert set(parsed) == {"metric", "unit", "queries", "value", "sf"}
     assert parsed["unit"] == "sec" and len(parsed["queries"]) == len(times)
 

@@ -37,7 +37,7 @@ from ..streaming import (
 from ..operators import materialize
 from ..operators.exprs import knuth_bucket
 from ..operators.integrity import round_double_sql
-from .registry import load_tables, register
+from .registry import load_tables, read_parquet, register
 
 
 def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
@@ -1029,8 +1029,8 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if state["version"] >= 0:
-            target = batch_df.sparkSession.read.parquet(
-                f"{work}/v{state['version']}"
+            target = read_parquet(
+                batch_df.sparkSession, f"{work}/v{state['version']}"
             )
             merged = merge_apply(
                 target,
@@ -1061,7 +1061,7 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
         q.awaitTermination(300)
-        final = spark.read.parquet(f"{work}/v{state['version']}")
+        final = read_parquet(spark, f"{work}/v{state['version']}")
         return spark.createDataFrame(
             [
                 (int(r["user_id"]), int(r["n_events"]),
@@ -1439,7 +1439,7 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             # writes, which costs more than the second columnar scan
             # of the committed fact it saves (r13, guide §1: measure).
             if sinks.has_published_data(fact_t):
-                fact = ss.read.parquet(fact_t).unionByName(inc)
+                fact = read_parquet(ss, fact_t).unionByName(inc)
             else:
                 fact = inc
             rollup = fact.groupBy("date", "event_type").agg(
@@ -1682,8 +1682,8 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
 
     def apply_batch(batch_df, batch_id: int) -> None:
         if state["version"] >= 0:
-            target = batch_df.sparkSession.read.parquet(
-                f"{work}/v{state['version']}"
+            target = read_parquet(
+                batch_df.sparkSession, f"{work}/v{state['version']}"
             )
             merged = merge_apply(
                 target,
@@ -1762,7 +1762,7 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
         )
         changelog_engaged = len(changelogs) > 0
         resumed = bool(ids1) and bool(ids2) and min(ids2) > max(ids1)
-        final = spark.read.parquet(f"{work}/v{state['version']}")
+        final = read_parquet(spark, f"{work}/v{state['version']}")
         return spark.createDataFrame(
             [
                 (
@@ -1912,13 +1912,13 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         b.write.mode("append").partitionBy("d").parquet(fact_dir)
         sess = batch_df.sparkSession
         refreshed = (
-            sess.read.parquet(fact_dir)
+            read_parquet(sess, fact_dir)
             .filter(F.col("d").isin(touched))
             .select("d", bit("user_id").alias("bit"))
             .distinct()
         )
         if state["version"] >= 0:
-            prev = sess.read.parquet(f"{work}/idx_v{state['version']}")
+            prev = read_parquet(sess, f"{work}/idx_v{state['version']}")
             new_index = prev.filter(~F.col("d").isin(touched)).unionByName(
                 refreshed
             )
@@ -1965,8 +1965,8 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         # fuse count-style readouts that share a scan into one agg
         # (count(lit(1)) ≡ count(); coalesced SUM keeps the
         # empty-probe 0).
-        fact = spark.read.parquet(fact_dir).persist()
-        index = spark.read.parquet(f"{work}/idx_v{state['version']}").persist()
+        fact = read_parquet(spark, fact_dir).persist()
+        index = read_parquet(spark, f"{work}/idx_v{state['version']}").persist()
         rebuild = fact.select("d", bit("user_id").alias("bit")).distinct().persist()
         diff = index.exceptAll(rebuild).unionAll(
             rebuild.exceptAll(index)

@@ -29,7 +29,7 @@ from ..operators.profile import column_profile
 from ..operators.scd import scd2_merge, snapshot_diff
 from ..operators.skew import salted_join
 from ..operators.timeseries import fill_date_gaps
-from .registry import load_tables, register
+from .registry import load_tables, read_parquet, register
 
 
 def _customer_snapshots(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -1963,7 +1963,7 @@ def parquet_codec_matrix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.write.mode("overwrite").option("compression", codec).parquet(
                 path
             )
-            back = spark.read.parquet(path)
+            back = read_parquet(spark, path)
             b = back.agg(F.count("*").alias("n"), rev.alias("r")).collect()[0]
             nbytes = sum(
                 os.path.getsize(os.path.join(path, f))
@@ -2966,8 +2966,8 @@ def zstd_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             dict_smaller = fa["l_returnflag"][2] < fb["l_returnflag"][2]
 
-        ra = spark.read.parquet(a_dir)
-        rb = spark.read.parquet(b_dir)
+        ra = read_parquet(spark, a_dir)
+        rb = read_parquet(spark, b_dir)
         agg = lambda df: df.agg(  # noqa: E731
             F.count("*").alias("n_rows"),
             F.countDistinct("l_returnflag").alias("n_flags"),
@@ -3278,7 +3278,7 @@ def parquet_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         size_b = os.path.getsize(_glob.glob(f"{tmp}/bloomed/*.parquet")[0])
         size_c = os.path.getsize(_glob.glob(f"{tmp}/control/*.parquet")[0])
 
-        back = spark.read.parquet(f"{tmp}/bloomed")
+        back = read_parquet(spark, f"{tmp}/bloomed")
         # row count + value sum + point key in ONE action over one
         # scan of the bloomed file instead of three (r13 optimization;
         # count(lit(1)) ≡ count())

@@ -638,3 +638,27 @@ def test_local_checkpoint_lives_only_in_materialize():
         if "localCheckpoint(" in line
     ]
     assert not offenders, offenders
+
+
+def test_plans_read_parquet_tables_only_through_the_footer_helper():
+    """A bare ``spark.read.parquet(path)`` infers the schema in a Spark
+    job; every table read in plans/ goes through
+    ``registry.read_parquet``, which reads the footer on the driver and
+    holds the one inferring fallback."""
+    import ast
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark.plans as plans
+
+    root = pathlib.Path(plans.__file__).parent
+    offenders = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(root.glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "read"
+    ]
+    assert not offenders, offenders

@@ -6,6 +6,14 @@ asserts the same properties, so a regression fails CI before the
 driver sees it).
 
 Run from the repo root:  python scripts/gen_plans.py
+
+Dump mode:  python scripts/gen_plans.py --dump <out_dir> <suffix> name [name ...]
+writes `plan_of` each named query (registered name or bench EXTRA name)
+to <out_dir>/<name>_<suffix>.txt. Streaming audit families execute
+their stream to build the returned table, so their dumped plan is the
+final returned DataFrame's (often a memory-sink/local scan — the
+audit's distributed work happens in foreachBatch/microbatch plans),
+which is exactly what the driver's `queries()[name]` returns.
 """
 
 from __future__ import annotations
@@ -732,11 +740,27 @@ def plan_of(df) -> str:
     )
 
 
+def dump(spark, out_dir: str, suffix: str, names: list[str]) -> int:
+    import bench
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        fn = bench.EXTRA.get(name) or bench.QUERIES[name]
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan_of(fn(spark, SF)))
+        print(f"wrote {path}")
+    return 0
+
+
 def main() -> int:
     from facebook_ads_bigquery_etl_spark.plans import QUERIES
     from facebook_ads_bigquery_etl_spark.session import get_spark
 
     spark = get_spark()
+    if sys.argv[1:2] == ["--dump"]:
+        out_dir, suffix, *names = sys.argv[2:]
+        return dump(spark, out_dir, suffix, names)
     out = [
         "# PLANS — physical-plan audit",
         "",

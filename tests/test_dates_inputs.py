@@ -1,7 +1,8 @@
 """Hostile-timestamp regression gate (round 11): the queries the
 dates sweep found divergent must stay Spark≡DuckDB on a fixture with
 corrupt timestamps injected (zeroed epoch, pre-1900, sentinel
-far-future — scripts/dates_sweep.py, 250/250 clean at round 11).
+far-future — `scripts/sweep.py --mutator dates`, 250/250 clean at
+round 11).
 
 Why it matters at 100 TB: corrupt timestamps are routine dirty data
 (zeroed epoch fields, unit-confused parses, sentinel 9999s), and ONE
@@ -27,32 +28,10 @@ sweep script.
 
 from __future__ import annotations
 
-import datetime
-import math
-
-import duckdb
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
+from tests import oracle_check as oc
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
-
-# (key_col, timestamp cols) — mirror scripts/dates_sweep.py exactly
-TS_PLAN = {
-    "orders": ("o_orderkey", ["o_orderdate"]),
-    "lineitem": ("l_orderkey", ["l_shipdate"]),
-    "events": ("event_id", ["ts"]),
-}
-EPOCH = datetime.datetime(1970, 1, 1)
-PAST = datetime.datetime(1899, 7, 5, 12, 0, 0)
-FUTURE = datetime.datetime(2250, 1, 1)
 
 # fast members of the round-11 dates fix set
 FIXED_FAST = [
@@ -69,54 +48,12 @@ FIXED_FAST = [
 @pytest.fixture(scope="module")
 def dates_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("dates_fixture")
-    for t in TABLES:
-        tab = pq.read_table(f"{SF_SMOKE}/{t}.parquet")
-        if t in TS_PLAN:
-            key, cols = TS_PLAN[t]
-            keys = tab[key].to_numpy(zero_copy_only=False)
-            m3 = pa.array(keys % 40 == 3)
-            m17 = pa.array(keys % 40 == 17)
-            m31 = pa.array(keys % 40 == 31)
-            for c in cols:
-                arr = tab[c]
-                arr = pc.if_else(m3, pa.scalar(EPOCH, arr.type), arr)
-                arr = pc.if_else(m17, pa.scalar(PAST, arr.type), arr)
-                arr = pc.if_else(m31, pa.scalar(FUTURE, arr.type), arr)
-                tab = tab.set_column(tab.column_names.index(c), c, arr)
-        pq.write_table(tab, str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            if math.isnan(v):
-                return (1,)
-            if math.isinf(v):
-                return (3, v > 0)
-            return (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
+    return oc.write_fixture(oc.dates, SF_SMOKE, str(d))
 
 
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_dates_input_matches_oracle(spark, dates_dir, name):
-    sdf = entrymod.queries()[name](spark, dates_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{dates_dir}/{t}.parquet'")
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
+    srows, drows = oc.both(spark, name, dates_dir)
     assert srows == drows
 
 

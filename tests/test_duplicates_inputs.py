@@ -1,8 +1,8 @@
 """Primary-key-violation regression gate (round 11): the queries the
 duplicates sweep found divergent AND fixed must stay Spark≡DuckDB on a
 fixture with replayed keys (same PK, drifted payload —
-scripts/duplicates_sweep.py; the reference's own at-least-once ingest
-failure mode, reference main.py:86-89).
+`scripts/sweep.py --mutator duplicates`; the reference's own
+at-least-once ingest failure mode, reference main.py:86-89).
 
 Conventions pinned here (see SURVEY §7h-quater):
 
@@ -15,26 +15,17 @@ Conventions pinned here (see SURVEY §7h-quater):
   content-total order, identical across engines and layouts;
 * exactly-once counts are COUNT(DISTINCT key).
 
-The 14 still-open findings are triaged in SURVEY §7h-quater as the
-round-12 lead; this gate pins only the fixed set.
+The fixture is the sweep's own (`oracle_check.duplicates`), replays
+of all six keyed tables. The one exemption, stream_dedup_then_rollup,
+is pinned by test_stream_dedup_then_rollup_pk_exemption_scope below.
 """
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
+from tests import oracle_check as oc
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
 
 # fixed members of the round-11 duplicates wave (fast ones; the
 # streaming member stream_dedup_ingest and the slow semantic/minhash
@@ -57,94 +48,15 @@ FIXED_FAST = [
 ]
 
 
-def _with_replays(tab: pa.Table, t: str) -> pa.Table:
-    """Mirror scripts/duplicates_sweep.py's injection exactly."""
-    df = tab.to_pydict()
-    n = len(tab)
-    extra = {c: [] for c in tab.column_names}
-
-    def replay(i):
-        for c in tab.column_names:
-            extra[c].append(df[c][i])
-
-    if t == "orders":
-        for i in range(n):
-            if df["o_orderkey"][i] % 20 == 7:
-                replay(i)
-                if extra["o_totalprice"][-1] is not None:
-                    extra["o_totalprice"][-1] += 0.01
-    elif t == "events":
-        for i in range(n):
-            if df["event_id"][i] % 20 == 7:
-                replay(i)
-                if extra["value"][-1] is not None:
-                    extra["value"][-1] += 0.5
-    elif t == "documents":
-        for i in range(n):
-            if df["doc_id"][i] % 20 == 7:
-                replay(i)
-                if extra["text"][-1] is not None:
-                    extra["text"][-1] += " replay"
-                    extra["n_chars"][-1] = len(extra["text"][-1])
-    elif t == "embeddings":
-        for i in range(n):
-            if df["vec_id"][i] % 20 == 7:
-                replay(i)
-                v = extra["embedding"][-1]
-                if v:
-                    v = list(v)
-                    v[0] = (v[0] or 0.0) + 0.001
-                    extra["embedding"][-1] = v
-    if extra[tab.column_names[0]]:
-        add = pa.table(
-            {
-                c: pa.array(extra[c], tab.schema.field(c).type)
-                for c in tab.column_names
-            }
-        )
-        tab = pa.concat_tables([tab, add])
-    return tab
-
-
 @pytest.fixture(scope="module")
 def duplicates_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("duplicates_fixture")
-    for t in TABLES:
-        tab = _with_replays(pq.read_table(f"{SF_SMOKE}/{t}.parquet"), t)
-        pq.write_table(tab, str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            if math.isnan(v):
-                return (1,)
-            return (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
+    return oc.write_fixture(oc.duplicates, SF_SMOKE, str(d))
 
 
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_duplicates_input_matches_oracle(spark, duplicates_dir, name):
-    sdf = entrymod.queries()[name](spark, duplicates_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{duplicates_dir}/{t}.parquet'"
-        )
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
+    srows, drows = oc.both(spark, name, duplicates_dir)
     assert srows == drows
 
 
@@ -239,7 +151,7 @@ def test_stream_dedup_then_rollup_pk_exemption_scope(spark, tmp_path):
     branch); (c) that value DIFFERS from the content-total winner sum.
     A future change that silently makes the stream resolve by content
     order (fixing the exemption) or breaks the counts (worsening it)
-    fails this test and must update the sweep docstring with it."""
+    fails this test and must update `oracle_check.duplicates` with it."""
     import datetime as dt
 
     import pyarrow as pa
@@ -302,7 +214,7 @@ def test_resolve_replays_oracle_twins_match_schema_order():
     import __spark_entry__ as e
 
     def nonkey(table, key):
-        names = pq.read_schema(f"/root/testdata/sf0.001/{table}.parquet").names
+        names = pq.read_schema(f"{SF_SMOKE}/{table}.parquet").names
         return [c for c in names if c != key]
 
     expected = {

@@ -1,47 +1,26 @@
 """Degenerate-input regression gate (round 10): the queries the
 all-empty (and one-row) sweeps found divergent must stay
 Spark≡DuckDB on zero-row and one-row fixtures. The full sweep lives
-in scripts/empty_sweep.py (all 250 oracle-backed queries, ~25 min,
-`K=1` for the one-row variant); this test pins the fast subset of
-the fixed queries — the slow streaming/write-path members are
-exercised by their own unit tests and the sweep script.
+in `scripts/sweep.py --mutator empty` (all 250 oracle-backed
+queries, ~15 min on 4 cores; `--mutator one_row` for the one-row
+variant); this test pins the fast subset of the fixed queries — the
+slow streaming/write-path members are exercised by their own unit
+tests and the sweep script.
 
 Why it matters at 100 TB: an empty day partition or filtered-out
 slice is routine, and the driver's correctness gate only runs at
 sf0.01, so degenerate-input divergence is invisible to it by design.
 
 At n=1 a handful of layout/heuristic audit booleans are exempt by
-design (scripts/empty_sweep.py SCALE_FLOOR_EXEMPT): AQE's
-non-empty-partition-ratio demotes every 1-row dim, a 1-row table
-cannot be fragmented, parquet skips dictionaries/blooms on tiny
-pages, a 1-file layout cannot show selective skipping.
+design (`oracle_check.SCALE_FLOOR_EXEMPT`).
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
+from tests import oracle_check as oc
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
-
-# at n=1 these FIXED_FAST members pin heuristics below their scale
-# floor (see module docstring) — empty-only
-SCALE_FLOOR_EXEMPT = {
-    "compaction_file_audit",
-    "parquet_bloom_filter_audit",
-    "zorder_skip_audit",
-    "zstd_encoding_audit",
-}
 
 # fast members of the round-10 fix set (each < ~10 s on empty input)
 FIXED_FAST = [
@@ -74,43 +53,16 @@ FIXED_FAST = [
 ]
 
 
-@pytest.fixture(scope="module", params=[0, 1], ids=["empty", "onerow"])
+@pytest.fixture(scope="module", params=["empty", "one_row"], ids=["empty", "onerow"])
 def fixture_dir(request, tmp_path_factory):
-    k = request.param
-    d = tmp_path_factory.mktemp(f"degenerate_fixture_k{k}")
-    for t in TABLES:
-        src = pq.read_table(f"{SF_SMOKE}/{t}.parquet")
-        pq.write_table(src.slice(0, k), str(d / f"{t}.parquet"))
-    return k, str(d)
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            return (1,) if math.isnan(v) else (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
+    d = tmp_path_factory.mktemp(f"degenerate_fixture_{request.param}")
+    return request.param, oc.write_fixture(oc.MUTATORS[request.param], SF_SMOKE, str(d))
 
 
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_degenerate_input_matches_oracle(spark, fixture_dir, name):
-    k, d = fixture_dir
-    if k >= 1 and name in SCALE_FLOOR_EXEMPT:
+    mutator, d = fixture_dir
+    if name in oc.EXEMPT.get(mutator, ()):
         pytest.skip("heuristic booleans below their scale floor at n=1")
-    sdf = entrymod.queries()[name](spark, d)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
+    srows, drows = oc.both(spark, name, d)
     assert srows == drows

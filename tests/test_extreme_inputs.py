@@ -1,8 +1,8 @@
 """Extreme-value regression gate (round 11): the queries the NaN/Inf/
 hostile-text sweep found divergent must stay Spark≡DuckDB on a fixture
-with special floats and hostile text injected. The full sweep lives in
-scripts/extremes_sweep.py (all 250 oracle-backed queries, 250/250
-clean at round 11); this test pins a fast subset of the fixed queries —
+with special floats and hostile text injected. The full sweep is
+`scripts/sweep.py --mutator extremes` (all 250 oracle-backed queries,
+250/250 clean at round 11); this test pins a fast subset of the fixed queries —
 the slow streaming/plan-audit members (stream_running_totals,
 stream_user_profile, stream_partial_session_eviction, stream_fx_enrich,
 and the AQE/DPP/zstd/bloom/stats/join-cost/multi-swap audits) are
@@ -29,36 +29,10 @@ Fix classes (r11 extremes sweep):
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
+from tests import oracle_check as oc
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
-
-# (key_col, double cols) — mirror scripts/extremes_sweep.py exactly
-FLOAT_PLAN = {
-    "customer": ("c_custkey", ["c_acctbal"]),
-    "supplier": ("s_suppkey", ["s_acctbal"]),
-    "part": ("p_partkey", ["p_retailprice"]),
-    "orders": ("o_orderkey", ["o_totalprice"]),
-    "lineitem": ("l_orderkey", ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]),
-    "events": ("event_id", ["value"]),
-}
-UNICODE_BLOB = (
-    "éèê café \U0001F600\U0001F680 你好世界 "
-    "السلام שלום "
-    "Á̂̃ naïve  line sep \x00?"
-)
 
 # fast members of the round-11 extremes fix set (each < ~10 s)
 FIXED_FAST = [
@@ -100,112 +74,12 @@ FIXED_FAST = [
 @pytest.fixture(scope="module")
 def extremes_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("extremes_fixture")
-    for t in TABLES:
-        tab = pq.read_table(f"{SF_SMOKE}/{t}.parquet")
-        if t in FLOAT_PLAN:
-            key, cols = FLOAT_PLAN[t]
-            keys = tab[key].to_numpy(zero_copy_only=False)
-            m_nan = pa.array(keys % 40 == 3)
-            m_pinf = pa.array(keys % 40 == 17)
-            m_ninf = pa.array(keys % 40 == 31)
-            for c in cols:
-                arr = tab[c]
-                arr = pc.if_else(m_nan, pa.scalar(float("nan"), arr.type), arr)
-                arr = pc.if_else(m_pinf, pa.scalar(float("inf"), arr.type), arr)
-                arr = pc.if_else(m_ninf, pa.scalar(float("-inf"), arr.type), arr)
-                tab = tab.set_column(tab.column_names.index(c), c, arr)
-        if t == "documents":
-            keys = tab["doc_id"].to_numpy(zero_copy_only=False)
-            txt = tab["text"].to_pylist()
-            lang = tab["lang"].to_pylist()
-            for i, k in enumerate(keys):
-                r = k % 40
-                if r == 3:
-                    txt[i] = ""
-                elif r == 17:
-                    txt[i] = " \t\n  \r "
-                elif r == 31:
-                    txt[i] = UNICODE_BLOB
-                if r == 9:
-                    lang[i] = ""
-            tab = tab.set_column(
-                tab.column_names.index("text"), "text", pa.array(txt, pa.string())
-            )
-            tab = tab.set_column(
-                tab.column_names.index("lang"), "lang", pa.array(lang, pa.string())
-            )
-            nch = [len(s) if s is not None else None for s in txt]
-            tab = tab.set_column(
-                tab.column_names.index("n_chars"), "n_chars", pa.array(nch, pa.int64())
-            )
-        if t == "events":
-            keys = tab["event_id"].to_numpy(zero_copy_only=False)
-            props = tab["props"].to_pylist()
-            for i, k in enumerate(keys):
-                r = k % 40
-                if r == 3:
-                    props[i] = "{broken"
-                elif r == 17:
-                    props[i] = ""
-                elif r == 31:
-                    props[i] = "[1,2"
-            tab = tab.set_column(
-                tab.column_names.index("props"), "props", pa.array(props, pa.string())
-            )
-        if t == "embeddings":
-            keys = tab["vec_id"].to_numpy(zero_copy_only=False)
-            vecs = tab["embedding"].to_pylist()
-            for i, k in enumerate(keys):
-                r = k % 40
-                if vecs[i] is None or len(vecs[i]) == 0:
-                    continue
-                if r == 3:
-                    vecs[i] = [float("nan")] + list(vecs[i][1:])
-                elif r == 17:
-                    vecs[i] = [0.0] * len(vecs[i])
-                elif r == 31 and len(vecs[i]) > 1:
-                    v = list(vecs[i])
-                    v[1] = float("inf")
-                    vecs[i] = v
-            tab = tab.set_column(
-                tab.column_names.index("embedding"),
-                "embedding",
-                pa.array(vecs, pa.list_(pa.float32())),
-            )
-        pq.write_table(tab, str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            if math.isnan(v):
-                return (1,)
-            if math.isinf(v):
-                return (3, v > 0)
-            return (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
+    return oc.write_fixture(oc.extremes, SF_SMOKE, str(d))
 
 
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_extreme_input_matches_oracle(spark, extremes_dir, name):
-    sdf = entrymod.queries()[name](spark, extremes_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{extremes_dir}/{t}.parquet'")
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
+    srows, drows = oc.both(spark, name, extremes_dir)
     assert srows == drows
 
 

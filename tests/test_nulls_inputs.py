@@ -1,8 +1,8 @@
 """Null-injection regression gate (round 11): the queries the 10%-NULL
 sweep found divergent must stay Spark≡DuckDB on a fixture with NULLs
-injected into non-key value/text columns. The full sweep lives in
-scripts/nulls_sweep.py (all 250 oracle-backed queries); this test pins
-the fast subset of the fixed queries — the slow streaming/plan-audit
+injected into non-key value/text columns. The full sweep is
+`scripts/sweep.py --mutator nulls` (all 250 oracle-backed queries);
+this test pins the fast subset of the fixed queries — the slow streaming/plan-audit
 members (stream_fx_enrich, stream_dimension_merge,
 stream_rocksdb_changelog_restart, stats_staleness_audit,
 audio_level_stats, video_frame_sample, multimodal_features) are
@@ -19,31 +19,10 @@ double partial-order ulps flipped a rounding boundary.
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
 import pytest
 
-import __spark_entry__ as entrymod
+from tests import oracle_check as oc
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
-
-# (key_col, cols_to_null) — mirror scripts/nulls_sweep.py exactly
-NULL_PLAN = {
-    "documents": ("doc_id", ["text", "lang", "source"]),
-    "events": ("event_id", ["value", "props", "event_type"]),
-    "customer": ("c_custkey", ["c_acctbal", "c_mktsegment", "c_name"]),
-    "orders": ("o_orderkey", ["o_totalprice", "o_orderpriority"]),
-    "lineitem": ("l_orderkey", ["l_discount", "l_returnflag", "l_shipdate"]),
-    "part": ("p_partkey", ["p_retailprice", "p_type"]),
-}
 
 # fast members of the round-11 nulls fix set (each < ~10 s)
 FIXED_FAST = [
@@ -70,50 +49,12 @@ FIXED_FAST = [
 @pytest.fixture(scope="module")
 def nulls_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("nulls_fixture")
-    for t in TABLES:
-        tab = pq.read_table(f"{SF_SMOKE}/{t}.parquet")
-        if t in NULL_PLAN:
-            key, cols = NULL_PLAN[t]
-            keys = tab[key].to_numpy(zero_copy_only=False)
-            for i, c in enumerate(cols):
-                if c not in tab.column_names:
-                    continue
-                # deterministic 10% per column, disjoint residues —
-                # see scripts/nulls_sweep.py (r13 decorrelation)
-                mask = pa.array(keys % 10 == i)
-                arr = tab[c]
-                nulled = pc.if_else(mask, pa.nulls(len(tab), arr.type), arr)
-                tab = tab.set_column(tab.column_names.index(c), c, nulled)
-        pq.write_table(tab, str(d / f"{t}.parquet"))
-    return str(d)
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def nv(v):
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            return (1,) if math.isnan(v) else (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            iso = v.isoformat()
-            return (0, iso[:10] if iso.endswith("T00:00:00") else iso)
-        return (0, v)
-
-    return sorted(tuple(nv(r[i]) for i in order) for r in rows)
+    return oc.write_fixture(oc.nulls, SF_SMOKE, str(d))
 
 
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_nulls_input_matches_oracle(spark, nulls_dir, name):
-    sdf = entrymod.queries()[name](spark, nulls_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{nulls_dir}/{t}.parquet'")
-    res = con.sql(entrymod.oracle_sql()[name])
-    drows = _norm(res.fetchall(), list(res.columns))
-    con.close()
+    srows, drows = oc.both(spark, name, nulls_dir)
     assert srows == drows
 
 

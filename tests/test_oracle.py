@@ -7,48 +7,14 @@ check. This mirrors the driver's CORRECTNESS_r{N}.json procedure.
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from tests import oracle_check as oc
 from tests.conftest import SF_ORACLE, SF_SMOKE
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
-def _normalize(rows, colnames):
-    """Column-name-sorted, row-sorted, float-normalized tuples."""
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-
-    def norm(v):
-        # Tag-tuples give a total sort order even when a column mixes
-        # NULL/NaN with real values (e.g. CDC delete rows): tags order
-        # value < NaN < NULL, and unequal tags never compare payloads,
-        # so None-vs-float comparisons can't happen.
-        if v is None:
-            return (2,)
-        if isinstance(v, float):
-            if math.isnan(v):
-                return (1,)
-            return (0, round(v, 9))
-        if hasattr(v, "isoformat"):
-            return (0, v.isoformat())
-        return (0, v)
-
-    return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -57,10 +23,11 @@ def test_oracle_match(spark, name):
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 
-    con = _duck(SF_ORACLE)
+    con = oc.duck(SF_ORACLE)
     res = con.sql(ORACLES[name])
     duck_cols = res.columns
     duck_rows = res.fetchall()
+    con.close()
 
     assert sorted(spark_cols) == sorted(duck_cols), (
         f"{name}: column names differ: spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
@@ -68,7 +35,7 @@ def test_oracle_match(spark, name):
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
     )
-    ns, nd = _normalize(spark_rows, spark_cols), _normalize(duck_rows, duck_cols)
+    ns, nd = oc.normalize(spark_rows, spark_cols), oc.normalize(duck_rows, duck_cols)
     mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
     assert not mismatches, f"{name}: {len(mismatches)} row mismatches; first: {mismatches[:3]}"
 
@@ -96,18 +63,12 @@ def test_orders_pareto_empty_input_matches_oracle(spark, tmp_path):
     pq.write_table(src.slice(0, 0), str(tmp_path / "orders.parquet"))
 
     sdf = QUERIES["orders_pareto"](spark, str(tmp_path))
-    spark_rows = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'"
-    )
-    res = con.sql(ORACLES["orders_pareto"])
-    duck_rows = _normalize(res.fetchall(), [c for c in res.columns])
+    spark_rows = oc.spark_rows(sdf)
+    duck_rows = oc.oracle_rows(str(tmp_path), ORACLES["orders_pareto"], tables=["orders"])
     assert spark_rows == duck_rows
     # pin the shape too: one summary row, n_customers literally 0
     assert len(spark_rows) == 1
-    row = {c: v for c, v in zip(sdf.columns, [tuple(r) for r in sdf.collect()][0])}
+    row = sdf.collect()[0].asDict()
     assert row["n_top_customers"] == 0 and row["n_customers"] == 0
 
 

@@ -662,3 +662,25 @@ def test_plans_read_parquet_tables_only_through_the_footer_helper():
         and node.func.value.attr == "read"
     ]
     assert not offenders, offenders
+
+
+def test_one_oracle_comparator():
+    """Spark-vs-DuckDB judgements go through tests/oracle_check.py
+    only: no other script or test defines its own row normalizer or
+    its own per-table ``CREATE VIEW`` loop, so the gates cannot
+    silently disagree about what "the same rows" means."""
+    import pathlib
+    import re
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    shared = repo / "tests" / "oracle_check.py"
+    pattern = re.compile(r"^\s*def _?norm(alize)?\(|CREATE (OR REPLACE )?VIEW \{")
+    offenders = [
+        f"{path.relative_to(repo)}:{n}"
+        for d in ("scripts", "tests")
+        for path in sorted((repo / d).rglob("*.py"))
+        if path != shared
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, offenders

@@ -30,28 +30,20 @@ rows = e.entry(spark).collect()
 assert len(rows) >= 0 and len(e.entry(spark).schema) > 0
 print(f"entry smoke: {len(rows)} rows OK")
 
+# 2. every oracle-backed query (or the named ones) against DuckDB
 SF = "/root/testdata/sf0.01"
-Q, O = e.queries(), e.oracle_sql()
+O = e.oracle_sql()
 unknown = [n for n in sys.argv[1:] if n not in O]
 if unknown:
     sys.exit(f"unknown or oracle-less queries: {unknown}")
-con = oc.duck(SF)
 
 fails = []
 for name in sys.argv[1:] or list(O):
-    sdf = Q[name](spark, SF)
-    srows, scols = oc.spark_rows(sdf), sorted(sdf.columns)
-    res = con.sql(O[name])
-    drows, dcols = oc.normalize(res.fetchall(), res.columns), sorted(res.columns)
-    ok = scols == dcols and srows == drows
-    print(f"{name:28s} spark={len(srows)}x{len(scols)} "
-          f"oracle={len(drows)}x{len(dcols)} {'OK' if ok else 'FAIL'}")
-    if not ok:
+    mismatch = oc.compare(spark, name, SF)
+    print(f"{name:28s} {'FAIL' if mismatch else 'OK'}")
+    if mismatch:
         fails.append(name)
-        print("  spark-only:", [r for r in srows if r not in drows][:3])
-        print("  oracle-only:", [r for r in drows if r not in srows][:3])
-        if scols != dcols:
-            print("  columns:", scols, dcols)
+        print("  ", mismatch)
 
 # 3. ETL write-path probe (exactly-once + quarantine + day partitions)
 from facebook_ads_bigquery_etl_spark.etl.facebook import run_facebook_pipeline

@@ -14,7 +14,9 @@ Usage:
 No names means every oracle-backed query; unknown names are rejected.
 `layout` runs each query on the clean source tables under the two
 LAYOUT_CONFS and compares Spark with Spark. The fixture and a JSON
-report go into a fresh temporary directory, whose path is printed.
+report go into a fresh temporary directory, whose path is printed; a
+report entry is the comparator's diff (empty for a match: row counts,
+columns and the rows found on one side only otherwise) or the error.
 Exit status is 1 when any query is a finding.
 """
 
@@ -29,39 +31,16 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests import oracle_check as oc  # noqa: E402
-from tests.conftest import SF_SMOKE  # noqa: E402
 
 
-def _err(ex: Exception) -> str:
-    return f"{type(ex).__name__}: {str(ex)[:160]}"
-
-
-def _check(spark, query, oracle, sf_dir: str, mutator: str) -> dict:
-    if mutator == "layout":
-        runs = []
-        for conf in oc.LAYOUT_CONFS:
-            for k, v in conf.items():
-                spark.conf.set(k, v)
-            try:
-                runs.append(oc.spark_rows(query(spark, sf_dir), oc.LAYOUT_DIGITS))
-            except Exception as ex:
-                return {"spark_err": _err(ex)}
-        a, b = runs
-    else:
-        row = {}
-        try:
-            a = oc.spark_rows(query(spark, sf_dir))
-        except Exception as ex:
-            row["spark_err"] = _err(ex)
-        try:
-            b = oc.oracle_rows(sf_dir, oracle)
-        except Exception as ex:
-            row["duck_err"] = _err(ex)
-        if row:
-            return row
-    if a == b:
-        return {"match": True}
-    return {"match": False, "a": a[:2], "b": b[:2], "n": (len(a), len(b))}
+def _check(spark, name: str, sf_dir: str, mutator: str) -> dict:
+    """`oc.diff` of one query (empty = match), or its error."""
+    try:
+        if mutator == "layout":
+            return oc.compare_layout(spark, name, sf_dir)
+        return oc.compare(spark, name, sf_dir)
+    except Exception as ex:
+        return {"err": f"{type(ex).__name__}: {str(ex)[:160]}"}
 
 
 def main() -> int:
@@ -72,16 +51,16 @@ def main() -> int:
 
     import __spark_entry__ as entry
 
-    queries, oracles = entry.queries(), entry.oracle_sql()
+    oracles = entry.oracle_sql()
     unknown = [n for n in args.names if n not in oracles]
     if unknown:
         ap.error(f"unknown or oracle-less queries: {unknown}")
     names = args.names or sorted(oracles)
 
     out_dir = tempfile.mkdtemp(prefix=f"sweep_{args.mutator}_")
-    sf_dir = SF_SMOKE
+    sf_dir = oc.SF_SMOKE
     if args.mutator != "layout":
-        sf_dir = oc.write_fixture(oc.MUTATORS[args.mutator], SF_SMOKE, out_dir)
+        sf_dir = oc.write_fixture(oc.MUTATORS[args.mutator], oc.SF_SMOKE, out_dir)
 
     from facebook_ads_bigquery_etl_spark.session import get_spark
 
@@ -95,16 +74,15 @@ def main() -> int:
             board[name] = {"exempt": True}
             print(name, "EXEMPT", flush=True)
             continue
-        row = board[name] = _check(spark, queries[name], oracles[name], sf_dir, args.mutator)
-        status = {True: "MATCH", False: "MISMATCH", None: "ERR"}[row.get("match")]
-        print(name, status, flush=True)
+        row = board[name] = _check(spark, name, sf_dir, args.mutator)
+        print(name, "ERR" if "err" in row else "MISMATCH" if row else "MATCH", flush=True)
 
-    bad = sorted(k for k, v in board.items() if not v.get("match") and not v.get("exempt"))
+    bad = sorted(k for k, v in board.items() if v and not v.get("exempt"))
     n_exempt = sum(1 for v in board.values() if v.get("exempt"))
     print(f"\n{args.mutator}: TOTAL {len(board)}, clean {len(board) - len(bad) - n_exempt}, "
           f"exempt {n_exempt}, findings {len(bad)}")
     for k in bad:
-        print(" ", k, board[k].get("spark_err") or board[k].get("duck_err") or "mismatch")
+        print(" ", k, board[k])
     report = os.path.join(out_dir, "report.json")
     with open(report, "w") as f:
         json.dump(board, f, indent=1, default=str)

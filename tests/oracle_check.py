@@ -5,7 +5,8 @@ Every correctness gate in this repo makes the same judgement: a
 registered query, run by Spark, returns the same rows as its DuckDB
 oracle over the same parquet tables. `tests/test_oracle.py`, the
 `tests/test_*_inputs.py` gates, `scripts/drive_verify.py` and
-`scripts/sweep.py` all make it through this module, so they cannot
+`scripts/sweep.py` all make it through `compare` (column names and
+normalized rows, with one diff format for a mismatch), so they cannot
 silently disagree about what "the same rows" means.
 
 A mutator is a function `(pa.Table, table_name) -> pa.Table` that turns
@@ -22,11 +23,15 @@ from __future__ import annotations
 
 import datetime
 import math
+from itertools import islice
 
 import duckdb
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+# The small source tables every fixture is derived from.
+SF_SMOKE = "/root/testdata/sf0.001"
 
 TABLES = (
     "region nation customer supplier part orders lineitem events"
@@ -73,25 +78,46 @@ def duck(sf_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def spark_rows(sdf, digits: int = 9) -> list[tuple]:
-    return normalize([tuple(r) for r in sdf.collect()], sdf.columns, digits)
+def spark_result(sdf, digits: int = 9) -> tuple[list[str], list[tuple]]:
+    """(sorted column names, normalized rows) of a Spark DataFrame."""
+    return sorted(sdf.columns), normalize([tuple(r) for r in sdf.collect()], sdf.columns, digits)
 
 
-def oracle_rows(sf_dir: str, sql: str, digits: int = 9, tables=TABLES) -> list[tuple]:
+def oracle_result(sf_dir: str, sql: str, tables=TABLES) -> tuple[list[str], list[tuple]]:
+    """(sorted column names, normalized rows) of DuckDB `sql` over `sf_dir`."""
     con = duck(sf_dir, tables)
     try:
         res = con.sql(sql)
-        return normalize(res.fetchall(), list(res.columns), digits)
+        return sorted(res.columns), normalize(res.fetchall(), res.columns)
     finally:
         con.close()
 
 
-def both(spark, name: str, sf_dir: str) -> tuple[list[tuple], list[tuple]]:
-    """(Spark rows, oracle rows) of registered query `name` on `sf_dir`."""
+def diff(a, b, sides=("spark", "oracle")) -> dict:
+    """What separates two results; empty when they are the same.
+
+    Gives the row counts, both column lists when they differ, and up to
+    three rows found on one side only: the sorted heads of two differing
+    results are usually identical, the one-sided rows are the lead.
+    """
+    if a == b:
+        return {}
+    (acols, arows), (bcols, brows) = a, b
+    out = {"rows": (len(arows), len(brows))}
+    if acols != bcols:
+        out["columns"] = (acols, bcols)
+    out[f"{sides[0]}_only"] = list(islice((r for r in arows if r not in brows), 3))
+    out[f"{sides[1]}_only"] = list(islice((r for r in brows if r not in arows), 3))
+    return out
+
+
+def compare(spark, name: str, sf_dir: str, tables=TABLES) -> dict:
+    """`diff` of registered query `name` on `sf_dir`, Spark vs its
+    DuckDB oracle; empty when they agree."""
     import __spark_entry__ as entry
 
-    srows = spark_rows(entry.queries()[name](spark, sf_dir))
-    return srows, oracle_rows(sf_dir, entry.oracle_sql()[name])
+    a = spark_result(entry.queries()[name](spark, sf_dir))
+    return diff(a, oracle_result(sf_dir, entry.oracle_sql()[name], tables))
 
 
 def write_fixture(mutator, src_dir: str, dst_dir: str) -> str:
@@ -400,3 +426,15 @@ LAYOUT_CONFS = (
 # Floats compare at 6 places Spark-vs-Spark: ulp drift below a query's
 # own output rounding is not a finding, a flipped rounded boundary is.
 LAYOUT_DIGITS = 6
+
+
+def compare_layout(spark, name: str, sf_dir: str) -> dict:
+    """`diff` of registered query `name` run under each of LAYOUT_CONFS."""
+    import __spark_entry__ as entry
+
+    runs = []
+    for conf in LAYOUT_CONFS:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        runs.append(spark_result(entry.queries()[name](spark, sf_dir), LAYOUT_DIGITS))
+    return diff(*runs, sides=("conf_a", "conf_b"))

@@ -64,5 +64,4 @@ def test_degenerate_input_matches_oracle(spark, fixture_dir, name):
     mutator, d = fixture_dir
     if name in oc.EXEMPT.get(mutator, ()):
         pytest.skip("heuristic booleans below their scale floor at n=1")
-    srows, drows = oc.both(spark, name, d)
-    assert srows == drows
+    assert not oc.compare(spark, name, d)

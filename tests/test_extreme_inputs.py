@@ -79,8 +79,7 @@ def extremes_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("name", FIXED_FAST)
 def test_extreme_input_matches_oracle(spark, extremes_dir, name):
-    srows, drows = oc.both(spark, name, extremes_dir)
-    assert srows == drows
+    assert not oc.compare(spark, name, extremes_dir)
 
 
 def test_finite_or_null_boundary(spark):

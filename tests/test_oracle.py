@@ -19,25 +19,8 @@ ORACLES = entrymod.oracle_sql()
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(spark, name):
-    sdf = QUERIES[name](spark, SF_ORACLE)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    con = oc.duck(SF_ORACLE)
-    res = con.sql(ORACLES[name])
-    duck_cols = res.columns
-    duck_rows = res.fetchall()
-    con.close()
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column names differ: spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    ns, nd = oc.normalize(spark_rows, spark_cols), oc.normalize(duck_rows, duck_cols)
-    mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
-    assert not mismatches, f"{name}: {len(mismatches)} row mismatches; first: {mismatches[:3]}"
+    mismatch = oc.compare(spark, name, SF_ORACLE)
+    assert not mismatch, f"{name}: {mismatch}"
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
@@ -62,13 +45,11 @@ def test_orders_pareto_empty_input_matches_oracle(spark, tmp_path):
     src = pq.read_table(f"{SF_SMOKE}/orders.parquet")
     pq.write_table(src.slice(0, 0), str(tmp_path / "orders.parquet"))
 
-    sdf = QUERIES["orders_pareto"](spark, str(tmp_path))
-    spark_rows = oc.spark_rows(sdf)
-    duck_rows = oc.oracle_rows(str(tmp_path), ORACLES["orders_pareto"], tables=["orders"])
-    assert spark_rows == duck_rows
+    assert not oc.compare(spark, "orders_pareto", str(tmp_path), tables=["orders"])
     # pin the shape too: one summary row, n_customers literally 0
-    assert len(spark_rows) == 1
-    row = sdf.collect()[0].asDict()
+    rows = QUERIES["orders_pareto"](spark, str(tmp_path)).collect()
+    assert len(rows) == 1
+    row = rows[0].asDict()
     assert row["n_top_customers"] == 0 and row["n_customers"] == 0
 
 

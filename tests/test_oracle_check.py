@@ -1,14 +1,15 @@
 """The shared comparator's rules, pinned without Spark: every oracle gate
 (tests/test_oracle.py, the input-class gates, scripts/drive_verify.py,
-scripts/sweep.py) judges through `oracle_check.normalize`, so a rule
-that drifts here changes every verdict at once."""
+scripts/sweep.py) judges through `oracle_check.normalize` and reports a
+mismatch through `oracle_check.diff`, so a rule that drifts here
+changes every verdict at once."""
 
 from __future__ import annotations
 
 import datetime as dt
 from decimal import Decimal
 
-from tests.oracle_check import normalize
+from tests.oracle_check import diff, normalize
 
 NAN, INF = float("nan"), float("inf")
 
@@ -55,3 +56,17 @@ def test_lists_and_decimals_compare_as_they_come():
     assert _one([1.0, 2.0]) == _one([1.0, 2.0])
     assert _one([1.0, 2.0]) != _one([2.0, 1.0])
     assert _one(Decimal("1.50")) == _one(Decimal("1.5"))
+
+
+def test_diff_names_the_one_sided_rows():
+    cols = ["k", "v"]
+    a = (cols, normalize([(k, 1.0) for k in range(10)], cols))
+    b = (cols, normalize([(k, 1.0) for k in range(10) if k != 7] + [(7, 2.0)], cols))
+    assert diff(a, a) == {}
+    d = diff(a, b)
+    assert d == {"rows": (10, 10),
+                 "spark_only": normalize([(7, 1.0)], cols),
+                 "oracle_only": normalize([(7, 2.0)], cols)}
+    # columns are named when they differ; the side labels are the caller's
+    d = diff((["k"], []), (["v"], []), sides=("conf_a", "conf_b"))
+    assert d == {"rows": (0, 0), "columns": (["k"], ["v"]), "conf_a_only": [], "conf_b_only": []}

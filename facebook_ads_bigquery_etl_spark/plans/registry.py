@@ -29,6 +29,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.materialize import invocation
+from ..sinks import spark_lists
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -51,17 +52,6 @@ def register(name: str, oracle: str | None = None):
 _SUMMARIES = ("_common_metadata", "_metadata")
 
 
-def _listed(name: str) -> bool:
-    """Whether Spark's file listing keeps this data file or directory
-    name (HadoopFSUtils.shouldFilterOutPathName, negated; the summary
-    files it also keeps are handled by the caller)."""
-    return not (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-
-
 def _schema_file(path: str) -> str | None:
     """The file Spark's non-merging parquet inference reads for ``path``:
     the path itself, or for a local directory its first listed data
@@ -76,8 +66,8 @@ def _schema_file(path: str) -> str | None:
     for root, dirs, files in os.walk(path, followlinks=True):
         if any(f in _SUMMARIES for f in files):
             return None
-        dirs[:] = [d for d in dirs if _listed(d)]
-        leaves += [f"{root}/{f}" for f in files if _listed(f)]
+        dirs[:] = [d for d in dirs if spark_lists(d)]
+        leaves += [f"{root}/{f}" for f in files if spark_lists(f)]
     return min(leaves, default=None)
 
 

@@ -40,13 +40,23 @@ from ..operators.integrity import round_double_sql
 from .registry import load_tables, read_parquet, register
 
 
+# How long a drained stream may run before it counts as hung.
+_DRAIN_TIMEOUT_S = 300
+
+
+def _await(q) -> None:
+    """Wait for stream ``q`` to finish and raise its failure. A query
+    still running after ``_DRAIN_TIMEOUT_S`` is stopped and raises, so
+    no caller reads what a half-drained sink holds."""
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not finish within {_DRAIN_TIMEOUT_S} s"
+        )
+
+
 def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
-    spark = df.sparkSession
-    # state-sized shuffle partitions for every drained stream (r13
-    # optimization): the stateful-operator commit cost per micro-batch
-    # is ∝ partition count and pinned at stream start — see
-    # streaming/pipeline.state_sized_shuffle for the policy/knob.
-    with state_sized_shuffle(spark):
+    with state_sized_shuffle(df):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -54,8 +64,8 @@ def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination(300)
-    return spark.table(name)
+    _await(q)
+    return df.sparkSession.table(name)
 
 
 def _qname(base: str, sf_dir: str) -> str:
@@ -69,17 +79,21 @@ def _staged_louter_src(spark: SparkSession, sf_dir: str) -> str:
     The ``_DONE`` marker now stores a fingerprint (mtime_ns:size) of
     the source events.parquet: the original "testdata is read-only so
     a _DONE-marked stage never goes stale" assumption is FALSE for the
-    sweep fixtures under /tmp, which are REWRITTEN per run — the r13
+    sweep fixtures, which are REWRITTEN per run — the r13
     nulls-residue decorrelation changed the fixture under a stale
     staging and the engine silently computed over yesterday's rows
     (r13 operator review: a phantom (day, type) rollup combo that no
     longer existed in the fixture)."""
     import os
     import shutil
+    import tempfile
 
     from pyspark.sql import types as T
 
-    tmp = "/tmp/spark_graft_ss_louter_" + _qname("", sf_dir).strip("_")
+    tmp = os.path.join(
+        tempfile.gettempdir(),
+        "spark_graft_ss_louter_" + _qname("", sf_dir).strip("_"),
+    )
     done = os.path.join(tmp, "_DONE")
     st = os.stat(os.path.join(sf_dir, "events.parquet"))
     fp = f"{st.st_mtime_ns}:{st.st_size}"
@@ -563,10 +577,10 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.pipeline import _event_schema
 
-    # Staged once per SOURCE CONTENT under a deterministic /tmp path
-    # (the bench re-runs this query back-to-back; re-staging per run
-    # would time the staging, not the join). The stage is fingerprint-
-    # guarded: sweep fixtures under /tmp are rewritten per run, so a
+    # Staged once per SOURCE CONTENT under a deterministic path in the
+    # temp dir (the bench re-runs this query back-to-back; re-staging
+    # per run would time the staging, not the join). The stage is
+    # fingerprint-guarded: sweep fixtures are rewritten per run, so a
     # bare _DONE marker CAN go stale — see _staged_louter_src.
     tmp = _staged_louter_src(spark, sf_dir)
 
@@ -614,12 +628,9 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    # State-store sizing: a stream-stream join commits one state store
-    # per shuffle partition PER SIDE per micro-batch — at local bench
-    # scale that fixed commit overhead dominates (measured 15 s at 32
-    # partitions vs ~5 s at 8 for identical results). Since r13 the
-    # policy lives in streaming/pipeline.state_sized_shuffle, applied
-    # by _drain for every drained stream.
+    # A stream-stream join commits one state store per shuffle
+    # partition PER SIDE per micro-batch; _drain sizes the count to the
+    # staged source (streaming/pipeline.state_sized_shuffle).
     out = _drain(
         joined.select(
             "purchase_id",
@@ -821,7 +832,7 @@ def stream_atomic_sink_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = f"{tmp}/wh"
     try:
         q = write_stream_to_warehouse(out, wh, f"{tmp}/cp1")
-        q.awaitTermination(300)
+        _await(q)
         # schema-carrying read-backs: an all-empty stream publishes
         # zero day partitions (r10 empty sweep)
         n1 = sinks.read_published_or_empty(spark, wh, like=out).count()
@@ -832,7 +843,7 @@ def stream_atomic_sink_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("date").alias("date"),
         )
         q2 = write_stream_to_warehouse(out2, wh, f"{tmp}/cp2")
-        q2.awaitTermination(300)
+        _await(q2)
         n2 = sinks.read_published_or_empty(spark, wh, like=out).count()
         sinks.compact_partitions(spark, wh)
         n3 = sinks.read_published_or_empty(spark, wh, like=out).count()
@@ -936,7 +947,6 @@ def stream_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "fullOuter",
     )
-    # state partitions via _drain's state_sized_shuffle policy (r13)
     out = _drain(
         joined.select(
             F.coalesce("purchase_id", F.lit(-1)).alias("purchase_id"),
@@ -1053,14 +1063,14 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["version"] += 1
 
     try:
-        with state_sized_shuffle(spark):
+        with state_sized_shuffle(src):
             q = (
                 src.writeStream.foreachBatch(apply_batch)
                 .option("checkpointLocation", f"{work}/cp")
                 .trigger(availableNow=True)
                 .start()
             )
-        q.awaitTermination(300)
+        _await(q)
         final = read_parquet(spark, f"{work}/v{state['version']}")
         return spark.createDataFrame(
             [
@@ -1149,7 +1159,7 @@ def watermark_lag_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day"))
         .count()
     )
-    with state_sized_shuffle(spark):
+    with state_sized_shuffle(agg):
         q = (
             agg.writeStream.format("memory")
             .queryName(_qname("s_wm_obs", sf_dir))
@@ -1157,7 +1167,7 @@ def watermark_lag_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination(300)
+    _await(q)
     import datetime as dt
 
     rows = []
@@ -1238,6 +1248,8 @@ def stream_partial_session_eviction(
     import shutil
     import tempfile
 
+    import pyarrow.parquet as pq
+
     from ..streaming import partial_session_flush
 
     from ..operators import casting as cst
@@ -1314,18 +1326,23 @@ def stream_partial_session_eviction(
         import uuid as _uuid
 
         name = _qname("s_partialsess", sf_dir) + "_" + _uuid.uuid4().hex[:6]
-        with state_sized_shuffle(spark):
+        flush = partial_session_flush(stream)
+        with state_sized_shuffle(flush):
             q = (
-                partial_session_flush(stream)
-                .writeStream.format("memory")
+                flush.writeStream.format("memory")
                 .queryName(name)
                 .outputMode("update")
                 .trigger(availableNow=True)
                 .start()
             )
-        deadline = _time.time() + 300
-        saw_data = False
-        while _time.time() < deadline and q.isActive:
+        # An empty source has no flush batch to wait for: its first
+        # progress is already the last one with output.
+        saw_data = not any(
+            pq.read_metadata(os.path.join(src, f)).num_rows
+            for f in os.listdir(src)
+        )
+        deadline = _time.time() + _DRAIN_TIMEOUT_S
+        while q.isActive:
             lp = q.lastProgress
             if lp is not None:
                 if lp["numInputRows"] > 0:
@@ -1333,10 +1350,15 @@ def stream_partial_session_eviction(
                 elif saw_data:
                     q.stop()
                     break
+            if _time.time() > deadline:
+                q.stop()
+                raise TimeoutError(
+                    f"stream {name} saw no flush batch within {_DRAIN_TIMEOUT_S} s"
+                )
             _time.sleep(0.05)  # r13: finer poll — the loop only waits
             # for the flush batch's progress row; 0.2 s granularity
             # added up to ~0.4 s of pure detection latency per run
-        q.awaitTermination(60)
+        _await(q)
         out = spark.table(name)
         # materialize before the source dir is deleted: memory sink
         # rows are already driver-side, but force the table once
@@ -1490,14 +1512,14 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         audit["consistent"] &= torn == 0
 
     try:
-        with state_sized_shuffle(spark):
+        with state_sized_shuffle(src):
             q = (
                 src.writeStream.foreachBatch(publish_batch)
                 .option("checkpointLocation", f"{work}/cp")
                 .trigger(availableNow=True)
                 .start()
             )
-        q.awaitTermination(300)
+        _await(q)
         fact_like = spark.createDataFrame([], schema).select(
             "event_id", "user_id", "event_type", "value",
             F.col("ts").cast("date").alias("date"),
@@ -1649,7 +1671,7 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
 
     # self-pin the engine's declared UTC date semantics: this query
     # casts ts→date and may run first in a fresh hostile-TZ session
-    # with the /tmp staging already on disk (so no load_tables call
+    # with the staging already on disk (so no load_tables call
     # would pin it).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # fingerprint-guarded shared staging (rebuilds on fixture change)
@@ -1738,7 +1760,7 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
                 "n_events", "total_value",
             )
         )
-        with state_sized_shuffle(spark):
+        with state_sized_shuffle(rollup):
             q = (
                 rollup.writeStream.foreachBatch(apply_batch)
                 .outputMode("update")
@@ -1746,7 +1768,7 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
                 .trigger(availableNow=True)
                 .start()
             )
-        q.awaitTermination(300)
+        _await(q)
         import json as _json
 
         return [
@@ -1938,15 +1960,15 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
             .option("maxFilesPerTrigger", 1)
             .parquet(staged)
         )
-        with state_sized_shuffle(spark):
+        live = src.filter(F.col("user_id") >= 0)
+        with state_sized_shuffle(live):
             q = (
-                src.filter(F.col("user_id") >= 0)
-                .writeStream.foreachBatch(apply_batch)
+                live.writeStream.foreachBatch(apply_batch)
                 .option("checkpointLocation", f"{work}/cp")
                 .trigger(availableNow=True)
                 .start()
             )
-        q.awaitTermination(300)
+        _await(q)
         if state["version"] < 0:
             # every batch was empty: no fact dir, no index versions —
             # the ledger is all zeros and the incremental ≡ rebuild
@@ -2118,7 +2140,7 @@ def state_store_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .count()
     )
-    with state_sized_shuffle(spark):
+    with state_sized_shuffle(agg):
         q = (
             agg.writeStream.format("memory")
             .queryName(_qname("s_state_metrics", sf_dir))
@@ -2126,7 +2148,7 @@ def state_store_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination(300)
+    _await(q)
     import datetime as dt
 
     rows = []

@@ -1204,13 +1204,12 @@ def schema_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         v2.write.mode("append").parquet(path)
         back = spark.read.option("mergeSchema", "true").parquet(path)
         has_col = "o_priority_score" in back.columns
+        # only v1 rows count: v2 rows whose source value is NULL are
+        # NULL in the new column too, but they are not "old rows"
+        old = F.col("o_orderkey") % 2 == 0
         row = back.agg(
-            F.sum(F.when(F.col("o_priority_score").isNull(), 1).otherwise(0)).alias(
-                "nulls_new"
-            ),
-            F.sum(F.when(F.col("o_priority_score").isNotNull(), 1).otherwise(0)).alias(
-                "notnull_new"
-            ),
+            F.count_if(old & F.col("o_priority_score").isNull()).alias("nulls_new"),
+            F.count_if(old).alias("old_rows"),
         ).collect()[0]
         # one action for both batch counts (r14, guide §1 — was two
         # separate full scans of orders)
@@ -1219,10 +1218,8 @@ def schema_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("o_orderkey") % 2 == 1).cast("long")).alias("n2"),
         ).first()
         n1, n2 = int(cnts["n1"] or 0), int(cnts["n2"] or 0)
-        # SUM over an empty read-back is NULL, not 0 (r10 empty sweep)
-        nulls_new = int(row["nulls_new"] or 0)
-        notnull_new = int(row["notnull_new"] or 0)
-        nulls_match = bool(nulls_new == n1 and notnull_new == n2)
+        nulls_new = int(row["nulls_new"])
+        nulls_match = bool(nulls_new == n1 == int(row["old_rows"]))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(

@@ -287,6 +287,17 @@ class CompactionLockHeld(RuntimeError):
     the single-writer assumption is now enforced, not assumed)."""
 
 
+def spark_lists(name: str) -> bool:
+    """Whether Spark's file listing keeps this data file or directory
+    name (HadoopFSUtils.shouldFilterOutPathName, negated; the parquet
+    summary files it also keeps are left to the caller)."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
 def _local_fs_path(path: str) -> str | None:
     """The local-filesystem form of ``path``, or None for URI paths.
 

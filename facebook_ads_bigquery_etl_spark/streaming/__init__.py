@@ -18,7 +18,6 @@ from .pipeline import (
     EVENT_TIME_BOUND_SQL,
     bound_event_time,
     state_sized_shuffle,
-    stream_state_partitions,
     daily_rollup,
     dedup_events,
     enrich_with_rates,

@@ -9,76 +9,194 @@ daily run, reference README.md:57).
 Scale posture: all state (windows, dedup keys, sessions) is bounded by
 the watermark — state store size is O(active keys × watermark span),
 independent of total stream length; nothing ever collects to the
-driver.
+driver. The number of state partitions follows the bytes the stream
+reads (``state_sized_shuffle``), not a constant.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import tempfile
+from contextlib import contextmanager
 from typing import Iterable
 
 import pandas as pd
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sinks import write_day_partitioned
+from ..sinks import _local_fs_path, spark_lists, write_day_partitioned
 
 # ---------------------------------------------------------------------------
-# Stateful-stream partition sizing (r13 optimization, guide §2).
+# Stateful-stream partition sizing.
 #
-# A stateful streaming operator commits ONE state store per shuffle
-# partition per micro-batch (per side, for stream-stream joins) — a
-# fixed per-batch cost that scales with the partition COUNT, not the
-# data, and that AQE can never coalesce (streaming state partitioning
-# is pinned at first start and recorded in the checkpoint). Sizing it
-# to the cluster's core count is therefore wrong in both directions:
-# at bench scale 32 partitions ≈ 4-32× more state-store commits per
-# batch than the state key cardinality warrants (the stream-stream
-# join families measured 15 s at 32 partitions vs ~5 s at 8 for
-# identical results, round-8 BENCH_NOTES), and at 100 TB the right
-# number is keys×rate-derived, not core-derived. The policy lives in
-# one place: state partitions come from $SPARK_GRAFT_STREAM_STATE_
-# PARTITIONS when set (the production knob — size to active keys ×
-# watermark retention; it is sticky per checkpoint), defaulting to 8,
-# which covers the fixture corpus's state grains (day×type ≈ 150
-# keys, users ≈ O(1k)) with partitions to spare. Results are
-# partition-count-independent (hash placement only; the determinism
-# sweep pins engine-vs-engine equality across contrasting shuffle
-# partitioning for every registered query).
-STREAM_STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
+# A stateful operator (aggregation, dedup, session window, stream-stream
+# join, applyInPandasWithState) keeps one state store per shuffle
+# partition and commits each of them every micro-batch, so that cost
+# follows the partition COUNT, not the data. The count is written into
+# the checkpoint at first start and AQE never coalesces it, so it has to
+# be right at start. It is sized from the input, like a batch shuffle:
+# the total bytes of the stream's file sources divided by
+# ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (the size AQE
+# aims a batch shuffle partition at), rounded up and clamped to
+# [1, ``spark.sql.shuffle.partitions``]. A source that is empty, missing,
+# non-local or not a file source says nothing about the data to come,
+# so the count falls back to the session's ``shuffle.partitions`` — a
+# stream started on an empty landing zone must not keep 1 forever.
+# A stream without state starts with no override: its foreachBatch
+# body runs on the stream's cloned session and inherits the count.
+# Python-evaluated state (applyInPandasWithState) is the exception to
+# "few partitions": each state partition is one Python worker running
+# per-key Python, so there the count is the operator's parallelism. It
+# gets at least one partition per core this process may run on (and no
+# more than ``shuffle.partitions``): one partition ran the token-bucket
+# and partial-session families 2.2x slower than eight on 4 cores, and
+# 32 Python workers on those 4 cores ran them 1.6x slower.
+# Results do not depend on the count (hash placement only).
+
+_STATEFUL_NODES = frozenset(
+    {
+        "Aggregate",
+        "Deduplicate",
+        "DeduplicateWithinWatermark",
+        "Distinct",
+        "FlatMapGroupsWithState",
+        "FlatMapGroupsInPandasWithState",
+        "TransformWithState",
+        "TransformWithStateInPySpark",
+    }
+)
+# State whose per-key work runs in Python workers (see above).
+_PYTHON_STATE_NODES = frozenset(
+    {"FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark"}
+)
 
 
-def stream_state_partitions() -> int:
-    return int(os.environ.get(STREAM_STATE_PARTITIONS_ENV, "8"))
+def state_partition_count(
+    source_bytes: int | None, advisory_bytes: int, shuffle_partitions: int
+) -> int:
+    """The state partition count for a stateful stream whose file
+    sources hold ``source_bytes`` (None when unknown)."""
+    if not source_bytes:
+        return shuffle_partitions
+    return max(1, min(shuffle_partitions, -(-source_bytes // advisory_bytes)))
 
 
-class state_sized_shuffle:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` to the
-    stream-state policy value around a stream's START (the partition
-    count is captured when the query starts from a fresh checkpoint;
-    restarts keep the checkpointed value). Restores the previous conf
-    on exit — batch plans outside the ``with`` are untouched."""
+def _streaming_plan(df: DataFrame) -> tuple[set[str], list]:
+    """The stateful operators in ``df``'s analyzed plan (a stream-stream
+    join as ``Join``) and its streaming leaves. Static subtrees (the
+    table side of a stream-static join) are skipped: they hold no state
+    and feed no micro-batch."""
+    held = set()
+    leaves = []
+    todo = [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if not node.isStreaming():
+            continue
+        name = node.nodeName()
+        children = node.children()
+        kids = [children.apply(i) for i in range(children.size())]
+        if name in _STATEFUL_NODES or (
+            name == "Join" and all(k.isStreaming() for k in kids)
+        ):
+            held.add(name)
+        if not kids:
+            leaves.append(node)
+        todo += kids
+    return held, leaves
 
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._prev: str | None = None
 
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions", None)
-        self._spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_state_partitions())
-        )
-        return self
+def _local_bytes(path: str) -> int | None:
+    """Bytes of the data files Spark's listing keeps under ``path`` (a
+    file, a directory or a glob); None unless it is local and exists."""
+    local = _local_fs_path(path)
+    if local is None:
+        return None
+    roots = glob.glob(local) if glob.has_magic(local) else [local]
+    roots = [r for r in roots if os.path.exists(r)]
+    if not roots:
+        return None
+    total = 0
+    for root in roots:
+        if os.path.isfile(root):
+            total += os.path.getsize(root)
+            continue
+        for d, dirs, files in os.walk(root, followlinks=True):
+            dirs[:] = [x for x in dirs if spark_lists(x)]
+            total += sum(
+                os.path.getsize(os.path.join(d, f)) for f in files if spark_lists(f)
+            )
+    return total
 
-    def __exit__(self, *exc):
-        if self._prev is None:
-            self._spark.conf.unset("spark.sql.shuffle.partitions")
+
+def _source_bytes(spark: SparkSession, leaves: list) -> int | None:
+    """Total bytes of the file sources behind ``leaves``, each distinct
+    path counted once; None when any leaf is not a local file source."""
+    file_format = JavaClass(
+        "org.apache.spark.sql.execution.datasources.FileFormat",
+        spark._jvm._gateway_client,
+    )._java_lang_class
+    sizes = {}
+    for leaf in leaves:
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        source = leaf.dataSource()
+        path = source.options().get("path")
+        if path.isEmpty() or not file_format.isAssignableFrom(source.providingClass()):
+            return None
+        path = path.get()
+        if path not in sizes:
+            sizes[path] = _local_bytes(path)
+            if sizes[path] is None:
+                return None
+    return sum(sizes.values())
+
+
+def state_partitions(df: DataFrame) -> int | None:
+    """The shuffle-partition count ``df`` should start with, or None
+    when it holds no state or the count is the session's own."""
+    held, leaves = _streaming_plan(df)
+    if not held:
+        return None
+    spark = df.sparkSession
+    try:
+        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return None
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    n = state_partition_count(_source_bytes(spark, leaves), advisory, default)
+    if held & _PYTHON_STATE_NODES:
+        n = max(n, min(default, len(os.sched_getaffinity(0))))
+    return None if n == default else n
+
+
+@contextmanager
+def state_sized_shuffle(df: DataFrame):
+    """Start ``df``'s stream inside this block: ``spark.sql.shuffle.
+    partitions`` holds the ``state_partitions`` count while the query
+    starts (the stream clones the session conf, and a fresh checkpoint
+    records it; a restart keeps the recorded count) and is restored on
+    exit, so batch plans outside the block are untouched."""
+    n = state_partitions(df)
+    if n is None:
+        yield
+        return
+    conf = df.sparkSession.conf
+    prev = conf.get("spark.sql.shuffle.partitions", None)
+    conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        if prev is None:
+            conf.unset("spark.sql.shuffle.partitions")
         else:
-            self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
+            conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _event_schema(ts_type: T.DataType) -> T.StructType:
@@ -492,7 +610,7 @@ def write_stream_to_warehouse(
             clustering_fields=clustering_fields,
         )
 
-    with state_sized_shuffle(stream_df.sparkSession):
+    with state_sized_shuffle(stream_df):
         return (
             stream_df.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint)

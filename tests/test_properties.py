@@ -640,6 +640,24 @@ def test_local_checkpoint_lives_only_in_materialize():
     assert not offenders, offenders
 
 
+def test_library_stages_only_under_the_temp_dir():
+    """Scratch paths come from ``tempfile`` (``gettempdir()``,
+    ``mkdtemp``), so a run can move them with ``TMPDIR``: no library
+    module may hold a ``"/tmp/`` string literal."""
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    root = pathlib.Path(lib.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "\"/tmp" in line or "'/tmp" in line
+    ]
+    assert not offenders, offenders
+
+
 def test_plans_read_parquet_tables_only_through_the_footer_helper():
     """A bare ``spark.read.parquet(path)`` infers the schema in a Spark
     job; every table read in plans/ goes through

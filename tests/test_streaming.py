@@ -419,3 +419,140 @@ class TestTokenBucketEviction:
             not any(row[0] == 1 for row in out[b]) for b in (2, 3, 4)
         ), "A was evicted early: deadline regressed on the late batch"
         assert final_a in out[5]  # evicted at the monotone deadline
+
+
+class TestStatePartitions:
+    """State partitions are sized from the stream's source bytes
+    (streaming/pipeline.state_sized_shuffle) and fixed by the
+    checkpoint at first start."""
+
+    def test_count_arithmetic(self):
+        from facebook_ads_bigquery_etl_spark.streaming.pipeline import (
+            state_partition_count,
+        )
+
+        mb = 1 << 20
+        assert state_partition_count(0, 64 * mb, 8) == 8  # empty source
+        assert state_partition_count(None, 64 * mb, 8) == 8  # unknown source
+        assert state_partition_count(1, 64 * mb, 8) == 1  # clamp low
+        assert state_partition_count(3 * 64 * mb + 1, 64 * mb, 8) == 4
+        assert state_partition_count(10**12, 64 * mb, 8) == 8  # clamp high
+
+    def test_which_streams_are_sized(self, spark):
+        from facebook_ads_bigquery_etl_spark.streaming.pipeline import (
+            state_partitions,
+        )
+
+        ev = read_event_stream(spark, f"{SF_SMOKE}/events.parquet")
+        cores = len(os.sched_getaffinity(0))
+        key = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(cores + 1))
+        try:
+            assert state_partitions(ev) is None  # no state: no override
+            assert state_partitions(daily_rollup(ev)) == 1
+            assert state_partitions(dedup_events(ev)) == 1
+            # Python-evaluated state keeps one partition per core
+            assert state_partitions(user_running_totals(ev)) == cores
+        finally:
+            spark.conf.set(key, prev)
+
+    @staticmethod
+    def _rollup_state_partitions(spark, monkeypatch):
+        from facebook_ads_bigquery_etl_spark.plans import QUERIES
+        from facebook_ads_bigquery_etl_spark.plans import streaming_queries as sq
+
+        seen = []
+        real = sq._await
+
+        def spy(q):
+            seen.append(q)
+            real(q)
+
+        monkeypatch.setattr(sq, "_await", spy)
+        QUERIES["stream_daily_rollup"](spark, SF_SMOKE).collect()
+        (q,) = seen
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    def test_daily_rollup_runs_one_state_partition(self, spark, monkeypatch):
+        assert self._rollup_state_partitions(spark, monkeypatch) == 1
+
+    def test_smaller_advisory_size_gives_more_partitions(self, spark, monkeypatch):
+        size = os.path.getsize(f"{SF_SMOKE}/events.parquet")
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        spark.conf.set(key, str(size // 2 + 1))
+        try:
+            assert self._rollup_state_partitions(spark, monkeypatch) == 2
+        finally:
+            spark.conf.unset(key)
+
+    def test_restart_keeps_the_checkpointed_count(self, spark, tmp_path):
+        from facebook_ads_bigquery_etl_spark.streaming import state_sized_shuffle
+        from facebook_ads_bigquery_etl_spark.streaming.pipeline import (
+            state_partitions,
+        )
+
+        src = tmp_path / "src"
+        src.mkdir()
+        shutil.copy(f"{SF_SMOKE}/events.parquet", src / "a.parquet")
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+        def run():
+            stream = daily_rollup(read_event_stream(spark, str(src)))
+            n = state_partitions(stream)
+            with state_sized_shuffle(stream):
+                q = (
+                    stream.writeStream.format("noop")
+                    .outputMode("update")
+                    .option("checkpointLocation", str(tmp_path / "cp"))
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            assert q.awaitTermination(120)
+            ops = q.lastProgress["stateOperators"]
+            return n, ops[0]["numShufflePartitions"]
+
+        assert run() == (1, 1)
+        # more data lands and the rule would now pick more partitions;
+        # the restarted stream keeps the count its checkpoint recorded
+        shutil.copy(f"{SF_SMOKE}/events.parquet", src / "b.parquet")
+        spark.conf.set(key, str(os.path.getsize(src / "a.parquet")))
+        try:
+            assert run() == (2, 1)
+        finally:
+            spark.conf.unset(key)
+
+
+class TestDrainDeadline:
+    def test_hung_stream_is_stopped_and_named(self, spark, tmp_path, monkeypatch):
+        """A ProcessingTimeTimeout stateful apply never ends under
+        availableNow; the drain stops it at its deadline and raises
+        instead of returning what the sink holds so far."""
+        from facebook_ads_bigquery_etl_spark.plans import streaming_queries as sq
+        from facebook_ads_bigquery_etl_spark.streaming import partial_session_flush
+
+        src = tmp_path / "src"
+        src.mkdir()
+        spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(50).select(
+            "event_id", "user_id", "value"
+        ).withColumn("ts", F.current_timestamp()).write.parquet(str(src / "a"))
+        stream = spark.readStream.schema(
+            "event_id long, user_id long, value double, ts timestamp"
+        ).parquet(str(src / "a"))
+        monkeypatch.setattr(sq, "_DRAIN_TIMEOUT_S", 3)
+        with pytest.raises(TimeoutError, match="hung_partial_sessions"):
+            sq._drain(partial_session_flush(stream), "hung_partial_sessions", "update")
+        assert not [q for q in spark.streams.active if q.name == "hung_partial_sessions"]
+
+    def test_partial_session_eviction_ends_on_empty_events(self, spark, tmp_path):
+        import time
+
+        from facebook_ads_bigquery_etl_spark.plans import QUERIES
+        from tests import oracle_check as oc
+
+        d = oc.write_fixture(oc.MUTATORS["empty"], SF_SMOKE, str(tmp_path))
+        t0 = time.time()
+        rows = QUERIES["stream_partial_session_eviction"](spark, d).collect()
+        assert rows == []
+        assert time.time() - t0 < 30
+        assert not [q for q in spark.streams.active if "partialsess" in (q.name or "")]

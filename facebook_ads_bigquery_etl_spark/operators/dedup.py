@@ -31,35 +31,43 @@ from .exprs import let
 from .text import tokens, with_fingerprint
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition ahead of CPU-heavy per-row expansion (shingling,
-    multi-hash aggs). A small/compact parquet input arrives as one
-    partition, which would serialize the expensive stage on one core;
-    at 100 TB inputs are already wide (this no-ops) and the cost
-    vanishes relative to the stage it parallelizes.
-
-    The materialization barrier is load-bearing: Catalyst pushes
-    deterministic projections THROUGH a bare repartition (to shrink
-    the shuffle), which lands the expensive expressions back on the
-    single input partition — observed 6× slowdown. An InMemoryRelation
-    is a barrier the optimizer does not cross, so downstream compute
-    genuinely runs on `target` partitions. Only narrow inputs pay the
-    (tiny) cache, which lives until the next query invocation opens
-    (operators/materialize).
+def spread(df: DataFrame) -> DataFrame:
+    """The one width rule for a table entering a CPU-heavy stage
+    (shingling, multi-hash aggs, a Python pipeline): repartition to
+    ``defaultParallelism`` when the input is narrower. A small/compact
+    parquet input arrives as one partition, which would serialize the
+    expensive stage on one core; at 100 TB inputs are already wide
+    (this no-ops) and the cost vanishes relative to the stage it
+    parallelizes.
 
     Width probe: ``inputFiles()`` (a file-index lookup on the analyzed
-    plan), NOT ``df.rdd.getNumPartitions()`` — materializing the RDD
-    lineage costs an extra driver-side analysis pass per call. File
-    count under-approximates scan partitions (splittable parquet), so
-    this only errs toward spreading, never toward serializing."""
+    plan, no job), NOT the RDD's partition count — asked of a frame
+    with an exchange, that runs the AQE shuffle-map stages as 1–3
+    Spark jobs while the query is only being built, and they run again
+    at execution. File count under-approximates scan partitions
+    (splittable parquet), so this only errs toward spreading, never
+    toward serializing."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
         width = len(df.inputFiles())
     except Exception:
         width = 0  # non-file source: assume narrow, spread
-    if width < target:
-        return materialize.persist(df.repartition(target))
-    return df
+    return df.repartition(target) if width < target else df
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """:func:`spread` plus a materialization barrier, which is
+    load-bearing for dedup's expression stages: Catalyst pushes
+    deterministic projections THROUGH a bare repartition (to shrink
+    the shuffle), which lands the expensive expressions back on the
+    single input partition — observed 6× slowdown. An InMemoryRelation
+    is a barrier the optimizer does not cross, so downstream compute
+    genuinely runs on the spread partitions (a MapInPandas is not
+    pushed through a repartition, so Python stages need no barrier).
+    Only narrow inputs pay the (tiny) cache, which lives until the next
+    query invocation opens (operators/materialize)."""
+    out = spread(df)
+    return df if out is df else materialize.persist(out)
 
 
 # -- exact -----------------------------------------------------------------

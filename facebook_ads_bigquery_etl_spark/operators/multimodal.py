@@ -12,6 +12,11 @@ modalities in the synthetic corpus). At 100 TB the pattern is:
 payloads stay columnar binary, per-batch Python touches only the
 batches it's given (no collect), and expensive decodes are gated
 behind a pushdown-surviving filter on the metadata struct.
+
+Width policy: a stage runs at its input's width, and a table entering
+a Python pipeline (the synthesized payload tables below) is spread
+once, by ``dedup.spread`` — a rule that starts no Spark job while the
+query is being built.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import SCHEMA_MEDIA
+from .dedup import resolve_replays, spread
 
 
 def _png_codec():
@@ -384,6 +390,71 @@ def _synth_image_tools():
 image_dims, image_rgb = _synth_image_tools()
 
 
+def _model_image(enc):
+    """``doc_id → enc(w, h, rgb)`` over the synthetic pixel model, as a
+    nested function (by-value pickling, see ``_png_codec``)."""
+    dims, rgb = image_dims, image_rgb
+
+    def encode(d: int) -> bytes:
+        w, h = dims(d)
+        return enc(w, h, rgb(d, w, h))
+
+    return encode
+
+
+_PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), False),
+    ]
+)
+
+
+def _synth(docs: DataFrame, encode) -> DataFrame:
+    """One ``(media_id, payload)`` row per doc_id, the payload
+    ``encode(doc_id)``: the table entering a Python pipeline, spread
+    once (module docstring). ``encode`` must be a nested function."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["doc_id"],
+                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    return spread(docs.select("doc_id")).mapInPandas(gen, _PAYLOAD_SCHEMA)
+
+
+def _parse_pass(media: DataFrame, parse, schema: T.StructType) -> DataFrame:
+    """The one parse pass over ``(media_id, payload)`` rows, at the
+    input's width: ``parse(payload)`` returns the schema's non-key
+    fields in order, or None for a row of NULLs. A NULL payload is a
+    row of NULLs without calling ``parse`` (quarantine posture: dirty
+    data never fails the batch). ``parse`` must be a nested function."""
+    names = schema.fieldNames()
+    nulls = (None,) * (len(names) - 1)
+
+    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                fields = None if p is None else parse(p)
+                rows.append((int(mid), *(nulls if fields is None else fields)))
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return media.mapInPandas(walk, schema)
+
+
+def _round_trip(docs: DataFrame, encode, parse, schema: T.StructType) -> DataFrame:
+    """Synthesize one container per doc_id and parse it back IN A
+    SEPARATE PASS over the wire bytes — the parser never sees the
+    generation parameters, only the payload. Both passes are
+    Arrow-batched mapInPandas, map-only."""
+    return _parse_pass(_synth(docs, encode), parse, schema)
+
+
 def synth_media_from_documents(docs: DataFrame) -> DataFrame:
     """Build a deterministic media table from the documents corpus;
     modality round-robins by doc_id. Image rows carry REAL PNG
@@ -395,8 +466,6 @@ def synth_media_from_documents(docs: DataFrame) -> DataFrame:
     # (same id, drifted payload — at-least-once upstream) must yield
     # ONE media row, resolved by the deterministic content-total
     # order (r11 duplicates sweep). No-op on clean input.
-    from .dedup import resolve_replays
-
     docs = resolve_replays(docs, ["doc_id"])
     modality = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
@@ -408,33 +477,8 @@ def synth_media_from_documents(docs: DataFrame) -> DataFrame:
         F.encode("text", "utf-8").alias("payload"),
     )
 
-    enc, dims, rgb = png_encode, image_dims, image_rgb
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = dims(d)
-                payloads.append(enc(w, h, rgb(d, w, h)))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    img_src = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
-    target = img_src.sparkSession.sparkContext.defaultParallelism
-    try:
-        width = len(img_src.inputFiles())
-    except Exception:
-        width = 0
-    if width < target:
-        img_src = img_src.repartition(target)
-    imgs = img_src.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
+    imgs = _synth(
+        docs.filter(F.col("doc_id") % 3 == 0), _model_image(png_encode)
     ).select("media_id", F.lit("image").alias("modality"), "payload")
 
     mime = F.when(F.col("modality") == "image", F.lit("image/png")).otherwise(
@@ -478,12 +522,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     ``n_bytes``; only then do dimensions go NULL. Non-image modalities
     report raw payload size and NULL dimensions. A payload that fails
     to decode yields NULLs (quarantine posture, not a batch failure)."""
-
-    # spread a compact single-file input across workers — the Python
-    # stage is the expensive part, keep every core busy
-    target = media.sparkSession.sparkContext.defaultParallelism
-    if media.rdd.getNumPartitions() < target:
-        media = media.repartition(target)
 
     # nested fns: cloudpickle ships them by value. image_decode is the
     # mixed-corpus entry point (PNG stdlib/PIL, JPEG PIL); when the
@@ -556,50 +594,24 @@ def image_pixel_stats(media: DataFrame) -> DataFrame:
     can recompute every sum — making this the end-to-end proof that the
     decoder (inflate + all five filters) reconstructs the exact pixels.
     Malformed payloads yield NULL stats."""
-    imgs = media.filter(F.col("modality") == "image")
-    target = imgs.sparkSession.sparkContext.defaultParallelism
-    if imgs.rdd.getNumPartitions() < target:
-        imgs = imgs.repartition(target)
+    import numpy as _np
 
     dec = png_decode
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
+    def parse(p: bytes):
+        decoded = dec(p)
+        if decoded is None:
+            return None
+        w, h, rgb = decoded
+        # exact integer channel sums in one numpy pass
+        s = _np.frombuffer(rgb, dtype=_np.uint8).reshape(-1, 3).sum(
+            axis=0, dtype=_np.int64
+        )
+        return w, h, int(s[0]), int(s[1]), int(s[2])
 
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(int(mid))
-                decoded = dec(p)
-                if decoded is None:
-                    for k in ("width", "height", "sum_r", "sum_g", "sum_b"):
-                        rows[k].append(None)
-                    continue
-                w, h, rgb = decoded
-                rows["width"].append(w)
-                rows["height"].append(h)
-                # integer channel sums in one numpy pass (r13, guide
-                # §4.2) — exact, replacing three strided Python sums
-                s = (
-                    _np.frombuffer(rgb, dtype=_np.uint8)
-                    .reshape(-1, 3)
-                    .sum(axis=0, dtype=_np.int64)
-                )
-                rows["sum_r"].append(int(s[0]))
-                rows["sum_g"].append(int(s[1]))
-                rows["sum_b"].append(int(s[2]))
-            yield pd.DataFrame(
-                {
-                    "media_id": rows["media_id"],
-                    "width": pd.array(rows["width"], dtype="Int32"),
-                    "height": pd.array(rows["height"], dtype="Int32"),
-                    "sum_r": pd.array(rows["sum_r"], dtype="Int64"),
-                    "sum_g": pd.array(rows["sum_g"], dtype="Int64"),
-                    "sum_b": pd.array(rows["sum_b"], dtype="Int64"),
-                }
-            )
-
-    return imgs.mapInPandas(gen, PIXEL_STATS_SCHEMA)
+    return _parse_pass(
+        media.filter(F.col("modality") == "image"), parse, PIXEL_STATS_SCHEMA
+    )
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -670,9 +682,6 @@ def resize_images(media: DataFrame, width: int = 224, height: int = 224) -> Data
             )
 
     imgs = media.filter(F.col("modality") == "image")
-    target = imgs.sparkSession.sparkContext.defaultParallelism
-    if imgs.rdd.getNumPartitions() < target:
-        imgs = imgs.repartition(target)
     return imgs.mapInPandas(gen, RESIZED_SCHEMA)
 
 
@@ -722,9 +731,6 @@ def sample_frames(media: DataFrame, fps: float = 1.0, max_frames: int = 16) -> D
             )
 
     vids = media.filter(F.col("modality") == "video")
-    target = vids.sparkSession.sparkContext.defaultParallelism
-    if vids.rdd.getNumPartitions() < target:
-        vids = vids.repartition(target)
     return vids.mapInPandas(gen, FRAME_SCHEMA)
 
 
@@ -771,9 +777,6 @@ def audio_stats(media: DataFrame) -> DataFrame:
             )
 
     auds = media.filter(F.col("modality") == "audio")
-    target = auds.sparkSession.sparkContext.defaultParallelism
-    if auds.rdd.getNumPartitions() < target:
-        auds = auds.repartition(target)
     return auds.mapInPandas(gen, AUDIO_SCHEMA)
 
 
@@ -822,48 +825,24 @@ def synth_wav_payloads(docs: DataFrame) -> DataFrame:
     downstream is real code, not a stub."""
     import struct as _struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 8000 + (d % 3) * 4000
-                ch = 1 + d % 2
-                n = 1000 + d % 500
-                frames = bytearray()
-                for i in range(n * ch):
-                    frames += _struct.pack(
-                        "<h", ((d * 31 + i * 17) % 65536) - 32768
-                    )
-                block = ch * 2
-                fmt = _struct.pack(
-                    "<HHIIHH", 1, ch, rate, rate * block, block, 16
-                )
-                data = bytes(frames)
-                riff = (
-                    b"WAVE"
-                    + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + _struct.pack("<I", len(data)) + data
-                )
-                payloads.append(b"RIFF" + _struct.pack("<I", len(riff)) + riff)
-                ids.append(d)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(d: int) -> bytes:
+        rate = 8000 + (d % 3) * 4000
+        ch = 1 + d % 2
+        n = 1000 + d % 500
+        frames = bytearray()
+        for i in range(n * ch):
+            frames += _struct.pack("<h", ((d * 31 + i * 17) % 65536) - 32768)
+        block = ch * 2
+        fmt = _struct.pack("<HHIIHH", 1, ch, rate, rate * block, block, 16)
+        data = bytes(frames)
+        riff = (
+            b"WAVE"
+            + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
+            + b"data" + _struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + _struct.pack("<I", len(riff)) + riff
 
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
-    )
-    src = docs.select("doc_id")
-    target = src.sparkSession.sparkContext.defaultParallelism
-    try:
-        width = len(src.inputFiles())
-    except Exception:
-        width = 0
-    if width < target:
-        src = src.repartition(target)
-    return src.mapInPandas(gen, out_schema)
+    return _synth(docs, encode)
 
 
 def parse_wav_headers(media: DataFrame) -> DataFrame:
@@ -877,6 +856,7 @@ def parse_wav_headers(media: DataFrame) -> DataFrame:
 
     def parse_one(p: bytes):
         try:
+            p = bytes(p)
             if p[:4] != b"RIFF" or p[8:12] != b"WAVE":
                 return None
             pos, rate, ch, bits, n = 12, None, None, None, None
@@ -902,27 +882,9 @@ def parse_wav_headers(media: DataFrame) -> DataFrame:
         except Exception:
             return None
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "sample_rate", "channels",
-                                    "bits_per_sample", "n_samples")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                parsed = parse_one(bytes(p))
-                rows["media_id"].append(int(mid))
-                if parsed is None:
-                    for k in ("sample_rate", "channels", "bits_per_sample",
-                              "n_samples"):
-                        rows[k].append(None)
-                else:
-                    rate, ch, bits, n = parsed
-                    rows["sample_rate"].append(rate)
-                    rows["channels"].append(ch)
-                    rows["bits_per_sample"].append(bits)
-                    rows["n_samples"].append(n)
-            yield pd.DataFrame(rows)
-
-    parsed = media.mapInPandas(
-        gen,
+    parsed = _parse_pass(
+        media,
+        parse_one,
         T.StructType([f for f in WAV_HEADER_SCHEMA if f.name != "duration_us"]),
     )
     # Duration as EXACT integer microseconds (floor division, JVM-side).
@@ -1008,55 +970,8 @@ GIF_STATS_SCHEMA = T.StructType(
 
 def gif_header_table(docs: DataFrame) -> DataFrame:
     """Synthesize real GIF containers (one per selected doc) and parse
-    them back IN A SEPARATE PASS over the wire bytes — the parser
-    never sees the generation parameters, only the payload. Both
-    stages are Arrow-batched mapInPandas, map-only."""
-    enc, par = gif_encode, gif_parse
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [enc(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "version", "width", "height",
-                                    "n_palette", "bg_index", "palette_sum")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(int(mid))
-                parsed = par(p)
-                if parsed is None:
-                    for k in ("version", "width", "height", "n_palette",
-                              "bg_index", "palette_sum"):
-                        rows[k].append(None)
-                    continue
-                v, w, h, n_pal, bg, psum = parsed
-                rows["version"].append(v)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_palette"].append(n_pal)
-                rows["bg_index"].append(bg)
-                rows["palette_sum"].append(psum)
-            yield pd.DataFrame(rows)
-
-    src = docs.select("doc_id")
-    target = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    payloads = src.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(walk, GIF_STATS_SCHEMA)
+    them back from wire bytes (:func:`_round_trip`)."""
+    return _round_trip(docs, gif_encode, gif_parse, GIF_STATS_SCHEMA)
 
 
 def _exif_tools():
@@ -1162,51 +1077,8 @@ EXIF_SCHEMA = T.StructType(
 
 def exif_table(docs: DataFrame) -> DataFrame:
     """Synthesize EXIF-bearing JPEGs and parse them back from wire
-    bytes (separate passes, like :func:`gif_header_table`)."""
-    enc, par = exif_encode, exif_parse
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [enc(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "endian", "n_ifd_entries",
-                                    "orientation", "width_tag")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(int(mid))
-                parsed = par(p)
-                if parsed is None:
-                    for k in ("endian", "n_ifd_entries", "orientation",
-                              "width_tag"):
-                        rows[k].append(None)
-                    continue
-                endian, n, orient, width_tag = parsed
-                rows["endian"].append(endian)
-                rows["n_ifd_entries"].append(n)
-                rows["orientation"].append(orient)
-                rows["width_tag"].append(width_tag)
-            yield pd.DataFrame(rows)
-
-    src = docs.select("doc_id")
-    target = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    payloads = src.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(walk, EXIF_SCHEMA)
+    bytes (:func:`_round_trip`)."""
+    return _round_trip(docs, exif_encode, exif_parse, EXIF_SCHEMA)
 
 
 DHASH_SCHEMA = T.StructType(
@@ -1232,40 +1104,28 @@ def image_dhash(media: DataFrame, grid_w: int = 9, grid_h: int = 8) -> DataFrame
     100 TB the only shuffle downstream is on the 64-bit key."""
     dec = png_decode
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [], "dhash": []}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(int(mid))
-                decoded = dec(p)
-                if decoded is None:
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["dhash"].append(None)
-                    continue
-                w, h, rgb = decoded
+    def parse(p: bytes):
+        decoded = dec(p)
+        if decoded is None:
+            return None
+        w, h, rgb = decoded
 
-                def gray(x: int, y: int) -> int:
-                    o = (y * w + x) * 3
-                    return (rgb[o] + rgb[o + 1] + rgb[o + 2]) // 3
+        def gray(x: int, y: int) -> int:
+            o = (y * w + x) * 3
+            return (rgb[o] + rgb[o + 1] + rgb[o + 2]) // 3
 
-                bits = []
-                for gy in range(grid_h):
-                    sy = gy * h // grid_h
-                    for gx in range(grid_w - 1):
-                        a = gray(gx * w // grid_w, sy)
-                        b = gray((gx + 1) * w // grid_w, sy)
-                        bits.append("1" if b > a else "0")
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["dhash"].append("".join(bits))
-            yield pd.DataFrame(rows)
+        bits = []
+        for gy in range(grid_h):
+            sy = gy * h // grid_h
+            for gx in range(grid_w - 1):
+                a = gray(gx * w // grid_w, sy)
+                b = gray((gx + 1) * w // grid_w, sy)
+                bits.append("1" if b > a else "0")
+        return w, h, "".join(bits)
 
-    imgs = media.filter(F.col("modality") == "image")
-    target = imgs.sparkSession.sparkContext.defaultParallelism
-    if imgs.rdd.getNumPartitions() < target:
-        imgs = imgs.repartition(target)
-    return imgs.mapInPandas(gen, DHASH_SCHEMA)
+    return _parse_pass(
+        media.filter(F.col("modality") == "image"), parse, DHASH_SCHEMA
+    )
 
 
 __all__ += [
@@ -1356,55 +1216,15 @@ BMP_STATS_SCHEMA = T.StructType(
 
 def bmp_header_table(docs: DataFrame) -> DataFrame:
     """Synthesize real padded-row BMPs from the deterministic pixel
-    model and parse them back from wire bytes in a separate pass.
+    model and parse them back from wire bytes (:func:`_round_trip`).
     Identity-grain: one BMP per doc_id even under replayed ids (the
     payload is a pure function of the id; r11 duplicates sweep)."""
-    docs = docs.select("doc_id").distinct()
-    enc, par, dims, rgb = bmp_encode, bmp_parse, image_dims, image_rgb
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = dims(d)
-                payloads.append(enc(w, h, rgb(d, w, h)))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "bpp",
-                                    "pixel_sum")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(int(mid))
-                parsed = par(p)
-                if parsed is None:
-                    for k in ("width", "height", "bpp", "pixel_sum"):
-                        rows[k].append(None)
-                    continue
-                w, h, bpp, psum = parsed
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bpp"].append(bpp)
-                rows["pixel_sum"].append(psum)
-            yield pd.DataFrame(rows)
-
-    src = docs.select("doc_id")
-    target = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    payloads = src.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
+    return _round_trip(
+        docs.select("doc_id").distinct(),
+        _model_image(bmp_encode),
+        bmp_parse,
+        BMP_STATS_SCHEMA,
     )
-    return payloads.mapInPandas(walk, BMP_STATS_SCHEMA)
 
 
 def _png_text_tools():
@@ -1451,9 +1271,9 @@ def _png_text_tools():
                     k, v = body.split(b"\x00", 1)
                     out.append((k.decode("latin-1"), v.decode("latin-1")))
                 elif tag == b"IEND":
-                    break
+                    return out
                 pos += 12 + ln
-            return out
+            return None  # truncated: the stream ended before IEND
         except Exception:
             return None
 
@@ -1474,62 +1294,24 @@ PNG_TEXT_SCHEMA = T.StructType(
 
 
 def png_text_table(docs: DataFrame) -> DataFrame:
-    """PNGs with injected tEXt metadata, walked back from wire bytes;
-    also asserts per payload that the PIXEL decoder still accepts the
-    file (ancillary chunks are transparent to decode)."""
-    enc, dims, rgb = png_encode, image_dims, image_rgb
-    add_text, read_text, dec = png_add_text, png_read_text, png_decode
+    """PNGs with injected tEXt metadata, walked back from wire bytes
+    (:func:`_round_trip`); also asserts per payload that the PIXEL
+    decoder still accepts the file (ancillary chunks are transparent to
+    decode)."""
+    png, add_text = _model_image(png_encode), png_add_text
+    read_text, dec = png_read_text, png_decode
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = dims(d)
-                base = enc(w, h, rgb(d, w, h))
-                payloads.append(
-                    add_text(
-                        base,
-                        [("doc", str(d)), ("lang", "l" + str(d % 5))],
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
+    def encode(d: int) -> bytes:
+        return add_text(png(d), [("doc", str(d)), ("lang", "l" + str(d % 5))])
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "n_text_chunks", "meta_csv",
-                                    "decodes_with_text")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(int(mid))
-                pairs = read_text(p)
-                if pairs is None:
-                    rows["n_text_chunks"].append(None)
-                    rows["meta_csv"].append(None)
-                    rows["decodes_with_text"].append(None)
-                    continue
-                rows["n_text_chunks"].append(len(pairs))
-                rows["meta_csv"].append(
-                    ",".join(f"{k}={v}" for k, v in pairs)
-                )
-                rows["decodes_with_text"].append(dec(p) is not None)
-            yield pd.DataFrame(rows)
+    def parse(p: bytes):
+        pairs = read_text(p)
+        if pairs is None:
+            return None
+        meta = ",".join(f"{k}={v}" for k, v in pairs)
+        return len(pairs), meta, dec(p) is not None
 
-    src = docs.select("doc_id")
-    target = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    payloads = src.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(walk, PNG_TEXT_SCHEMA)
+    return _round_trip(docs, encode, parse, PNG_TEXT_SCHEMA)
 
 
 __all__ += [
@@ -1648,51 +1430,12 @@ TIFF_SCHEMA = T.StructType(
 
 def tiff_ifd_table(docs: DataFrame) -> DataFrame:
     """Synthesize multi-IFD TIFFs and walk them back from wire bytes
-    (separate mapInPandas passes, the gif/exif seam)."""
-    enc, par = tiff_encode, tiff_parse
+    (:func:`_round_trip`); a chain the walker rejects reads
+    ``chain_ok=False`` with NULL fields."""
+    par = tiff_parse
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [enc(int(d)) for d in pdf["doc_id"]],
-                }
-            )
+    def parse(p: bytes):
+        fields = par(p)
+        return (None,) * 5 + (False,) if fields is None else (*fields, True)
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("media_id", "endian", "n_ifds", "n_entries",
-                "orientation", "widths_csv", "chain_ok")
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(int(mid))
-                parsed = par(p)
-                if parsed is None:
-                    for k in cols[1:-1]:
-                        rows[k].append(None)
-                    rows["chain_ok"].append(False)
-                    continue
-                endian, n_ifds, n_entries, orient, widths = parsed
-                rows["endian"].append(endian)
-                rows["n_ifds"].append(n_ifds)
-                rows["n_entries"].append(n_entries)
-                rows["orientation"].append(orient)
-                rows["widths_csv"].append(widths)
-                rows["chain_ok"].append(True)
-            yield pd.DataFrame(rows)
-
-    src = docs.select("doc_id")
-    target = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    payloads = src.mapInPandas(
-        gen,
-        T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(walk, TIFF_SCHEMA)
+    return _round_trip(docs, tiff_encode, parse, TIFF_SCHEMA)

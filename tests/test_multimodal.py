@@ -254,11 +254,12 @@ class TestWavRoundTrip:
                 (1, b"not a riff at all"),
                 (2, b"RIFF\x04\x00\x00\x00WAVE"),  # no chunks
                 (3, b""),
+                (4, None),
             ],
             "media_id long, payload binary",
         )
         rows = {r["media_id"]: r for r in parse_wav_headers(bad).collect()}
-        assert len(rows) == 3
+        assert len(rows) == 4
         for r in rows.values():
             assert r["sample_rate"] is None and r["n_samples"] is None
 
@@ -310,6 +311,9 @@ class TestJpegSeam:
         for w, h, sof in ((640, 480, 0xC0), (31, 7, 0xC1), (1024, 1, 0xC2)):
             assert mm.jpeg_dims(self._jpeg_header(w, h, sof=sof)) == (w, h, 3)
         assert mm.jpeg_dims(self._jpeg_header(16, 16, ncomp=1)) == (16, 16, 1)
+        # an EXIF-bearing stream is a valid JPEG for the SOF walk too
+        for d in (0, 1, 14, 15, 255):
+            assert mm.jpeg_dims(mm.exif_encode(d)) == (16 + d % 32, 16 + d % 16, 1)
 
     def test_dims_rejects_malformed(self):
         good = self._jpeg_header(32, 32)
@@ -485,33 +489,70 @@ class TestAdviceR4Hardening:
         assert mm.jpeg_dims(base) == (32, 32, 3)
 
 
-class TestGifAndExifSeams:
-    def test_gif_roundtrip_and_malformed(self):
-        for d in (0, 1, 7, 37, 255):
-            v, w, h, n_pal, bg, psum = mm.gif_parse(mm.gif_encode(d))
-            assert v == ("89a" if d % 2 else "87a")
-            assert (w, h) == (16 + d % 32, 16 + d % 16)
-            assert n_pal == 1 << (d % 8 + 1) and bg == d % n_pal
-            assert psum == sum((d + 7 * j) % 256 for j in range(3 * n_pal))
-        good = mm.gif_encode(9)
-        for bad in (b"", b"GIF9", b"GIF88a" + good[6:], good[:10],
-                    good[: 13 + 5]):  # palette truncated mid-table
-            assert mm.gif_parse(bad) is None
+def _gif_expect(d):
+    n_pal = 1 << (d % 8 + 1)
+    psum = sum((d + 7 * j) % 256 for j in range(3 * n_pal))
+    return ("89a" if d % 2 else "87a"), 16 + d % 32, 16 + d % 16, n_pal, d % n_pal, psum
 
-    def test_exif_roundtrip_both_endians_and_malformed(self):
-        for d in (0, 1, 14, 15, 255):
-            endian, n, orient, width_tag = mm.exif_parse(mm.exif_encode(d))
-            assert endian == ("little" if d % 2 == 0 else "big")
-            assert n == 3
-            assert orient == 1 + d % 8 and width_tag == 16 + d % 32
-            # the same stream is a valid JPEG for the SOF dims walk
-            assert mm.jpeg_dims(mm.exif_encode(d)) is not None
-        good = mm.exif_encode(4)
-        # corrupt the TIFF magic (42) inside APP1
-        t = good.index(b"II") + 2
-        bad_magic = good[:t] + b"\x00\x00" + good[t + 2:]
-        for bad in (b"", b"\xff\xd8", bad_magic):
-            assert mm.exif_parse(bad) is None
+
+def _exif_bad_tiff_magic(good):
+    t = good.index(b"II") + 2  # the TIFF magic (42) inside APP1
+    return good[:t] + b"\x00\x00" + good[t + 2:]
+
+
+def _tiff_expect(d):
+    n_ifds = 2 + d % 3
+    widths = ",".join(str(max(1, (16 + d % 32) >> k)) for k in range(n_ifds))
+    endian = "little" if d % 2 == 0 else "big"
+    return endian, n_ifds, 3 + 2 * (n_ifds - 1), 1 + d % 8, widths
+
+
+def _png_text_encode(d):
+    return mm.png_add_text(mm._model_image(mm.png_encode)(d), [("doc", str(d)), ("k", "")])
+
+
+# name -> (encode(doc_id), parse, expected parse of encode(d),
+#          malformed payloads derived from a good one)
+CONTAINERS = {
+    "gif": (
+        mm.gif_encode, mm.gif_parse, _gif_expect,
+        lambda g: (b"GIF9", b"GIF88a" + g[6:], g[:10],
+                   g[: 13 + 5]),  # palette truncated mid-table
+    ),
+    "exif": (
+        mm.exif_encode, mm.exif_parse,
+        lambda d: ("little" if d % 2 == 0 else "big", 3, 1 + d % 8, 16 + d % 32),
+        lambda g: (b"\xff\xd8", g[:20], _exif_bad_tiff_magic(g)),
+    ),
+    "bmp": (
+        mm._model_image(mm.bmp_encode), mm.bmp_parse,
+        lambda d: (*mm.image_dims(d), 24, sum(mm.image_rgb(d, *mm.image_dims(d)))),
+        lambda g: (g[:40], g[:-1]),
+    ),
+    "png_text": (
+        _png_text_encode, mm.png_read_text,
+        lambda d: [("doc", str(d)), ("k", "")],
+        lambda g: (g[:8], g[:40], g[:-1]),  # IEND missing or cut
+    ),
+    "tiff": (
+        mm.tiff_encode, mm.tiff_parse, _tiff_expect,
+        lambda g: (g[:12], g[:-1]),
+    ),
+}
+
+
+class TestGifAndExifSeams:
+    @pytest.mark.parametrize("name", sorted(CONTAINERS))
+    def test_container_roundtrip_and_malformed(self, name):
+        """Every container parser decodes the fields its encoder wrote,
+        and returns None (quarantine) for empty, wrong-magic and
+        truncated bytes."""
+        encode, parse, expect, malformed = CONTAINERS[name]
+        for d in (0, 1, 7, 14, 15, 37, 255):
+            assert parse(encode(d)) == expect(d), d
+        good = encode(4)
+        for bad in (b"", b"\x00\x00\x00\x00" + good[4:], *malformed(good)):
+            assert parse(bad) is None, bad[:16]
 
     def test_dhash_matches_local_recompute(self):
         d = 12
@@ -644,3 +685,30 @@ class TestVectorizedCodecEquivalence:
                         i += 3
                 assert got[mid][0] == self._encode_ref(width, height, bytes(buf))
                 assert got[mid][1] == sum(buf)
+
+
+MULTIMODAL_QUERIES = [
+    "multimodal_features", "video_frame_sample", "audio_level_stats",
+    "image_resize_stats", "png_pixel_stats", "wav_header_stats",
+    "gif_header_stats", "jpeg_exif_orientation_stats", "image_dhash_dedup",
+    "bmp_header_stats", "png_text_chunk_stats", "tiff_multi_ifd_stats",
+]
+
+
+@pytest.mark.parametrize("name", MULTIMODAL_QUERIES)
+def test_building_a_multimodal_query_starts_no_job(spark, name):
+    """Width decisions come from the plan, not from running it:
+    building (not collecting) a multimodal query starts no Spark job
+    (a partition-count probe ran the AQE shuffle-map stages here)."""
+    import uuid
+
+    from facebook_ads_bigquery_etl_spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    group = f"multimodal-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        QUERIES[name](spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

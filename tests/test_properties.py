@@ -640,6 +640,34 @@ def test_local_checkpoint_lives_only_in_materialize():
     assert not offenders, offenders
 
 
+def test_one_width_rule_in_operators():
+    """A stage runs at its input's width, and a table is widened only
+    by ``dedup.spread``: no operator module may ask a frame for its
+    partition count (``.getNumPartitions()`` runs the AQE shuffle-map
+    stages as Spark jobs while the query is being built), and
+    ``inputFiles()`` is read only inside ``spread``."""
+    import ast
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    root = pathlib.Path(lib.__file__).parent / "operators"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text()
+        spread_lines = set()
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.FunctionDef) and node.name == "spread":
+                spread_lines |= set(range(node.lineno, node.end_lineno + 1))
+        offenders += [
+            f"{path.name}:{n}"
+            for n, line in enumerate(text.splitlines(), 1)
+            if ".getNumPartitions()" in line
+            or ("inputFiles()" in line and n not in spread_lines)
+        ]
+    assert not offenders, offenders
+
+
 def test_library_stages_only_under_the_temp_dir():
     """Scratch paths come from ``tempfile`` (``gettempdir()``,
     ``mkdtemp``), so a run can move them with ``TMPDIR``: no library

@@ -1588,7 +1588,6 @@ def commit_protocol_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tmp = tempfile.mkdtemp(prefix="commit_audit_")
     table = f"{tmp}/t"
-    old_hook = sinks._CRASH_HOOK
     try:
         sinks.write_day_partitioned(df, table)
         sinks.write_day_partitioned(df.limit(0), table, mode="append")
@@ -1596,19 +1595,14 @@ def commit_protocol_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dirs (r10 empty sweep)
         n_before = sinks.read_published_or_empty(spark, table, like=df).count()
 
-        def crash(point: str) -> None:
-            if point == "journaled":
-                raise RuntimeError("injected crash: commit_protocol_audit")
-
-        sinks._CRASH_HOOK = crash
         crashed = False
         try:
-            sinks.compact_partitions(spark, table)
+            with sinks.crash_at("journaled"):
+                sinks.compact_partitions(spark, table)
         except RuntimeError:
             crashed = True
-        sinks._CRASH_HOOK = old_hook
         n_crashed = sinks.read_published_or_empty(spark, table, like=df).count()
-        report = sinks.recover_compaction(table, stale_after_s=0.0)
+        report = sinks.recover(table, stale_after_s=0.0)
         n_after = sinks.read_published_or_empty(spark, table, like=df).count()
         import os
 
@@ -1635,7 +1629,6 @@ def commit_protocol_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             " compacted_single_file boolean",
         )
     finally:
-        sinks._CRASH_HOOK = old_hook
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -2579,7 +2572,6 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tmp = tempfile.mkdtemp(prefix="multi_swap_audit_")
     fact_t, roll_t = f"{tmp}/a_fact", f"{tmp}/b_rollup"
-    old_hook = sinks._CRASH_HOOK
     try:
         f1, r1 = gen(1)
         sinks.publish_tables_atomic(spark, [(f1, fact_t), (r1, roll_t)])
@@ -2593,18 +2585,12 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
         f2, r2 = gen(2)
-
-        def crash(point: str) -> None:
-            if point == "multi_table_done:t0":
-                raise RuntimeError("injected crash: multi_table_swap_audit")
-
-        sinks._CRASH_HOOK = crash
         crashed = False
         try:
-            sinks.publish_tables_atomic(spark, [(f2, fact_t), (r2, roll_t)])
+            with sinks.crash_at("table_done:t0"):
+                sinks.publish_tables_atomic(spark, [(f2, fact_t), (r2, roll_t)])
         except RuntimeError:
             crashed = True
-        sinks._CRASH_HOOK = old_hook
 
         mixed_fact_total = sinks.read_published_or_empty(
             spark, fact_t, like=f2
@@ -2615,7 +2601,7 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, roll_t, like=r2
             ).collect()
         }
-        report = sinks.recover_multi_swap(fact_t, stale_after_s=0.0)
+        report = sinks.recover(fact_t, stale_after_s=0.0)
 
         fact_df = sinks.read_published_or_empty(spark, fact_t, like=f2)
         # row count + recovered total in ONE action (r13 optimization)
@@ -2691,7 +2677,6 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             " rollup_matches_fact boolean, no_debris boolean",
         )
     finally:
-        sinks._CRASH_HOOK = old_hook
         shutil.rmtree(tmp, ignore_errors=True)
 
 

@@ -25,6 +25,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# The plans embed the session's core count (shuffle partitions,
+# round-robin widths), so they are generated at one fixed count, not
+# the host's: a regeneration then differs from the committed file only
+# where a plan really changed.
+CPUS = 32
 
 # query → (why it's audited, [plan substrings that MUST be present],
 #          [plan substrings that MUST be absent])
@@ -757,14 +762,14 @@ def main() -> int:
     from facebook_ads_bigquery_etl_spark.plans import QUERIES
     from facebook_ads_bigquery_etl_spark.session import get_spark
 
-    spark = get_spark()
+    spark = get_spark(cpus=CPUS)
     if sys.argv[1:2] == ["--dump"]:
         out_dir, suffix, *names = sys.argv[2:]
         return dump(spark, out_dir, suffix, names)
     out = [
         "# PLANS — physical-plan audit",
         "",
-        f"`EXPLAIN FORMATTED` at `{SF}` (regenerate: `python scripts/gen_plans.py`).",
+        f"`EXPLAIN FORMATTED` at `{SF}` on `local[{CPUS}]` (regenerate: `python scripts/gen_plans.py`).",
         "Each section lists the plan properties tests/test_scale_layout.py pins —",
         "the audit is executable, not prose: if a listed property regresses, the",
         "test suite fails.",

@@ -8,6 +8,7 @@ the streaming-insert path, matching reference main.py:81-91).
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -236,20 +237,10 @@ class TestAtomicCompaction:
             sinks._FORCE_HADOOP_FS = False
         else:
             yield path
-        sinks._CRASH_HOOK = lambda point: None
 
     @staticmethod
     def _loc(path):
         return path.removeprefix("file://")
-
-    def _crash_at(self, point_name):
-        import facebook_ads_bigquery_etl_spark.sinks as sinks
-
-        def hook(point):
-            if point == point_name or point.startswith(point_name):
-                raise RuntimeError(f"injected crash at {point}")
-
-        sinks._CRASH_HOOK = hook
 
     def _files(self, path, part):
         d = os.path.join(self._loc(path), part)
@@ -268,8 +259,9 @@ class TestAtomicCompaction:
             for p in ("date=2025-01-01", "date=2025-01-02")
         }
         rows_before = _rows(spark.read.parquet(table))
-        self._crash_at("staged")
-        with pytest.raises(RuntimeError, match="injected crash"):
+        with sinks.crash_at("staged"), pytest.raises(
+            RuntimeError, match="injected crash"
+        ):
             sinks.compact_partitions(spark, table)
         # old layout AND content untouched
         after = {
@@ -278,8 +270,7 @@ class TestAtomicCompaction:
         }
         assert after == before
         assert _rows(spark.read.parquet(table)) == rows_before
-        sinks._CRASH_HOOK = lambda point: None
-        report = sinks.recover_compaction(table)
+        report = sinks.recover(table)
         assert report["rolled_back"] == 1
         assert not os.path.isdir(os.path.join(self._loc(table), "_compact"))
 
@@ -290,11 +281,11 @@ class TestAtomicCompaction:
         import facebook_ads_bigquery_etl_spark.sinks as sinks
 
         rows_before = _rows(spark.read.parquet(table))
-        self._crash_at("mid_swap:")
-        with pytest.raises(RuntimeError, match="injected crash"):
+        with sinks.crash_at("swap:"), pytest.raises(
+            RuntimeError, match="injected crash"
+        ):
             sinks.compact_partitions(spark, table)
-        sinks._CRASH_HOOK = lambda point: None
-        report = sinks.recover_compaction(table)
+        report = sinks.recover(table)
         assert report["rolled_forward"] == 1
         assert _rows(spark.read.parquet(table)) == rows_before
         # compacted: exactly one file per partition, no run debris
@@ -324,54 +315,16 @@ class TestAtomicCompaction:
         import facebook_ads_bigquery_etl_spark.sinks as sinks
 
         rows_before = _rows(spark.read.parquet(table))
-        self._crash_at("journaled")
-        with pytest.raises(RuntimeError, match="injected crash"):
+        with sinks.crash_at("journaled"), pytest.raises(
+            RuntimeError, match="injected crash"
+        ):
             sinks.compact_partitions(spark, table)
-        sinks._CRASH_HOOK = lambda point: None
         # staging + journal exist on disk, yet the read sees live only
         assert os.path.isdir(os.path.join(self._loc(table), "_compact"))
         assert _rows(spark.read.parquet(table)) == rows_before
         # and recovery rolls the journaled run forward
-        report = sinks.recover_compaction(table)
+        report = sinks.recover(table)
         assert report["rolled_forward"] == 1
-        assert _rows(spark.read.parquet(table)) == rows_before
-
-    @pytest.mark.parametrize(
-        "point",
-        ["staged", "journaled", "mid_swap:date=2025-01-01",
-         "mid_swap:date=2025-01-02", "committed"],
-    )
-    def test_crash_matrix_every_point_recovers_cleanly(
-        self, spark, tmp_path, frame, table, point
-    ):
-        """Exhaustive protocol walk: kill at EVERY named crash point.
-        Invariant: after recovery the table content equals the
-        original rows exactly (compaction never changes data), the
-        layout is either the pre-state (rolled back) or the compacted
-        post-state (rolled forward), and no _compact debris remains."""
-        import facebook_ads_bigquery_etl_spark.sinks as sinks
-
-        rows_before = _rows(spark.read.parquet(table))
-        files_before = {
-            p: self._files(table, p)
-            for p in ("date=2025-01-01", "date=2025-01-02")
-        }
-        self._crash_at(point)
-        with pytest.raises(RuntimeError, match="injected crash"):
-            sinks.compact_partitions(spark, table)
-        sinks._CRASH_HOOK = lambda point: None
-        sinks.recover_compaction(table)
-        assert _rows(spark.read.parquet(table)) == rows_before
-        files_after = {
-            p: self._files(table, p)
-            for p in ("date=2025-01-01", "date=2025-01-02")
-        }
-        rolled_back = files_after == files_before
-        rolled_forward = all(len(v) == 1 for v in files_after.values())
-        assert rolled_back or rolled_forward, files_after
-        assert not os.path.isdir(os.path.join(self._loc(table), "_compact"))
-        # a second compaction from the recovered state must succeed
-        sinks.compact_partitions(spark, table)
         assert _rows(spark.read.parquet(table)) == rows_before
 
 
@@ -393,22 +346,10 @@ class TestOverlappingMultiPublish:
         from facebook_ads_bigquery_etl_spark import sinks
 
         A, B, C = (str(tmp_path / t) for t in "ABC")
-
-        class Crash(Exception):
-            pass
-
-        def hook(point):
-            if point == "multi_journaled":
-                raise Crash(point)
-
-        sinks._CRASH_HOOK = hook
-        try:
-            with pytest.raises(Crash):
-                sinks.publish_tables_atomic(
-                    spark, [(self._frame(spark, "P1"), A), (self._frame(spark, "P1"), B)]
-                )
-        finally:
-            sinks._CRASH_HOOK = lambda point: None
+        with sinks.crash_at("journaled"), pytest.raises(RuntimeError, match="injected"):
+            sinks.publish_tables_atomic(
+                spark, [(self._frame(spark, "P1"), A), (self._frame(spark, "P1"), B)]
+            )
         sinks.publish_tables_atomic(
             spark, [(self._frame(spark, "P2"), B), (self._frame(spark, "P2"), C)]
         )
@@ -418,10 +359,7 @@ class TestOverlappingMultiPublish:
         # the later A-recovery must be a no-op for B
         sinks.compact_partitions(spark, A)
         assert [r["v"] for r in spark.read.parquet(B).collect()] == ["P2"]
-        import glob
-
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi_intent_*"))
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi-*"))
+        assert not glob.glob(str(tmp_path / "*" / "_compact"))
 
     def test_pre_journal_crash_rolls_back_and_cleans_markers(self, spark, tmp_path):
         """Crash BEFORE the journal goes staged: markers point at a
@@ -433,31 +371,16 @@ class TestOverlappingMultiPublish:
         sinks.publish_tables_atomic(
             spark, [(self._frame(spark, "G0"), A), (self._frame(spark, "G0"), B)]
         )
-
-        class Crash(Exception):
-            pass
-
-        def hook(point):
-            if point == "multi_staged":
-                raise Crash(point)
-
-        sinks._CRASH_HOOK = hook
-        try:
-            with pytest.raises(Crash):
-                sinks.publish_tables_atomic(
-                    spark, [(self._frame(spark, "P3"), A), (self._frame(spark, "P3"), B)]
-                )
-        finally:
-            sinks._CRASH_HOOK = lambda point: None
+        with sinks.crash_at("staged"), pytest.raises(RuntimeError, match="injected"):
+            sinks.publish_tables_atomic(
+                spark, [(self._frame(spark, "P3"), A), (self._frame(spark, "P3"), B)]
+            )
         sinks.publish_tables_atomic(
             spark, [(self._frame(spark, "P4"), B), (self._frame(spark, "P4"), C)]
         )
         assert [r["v"] for r in spark.read.parquet(A).collect()] == ["G0"]
         assert [r["v"] for r in spark.read.parquet(B).collect()] == ["P4"]
-        import glob
-
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi_intent_*"))
-        assert not glob.glob(str(tmp_path / "*" / "_compact" / "multi-*"))
+        assert not glob.glob(str(tmp_path / "*" / "_compact"))
 
 
 class TestRacingRecoverers:
@@ -476,29 +399,23 @@ class TestRacingRecoverers:
         )
         rows_before = _rows(spark.read.parquet(path))
         # crash the compaction right after its journal commit point
-        def crash(point):
-            if point == "journaled":
-                raise RuntimeError("injected crash at journaled")
-
-        sinks._CRASH_HOOK = crash
-        try:
-            with pytest.raises(RuntimeError, match="injected"):
-                sinks.compact_partitions_atomic(spark, path)
-        finally:
-            sinks._CRASH_HOOK = lambda point: None
-        # outer recovery: at its FIRST mid-swap point a competitor
-        # recovery runs to completion, then the outer pass continues
+        with sinks.crash_at("journaled"), pytest.raises(RuntimeError, match="injected"):
+            sinks.compact_partitions_atomic(spark, path)
+        # outer recovery: at its FIRST swap point a competitor recovery
+        # runs to completion, then the outer pass continues. The
+        # competitor acts as if it held the lease (as a peer does once
+        # the outer's lease has been broken), so it does not defer.
         fired = {"n": 0}
 
         def competitor(point):
-            if point.startswith("mid_swap:") and fired["n"] == 0:
+            if point.startswith("swap:") and fired["n"] == 0:
                 fired["n"] = 1
                 sinks._CRASH_HOOK = lambda p: None
-                sinks.recover_compaction(path, stale_after_s=0.0)
+                sinks.recover(path, stale_after_s=0.0, held_paths=(path,))
 
         sinks._CRASH_HOOK = competitor
         try:
-            report = sinks.recover_compaction(path, stale_after_s=0.0)
+            report = sinks.recover(path, stale_after_s=0.0)
         finally:
             sinks._CRASH_HOOK = lambda point: None
         assert fired["n"] == 1, "interleaver did not fire"
@@ -585,13 +502,13 @@ class TestCompactionLeaseAndPathGuards:
         run_dir = os.path.join(table, "_compact", "livewriter123")
         os.makedirs(os.path.join(run_dir, "data"))
         try:
-            report = sinks.recover_compaction(table)
+            report = sinks.recover(table)
             assert report["skipped"] == 1 and report["rolled_back"] == 0
             assert os.path.isdir(run_dir)  # untouched
         finally:
             sinks._release_compaction_lease(table)
         # writer gone (lease released) → the same tree is now debris
-        report = sinks.recover_compaction(table)
+        report = sinks.recover(table)
         assert report["rolled_back"] == 1
         assert not os.path.isdir(run_dir)
 
@@ -916,117 +833,35 @@ class TestMultiTableSwap:
         assert not os.path.isdir(os.path.join(self._loc(fact_t), "_compact"))
         assert not os.path.isdir(os.path.join(self._loc(roll_t), "_compact"))
 
-    @pytest.mark.parametrize(
-        "point,expect_new",
-        [
-            ("multi_staged", False),         # pre-journal → both roll BACK
-            ("multi_journaled", True),       # post-journal → both FORWARD
-            ("multi_swap:t0:date=2025-01-01", True),
-            ("multi_table_done:t0", True),   # BETWEEN the two tables
-            ("multi_swap:t1:date=2025-01-02", True),
-        ],
-    )
-    def test_crash_matrix_converges_consistently(
-        self, spark, tmp_path, point, expect_new
-    ):
-        import facebook_ads_bigquery_etl_spark.sinks as sinks
-
-        fact_t, roll_t = self._setup(spark, tmp_path)
-        new_fact, new_roll = self._gen(spark, 10.0)
-        old_hook = sinks._CRASH_HOOK
-
-        def crash(p):
-            if p == point:
-                raise RuntimeError(f"injected crash at {p}")
-
-        sinks._CRASH_HOOK = crash
-        try:
-            with pytest.raises(RuntimeError, match="injected crash"):
-                sinks.publish_tables_atomic(
-                    spark, [(new_fact, fact_t), (new_roll, roll_t)]
-                )
-        finally:
-            sinks._CRASH_HOOK = old_hook
-        primary = min(fact_t, roll_t)
-        report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
-        if expect_new:
-            assert report["rolled_forward"] == 1
-            assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
-            assert self._spends(spark, roll_t) == [30.0, 30.0]
-        else:
-            assert report["rolled_back"] == 1
-            assert self._spends(spark, fact_t) == [1.0, 2.0, 3.0]
-            assert self._spends(spark, roll_t) == [3.0, 3.0]
-        # cross-table invariant: rollup always re-derivable from fact
-        fact_sum = sorted(
-            r["s"]
-            for r in spark.read.parquet(fact_t)
-            .groupBy("date")
-            .agg(F.round(F.sum("spend"), 2).alias("s"))
-            .collect()
-        )
-        assert fact_sum == self._spends(spark, roll_t)
-        # recovery idempotent; no debris under either table
-        again = sinks.recover_multi_swap(primary, stale_after_s=0.0)
-        assert again == {
-            "rolled_forward": 0, "rolled_back": 0, "cleaned": 0,
-            "skipped": 0, "partial": 0,
-        }
-        assert not os.path.isdir(os.path.join(self._loc(primary), "_compact"))
-
     def test_fresh_primary_lease_defers_recovery(self, spark, tmp_path):
         import facebook_ads_bigquery_etl_spark.sinks as sinks
 
         fact_t, roll_t = self._setup(spark, tmp_path)
         primary = min(fact_t, roll_t)
-        run = os.path.join(self._loc(primary), "_compact", "multi-deadbeef")
+        run = os.path.join(self._loc(primary), "_compact", "deadbeef")
         os.makedirs(os.path.join(run, "t0", "data"))
         sinks._acquire_compaction_lease(primary)
         try:
-            report = sinks.recover_multi_swap(primary)
+            report = sinks.recover(primary)
             assert report["skipped"] == 1 and os.path.isdir(run)
         finally:
             sinks._release_compaction_lease(primary)
-        report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
+        report = sinks.recover(primary, stale_after_s=0.0)
         assert report["rolled_back"] == 1 and not os.path.isdir(run)
-
-    def test_single_table_recovery_leaves_multi_runs_alone(
-        self, spark, tmp_path
-    ):
-        import facebook_ads_bigquery_etl_spark.sinks as sinks
-
-        fact_t, roll_t = self._setup(spark, tmp_path)
-        primary = min(fact_t, roll_t)
-        run = os.path.join(self._loc(primary), "_compact", "multi-cafebabe")
-        os.makedirs(os.path.join(run, "t0", "data"))
-        report = sinks.recover_compaction(primary, stale_after_s=0.0)
-        assert report["rolled_back"] == 0 and os.path.isdir(run)
-        sinks.recover_multi_swap(primary, stale_after_s=0.0)
 
     def test_publish_resolves_crashed_single_table_compaction(
         self, spark, tmp_path
     ):
-        """Round-7 advice: a crashed-but-journaled single-table
-        compaction under a target used to survive a later publish and
-        then be rolled FORWARD, resurrecting the pre-publish
-        generation over newer committed data. publish_tables_atomic
-        must resolve it (it holds every target's lease) before
-        staging."""
+        """A crashed-but-journaled compaction of one target must not
+        survive a later publish: rolled FORWARD after it, it would
+        resurrect the pre-publish generation over newer committed
+        data. publish_tables_atomic resolves it (it holds every
+        target's lease) before staging."""
         import facebook_ads_bigquery_etl_spark.sinks as sinks
 
         fact_t, roll_t = self._setup(spark, tmp_path)
-        old_hook = sinks._CRASH_HOOK
-
-        def crash(p):
-            if p == "journaled":
-                raise RuntimeError("injected crash at journaled")
-
-        sinks._CRASH_HOOK = crash
-        try:
-            with pytest.raises(RuntimeError, match="injected"):
-                sinks.compact_partitions_atomic(spark, fact_t)
-        finally:
-            sinks._CRASH_HOOK = old_hook
+        with sinks.crash_at("journaled"), pytest.raises(RuntimeError, match="injected"):
+            sinks.compact_partitions_atomic(spark, fact_t)
         new_fact, new_roll = self._gen(spark, 10.0)
         sinks.publish_tables_atomic(
             spark, [(new_fact, fact_t), (new_roll, roll_t)]
@@ -1034,16 +869,15 @@ class TestMultiTableSwap:
         assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
         # The stale compaction journal is gone: recovery is a no-op and
         # cannot resurrect the pre-publish generation.
-        report = sinks.recover_compaction(fact_t, stale_after_s=0.0)
+        report = sinks.recover(fact_t, stale_after_s=0.0)
         assert report["rolled_forward"] == 0
         assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
 
     def test_multi_roll_forward_blocks_on_foreign_table_lease(
         self, spark, tmp_path
     ):
-        """Round-7 advice: recover_multi_swap checked only the PRIMARY
-        lease, so it could roll a run forward over a non-primary table
-        while a live writer held that table's lease. Now the held
+        """Recovery must not roll a run forward over a non-primary
+        table while a live writer holds that table's lease: the held
         table blocks (partial forward: exclusively-owned tables
         finish, the journal stays staged) and the run completes once
         the lease clears."""
@@ -1051,31 +885,21 @@ class TestMultiTableSwap:
 
         fact_t, roll_t = self._setup(spark, tmp_path)
         new_fact, new_roll = self._gen(spark, 10.0)
-        old_hook = sinks._CRASH_HOOK
-
-        def crash(p):
-            if p == "multi_table_done:t0":
-                raise RuntimeError("injected crash between tables")
-
-        sinks._CRASH_HOOK = crash
-        try:
-            with pytest.raises(RuntimeError, match="injected"):
-                sinks.publish_tables_atomic(
-                    spark, [(new_fact, fact_t), (new_roll, roll_t)]
-                )
-        finally:
-            sinks._CRASH_HOOK = old_hook
+        with sinks.crash_at("table_done:t0"), pytest.raises(RuntimeError, match="injected"):
+            sinks.publish_tables_atomic(
+                spark, [(new_fact, fact_t), (new_roll, roll_t)]
+            )
         primary, other = min(fact_t, roll_t), max(fact_t, roll_t)
         sinks._acquire_compaction_lease(other)  # live writer on t1
         try:
-            report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
+            report = sinks.recover(primary, stale_after_s=0.0)
             assert report["partial"] == 1
             assert report["rolled_forward"] == 0
             # the held table was not touched: still the old generation
             assert self._spends(spark, roll_t) == [3.0, 3.0]
         finally:
             sinks._release_compaction_lease(other)
-        report = sinks.recover_multi_swap(primary, stale_after_s=0.0)
+        report = sinks.recover(primary, stale_after_s=0.0)
         assert report["rolled_forward"] == 1
         assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
         assert self._spends(spark, roll_t) == [30.0, 30.0]
@@ -1138,20 +962,10 @@ class TestMultiTableSwap:
         assert sinks.publish_tables_atomic_once(
             spark, [fact_t, roll_t], build, meta_t, 0
         )
-        old_hook = sinks._CRASH_HOOK
-
-        def crash(p):
-            if p == "multi_journaled":
-                raise RuntimeError("injected crash after journal")
-
-        sinks._CRASH_HOOK = crash
-        try:
-            with pytest.raises(RuntimeError, match="injected"):
-                sinks.publish_tables_atomic_once(
-                    spark, [fact_t, roll_t], build, meta_t, 1
-                )
-        finally:
-            sinks._CRASH_HOOK = old_hook
+        with sinks.crash_at("journaled"), pytest.raises(RuntimeError, match="injected"):
+            sinks.publish_tables_atomic_once(
+                spark, [fact_t, roll_t], build, meta_t, 1
+            )
         # replay of batch 1: rolled forward, then skipped
         assert not sinks.publish_tables_atomic_once(
             spark, [fact_t, roll_t], build, meta_t, 1
@@ -1220,8 +1034,8 @@ class TestMultiTableSwap:
         the SAME two tables. Every operation either completes or
         refuses with CompactionLockHeld; afterwards one recovery pass
         must leave fact and rollup on ONE published generation with
-        rollup ≡ groupBy(fact). Exercises the round-8 cross-protocol
-        resolution under real interleaving, not just crash injection."""
+        rollup ≡ groupBy(fact). Exercises recovery under real
+        interleaving, not just crash injection."""
         import random
         import threading
 
@@ -1249,8 +1063,8 @@ class TestMultiTableSwap:
                     elif op == "compact":
                         sinks.compact_partitions_atomic(spark, fact_t)
                     else:
-                        sinks.recover_multi_swap(primary)
-                        sinks.recover_compaction(fact_t)
+                        sinks.recover(primary)
+                        sinks.recover(fact_t)
                 except sinks.CompactionLockHeld:
                     pass  # a live writer holds the table: correct refusal
                 except Exception as e:  # noqa: BLE001 — fail the test below
@@ -1265,9 +1079,8 @@ class TestMultiTableSwap:
             t.join()
         assert not errors, errors
         # converge any debris, then check the cross-table invariant
-        sinks.recover_multi_swap(primary, stale_after_s=0.0)
-        sinks.recover_compaction(fact_t, stale_after_s=0.0)
-        sinks.recover_compaction(roll_t, stale_after_s=0.0)
+        for t in (fact_t, roll_t):
+            sinks.recover(t, stale_after_s=0.0)
         fact_spends = self._spends(spark, fact_t)
         gens = {round(s / base, 6) for s, base in zip(fact_spends, [1, 2, 3])}
         assert len(gens) == 1, f"fact holds mixed generations: {fact_spends}"
@@ -1293,6 +1106,166 @@ class TestMultiTableSwap:
             sinks.publish_tables_atomic(spark, [(df, p), (df, p)])
 
 
+_ZERO = {
+    "rolled_forward": 0, "rolled_back": 0, "cleaned": 0,
+    "skipped": 0, "partial": 0,
+}
+
+# Every hook point of each entry point's staged commit. The journal is
+# written between ``staged`` and ``journaled``: a crash before it rolls
+# back, any later one rolls forward.
+_CRASH_CASES = [
+    (op, point)
+    for op, points in {
+        "compact": ["swap:t0:date=2025-01-01", "swap:t0:date=2025-01-02",
+                    "table_done:t0"],
+        "publish": ["swap:t0:date=2025-01-01", "table_done:t0",
+                    "swap:t1:date=2025-01-02"],
+        "publish_once": ["swap:t0:date=2025-01-01", "table_done:t1",
+                         "swap:t2:date=1970-01-01"],
+    }.items()
+    for point in ["staged", "journaled", *points, "committed"]
+]
+
+
+@pytest.fixture(params=["local", "hadoop"])
+def fs_prefix(request, spark):
+    """The stdlib arm on plain paths, or the Hadoop FileSystem arm
+    forced over file:// URIs: same protocol, other primitives."""
+    import facebook_ads_bigquery_etl_spark.sinks as sinks
+
+    sinks._FORCE_HADOOP_FS = request.param == "hadoop"
+    yield "file://" if request.param == "hadoop" else ""
+    sinks._FORCE_HADOOP_FS = False
+
+
+class TestCrashMatrix:
+    """One staged-commit protocol behind every entry point: a kill at
+    ANY hook point of a compaction, a two-table publish or an
+    exactly-once publish, then recovery, leaves every table on ONE
+    generation — bit-identical to the old one when the crash came
+    before the journal, the new one after it — never mixed, and no
+    ``_compact`` debris behind."""
+
+    _gen = TestMultiTableSwap._gen
+    _spends = TestMultiTableSwap._spends
+
+    def _layout(self, path):
+        """{partition: sorted data files}: tells rolled-back (the
+        fragmented pre-state) from rolled-forward (one file each)."""
+        loc = path.removeprefix("file://")
+        return {
+            p: sorted(f for f in os.listdir(os.path.join(loc, p))
+                      if f.endswith(".parquet"))
+            for p in os.listdir(loc) if p.startswith("date=")
+        }
+
+    @pytest.mark.parametrize("op,point", _CRASH_CASES)
+    def test_every_point_converges(self, spark, tmp_path, fs_prefix, op, point):
+        import facebook_ads_bigquery_etl_spark.sinks as sinks
+
+        fact_t, roll_t, meta_t = (
+            fs_prefix + str(tmp_path / t) for t in ("fact", "rollup", "meta")
+        )
+        old_fact, old_roll = self._gen(spark, 1.0)
+        new_fact, new_roll = self._gen(spark, 10.0)
+        if op == "compact":
+            targets = [fact_t]
+            for df in (old_fact, old_fact.withColumn("spend", F.col("spend") + 0.0)):
+                write_day_partitioned(df, fact_t)  # two fragmented loads
+            rows_before = _rows(spark.read.parquet(fact_t))
+            layout_before = self._layout(fact_t)
+            run = lambda: sinks.compact_partitions_atomic(spark, fact_t)  # noqa: E731
+        elif op == "publish":
+            targets = [fact_t, roll_t]
+            sinks.publish_tables_atomic(spark, [(old_fact, fact_t), (old_roll, roll_t)])
+            run = lambda: sinks.publish_tables_atomic(  # noqa: E731
+                spark, [(new_fact, fact_t), (new_roll, roll_t)]
+            )
+        else:
+            targets = [fact_t, roll_t, meta_t]
+            assert sinks.publish_tables_atomic_once(
+                spark, [fact_t, roll_t], lambda: [old_fact, old_roll], meta_t, 0
+            )
+            run = lambda: sinks.publish_tables_atomic_once(  # noqa: E731
+                spark, [fact_t, roll_t], lambda: [new_fact, new_roll], meta_t, 1
+            )
+        with sinks.crash_at(point), pytest.raises(RuntimeError, match="injected crash"):
+            run()
+
+        # The run is homed under the first target path; recovering it
+        # from there, then from every other target (their orphaned
+        # intent markers), resolves it once.
+        reports = [sinks.recover(t, stale_after_s=0.0) for t in sorted(targets)]
+        action = {"staged": "rolled_back", "committed": "cleaned"}
+        assert reports[0] == {**_ZERO, action.get(point, "rolled_forward"): 1}
+        assert all(r == _ZERO for r in reports[1:])
+        forward = point != "staged"
+        if op == "compact":
+            assert _rows(spark.read.parquet(fact_t)) == rows_before
+            layout = self._layout(fact_t)
+            if forward:
+                assert all(len(files) == 1 for files in layout.values()), layout
+            else:
+                assert layout == layout_before
+        else:
+            want_fact = [10.0, 20.0, 30.0] if forward else [1.0, 2.0, 3.0]
+            assert self._spends(spark, fact_t) == want_fact
+            # cross-table invariant: rollup always re-derivable from fact
+            fact_sum = sorted(
+                r["s"]
+                for r in spark.read.parquet(fact_t)
+                .groupBy("date")
+                .agg(F.round(F.sum("spend"), 2).alias("s"))
+                .collect()
+            )
+            assert fact_sum == self._spends(spark, roll_t)
+        # recovery is idempotent and leaves no debris under any table
+        for t in targets:
+            assert sinks.recover(t, stale_after_s=0.0) == _ZERO
+            assert not os.path.isdir(
+                os.path.join(t.removeprefix("file://"), "_compact")
+            )
+        if op == "publish_once":
+            # a replay of the crashed batch publishes iff it rolled back
+            assert run() is not forward
+            assert self._spends(spark, fact_t) == [10.0, 20.0, 30.0]
+        else:
+            run()  # the entry point runs again from the recovered state
+
+    @pytest.mark.parametrize("journal", [
+        '{"state": "staged", "partitions": ["date=2025-01-01"]}',
+        '{"state": "stag',
+    ], ids=["partitions_shape", "unparsable"])
+    def test_unreadable_journal_is_left_in_place(
+        self, spark, tmp_path, frame, fs_prefix, journal
+    ):
+        """A journal not in the {state, tables} shape (e.g. one left by
+        an older one-table compaction that crashed mid-swap, its
+        displaced live partition in trash/) makes recovery raise,
+        naming the run dir; rolling the run back would delete that
+        partition."""
+        import facebook_ads_bigquery_etl_spark.sinks as sinks
+
+        table = str(tmp_path / "t")
+        write_day_partitioned(frame, table)
+        run_dir = os.path.join(table, "_compact", "0123456789ab")
+        trash = os.path.join(run_dir, "trash", "date=2025-01-01")
+        os.makedirs(os.path.dirname(trash))
+        os.rename(os.path.join(table, "date=2025-01-01"), trash)
+        with open(os.path.join(run_dir, "journal.json"), "w") as f:
+            f.write(journal)
+        for attempt in (
+            lambda: sinks.recover(fs_prefix + table, stale_after_s=0.0),
+            lambda: sinks.compact_partitions_atomic(spark, fs_prefix + table),
+        ):
+            with pytest.raises(RuntimeError, match="0123456789ab"):
+                attempt()
+            assert os.path.isdir(run_dir) and os.listdir(trash)
+        # the failed compaction released its lease
+        assert not os.path.exists(os.path.join(table, "_compact", "_lock"))
+
+
 class TestAdvisorR8SwapHardening:
     """Round-9 (advisor r8 findings): (a) the Hadoop arm's rename must
     refuse an existing destination — FileSystem.rename onto an existing
@@ -1301,8 +1274,8 @@ class TestAdvisorR8SwapHardening:
     trash; (b) a peer that displaced the winner's install must detect
     it and restore; (c) the committed-journal write must converge, not
     raise, when a racing recoverer removed the run dir between the
-    isdir check and the write; (d) recover_multi_swap's roll-forward
-    must heartbeat every lease it acquires."""
+    isdir check and the write; (d) recovery's roll-forward must
+    heartbeat every lease it acquires."""
 
     def test_hadoop_rename_refuses_existing_destination(self, spark, tmp_path):
         import facebook_ads_bigquery_etl_spark.sinks as sinks
@@ -1373,10 +1346,10 @@ class TestAdvisorR8SwapHardening:
 
     @pytest.mark.parametrize("backend", ["local", "hadoop"])
     def test_committed_journal_toctou_converges(self, spark, tmp_path, backend):
-        """A racing recoverer rmtree(run_dir)s between _finish_swap's
-        isdir check and its committed-journal write: the write fails on
-        the missing parent and must be treated as the peer having
-        finished (return), not raised."""
+        """A racing recoverer rmtree(run_dir)s between _commit's isdir
+        check and its committed-journal write: the write fails on the
+        missing parent and must be treated as the peer having finished
+        (return), not raised."""
         import facebook_ads_bigquery_etl_spark.sinks as sinks
 
         prefix = "file://" if backend == "hadoop" else ""
@@ -1384,13 +1357,12 @@ class TestAdvisorR8SwapHardening:
         try:
             ops, table = sinks._path_ops(prefix + str(tmp_path / "t"))
             run_dir = ops.join(ops.join(table, "_compact"), "run1")
-            data_dir = ops.join(run_dir, "data")
             part = "date=2025-01-01"
-            ops.mkdirs(ops.join(data_dir, part))
-            ops.mkdirs(ops.join(run_dir, "trash"))
+            ops.mkdirs(ops.join(ops.join(ops.join(run_dir, "t0"), "data"), part))
+            tables = [{"slot": "t0", "path": table, "partitions": [part]}]
             ops.write_json_atomic(
                 ops.join(run_dir, "journal.json"),
-                {"state": "staged", "partitions": [part]},
+                {"state": "staged", "tables": tables},
             )
 
             class PeerWins:
@@ -1403,7 +1375,7 @@ class TestAdvisorR8SwapHardening:
                     ops.write_json_atomic(target, payload)
 
             # must converge silently (no exception), swap done
-            sinks._finish_swap(table, run_dir, [part], PeerWins())
+            sinks._commit(run_dir, tables, PeerWins())
             assert ops.isdir(ops.join(table, part))
             assert not ops.isdir(run_dir)
         finally:
@@ -1422,18 +1394,8 @@ class TestAdvisorR8SwapHardening:
         roll = df.groupBy("date").agg(F.sum("spend").alias("total_spend"))
         sinks.publish_tables_atomic(spark, [(df, fact_t), (roll, roll_t)])
 
-        def crash(point):
-            if point == "multi_journaled":
-                raise RuntimeError("injected crash at multi_journaled")
-
-        sinks._CRASH_HOOK = crash
-        try:
-            with pytest.raises(RuntimeError, match="injected"):
-                sinks.publish_tables_atomic(
-                    spark, [(df, fact_t), (roll, roll_t)]
-                )
-        finally:
-            sinks._CRASH_HOOK = lambda point: None
+        with sinks.crash_at("journaled"), pytest.raises(RuntimeError, match="injected"):
+            sinks.publish_tables_atomic(spark, [(df, fact_t), (roll, roll_t)])
 
         entered: list[str] = []
         real_hb = sinks._LeaseHeartbeat
@@ -1444,7 +1406,7 @@ class TestAdvisorR8SwapHardening:
                 return super().__enter__()
 
         monkeypatch.setattr(sinks, "_LeaseHeartbeat", RecordingHB)
-        report = sinks.recover_multi_swap(fact_t, stale_after_s=0.0)
+        report = sinks.recover(fact_t, stale_after_s=0.0)
         assert report["rolled_forward"] == 1
         # one heartbeat per acquired lease (both tables, none held)
         assert len(entered) == 2

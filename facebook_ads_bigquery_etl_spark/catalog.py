@@ -1,13 +1,13 @@
 """Idempotent DDL — the engine's analog of the reference's
 ``exist_dataset_table`` (reference main.py:44-78): create-if-missing
-dataset (→ Spark database) and table with schema, day partitioning and
-clustering, no-op when they already exist.
+dataset (→ Spark database), and the bucketed managed-table layout of
+the co-located-join proof. The ETL path writes day-partitioned files
+(``sinks.write_day_partitioned``), not managed tables.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 
 def ensure_database(spark: SparkSession, db: str, location: str | None = None) -> None:
@@ -15,38 +15,6 @@ def ensure_database(spark: SparkSession, db: str, location: str | None = None) -
     hardcoded location "US" becomes an argument)."""
     loc = f" LOCATION '{location}'" if location else ""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}{loc}")
-
-
-def ensure_table(
-    spark: SparkSession,
-    db: str,
-    table: str,
-    schema: T.StructType,
-    partition_field: str | None = None,
-    clustering_fields: list[str] | None = None,
-    fmt: str = "parquet",
-) -> str:
-    """CREATE TABLE IF NOT EXISTS with day partitioning + clustering
-    (reference main.py:57-78). Clustering maps to a documented
-    sort-on-write contract (see sinks.py) — Parquet min/max row-group
-    stats then give BigQuery-cluster-style data skipping.
-
-    Returns 'ok' like the reference (main.py:78) for drop-in parity.
-    """
-    ensure_database(spark, db)
-    cols = ",\n  ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
-    part = f"\nPARTITIONED BY ({partition_field})" if partition_field else ""
-    props = ""
-    if clustering_fields:
-        props = f"\nTBLPROPERTIES ('clustering_fields'='{','.join(clustering_fields)}')"
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {db}.{table} (\n  {cols}\n) USING {fmt}{part}{props}"
-    )
-    return "ok"
-
-
-def table_exists(spark: SparkSession, db: str, table: str) -> bool:
-    return spark.catalog.tableExists(f"{db}.{table}")
 
 
 def write_bucketed_table(

@@ -88,10 +88,3 @@ def ensure_runtime_bloom(df: DataFrame) -> DataFrame:
     with _scoped_conf(df.sparkSession, overrides):
         df._jdf.queryExecution().executedPlan()
     return df
-
-
-def plan_has_bloom_filter(df: DataFrame) -> bool:
-    """True if the physical plan contains the injected runtime filter
-    (``might_contain`` over a Bloom-filter subquery) — the plan-shape
-    assertion used by tests/test_scale_layout.py."""
-    return "might_contain" in df._jdf.queryExecution().toString().lower()

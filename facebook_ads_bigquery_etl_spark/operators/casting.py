@@ -87,19 +87,3 @@ def split_required_violations(df: DataFrame, target: T.StructType) -> tuple[Data
     """
     bad = required_violation_predicate(target)
     return df.filter(~bad), df.filter(bad)
-
-
-def enforce_required(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Fail-fast variant: any REQUIRED violation aborts the job at
-    execution time (distributed, no collect).
-
-    The probe lives in a FILTER predicate — assert_true returns NULL
-    on success so ``isNull()`` keeps every row, but the expression must
-    be evaluated per row to decide membership. (The obvious
-    withColumn-then-drop formulation is silently pruned by column
-    elimination and never runs — a tested regression.)"""
-    bad = required_violation_predicate(target)
-    probe = F.assert_true(
-        ~bad, F.lit("REQUIRED field violated (NULL in non-nullable column)")
-    )
-    return df.filter(probe.isNull())

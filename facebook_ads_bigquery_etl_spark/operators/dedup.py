@@ -1,9 +1,8 @@
 """Deduplication family for training-data pipelines (north-star).
 
-Four tiers, each with a distinct scale profile:
+Three tiers, each with a distinct scale profile (exact duplicates
+are a groupBy on a body digest — plans/llm.py ``exact_dedup_docs``):
 
-* exact        — group on a 64-bit fingerprint of the body: shuffle
-                 carries (hash, id), never documents. O(n) one shuffle.
 * n-gram Jaccard — exact set similarity via token/shingle explode +
                  self-join on shingle. Correct but O(Σ posting-list²)
                  on hot shingles: the *oracle/baseline*, not the scale
@@ -28,7 +27,7 @@ from pyspark.sql import functions as F
 
 from . import materialize
 from .exprs import let
-from .text import tokens, with_fingerprint
+from .text import tokens
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -150,22 +149,6 @@ def resolve_replays(
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id representative of each exact-duplicate group.
-    Groups on the 64-bit fingerprint (8-byte shuffle key). Rows with a
-    NULL text carry a NULL fingerprint and PASS THROUGH untouched —
-    they are not duplicates of each other (and the equality semi-join
-    would otherwise silently drop every one of them); the quarantine
-    path owns unreadable payloads, not the dedup (r11 nulls sweep)."""
-    fp = with_fingerprint(df, text_col)
-    keyed = fp.filter(F.col("fingerprint").isNotNull())
-    keep = keyed.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    kept = keyed.join(keep, [id_col, "fingerprint"], "left_semi")
-    return kept.unionByName(
-        fp.filter(F.col("fingerprint").isNull())
-    ).drop("fingerprint")
-
-
 # -- shingles / exact Jaccard ----------------------------------------------
 
 def word_shingles(text_col: str, n: int = 3) -> Column:
@@ -265,99 +248,6 @@ def jaccard_pairs(
     )
 
 
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram: int = 1,
-) -> DataFrame:
-    """Exact n-gram-set Jaccard ≥ threshold via PREFIX FILTERING —
-    identical result set to :func:`jaccard_pairs` (recall exactly 1.0,
-    unlike MinHash-LSH), with a different cost profile.
-
-    The classic exact-similarity-join bound (Chaudhuri's SSJoin /
-    PPJoin family): order the shingle universe globally by document
-    frequency (rarest first); if J(A,B) ≥ t, the smallest common
-    shingle must fall within the first ⌊(1−t)·|d|⌋+1 shingles of BOTH
-    docs — everything before it is non-shared, and a doc with ≥ t
-    Jaccard shares ≥ t·|d| of its shingles. Candidates therefore come
-    ONLY from each doc's short rare-prefix (5% of shingles at t=0.95),
-    whose posting lists are by construction the table's smallest; each
-    candidate is then exact-verified with one array_intersect.
-
-    When to use which (measured on the bench corpus): this wins when
-    true matches are RARE — candidate generation collapses and the
-    per-pair verify runs a handful of times. On duplication-HEAVY data
-    (the sf0.1 documents table: ~191k true pairs over 5k docs) the
-    verify stage dominates and the length-filtered posting join in
-    :func:`jaccard_pairs` is several times faster — any exact
-    algorithm must touch every true pair, and counting intersections
-    in a codegen'd hash aggregate beats per-pair array intersection.
-    Both are exact; pick by expected match density."""
-    # Identity grain via the SAME union algebra as jaccard_pairs /
-    # minhash_dup_pairs (r11 duplicates sweep, extended here r13): a
-    # replayed id contributes the union of its copies' shingle sets —
-    # without it each copy joined back separately and the pair list
-    # carried duplicate (a_id, b_id) rows with conflicting jaccard
-    # values, breaking the documented result-set identity with
-    # jaccard_pairs. On clean input the groupBy collapses nothing.
-    base = materialize.persist(
-        _spread(df)
-        .select(F.col(id_col), word_shingles(text_col, ngram).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .groupBy(id_col)
-        .agg(F.array_distinct(F.flatten(F.collect_list("sh"))).alias("sh"))
-        .withColumn("sz", F.size("sh"))
-    )
-    sh = base.select(F.col(id_col), F.col("sz"), F.explode("sh").alias("shingle"))
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("dfreq"))
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("dfreq", "shingle")
-    prefix = (
-        sh.join(dfreq, "shingle")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(
-            F.col("rk")
-            <= F.col("sz") - F.ceil(F.lit(float(threshold)) * F.col("sz")) + 1
-        )
-        .select(F.col(id_col), F.col("shingle"))
-    )
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id")
-        )
-        .distinct()
-    )
-    av = base.select(
-        F.col(id_col).alias("a_id"), F.col("sh").alias("a_sh"), F.col("sz").alias("na")
-    )
-    bv = base.select(
-        F.col(id_col).alias("b_id"), F.col("sh").alias("b_sh"), F.col("sz").alias("nb")
-    )
-    verified = (
-        cand.join(av, "a_id")
-        .join(bv, "b_id")
-        .withColumn("inter", F.size(F.array_intersect("a_sh", "b_sh")))
-        .withColumn(
-            "jaccard_raw",
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard_raw") >= threshold)
-    )
-    return verified.select(
-        "a_id", "b_id", F.round("jaccard_raw", 6).alias("jaccard")
-    )
-
-
 # -- MinHash + LSH -----------------------------------------------------------
 
 
@@ -371,34 +261,6 @@ def _shingle_hashes(text_col: str, ngram: int) -> Column:
         F.transform(word_shingles(text_col, ngram), lambda s: F.xxhash64(s))
     )
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    ngram: int = 3,
-) -> DataFrame:
-    """(id, signature array<bigint>[num_perm]). Permutation i is
-    min(xxhash64(shingle, i)) over the doc's shingle set — a seeded
-    hash family, fully deterministic.
-
-    Shuffle-free: the per-permutation minimum is computed directly on
-    the shingle ARRAY with array_min∘transform — a single narrow map
-    stage (the explode+groupBy formulation costs a full shuffle of
-    n·|shingles| rows for the same result). The permutation loop is a
-    SINGLE nested higher-order expression over sequence(0, P-1), not P
-    separate expressions — P-fold smaller plan, so driver-side
-    analysis stays O(1) in P. Docs with an empty shingle set (shorter
-    than the shingle width) are dropped — they have no content to
-    near-dup on and their all-NULL signatures would otherwise collide
-    into one giant LSH bucket."""
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(F.transform(F.col("shh"), lambda h: F.xxhash64(h, i))),
-    )
-    sh = _spread(df).select(F.col(id_col), _shingle_hashes(text_col, ngram).alias("shh"))
-    return sh.filter(F.size("shh") > 0).select(id_col, sig.alias("signature"))
-
 
 def minhash_dup_pairs(
     df: DataFrame,
@@ -408,11 +270,21 @@ def minhash_dup_pairs(
     num_perm: int = 64,
     bands: int = 16,
     ngram: int = 3,
-    verify: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs: band the signature (bands × rows_per
-    band), bucket-join on (band_idx, band_hash), then (optionally)
-    exact-verify candidates with true shingle Jaccard ≥ threshold.
+    band), bucket-join on (band_idx, band_hash), then exact-verify
+    candidates with true shingle Jaccard ≥ threshold.
+
+    The signature: permutation i is min(xxhash64(shingle, i)) over the
+    doc's shingle-hash set — a seeded hash family, fully
+    deterministic. It is computed on the shingle ARRAY with
+    array_min∘transform (one narrow map stage; the explode+groupBy
+    formulation shuffles n·|shingles| rows for the same result), as ONE
+    nested higher-order expression over sequence(0, P-1) — P-fold
+    smaller plan than P separate expressions. Docs with an empty
+    shingle set (shorter than the shingle width) are dropped: they have
+    no content to near-dup on, and their all-NULL signatures would
+    collide into one giant LSH bucket.
 
     Scale: candidates come only from equal buckets — shuffle is
     O(n·bands); band-hash hot spots (boilerplate docs) are the skew
@@ -488,8 +360,6 @@ def minhash_dup_pairs(
         .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
         .distinct()
     )
-    if not verify:
-        return cand
     # exact-verify candidates only: join shingle-hash sets on the pair
     sh = sh_df.select(F.col(id_col), F.col("shh").alias("sh"))
     verified = (
@@ -514,7 +384,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     Zero-token (empty/whitespace/NULL) docs are EXCLUDED: their votes
     are all ties → all-zero sketch, so every such doc would share one
     bucket at every position and the candidate self-join goes
-    quadratic in their count — the same hazard minhash_signatures
+    quadratic in their count — the same hazard minhash_dup_pairs
     documents and drops, and the same "no sketchable content ≠ a
     near-dup cluster" semantics (r13 operator review; at a routine
     ~5% empty-doc rate on a 1e9-doc corpus the collision group alone

@@ -227,13 +227,6 @@ def _png_codec():
 png_encode, png_decode = _png_codec()
 
 
-def png_decode_pure(data: bytes):
-    """The stdlib-only decode path, bypassing the native fast path —
-    exists so tests can assert branch equality (PIL output == stdlib
-    output on the same payloads) whenever PIL is installed."""
-    return png_decode(data, _pure=True)
-
-
 def _jpeg_codec():
     """JPEG support for the same decode seam, nested for by-value
     pickling (see ``_png_codec``). Real 100 TB image corpora are
@@ -790,7 +783,6 @@ __all__ = [
     "audio_stats",
     "png_encode",
     "png_decode",
-    "png_decode_pure",
     "jpeg_dims",
     "jpeg_decode",
     "image_decode",

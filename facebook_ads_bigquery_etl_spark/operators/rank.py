@@ -10,7 +10,7 @@ rank / ntile with fully parallel stages:
    parallelism lever: exactness never depends on them, any
    deterministic value cuts work (approximate, skewed, even a single
    cut all stay correct, just less parallel);
-2. per-bucket exact counts → cumulative offsets (≤ ``n_buckets`` rows,
+2. per-bucket exact counts → cumulative offsets (one row per bucket,
    driver-side, broadcast back as a literal map);
 3. ``row_number`` within each bucket (``partitionBy(bucket)`` — many
    small parallel windows);
@@ -25,10 +25,11 @@ construction, so cross-bucket order is never violated.
 
 Reference has no ranking surface (`main.py` is connector-only); this
 is the scale form of the W-family global-rank queries — wired into
-`order_value_quartiles` and `customer_rfm_segments` (round 9), which
-forced the parallel form (`small_input_rows=0`) so their committed
-plans carry no `Exchange SinglePartition` (10× ratio 2.9–3.0 → 1.15–1.21,
-STRESS.md round-9 section).
+`order_value_quartiles`, `customer_rfm_segments` and `orders_pareto`,
+whose committed plans carry no `Exchange SinglePartition` (10× ratio
+2.9–3.0 → 1.15–1.21, STRESS.md round-9 section). There is no
+single-partition fallback for small inputs: every caller ranks a
+corpus-grain frame, and one code path keeps one plan shape.
 """
 
 from __future__ import annotations
@@ -84,115 +85,89 @@ def _default_buckets(df: DataFrame) -> int:
     only set the window parallelism and the quantile-probe/CASE-tree
     size, never correctness (any deterministic cuts are exact). More
     cores → more buckets → smaller per-bucket sorts; the cap bounds
-    plan size and the probe, and callers ranking truly huge frames can
-    pass ``n_buckets`` explicitly (r13 optimization, guide §2:
-    derive scale-dependent settings, don't pin them to one machine)."""
+    plan size and the probe (r13 optimization, guide §2: derive
+    scale-dependent settings, don't pin them to one machine)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     return max(64, min(4096, 2 * int(par)))
 
 
-def with_global_rank(
-    df: DataFrame,
-    value_col: str,
-    tiebreak_cols: list[str],
-    out_col: str = "global_rank",
-    n_buckets: int | None = None,
-    ascending: bool = True,
-    persist: bool = False,
-) -> DataFrame:
-    """Add the exact 1-based global rank by
-    ``(value_col, *tiebreak_cols)`` (a TOTAL order — tiebreaks must
-    make it unique) without ever shuffling to a single partition.
-
-    The operator runs three actions over ``df`` (quantile probe,
-    per-bucket counts, the final ranked plan). A source that is not
-    re-read-stable (concurrent writes, sampling) can grow a bucket
-    between the counts collect and window time; that bucket's offset
-    would be absent from the broadcast map, so the rank expression
-    raises at runtime instead of silently emitting null ranks. Pass
-    ``persist=True`` to pin ``df`` (MEMORY_AND_DISK) across the three
-    actions when the source is not deterministic — the caller owns
-    ``df.unpersist()`` after consuming the result."""
-    if persist:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return _rank_with_total(
-        df, value_col, tiebreak_cols, out_col, n_buckets, ascending
-    )[0]
-
-
-def _rank_with_total(
-    df: DataFrame,
-    value_col: str,
-    tiebreak_cols: list[str],
-    out_col: str,
-    n_buckets: int | None,
-    ascending: bool,
-) -> tuple[DataFrame, int]:
-    """Body of :func:`with_global_rank`, additionally returning the
-    total row count (= sum of the per-bucket counts it collects
-    anyway) so callers that need N — the ntile formula — don't pay a
-    separate ``df.count()`` pass (r13 optimization, guide §1.2: one
-    fewer full action per ntile; the count and the offsets now also
-    come from the SAME action, so they can never disagree on a
-    non-re-read-stable source)."""
-    n = max(2, int(n_buckets)) if n_buckets is not None else _default_buckets(df)
+def _bucketed(df: DataFrame, value_col: str) -> DataFrame:
+    """``df`` plus its histogram bucket ``__bucket`` (step 1) — the one
+    bucket probe of rank and cumsum."""
+    n = _default_buckets(df)
     probes = [i / n for i in range(1, n)]
     cuts = sorted(set(df.approxQuantile(value_col, probes, 0.001)))
     bucket = (
         _bucket_of(value_col, cuts) if cuts else F.lit(0)
     )  # empty/constant input: one bucket
-    b = df.withColumn("__bucket", bucket)
-    # exact per-bucket counts → cumulative offsets; ≤ n rows to driver
-    counts = {
-        r["__bucket"]: r["cnt"]
-        for r in b.groupBy("__bucket").agg(F.count("*").alias("cnt")).collect()
-    }
+    return df.withColumn("__bucket", bucket)
+
+
+def _offsets(totals: dict) -> tuple[dict, object]:
+    """Per-bucket totals → (bucket → sum of the totals of every
+    STRICTLY lower bucket, grand total); a NULL total adds nothing."""
     offsets, acc = {}, 0
-    for k in sorted(counts):
+    for k in sorted(totals):
         offsets[k] = acc
-        acc += counts[k]
-    omap = F.create_map(
-        *[F.lit(x) for kv in sorted(offsets.items()) for x in kv]
-    )
-    direction = F.asc if ascending else F.desc
-    if not ascending:
-        # descending global order: buckets must also flip — rank from
-        # the top means offset counts rows ABOVE, i.e. from higher
-        # buckets. Recompute offsets in descending bucket order.
-        offsets, acc = {}, 0
-        for k in sorted(counts, reverse=True):
-            offsets[k] = acc
-            acc += counts[k]
-        omap = F.create_map(
-            *[F.lit(x) for kv in sorted(offsets.items()) for x in kv]
-        )
-    w = Window.partitionBy("__bucket").orderBy(
-        direction(value_col), *[direction(c) for c in tiebreak_cols]
-    )
-    # A bucket present at window time but absent at count time means the
-    # input changed between the two actions — fail loudly, never emit
-    # null ranks (advisor r8 finding).
+        acc = acc + (totals[k] if totals[k] is not None else 0)
+    return offsets, acc
+
+
+def _bucket_offset(omap: Column, dtype: str) -> Column:
+    """The row's bucket offset from ``omap`` (bucket → cumulative
+    offset, built from one action over the input), as ``dtype``.
+
+    The operators run several actions over their input (quantile
+    probe, per-bucket totals, the final plan). A source that is not
+    re-read-stable (concurrent writes, sampling) can grow a bucket
+    between the totals collect and window time; that bucket is absent
+    from the map, and the offset RAISES at runtime instead of silently
+    emitting a null (advisor r8 finding). Pin such a source with
+    ``materialize.persist`` before ranking it."""
     offset = F.element_at(omap, F.col("__bucket"))
-    offset = F.when(
+    return F.when(
         offset.isNull(),
         F.raise_error(
             F.concat(
                 F.lit(
-                    "with_global_rank: bucket absent at count time "
-                    "(input not re-read-stable; pass persist=True): "
+                    "global rank: bucket absent when the offsets were "
+                    "taken (input not re-read-stable; pin it with "
+                    "materialize.persist): "
                 ),
                 F.col("__bucket").cast("string"),
             )
-        ).cast("long"),
+        ).cast(dtype),
     ).otherwise(offset)
+
+
+def _global_rank(
+    df: DataFrame, value_col: str, tiebreak_cols: list[str], out_col: str
+) -> tuple[DataFrame, int]:
+    """``df`` plus the exact 1-based global rank ``out_col`` by
+    ``(value_col, *tiebreak_cols)`` (a TOTAL order — tiebreaks must
+    make it unique), and the total row count (= the sum of the
+    per-bucket counts it collects anyway, so the ntile formula pays no
+    separate ``df.count()`` pass and the count and the offsets come
+    from the SAME action — r13 optimization, guide §1.2)."""
+    b = _bucketed(df, value_col)
+    # exact per-bucket counts → cumulative offsets; one row per bucket
+    # reaches the driver
+    offsets, total = _offsets({
+        r["__bucket"]: r["cnt"]
+        for r in b.groupBy("__bucket").agg(F.count("*").alias("cnt")).collect()
+    })
+    omap = F.create_map(
+        *[F.lit(x) for kv in sorted(offsets.items()) for x in kv]
+    )
+    w = Window.partitionBy("__bucket").orderBy(value_col, *tiebreak_cols)
     ranked = (
         b.withColumn("__local", F.row_number().over(w))
-        .withColumn(out_col, (offset + F.col("__local")).cast("long"))
+        .withColumn(
+            out_col, (_bucket_offset(omap, "long") + F.col("__local")).cast("long")
+        )
         .drop("__bucket", "__local")
     )
-    return ranked, sum(counts.values())
+    return ranked, total
 
 
 def ntile_from_rank(rank_col: str, total: int, k: int) -> Column:
@@ -218,15 +193,13 @@ def with_global_cumsum(
     value_col: str,
     tiebreak_cols: list[str],
     out_col: str = "global_cumsum",
-    n_buckets: int | None = None,
-    ascending: bool = True,
-    persist: bool = False,
 ) -> DataFrame:
     """Exact running ``SUM(sum_col) OVER (ORDER BY value, *tiebreaks
     ROWS UNBOUNDED PRECEDING)`` without a single-partition sort: the
-    same histogram buckets as :func:`with_global_rank`, per-bucket
-    SUM totals → cumulative offsets (≤ ``n_buckets`` rows to the
-    driver), then a per-bucket running sum window.
+    same histogram buckets as :func:`with_global_ntile`, per-bucket
+    SUM totals → cumulative offsets (≤ one row per bucket to the
+    driver), then a per-bucket running sum window. For a descending
+    order, rank a negated column (as ``orders_pareto`` does).
 
     Exactness caveat: per-bucket partials are combined in bucket
     order, not element order — for FLOAT inputs the result can differ
@@ -234,28 +207,11 @@ def with_global_cumsum(
     exactly-additive ``sum_col`` type (integer / decimal) when
     bit-parity with a sequential window or another engine matters;
     the offsets and the output are cast to the aggregate's own type."""
-    if persist:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    n = max(2, int(n_buckets)) if n_buckets is not None else _default_buckets(df)
-    probes = [i / n for i in range(1, n)]
-    cuts = sorted(set(df.approxQuantile(value_col, probes, 0.001)))
-    bucket = _bucket_of(value_col, cuts) if cuts else F.lit(0)
-    b = df.withColumn("__bucket", bucket)
+    b = _bucketed(df, value_col)
+    totals = b.groupBy("__bucket").agg(F.sum(sum_col).alias("s"))
     # the aggregate's own type (e.g. decimal widens, long stays long)
-    agg_type = b.groupBy("__bucket").agg(
-        F.sum(sum_col).alias("s")
-    ).schema["s"].dataType.simpleString()
-    sums = {
-        r["__bucket"]: r["s"]
-        for r in b.groupBy("__bucket").agg(F.sum(sum_col).alias("s")).collect()
-    }
-    order = sorted(sums, reverse=not ascending)
-    offsets, acc = {}, 0
-    for k in order:
-        offsets[k] = acc  # sum of all STRICTLY-prior buckets
-        acc = acc + (sums[k] if sums[k] is not None else 0)
+    agg_type = totals.schema["s"].dataType.simpleString()
+    offsets, _ = _offsets({r["__bucket"]: r["s"] for r in totals.collect()})
     omap = F.create_map(
         *[
             x
@@ -263,40 +219,19 @@ def with_global_cumsum(
             for x in (F.lit(k), F.lit(str(offsets[k])).cast(agg_type))
         ]
     )
-    direction = F.asc if ascending else F.desc
     w = (
         Window.partitionBy("__bucket")
-        .orderBy(direction(value_col), *[direction(c) for c in tiebreak_cols])
+        .orderBy(value_col, *tiebreak_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # same missing-bucket guard as with_global_rank: a bucket absent
-    # at sum time must raise, never silently contribute a null offset
-    offset = F.element_at(omap, F.col("__bucket"))
-    offset = F.when(
-        offset.isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "with_global_cumsum: bucket absent at sum time "
-                    "(input not re-read-stable; pass persist=True): "
-                ),
-                F.col("__bucket").cast("string"),
-            )
-        ).cast(agg_type),
-    ).otherwise(offset)
     return (
         b.withColumn("__local_sum", F.sum(sum_col).over(w))
-        .withColumn(out_col, (offset + F.col("__local_sum")).cast(agg_type))
+        .withColumn(
+            out_col,
+            (_bucket_offset(omap, agg_type) + F.col("__local_sum")).cast(agg_type),
+        )
         .drop("__bucket", "__local_sum")
     )
-
-
-# Below this row count a single-task window sort beats the parallel
-# form's fixed overhead (quantile probe + counts collect = 2 extra
-# jobs): measured 2.0 s window vs 6.4 s parallel on 1.5 M rows — the
-# parallel form exists for the 10⁷+ regime where one sort task becomes
-# the job, not for small inputs.
-GLOBAL_RANK_SMALL_INPUT_ROWS = 4_000_000
 
 
 def with_global_ntile(
@@ -305,42 +240,14 @@ def with_global_ntile(
     tiebreak_cols: list[str],
     k: int,
     out_col: str = "tile",
-    n_buckets: int | None = None,
-    ascending: bool = True,
-    small_input_rows: int = GLOBAL_RANK_SMALL_INPUT_ROWS,
-    persist: bool = False,
 ) -> DataFrame:
     """Exact ``NTILE(k) OVER (ORDER BY value, *tiebreaks)`` that never
-    single-task-sorts a LARGE input. Dispatch is free — the total row
-    count is needed for the tile formula anyway: at or below
-    ``small_input_rows`` the classic window form runs (one job, fastest
-    at small scale); above it, the range-bucketed parallel form (two
-    extra narrow passes buy a fully parallel sort). Both produce
-    identical assignments. ``persist=True`` pins ``df`` across the
-    count + rank actions for non-re-read-stable sources (caller owns
-    ``unpersist``)."""
-    if persist:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if small_input_rows > 0:
-        total = df.count()
-        if total == 0:
-            return df.withColumn(out_col, F.lit(None).cast("int"))
-        if total <= small_input_rows:
-            direction = F.asc if ascending else F.desc
-            w = Window.orderBy(
-                direction(value_col), *[direction(c) for c in tiebreak_cols]
-            )
-            return df.withColumn(out_col, F.ntile(int(k)).over(w))
-    # forced-parallel path (small_input_rows=0, every registered
-    # corpus-grain ntile): the total comes out of the bucket-counts
-    # action the rank operator runs anyway — no separate count() pass
-    # (r13 optimization; df already persisted above when requested —
-    # don't double-pin)
-    ranked, total = _rank_with_total(
-        df, value_col, tiebreak_cols, "__grank", n_buckets, ascending
-    )
+    single-task-sorts its input: the global rank, then the tile by
+    Spark's own bucket-size distribution (:func:`ntile_from_rank`).
+    The total row count comes out of the bucket-counts action the rank
+    runs anyway — no separate count() pass. Empty input → a NULL
+    tile column."""
+    ranked, total = _global_rank(df, value_col, tiebreak_cols, "__grank")
     if total == 0:
         return df.withColumn(out_col, F.lit(None).cast("int"))
     return ranked.withColumn(

@@ -1,20 +1,28 @@
 """Similarity search over embedding columns (north-star extension).
 
-Two tiers:
+Every top-k and near-dup operator here is the same two steps:
+generate candidates, then verify them exactly. Candidate generation
+is the only thing that differs:
 
-* brute-force cosine top-k — broadcast the query set, JVM-side dot
-  product via zip_with/aggregate (no Python in the row path), per-query
-  top-k via the rank-filter window. Exact; O(|queries| · n) — the
-  baseline and the verifier for the approximate path.
-* random-hyperplane LSH — sign-bucket each vector against H fixed
-  hyperplanes (deterministic seed), probe only the query's bucket
-  (optionally multi-probe neighbors at hamming 1). Candidate set is
-  bucket-sized, so the scan cost drops from n to n/2^H per query;
-  recall is tunable via H and probes and is asserted against the
-  brute-force baseline in tests.
+* exact — every other vector (brute force, O(|queries| · n)): the
+  baseline and the verifier of the approximate paths;
+* random-hyperplane LSH — vectors sharing a sign-bucket of any of L
+  seeded hyperplane tables (optionally multi-probing the hamming-1
+  neighbors), so a query scans ~n/2^H vectors per table;
+* IVF — vectors sharing one of a query's nearest k-means lists.
+
+Verification is one private core per output shape —
+:func:`_cosine_topk` (broadcast queries, JVM-side zip_with/aggregate
+dot product, per-query top-k window) and :func:`_dup_pairs` — with one
+quarantine rule (:func:`_scorable`) and one rounded score
+(:func:`_cosine`), so candidates are scored bit-identically to the
+exact baseline and only recall depends on the index (asserted vs the
+brute-force baseline in tests).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import Column, DataFrame
@@ -64,46 +72,84 @@ def valid_vectors(vcol: Column | str) -> Column:
     return finite_vectors(v) & (_norm(_as_double(v)) > 0)
 
 
+def _scorable(
+    df: DataFrame, id_col: str, vec_col: str, names: tuple[str, str, str]
+) -> DataFrame:
+    """(id, vector as doubles, norm) under ``names`` for the rows
+    :func:`valid_vectors` admits — the one quarantine rule of the
+    cosine operators. The nonzero test filters the norm the score
+    needs anyway, so each row's O(d) norm is computed once
+    (``valid_vectors`` would compute it a second time)."""
+    i, v, n = names
+    return (
+        df.filter(finite_vectors(vec_col))
+        .select(F.col(id_col).alias(i), _as_double(vec_col).alias(v))
+        .withColumn(n, _norm(F.col(v)))
+        .filter(F.col(n) > 0)
+    )
+
+
+def _cosine(va: str, vb: str, na: str, nb: str) -> Column:
+    """Exact cosine of two scorable rows, rounded to 6dp — the one
+    score every operator here emits (HOF fold in array order, so it is
+    bit-identical to the DuckDB oracles' sequential list_sum)."""
+    return F.round(_dot(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _cosine_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    cells: tuple[Callable[[Column], Column], Callable[[Column], Column]] | None,
+) -> DataFrame:
+    """The two steps every cosine top-k operator shares: generate
+    candidates, then score them exactly and keep each query's k best
+    → (query_id, neighbor_id, cosine, rank), self-matches excluded.
+
+    ``cells=None`` makes every other corpus vector a candidate (the
+    exact operator). Otherwise ``cells = (corpus_cells, query_cells)``
+    map a double vector to its array of index-cell keys; a corpus
+    vector is a candidate of a query iff they share a cell.
+
+    Scale: queries broadcast (small side), corpus streams — a map-only
+    stage plus the per-query top-k window (WindowGroupLimit pushes the
+    k-filter below the shuffle)."""
+    q = _scorable(queries, id_col, vec_col, ("query_id", "qv", "qn"))
+    c = _scorable(embeddings, id_col, vec_col, ("neighbor_id", "cv", "cn"))
+    if cells is None:
+        pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+    else:
+        corpus_cells, query_cells = cells
+        q = q.withColumn("__cell", F.explode(query_cells(F.col("qv"))))
+        c = c.withColumn("__cell", F.explode(corpus_cells(F.col("cv"))))
+        pairs = (
+            c.join(F.broadcast(q), ["__cell"])
+            .filter(F.col("neighbor_id") != F.col("query_id"))
+            # a candidate can surface from several tables/probes/lists
+            .dropDuplicates(["query_id", "neighbor_id"])
+        )
+    scored = pairs.withColumn("cosine", _cosine("qv", "cv", "qn", "cn"))
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("cosine"), F.asc("neighbor_id")], k
+    ).select("query_id", "neighbor_id", "cosine", "rank")
+
+
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k of ``embeddings`` for each row of ``queries``
-    → (query_id, neighbor_id, cosine, rank). Self-matches excluded.
-
-    Scale: queries broadcast (small side), corpus streams — a map-only
-    stage plus the per-query top-k window (WindowGroupLimit pushes the
-    k-filter below the shuffle)."""
-    # quarantine = finite-elements predicate + a filter on the norm
-    # ALREADY computed for scoring (not valid_vectors, which would
-    # recompute the O(d) norm a second time per row — r11 extremes
-    # sweep; same exclusion semantics)
-    q = (
-        queries.filter(finite_vectors(vec_col))
-        .select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv"))
-        .withColumn("qn", _norm(F.col("qv")))
-        .filter(F.col("qn") > 0)
-    )
-    c = (
-        embeddings.filter(finite_vectors(vec_col))
-        .select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv"))
-        .withColumn("cn", _norm(F.col("cv")))
-        .filter(F.col("cn") > 0)
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to))
-    )
-    return top_k_per_group(
-        scored, ["query_id"], [F.desc("cosine"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "cosine", "rank")
+    → (query_id, neighbor_id, cosine, rank). Self-matches excluded;
+    the baseline and the verifier of the approximate operators."""
+    return _cosine_topk(embeddings, queries, k, id_col, vec_col, None)
 
 
-# Degenerate-bucket guards for _bucketed_dup_pairs (round-7 verdict:
+# Degenerate-bucket guards for _bucket_candidates (round-7 verdict:
 # a single giant near-dup cluster is the EXPECTED adversarial input of
 # a dedup operator at 100 TB — the uncapped per-bucket k×k similarity
 # matrix and the unconditional candidate broadcast both OOM on it).
@@ -133,46 +179,71 @@ def embedding_dup_pairs(
     so precision is exact and only recall is approximate (asserted vs
     the exact baseline in tests).
 
-    The scale path's candidate→verify tail is :func:`_bucketed_dup_pairs`
-    (BLAS per-bucket candidate matmul, int-only dedup exchange,
-    HOF-exact re-verify) — shared with the IVF algebra."""
-    base = (
-        embeddings.filter(finite_vectors(vec_col))
-        .select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .withColumn("n", _norm(F.col("v")))
-        .filter(F.col("n") > 0)
+    The scale path's candidates come from :func:`_bucket_candidates`
+    (BLAS per-bucket candidate matmul, int-only dedup exchange) —
+    shared with the IVF algebra."""
+    cells = None if exact else (
+        lambda v: _table_buckets(v, n_planes, dim, n_tables, multiprobe=False)
     )
-    if exact:
-        a = base.select(
-            F.col(id_col).alias("a_id"), F.col("v").alias("va"), F.col("n").alias("na")
-        )
-        b = base.select(
-            F.col(id_col).alias("b_id"), F.col("v").alias("vb"), F.col("n").alias("nb")
-        )
-        pairs = a.join(b, F.col("a_id") < F.col("b_id"))
-        return (
-            pairs.withColumn(
-                "cosine",
-                F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-            )
-            .filter(F.col("cosine") >= threshold)
-            .select("a_id", "b_id", "cosine")
-        )
-    cells = base.withColumn(
-        "__cell", F.explode(_table_buckets("v", n_planes, dim, n_tables, multiprobe=False))
-    )
-    return _bucketed_dup_pairs(base, cells, threshold, id_col, bucket_cap)
+    return _dup_pairs(embeddings, threshold, id_col, vec_col, cells, bucket_cap)
 
 
-def _bucketed_dup_pairs(
-    base: DataFrame,
-    cells: DataFrame,
+def _dup_pairs(
+    embeddings: DataFrame,
     threshold: float,
     id_col: str,
-    bucket_cap: int = _DUP_BUCKET_CAP,
+    vec_col: str,
+    cells: Callable[[Column], Column] | None,
+    bucket_cap: int,
 ) -> DataFrame:
-    """Shared candidate→verify tail of the bucketed near-dup algebras
-    (multi-table LSH and IVF): BLAS generates, Spark SQL verifies.
+    """The one candidate→verify body of the near-dup operators →
+    (a_id, b_id, cosine), a_id < b_id, cosine ≥ ``threshold``.
+
+    ``cells=None`` makes every pair a candidate (the exact baseline).
+    Otherwise ``cells`` maps a double vector to its array of bucket
+    keys, and :func:`_bucket_candidates` proposes the pairs that share
+    a bucket.
+
+    VERIFY — candidates are re-scored with the HOF cosine and
+    re-thresholded, so the emitted cosine is bit-identical to the exact
+    baseline (the equivalence audits compare 6dp-rounded values; BLAS
+    scores must not leak into the output). The rejoin deliberately
+    carries NO broadcast hint: AQE promotes the pair set to a broadcast
+    join at runtime when it is small (the normal case — the vector
+    table then streams without shuffling) and keeps a shuffle join when
+    a dup-heavy corpus makes the candidate set too large to broadcast —
+    the round-7 unconditional ``F.broadcast(cand)`` OOMed exactly
+    there."""
+    base = _scorable(embeddings, id_col, vec_col, ("__id", "v", "n"))
+    a = base.select(
+        F.col("__id").alias("a_id"), F.col("v").alias("va"), F.col("n").alias("na")
+    )
+    b = base.select(
+        F.col("__id").alias("b_id"), F.col("v").alias("vb"), F.col("n").alias("nb")
+    )
+    if cells is None:
+        pairs = a.join(b, F.col("a_id") < F.col("b_id"))
+    else:
+        cand = _bucket_candidates(
+            base.withColumn("__cell", F.explode(cells(F.col("v")))),
+            threshold,
+            bucket_cap,
+        )
+        pairs = b.join(a.join(cand, "a_id"), "b_id")
+    return (
+        pairs.withColumn("cosine", _cosine("va", "vb", "na", "nb"))
+        .filter(F.col("cosine") >= threshold)
+        .select("a_id", "b_id", "cosine")
+    )
+
+
+def _bucket_candidates(
+    cells: DataFrame, threshold: float, bucket_cap: int
+) -> DataFrame:
+    """Candidate pairs (a_id, b_id) of the bucketed near-dup algebras
+    (multi-table LSH and IVF) from ``cells`` — one (__id, v, __cell)
+    row per bucket a vector lies in. BLAS generates, :func:`_dup_pairs`
+    verifies.
 
     * CANDIDATES — ``applyInPandas`` per bucket: normalized matmul per
       co-residence group emits the upper-triangle pairs at
@@ -195,18 +266,7 @@ def _bucketed_dup_pairs(
       matrix — is the peak allocation. Buckets under the cap take the
       c = 1 path, which is byte-identical to the unsplit algebra.
     * DEDUP — cross-bucket duplicates collapse on (a_id, b_id) ints
-      only; no vector ever crosses this exchange.
-    * VERIFY — survivors (few, by selectivity) are re-scored with the
-      SAME HOF expression as ``exact=True`` and re-thresholded, so the
-      emitted cosine is bit-identical to the exact baseline (the
-      equivalence audits compare 6dp-rounded values; BLAS scores must
-      not leak into the output). The rejoin deliberately carries NO
-      broadcast hint: AQE promotes the pair set to a broadcast join at
-      runtime when it is small (the normal case — the vector table
-      then streams without shuffling) and keeps a shuffle join when a
-      dup-heavy corpus makes the candidate set too large to broadcast
-      — the round-7 unconditional ``F.broadcast(cand)`` OOMed exactly
-      there."""
+      only; no vector ever crosses this exchange."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -228,7 +288,7 @@ def _bucketed_dup_pairs(
         )
     )
     tagged = (
-        cells.select(F.col(id_col).alias("__id"), "v", "__cell")
+        cells.select("__id", "v", "__cell")
         .join(chunk_counts, "__cell")
         .withColumn(
             "__chunk", F.pmod(F.xxhash64("__id"), F.col("__c")).cast("int")
@@ -288,7 +348,7 @@ def _bucketed_dup_pairs(
             }
         ).astype("int64")
 
-    cand = (
+    return (
         # prune __c/__pq before the group exchange: the shuffled rows
         # carry exactly (cell, p, q, id, chunk, vector)
         tagged.select(
@@ -306,24 +366,6 @@ def _bucketed_dup_pairs(
         ]))
         .dropDuplicates(["a_id", "b_id"])
     )
-    a = base.select(
-        F.col(id_col).alias("a_id"), F.col("v").alias("va"),
-        F.col("n").alias("na"),
-    )
-    b = base.select(
-        F.col(id_col).alias("b_id"), F.col("v").alias("vb"),
-        F.col("n").alias("nb"),
-    )
-    half = a.join(cand, "a_id")
-    return (
-        b.join(half, "b_id")
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("a_id", "b_id", "cosine")
-    )
 
 
 def embedding_dup_pairs_ivf(
@@ -333,7 +375,6 @@ def embedding_dup_pairs_ivf(
     vec_col: str = "embedding",
     n_lists: int = 8,
     assign: int = 3,
-    centroids: list[list[float]] | None = None,
     bucket_cap: int = _DUP_BUCKET_CAP,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via an IVF (coarse-quantizer)
@@ -357,20 +398,12 @@ def embedding_dup_pairs_ivf(
     hyperplanes split clusters in half), and the same centroid matrix
     serves the IVF ANN index (``ivf_cosine_topk``) — one trained
     structure, two operators. Grow ``n_lists`` ∝ √n to hold cell sizes
-    flat; pass precomputed ``centroids`` to skip training (train once
-    offline on a sample at 100 TB)."""
-    if centroids is None:
-        centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
-    base = (
-        embeddings.filter(finite_vectors(vec_col))
-        .select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .withColumn("n", _norm(F.col("v")))
-        .filter(F.col("n") > 0)
+    flat."""
+    centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
+    return _dup_pairs(
+        embeddings, threshold, id_col, vec_col,
+        lambda v: _ivf_cells(v, centroids, assign), bucket_cap,
     )
-    cells = base.withColumn(
-        "__cell", F.explode(_ivf_cells("v", centroids, assign))
-    )
-    return _bucketed_dup_pairs(base, cells, threshold, id_col, bucket_cap)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -382,31 +415,12 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    dim: int = 64,
-    seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Sign-pattern bucket id: bit j = (v · plane_j) > 0. Pure JVM
-    expressions over a literal plane matrix (broadcast with the plan)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    v = _as_double(vec_col)
-    bucket = F.lit(0).cast("long")
-    for j, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(_dot(v, plane) > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long")
-        bucket = bucket + bit
-    return df.withColumn(out_col, bucket)
-
-
 def _table_buckets(
-    vec_col: str, n_planes: int, dim: int, n_tables: int, multiprobe: bool
+    vecs: Column, n_planes: int, dim: int, n_tables: int, multiprobe: bool
 ) -> Column:
     """array<long> of cell keys ``(table << 32) | bucket`` — every
-    (table, bucket) cell a vector belongs to. Each table t uses an
+    (table, bucket) cell a (double) vector of ``vecs`` belongs to.
+    Each table t uses an
     independent hyperplane set (seed 42+t, identical to
     :func:`_hyperplanes`). With ``multiprobe`` the hamming-1 buckets of
     each table are included too (query-side probing).
@@ -446,7 +460,7 @@ def _table_buckets(
             probes = base
         return pd.Series(list(probes.tolist()))
 
-    return cells(_as_double(vec_col))
+    return cells(vecs)
 
 
 def train_ivf_centroids(
@@ -508,10 +522,12 @@ def train_ivf_centroids(
     return [list(map(float, c)) for c in model.clusterCenters()]
 
 
-def _ivf_cells(vec_col: str, centroids: list[list[float]], nprobe: int) -> Column:
+def _ivf_cells(
+    vecs: Column | str, centroids: list[list[float]], nprobe: int
+) -> Column:
     """array<int> of the ``nprobe`` centroid ids nearest (by cosine) to
-    each vector — posting-list key(s). Arrow-vectorized pandas UDF: one
-    (batch × dim) @ (dim × k) matmul per batch, same rationale as
+    each of the ``vecs`` — posting-list key(s). Arrow-vectorized pandas
+    UDF: one (batch × dim) @ (dim × k) matmul per batch, same rationale as
     :func:`_table_buckets` (k·dim literals would bloat the plan and
     per-element codegen loses to BLAS at dim 64)."""
     import numpy as np
@@ -534,7 +550,7 @@ def _ivf_cells(vec_col: str, centroids: list[list[float]], nprobe: int) -> Colum
             )
         return pd.Series(list(order[:, :nprobe].astype("int32").tolist()))
 
-    return cells(_as_double(vec_col))
+    return cells(vecs)
 
 
 def ivf_cosine_topk(
@@ -546,7 +562,6 @@ def ivf_cosine_topk(
     n_lists: int = 16,
     nprobe: int = 6,
     assign: int = 2,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index — the
     partition-pruning counterpart of :func:`lsh_cosine_topk`: a coarse
@@ -567,14 +582,8 @@ def ivf_cosine_topk(
     corpus *written* partitioned/bucketed by cell id
     (``partitionBy(cell)``), probing becomes partition pruning — only
     nprobe/n_lists of the files are read at all, which is the property
-    that matters at 100 TB. Grow n_lists ∝ √n to hold list sizes flat.
-
-    Pass a precomputed ``centroids`` matrix to skip training (the
-    production flow: train once offline, reuse per query batch)."""
-    embeddings = embeddings.filter(valid_vectors(vec_col))
-    queries = queries.filter(valid_vectors(vec_col))
-    if centroids is None:
-        centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
+    that matters at 100 TB. Grow n_lists ∝ √n to hold list sizes flat."""
+    centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
     if not centroids:
         # empty (or fully-quarantined) corpus trains zero centroids:
         # no posting lists, no neighbors — empty-in/empty-out with the
@@ -585,36 +594,13 @@ def ivf_cosine_topk(
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
         )
-    eb = embeddings.withColumn("__cell", F.explode(_ivf_cells(vec_col, centroids, assign)))
-    qb = queries.withColumn("__cell", F.explode(_ivf_cells(vec_col, centroids, nprobe)))
-    q = (
-        qb.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("qv"),
-            F.col("__cell"),
-        )
-        .withColumn("qn", _norm(F.col("qv")))
-        .filter(F.col("qn") > 0)
+    return _cosine_topk(
+        embeddings, queries, k, id_col, vec_col,
+        (
+            lambda v: _ivf_cells(v, centroids, assign),
+            lambda v: _ivf_cells(v, centroids, nprobe),
+        ),
     )
-    c = (
-        eb.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("cv"),
-            F.col("__cell"),
-        )
-        .withColumn("cn", _norm(F.col("cv")))
-        .filter(F.col("cn") > 0)
-    )
-    scored = (
-        c.join(F.broadcast(q), ["__cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        # assign×nprobe cells can surface the same candidate twice
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6))
-    )
-    return top_k_per_group(
-        scored, ["query_id"], [F.desc("cosine"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def lsh_cosine_topk(
@@ -641,40 +627,13 @@ def lsh_cosine_topk(
     each query touches L·(1+H) buckets of ~n/2^H vectors, so per-query
     work stays sublinear in n. Tune (H up, L up) together to hold
     recall while shrinking buckets at larger corpus sizes."""
-    eb = embeddings.filter(valid_vectors(vec_col)).withColumn(
-        "__cell", F.explode(_table_buckets(vec_col, n_planes, dim, n_tables, multiprobe=False))
+    return _cosine_topk(
+        embeddings, queries, k, id_col, vec_col,
+        (
+            lambda v: _table_buckets(v, n_planes, dim, n_tables, multiprobe=False),
+            lambda v: _table_buckets(v, n_planes, dim, n_tables, multiprobe),
+        ),
     )
-    qb = queries.filter(valid_vectors(vec_col)).withColumn(
-        "__cell", F.explode(_table_buckets(vec_col, n_planes, dim, n_tables, multiprobe))
-    )
-    q = (
-        qb.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("qv"),
-            F.col("__cell"),
-        )
-        .withColumn("qn", _norm(F.col("qv")))
-        .filter(F.col("qn") > 0)
-    )
-    c = (
-        eb.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("cv"),
-            F.col("__cell"),
-        )
-        .withColumn("cn", _norm(F.col("cv")))
-        .filter(F.col("cn") > 0)
-    )
-    scored = (
-        c.join(F.broadcast(q), ["__cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        # a candidate can surface from several tables/probes → one copy
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cosine", F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6))
-    )
-    return top_k_per_group(
-        scored, ["query_id"], [F.desc("cosine"), F.asc("neighbor_id")], k
-    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def quantize_audit(
@@ -729,14 +688,16 @@ def pq_audit(
     train_n: int = 256,
 ) -> DataFrame:
     """Product quantization (Jégou et al., PAMI 2011) with an
-    engine-verified distortion audit: the 64-dim space splits into
-    ``m`` subspaces, each quantized by its own ``k``-centroid
-    codebook, compressing a vector to ``m`` byte codes (32× here).
+    engine-verified distortion audit: the ``dim``-wide vector space
+    splits into ``m`` subspaces, each quantized by its own
+    ``k``-centroid codebook, compressing a vector to ``m`` byte codes
+    (32× at 64 dims).
 
-    Codebooks train DRIVER-SIDE on a BOUNDED DETERMINISTIC sample
-    (first ``train_n`` vectors by id — TakeOrdered, no global sort;
-    the standard practice: FAISS trains PQ on a fixed-size sample
-    regardless of corpus size, since codebook quality saturates).
+    Codebooks train DRIVER-SIDE (:func:`_train_pq_codebooks`) on a
+    BOUNDED DETERMINISTIC sample (first ``train_n`` vectors by id —
+    TakeOrdered, no global sort; the standard practice: FAISS trains
+    PQ on a fixed-size sample regardless of corpus size, since
+    codebook quality saturates).
     Encoding and distortion run DISTRIBUTED over the full corpus in
     one Arrow-batched mapInPandas pass with the m×k×(dim/m) codebook
     matrix shipped in the closure — fixed-size partials, same merge
@@ -766,20 +727,7 @@ def pq_audit(
             " distortion_positive boolean, distortion_below_energy"
             " boolean, codes_in_range boolean",
         )
-    S = np.asarray(sample, dtype=np.float64)
-    books = []
-    for j in range(m):
-        Xj = S[:, j * sub : (j + 1) * sub]
-        cent = Xj[:k].copy()  # deterministic init: first k sample rows
-        for _ in range(10):  # Lloyd
-            d2 = ((Xj[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-            idx = d2.argmin(1)
-            for c in range(k):
-                pts = Xj[idx == c]
-                if len(pts):
-                    cent[c] = pts.mean(0)
-        books.append(cent)
-    cb = np.stack(books)  # m × k × sub
+    cb = _train_pq_codebooks(np.asarray(sample, dtype=np.float64), m, k)
 
     def enc(batches):
         for pdf in batches:
@@ -838,10 +786,10 @@ def pq_audit(
 
 
 def _train_pq_codebooks(sample_matrix, m: int, k: int):
-    """Lloyd-trained per-subspace codebooks over a (numpy) training
-    sample — the shared trainer behind :func:`pq_audit` and
-    :func:`ivfpq_cosine_topk`. Deterministic: init = first k sample
-    rows per subspace, 10 fixed iterations."""
+    """Lloyd-trained per-subspace codebooks (m × k × d/m) over a
+    (numpy) n × d training sample — the one trainer behind
+    :func:`pq_audit` and :func:`ivfpq_cosine_topk`. Deterministic:
+    init = first k sample rows per subspace, 10 fixed iterations."""
     import numpy as np
 
     d = sample_matrix.shape[1]
@@ -873,7 +821,6 @@ def ivfpq_cosine_topk(
     pq_k: int = 16,
     rerank: int = 40,
     train_n: int = 256,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-PQ — the FAISS serving pairing, end to end: the IVF coarse
     quantizer prunes the probe set to ``nprobe`` posting lists, PQ
@@ -896,8 +843,7 @@ def ivfpq_cosine_topk(
 
     embeddings = embeddings.filter(valid_vectors(vec_col))
     queries = queries.filter(valid_vectors(vec_col))
-    if centroids is None:
-        centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
+    centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
     sample = [
         r[vec_col]
         for r in embeddings.select(vec_col, id_col)
@@ -968,12 +914,12 @@ def ivfpq_cosine_topk(
     eb = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         pq_encode(F.col(vec_col)).alias("__codes"),
-        F.explode(_ivf_cells(vec_col, centroids, assign)).alias("__cell"),
+        F.explode(_ivf_cells(_as_double(vec_col), centroids, assign)).alias("__cell"),
     )
     qb = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
-        F.explode(_ivf_cells(vec_col, centroids, nprobe)).alias("__cell"),
+        F.explode(_ivf_cells(_as_double(vec_col), centroids, nprobe)).alias("__cell"),
     )
     cand = (
         qb.join(eb, "__cell")

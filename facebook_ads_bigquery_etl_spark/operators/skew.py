@@ -1,10 +1,9 @@
 """Skew-mitigation helpers.
 
 AQE's skew-join splitting (on by default in session.py) handles most
-skew at runtime by splitting oversized shuffle partitions. These
-helpers cover the cases AQE cannot: aggregation skew (one giant group
-is ONE hash-table entry, not splittable) and joins where the build
-side must be replicated per salt.
+skew at runtime by splitting oversized shuffle partitions. The salted
+join covers a case AQE cannot: a join whose build side must be
+replicated per salt.
 
 No reference artifact (the reference never shuffles); capability
 obligation of the 100 TB posture (SURVEY §7 hard-parts list).
@@ -12,7 +11,7 @@ obligation of the 100 TB posture (SURVEY §7 hard-parts list).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -39,43 +38,6 @@ def salted_join(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
     return salted_l.join(salted_r, [on, "__salt"], how).drop("__salt")
-
-
-def two_phase_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, str],
-    salt: int = 32,
-) -> DataFrame:
-    """Aggregation with a salted pre-phase for hot groups.
-
-    Phase 1 aggregates on (keys + salt) — a hot group becomes ``salt``
-    partial rows computed in parallel; phase 2 merges the partials on
-    the true keys. Only ALGEBRAIC aggregates decompose this way
-    (sum/count/min/max; avg = sum+count merged at the end).
-
-    ``aggs`` maps column → one of sum|count|min|max.
-    """
-    partial_exprs, merge_exprs = [], []
-    for col, fn in aggs.items():
-        p = f"__p_{fn}_{col}"
-        if fn == "sum":
-            partial_exprs.append(F.sum(col).alias(p))
-            merge_exprs.append(F.sum(p).alias(f"{fn}_{col}"))
-        elif fn == "count":
-            partial_exprs.append(F.count(col).alias(p))
-            merge_exprs.append(F.sum(p).alias(f"{fn}_{col}"))
-        elif fn == "min":
-            partial_exprs.append(F.min(col).alias(p))
-            merge_exprs.append(F.min(p).alias(f"{fn}_{col}"))
-        elif fn == "max":
-            partial_exprs.append(F.max(col).alias(p))
-            merge_exprs.append(F.max(p).alias(f"{fn}_{col}"))
-        else:
-            raise ValueError(f"non-algebraic aggregate: {fn}")
-    salted = df.withColumn("__salt", (F.rand(seed=7) * salt).cast("int"))
-    partial = salted.groupBy(*keys, "__salt").agg(*partial_exprs)
-    return partial.groupBy(*keys).agg(*merge_exprs)
 
 
 def explain_has_exchange(df: DataFrame) -> bool:

@@ -880,9 +880,8 @@ def order_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     form uses operators/rank.py:with_global_ntile — range-bucketed
     exact global rank, so the corpus-sized sort runs as many parallel
     per-bucket windows and the plan never contains an ``Exchange
-    SinglePartition`` (forced via ``small_input_rows=0`` so the
-    committed plan IS the 100 TB plan; equality to ``F.ntile`` is
-    pinned in tests/test_operators.py). NULL semantics: quartiles of
+    SinglePartition`` (the committed plan IS the 100 TB plan;
+    equality to ``F.ntile`` is pinned in tests/test_operators.py). NULL semantics: quartiles of
     order VALUE are defined over PRICED orders — a NULL price has no
     rank position, and Spark (NULLS FIRST) and ANSI engines (NULLS
     LAST) disagree on where to park it, so both sides filter it out
@@ -896,7 +895,6 @@ def order_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["o_orderkey"],
         4,
         out_col="quartile",
-        small_input_rows=0,
     )
     return t.groupBy("quartile").agg(
         F.count("*").alias("n_orders"),
@@ -3937,8 +3935,8 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the three quintile scores run over the CUSTOMER-GRAIN frame
     — corpus-sized at 100 TB — so each uses
     operators/rank.py:with_global_ntile (range-bucketed parallel exact
-    ntile; ``small_input_rows=0`` forces the parallel form so the
-    committed plan is free of ``Exchange SinglePartition``). The DESC
+    ntile, so the committed plan is free of ``Exchange
+    SinglePartition``). The DESC
     recency order is expressed as ASC on the negated metric, which
     keeps the (metric DESC, custkey ASC) mixed-direction tie-break of
     the oracle exact. ``base`` is persisted because each score runs
@@ -3969,7 +3967,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             col = "__neg"
             src = base.withColumn("__neg", -F.col(value_col))
         return with_global_ntile(
-            src, col, ["o_custkey"], 5, out_col=out_col, small_input_rows=0
+            src, col, ["o_custkey"], 5, out_col=out_col
         ).select("o_custkey", F.col(out_col).cast("bigint").alias(out_col))
 
     r = score("recency_days", "r_score", negate=True)

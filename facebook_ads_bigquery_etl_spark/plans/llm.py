@@ -3606,8 +3606,8 @@ def perplexity_curriculum_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampler consumes. The quartile split is a global ntile over the
     DOC-GRAIN frame — corpus-sized at 100 TB — so it runs through
     operators/rank.py:with_global_ntile (range-bucketed parallel exact
-    ntile, forced via ``small_input_rows=0`` so the committed plan has
-    no ``Exchange SinglePartition``); ties are doc_id-broken so bucket
+    ntile, so the committed plan has no ``Exchange
+    SinglePartition``); ties are doc_id-broken so bucket
     assignment is deterministic and identical to the window form.
     ``pd_`` is persisted because it derives from FLOAT aggregation
     (avg of log-probs, then round) and the ntile operator runs
@@ -3635,7 +3635,7 @@ def perplexity_curriculum_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.rank import with_global_ntile
 
     bucketed = with_global_ntile(
-        pd_, "ce", ["doc_id"], 4, out_col="bucket", small_input_rows=0
+        pd_, "ce", ["doc_id"], 4, out_col="bucket"
     ).withColumn("bucket", F.col("bucket").cast("bigint"))
     weight = (
         F.when(F.col("bucket") == 1, 2.0)

@@ -124,46 +124,6 @@ def write_day_partitioned(
     return counts["rows"] - counts["rejected"], counts["rejected"]
 
 
-def insert_rows(
-    spark: SparkSession,
-    db: str,
-    table: str,
-    df: DataFrame,
-    partition_field: str = "date",
-    clustering_fields: list[str] | None = None,
-    exactly_once: bool = True,
-) -> str:
-    """Managed-table variant of the reference's ``insert_rows_bq``
-    (main.py:81-91): write into ``db.table``. Returns 'ok' on success
-    for signature parity."""
-    out = df.repartition(partition_field) if partition_field else df
-    if clustering_fields:
-        out = out.sortWithinPartitions(*clustering_fields)
-    full = f"{db}.{table}"
-    if exactly_once and partition_field and spark.catalog.tableExists(full):
-        # dynamic partitionOverwriteMode applies to INSERT OVERWRITE
-        # (insertInto), NOT to saveAsTable — saveAsTable(Overwrite)
-        # drops and recreates the WHOLE managed table, silently
-        # deleting every historical partition on a single-day load
-        # (r13 operator review, executed counterexample: two
-        # consecutive one-day inserts left only the second day).
-        # insertInto is position-based, so columns are reordered to
-        # the table's schema first.
-        cols = spark.table(full).columns
-        out.select(*cols).write.option(
-            "partitionOverwriteMode", "dynamic"
-        ).insertInto(full, overwrite=True)
-        return "ok"
-    mode = "overwrite" if exactly_once else "append"
-    # per-write option, not a session-conf mutation (see
-    # write_day_partitioned)
-    writer = out.write.mode(mode).option("partitionOverwriteMode", "dynamic")
-    if partition_field:
-        writer = writer.partitionBy(partition_field)
-    writer.saveAsTable(full)
-    return "ok"
-
-
 def compact_partitions(
     spark: SparkSession,
     path: str,
@@ -233,6 +193,7 @@ def compact_partitions(
 # A run is homed under its PRIMARY target, the lexicographically first
 # path, so every writer and every recovery picks the same home:
 #
+#   <primary>/_compact/<run>/targets.json      {"tables": [{slot, path}, ...]}
 #   <primary>/_compact/<run>/journal.json      {"state", "tables": [...]}
 #                                              a table: {slot, path, partitions}
 #   <primary>/_compact/<run>/t<i>/data/date=*/ staged output of table i
@@ -247,16 +208,18 @@ def compact_partitions(
 #
 #   1. RECOVERS every target (any run touching them is debris now)
 #   2. BUILDS   its frames, so they read committed, recovered state
-#   3. WRITES   the intent markers, then every table's staged output,
-#               concurrently; live trees are only read
+#   3. WRITES   the run's targets, the intent markers, then every
+#               table's staged output, concurrently; live trees are
+#               only read
 #   4. JOURNALS {"state": "staged", ...} atomically (temp file + rename):
 #               the one commit point for the whole set of tables
 #   5. SWAPS    per partition: live -> trash, staged -> live (renames)
 #   6. COMMITS  journal state -> committed, then deletes the run dir
 #               and its markers
 #
-# A crash before 4 is rolled BACK by recovery: the journal-less run is
-# deleted and no live tree was touched. A crash after 4 is rolled
+# A crash before 4 is rolled BACK by recovery: the journal-less run and
+# the intent markers its targets name are deleted; no live tree was
+# touched. A crash after 4 is rolled
 # FORWARD from the journal: each partition is in one of three states
 # (not yet swapped / live missing mid-swap / swapped), told apart by
 # which of staged, live and trash exist, so recovery is idempotent.
@@ -946,6 +909,8 @@ def _publish(
         run = uuid.uuid4().hex[:12]
         run_dir = ops.join(ops.join(primary, "_compact"), run)
         tables = [{"slot": f"t{i}", "path": p} for i, p in enumerate(paths)]
+        ops.mkdirs(run_dir)
+        ops.write_json_atomic(ops.join(run_dir, "targets.json"), {"tables": tables})
         for p in paths:
             if p != primary:  # the lease already made <p>/_compact
                 ops.write_json_atomic(
@@ -1126,7 +1091,8 @@ def recover(
     (protocol above): first the runs homed elsewhere that its intent
     markers name, then the runs homed under it.
 
-    A journal-less run is rolled BACK (deleted); a staged journal is
+    A journal-less run is rolled BACK (deleted, with the intent
+    markers under the other tables it targets); a staged journal is
     rolled FORWARD under the lease of every table it names, or, while
     some of those leases are live, finished only for the others
     (``partial``: the journal stays staged for a later recovery); a
@@ -1181,7 +1147,7 @@ def _recover_home(
     for run_dir in runs:
         journal = _read_journal(run_dir, ops)
         if journal is None:
-            ops.rmtree(run_dir)
+            _discard(run_dir, _run_targets(run_dir, ops), ops)
             out["rolled_back"] += 1
         elif journal["state"] == "committed":
             _discard(run_dir, journal["tables"], ops)
@@ -1203,6 +1169,20 @@ def _recover_home(
                         _swap_table(run_dir, t, ops)
                 out["partial"] += 1
     ops.rmdir_if_empty(root)
+
+
+def _run_targets(run_dir: str, ops) -> "list[dict]":
+    """The tables a journal-less run targets, from its ``targets.json``;
+    none when the run has no such file (a racing peer removed the run,
+    or it predates the file). Markers left without a run are removed
+    when their table is recovered."""
+    path = ops.join(run_dir, "targets.json")
+    try:
+        return ops.read_json(path)["tables"]
+    except Exception:
+        if ops.exists(path):
+            raise
+        return []
 
 
 def _read_journal(run_dir: str, ops) -> "dict | None":

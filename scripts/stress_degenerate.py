@@ -1,5 +1,6 @@
 """Degenerate-bucket stress probe for the bucketed near-dup algebras
-(round-8: the round-7 verdict's watch item on `_bucketed_dup_pairs`).
+(round-8: the round-7 verdict's watch item on the bucketed candidate tail,
+now `operators/similarity._bucket_candidates`).
 
 The adversarial input a dedup operator MUST survive at 100 TB is a
 corpus dominated by ONE giant near-dup cluster: every member lands in

@@ -1,6 +1,6 @@
 """ETL pipeline + catalog tests (SURVEY §5.2-5.3): dispatch routing
 incl. the backfill-date path the reference crashes on, currency error
-envelopes, idempotent DDL, and exactly-once sink re-runs.
+envelopes, and exactly-once sink re-runs.
 """
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import os
 
 import pytest
 
-from facebook_ads_bigquery_etl_spark.catalog import ensure_table, table_exists
 from facebook_ads_bigquery_etl_spark.etl.currency import (
     CurrencyApiError,
     parse_currency_response,
@@ -109,20 +108,6 @@ class TestFacebookPipeline:
                 .select("campaign_id").collect()
             ]
             assert ids == sorted(ids)
-
-
-class TestCatalogDDL:
-    def test_ensure_table_is_idempotent(self, spark):
-        assert ensure_table(
-            spark, "t_db", "fb_stat", SCHEMA_FACEBOOK_STAT,
-            partition_field="date", clustering_fields=["campaign_id", "campaign_name"],
-        ) == "ok"
-        # second call: no-op, still 'ok' (reference main.py:44-78 semantics)
-        assert ensure_table(
-            spark, "t_db", "fb_stat", SCHEMA_FACEBOOK_STAT, partition_field="date"
-        ) == "ok"
-        assert table_exists(spark, "t_db", "fb_stat")
-        assert not table_exists(spark, "t_db", "nope")
 
 
 class TestEndToEndRunner:

@@ -34,7 +34,7 @@ def emb(spark):
 
 class TestMinHashQuality:
     def test_precision_is_exact_by_construction(self, spark, docs):
-        """verify=True re-checks candidates with true Jaccard, so every
+        """The exact verify re-checks candidates with true Jaccard, so every
         emitted pair must genuinely clear the threshold."""
         got = dd.minhash_dup_pairs(docs, threshold=0.7, ngram=3).collect()
         exact = {
@@ -52,12 +52,6 @@ class TestMinHashQuality:
         exact = {(r["a_id"], r["b_id"]) for r in dd.jaccard_pairs(docs, 0.7, ngram=3).collect()}
         mh = {(r["a_id"], r["b_id"]) for r in dd.minhash_dup_pairs(docs, 0.7).collect()}
         assert len(mh & exact) / len(exact) >= 0.9
-
-    def test_unverified_candidates_superset_of_verified(self, spark, docs):
-        cand = {(r["a_id"], r["b_id"]) for r in dd.minhash_dup_pairs(docs, 0.7, verify=False).collect()}
-        ver = {(r["a_id"], r["b_id"]) for r in dd.minhash_dup_pairs(docs, 0.7, verify=True).collect()}
-        assert ver <= cand
-
 
 class TestSimHashQuality:
     def test_pigeonhole_captures_all_hamming3_pairs(self, spark, docs):
@@ -817,50 +811,6 @@ class TestBarrierCacheHygiene:
         # the depth counter unwound: the next call opens a new invocation
         inner(spark, SF_SMOKE)
         assert len(mat.inputs()) == 1
-
-
-class TestPrefixFilterJoin:
-    def test_prefix_join_equals_posting_join(self, spark):
-        """jaccard_pairs_prefix must return EXACTLY jaccard_pairs'
-        result set (prefix filtering is lossless) at both of the
-        parameterizations the query layer uses."""
-        from facebook_ads_bigquery_etl_spark.operators import dedup as dd
-        from tests.conftest import SF_SMOKE
-
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        for t, n in [(0.95, 1), (0.7, 3)]:
-            naive = {
-                (r.a_id, r.b_id, r.jaccard)
-                for r in dd.jaccard_pairs(docs, t, ngram=n).collect()
-            }
-            prefix = {
-                (r.a_id, r.b_id, r.jaccard)
-                for r in dd.jaccard_pairs_prefix(docs, t, ngram=n).collect()
-            }
-            assert naive == prefix, (t, n)
-
-    def test_prefix_join_resolves_replayed_ids_like_posting_join(self, spark):
-        """A replayed id (same key, drifted text) must contribute the
-        UNION of its copies' shingle sets — the r11 identity-grain
-        algebra jaccard_pairs and minhash_dup_pairs already used;
-        without it the prefix variant emitted duplicate (a_id, b_id)
-        rows with conflicting jaccard values (r13 operator review)."""
-        from facebook_ads_bigquery_etl_spark.operators import dedup as dd
-        from tests.conftest import SF_SMOKE
-
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(60)
-        replay = docs.filter(F.col("doc_id") % 20 == 7).withColumn(
-            "text", F.concat(F.col("text"), F.lit(" replay"))
-        )
-        dup = docs.unionByName(replay)
-        naive = {
-            (r.a_id, r.b_id, r.jaccard)
-            for r in dd.jaccard_pairs(dup, 0.7, ngram=3).collect()
-        }
-        rows = dd.jaccard_pairs_prefix(dup, 0.7, ngram=3).collect()
-        prefix = {(r.a_id, r.b_id, r.jaccard) for r in rows}
-        assert len(rows) == len(prefix)  # one row per pair, no dups
-        assert naive == prefix
 
 
 class TestKeepBestScalePath:

@@ -73,17 +73,3 @@ def test_null_text_gets_null_fingerprint(spark):
             for r in with_fingerprint(df).collect()}
     assert rows[2] is None and rows[4] is None
     assert rows[1] == rows[3] and rows[1] is not None
-
-
-def test_exact_dedup_passes_null_texts_through(spark):
-    """NULL-text rows are not duplicates of each other: exact_dedup
-    must keep every one (they share no fingerprint), while real dup
-    groups still collapse to the min id."""
-    from facebook_ads_bigquery_etl_spark.operators.dedup import exact_dedup
-
-    df = spark.createDataFrame(
-        [(1, "alpha"), (2, None), (3, "alpha"), (4, None), (5, "beta")],
-        "doc_id long, text string",
-    )
-    kept = sorted(r["doc_id"] for r in exact_dedup(df).collect())
-    assert kept == [1, 2, 4, 5]

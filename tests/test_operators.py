@@ -16,7 +16,6 @@ from pyspark.sql import types as T
 from facebook_ads_bigquery_etl_spark.operators.asof import asof_join
 from facebook_ads_bigquery_etl_spark.operators.casting import (
     apply_schema,
-    enforce_required,
     split_required_violations,
 )
 from facebook_ads_bigquery_etl_spark.operators.normalize import coalesce_repeated
@@ -70,16 +69,6 @@ class TestRequiredEnforcement:
         # x is nullable → row 1 is fine; rows 2 (bad date) and 3 (null n) quarantine
         assert valid.count() == 1 and valid.first()["n"] == 1
         assert quarantined.count() == 2
-
-    def test_enforce_required_fails_fast(self, spark):
-        raw = spark.createDataFrame([("2025-01-01", None, "1.0")], "d string, n string, x string")
-        df = enforce_required(apply_schema(raw, TARGET), TARGET)
-        with pytest.raises(Exception, match="REQUIRED|assert"):
-            df.collect()
-
-    def test_enforce_required_passes_clean_rows(self, spark):
-        raw = spark.createDataFrame([("2025-01-01", "5", None)], "d string, n string, x string")
-        assert enforce_required(apply_schema(raw, TARGET), TARGET).count() == 1
 
 
 class TestCoalesceRepeated:
@@ -1059,7 +1048,9 @@ class TestKnuthBucket:
 class TestGlobalRankWithoutSinglePartition:
     """operators/rank.py: the parallel global-rank/ntile forms must be
     VALUE-IDENTICAL to the single-partition window they replace, and
-    their plans must not contain an Exchange SinglePartition."""
+    their plans must not contain an Exchange SinglePartition. A
+    descending order is ranked as the ascending order of negated
+    columns, the way the registered callers express it."""
 
     def _orders(self, spark, sf="/root/testdata/sf0.01"):
         return spark.read.parquet(f"{sf}/orders.parquet").select(
@@ -1079,10 +1070,11 @@ class TestGlobalRankWithoutSinglePartition:
             r["o_orderkey"]: r["t"]
             for r in df.withColumn("t", F.ntile(k).over(w)).collect()
         }
-        got_df = rank.with_global_ntile(
-            df, "o_totalprice", ["o_orderkey"], k, ascending=ascending,
-            small_input_rows=0,  # force the parallel form
+        sign = 1 if ascending else -1
+        keyed = df.withColumn("__v", sign * F.col("o_totalprice")).withColumn(
+            "__key", sign * F.col("o_orderkey")
         )
+        got_df = rank.with_global_ntile(keyed, "__v", ["__key"], k)
         got = {r["o_orderkey"]: r["tile"] for r in got_df.collect()}
         assert got == want
         assert "SinglePartition" not in got_df._jdf.queryExecution().toString()
@@ -1101,41 +1093,49 @@ class TestGlobalRankWithoutSinglePartition:
         }
         got = {
             r["id"]: r["tile"]
-            for r in rank.with_global_ntile(
-                df, "v", ["id"], 4, small_input_rows=0
-            ).collect()
+            for r in rank.with_global_ntile(df, "v", ["id"], 4).collect()
         }
         assert got == want
         # fewer rows than tiles: rank IS the tile (Spark semantics)
         tiny = spark.createDataFrame([(1, 5.0), (2, 1.0)], "id long, v double")
         got_tiny = {
             r["id"]: r["tile"]
-            for r in rank.with_global_ntile(
-                tiny, "v", ["id"], 4, small_input_rows=0
-            ).collect()
+            for r in rank.with_global_ntile(tiny, "v", ["id"], 4).collect()
         }
         assert got_tiny == {2: 1, 1: 2}
 
-    def test_small_inputs_dispatch_to_the_window_form(self, spark):
+    @pytest.mark.parametrize(
+        "rows",
+        [[], [(1, 2.0)], [(i, 7.0) for i in range(9)]],
+        ids=["empty", "one_row", "all_tied"],
+    )
+    def test_small_inputs_match_window_form(self, spark, rows):
+        """Inputs far below any parallelism threshold take the same
+        bucketed path as corpus-sized ones and still equal F.ntile
+        (heavy ties and k > rows: test_heavy_ties_and_tiny_inputs)."""
+        from pyspark.sql import Window as W
+
         from facebook_ads_bigquery_etl_spark.operators import rank
 
-        df = self._orders(spark)
-        small = rank.with_global_ntile(df, "o_totalprice", ["o_orderkey"], 4)
-        plan = small._jdf.queryExecution().toString()
-        assert "ntile(4)" in plan  # one window job, no bucket machinery
-        forced = rank.with_global_ntile(
-            df, "o_totalprice", ["o_orderkey"], 4, small_input_rows=0
-        )
-        assert {r["tile"] for r in forced.collect()} == {
-            r["tile"] for r in small.collect()
+        df = spark.createDataFrame(rows, "id long, v double")
+        w = W.orderBy(F.asc("v"), F.asc("id"))
+        want = {
+            r["id"]: r["t"]
+            for r in df.withColumn("t", F.ntile(4).over(w)).collect()
         }
+        got_df = rank.with_global_ntile(df, "v", ["id"], 4)
+        got = {r["id"]: r["tile"] for r in got_df.collect()}
+        assert got == want
+        assert "tile" in got_df.columns
 
     def test_global_rank_is_exact_and_total(self, spark):
         from facebook_ads_bigquery_etl_spark.operators import rank
 
         df = self._orders(spark)
         n = df.count()
-        ranked = rank.with_global_rank(df, "o_totalprice", ["o_orderkey"])
+        ranked = rank._global_rank(
+            df, "o_totalprice", ["o_orderkey"], "global_rank"
+        )[0]
         rs = ranked.select("global_rank").collect()
         assert sorted(r["global_rank"] for r in rs) == list(range(1, n + 1))
 
@@ -1166,7 +1166,10 @@ class TestGlobalRankWithoutSinglePartition:
             for r in df.withColumn("cum", F.sum("rev").over(w)).collect()
         }
         got_df = rank.with_global_cumsum(
-            df, "rev", "rev", ["o_custkey"], out_col="cum", ascending=False
+            df.withColumn("__neg_rev", -F.col("rev")).withColumn(
+                "__neg_key", -F.col("o_custkey")
+            ),
+            "rev", "__neg_rev", ["__neg_key"], out_col="cum",
         )
         got = {r["o_custkey"]: r["cum"] for r in got_df.collect()}
         assert got == want
@@ -1208,48 +1211,19 @@ class TestGlobalRankWithoutSinglePartition:
         ).collect()
         assert [(r["id"], r["cum"]) for r in rows] == [(1, 5)]
 
-    def test_persist_flag_pins_input_and_ranks_stay_exact(self, spark):
-        """persist=True (advisor r8: non-re-read-stable sources) must
-        pin the input across the operator's three actions and produce
-        the same exact total ranking."""
-        from facebook_ads_bigquery_etl_spark.operators import rank
-
-        df = self._orders(spark)
-        n = df.count()
-        ranked = rank.with_global_rank(
-            df, "o_totalprice", ["o_orderkey"], persist=True
-        )
-        try:
-            rs = ranked.select("global_rank").collect()
-            assert sorted(r["global_rank"] for r in rs) == list(
-                range(1, n + 1)
-            )
-            # the plan reads the pinned copy, not the live source
-            assert "InMemoryTableScan" in (
-                ranked._jdf.queryExecution().toString()
-            )
-        finally:
-            spark.catalog.clearCache()
-
     def test_missing_bucket_offset_raises_not_null(self, spark):
         """The broadcast offset map covers every bucket seen at count
         time; a bucket the map lacks must RAISE at runtime (advisor r8:
         never silently emit null ranks). Exercised by evaluating the
-        guarded offset expression against an out-of-range bucket id."""
+        operators' guarded offset expression against an out-of-range
+        bucket id."""
+        from facebook_ads_bigquery_etl_spark.operators import rank
+
         df = spark.createDataFrame(
             [(1, 1.0), (2, 2.0)], "id long, v double"
         )
         omap = F.create_map(F.lit(0), F.lit(0))
-        offset = F.element_at(omap, F.col("__bucket"))
-        guarded = F.when(
-            offset.isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit("with_global_rank: bucket absent: "),
-                    F.col("__bucket").cast("string"),
-                )
-            ).cast("long"),
-        ).otherwise(offset)
+        guarded = rank._bucket_offset(omap, "long")
         bad = df.withColumn("__bucket", F.lit(7)).withColumn("o", guarded)
         with pytest.raises(Exception) as ei:
             bad.collect()

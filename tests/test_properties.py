@@ -740,3 +740,43 @@ def test_one_oracle_comparator():
         if pattern.search(line)
     ]
     assert not offenders, offenders
+
+
+def test_every_public_operator_has_a_caller():
+    """Every public top-level ``def`` in operators/ is referenced (a
+    name, an attribute or an import — not a string or a docstring)
+    from code outside tests/: the library, bench.py, perfbench/ or
+    scripts/. An entry point only tests reach is a second copy of
+    behaviour nothing ships; a helper only a test needs lives in that
+    test."""
+    import ast
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    lib_root = pathlib.Path(lib.__file__).parent
+    sources = [
+        *lib_root.rglob("*.py"),
+        repo / "bench.py",
+        *(repo / "perfbench").rglob("*.py"),
+        *(repo / "scripts").rglob("*.py"),
+    ]
+    used = set()
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+    offenders = [
+        f"{path.name}:{node.name}"
+        for path in sorted((lib_root / "operators").glob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        and not node.name.startswith("_")
+        and node.name not in used
+    ]
+    assert not offenders, offenders

@@ -29,28 +29,10 @@ in the session inherits them.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 
-
-@contextmanager
-def _scoped_conf(spark, overrides: dict[str, str]):
-    saved: dict[str, str | None] = {}
-    for k, v in overrides.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
+from ..session import scoped_conf
 
 
 def bloom_pruned_join(
@@ -85,6 +67,6 @@ def ensure_runtime_bloom(df: DataFrame) -> DataFrame:
         # planning a broadcast for this one plan
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    with _scoped_conf(df.sparkSession, overrides):
+    with scoped_conf(df.sparkSession, overrides):
         df._jdf.queryExecution().executedPlan()
     return df

@@ -34,6 +34,7 @@ from ..fixtures import (
 from ..operators.casting import split_required_violations
 from ..operators.integrity import round_double_sql
 from ..schemas import SCHEMA_EXCHANGE_RATE, SCHEMA_FACEBOOK_RAW, SCHEMA_FACEBOOK_STAT
+from ..sources import register_all
 from .registry import register
 
 _REQUIRED_OK = (
@@ -170,16 +171,6 @@ def fb_spend_local(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _register_sources(spark: SparkSession) -> None:
-    from ..sources import register_all
-
-    register_all(spark)
-    try:  # lets pushFilters narrow the (account × day) grid
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # static conf in this session → full range read; same rows
-
-
 @register(
     "fb_connector_ingest",
     oracle=f"""
@@ -195,7 +186,7 @@ def fb_connector_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 end-to-end: facebook_insights DataSource scan (fixture
     transport, date-equality predicate pushed into the API time_range —
     reference main.py:177-180) → cast/quarantine pipeline → rollup."""
-    _register_sources(spark)
+    register_all(spark)
     raw = (
         spark.read.format("facebook_insights")
         .option("transport", "fixture")
@@ -233,7 +224,7 @@ def fb_campaign_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     API contract that metrics are numeric (unparseable fixture values
     are skipped server-side, so no row-level quarantine fires at this
     grain)."""
-    _register_sources(spark)
+    register_all(spark)
     raw = (
         spark.read.format("facebook_insights")
         .option("transport", "fixture")
@@ -283,7 +274,7 @@ def _expected_fx_values_sql(since: str, until: str, currencies: list[str]) -> st
 def fx_connector_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 end-to-end: currencylayer DataSource over a 7-day × 2-pair
     grid (one input partition per day), aggregated per pair."""
-    _register_sources(spark)
+    register_all(spark)
     fx = (
         spark.read.format("currencylayer")
         .option("since", "2025-01-01")

@@ -16,32 +16,57 @@ See scripts/round_sites_classified.json `r13_class_b_decisions`.
 
 from __future__ import annotations
 
+import datetime as dt
+import glob
+import json
+import os
 import re
+import shutil
+import tempfile
+import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window as W
 
+from .. import sinks
+from ..session import scoped_conf
 from ..streaming import (
-    EVENT_TIME_BOUND_SQL,
     bound_event_time,
-    state_sized_shuffle,
     daily_rollup,
+    dedup_events,
     enrich_with_rates,
     join_event_streams,
+    partial_session_flush,
+    rate_limit_token_bucket,
     read_event_stream,
     sessionize_stream,
     transform_with_state_available,
     user_profile_stateful,
     user_running_totals,
+    write_stream_to_warehouse,
 )
+from ..streaming.pipeline import _event_schema, _start
+from ..operators import casting as cst
 from ..operators import materialize
 from ..operators.exprs import knuth_bucket
+from ..operators.incremental import merge_apply
 from ..operators.integrity import round_double_sql
 from .registry import load_tables, read_parquet, register
 
 
 # How long a drained stream may run before it counts as hung.
 _DRAIN_TIMEOUT_S = 300
+
+# The state store a stream start captures from the session conf.
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+}
 
 
 def _await(q) -> None:
@@ -55,17 +80,31 @@ def _await(q) -> None:
         )
 
 
-def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
-    with state_sized_shuffle(df):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+def _run(df: DataFrame, **start):
+    """Start ``df``'s stream (``streaming.pipeline._start`` takes
+    ``start``) and wait for it within the drain deadline; returns the
+    finished query."""
+    q = _start(df, **start)
     _await(q)
+    return q
+
+
+def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
+    _run(df, name=name, mode=mode)
     return df.sparkSession.table(name)
+
+
+def _progress(q):
+    """``q``'s progress reports as dicts, each paired with its
+    event-time watermark in epoch µs (Spark reports it in ms, UTC)."""
+    for p in q.recentProgress:
+        d = json.loads(p.json)
+        wm = d.get("eventTime", {}).get("watermark")
+        wm_us = int(
+            dt.datetime.fromisoformat(wm.replace("Z", "+00:00")).timestamp()
+            * 1_000_000
+        )
+        yield d, wm_us
 
 
 def _qname(base: str, sf_dir: str) -> str:
@@ -84,12 +123,6 @@ def _staged_louter_src(spark: SparkSession, sf_dir: str) -> str:
     staging and the engine silently computed over yesterday's rows
     (r13 operator review: a phantom (day, type) rollup combo that no
     longer existed in the fixture)."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
     tmp = os.path.join(
         tempfile.gettempdir(),
         "spark_graft_ss_louter_" + _qname("", sf_dir).strip("_"),
@@ -132,6 +165,23 @@ def _staged_louter_src(spark: SparkSession, sf_dir: str) -> str:
     with open(done, "w") as fh:
         fh.write(fp)
     return tmp
+
+
+def _slice_stream(spark: SparkSession, path: str, per_trigger: int = 1) -> DataFrame:
+    """The events stream over the staged slices in ``path`` (see
+    ``_staged_louter_src``), ``per_trigger`` slice files per
+    micro-batch. The session is pinned to UTC first, as
+    ``read_event_stream`` does: most queries on this stream cast ts to
+    a date, and a hostile-TZ session would shift midnight-adjacent
+    events onto the neighbouring day. The pin cannot come from an
+    earlier ``load_tables`` call, since a staging already on disk is
+    reused without one."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return (
+        spark.readStream.schema(_event_schema(T.TimestampType()))
+        .option("maxFilesPerTrigger", per_trigger)
+        .parquet(path)
+    )
 
 
 @register(
@@ -217,8 +267,6 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom arbitrary-state operator (``applyInPandasWithState``):
     the LAST update emitted per user (max_by on the monotonically
     growing event count) must equal the batch per-user totals."""
-    from ..operators import casting as cst
-
     # non-finite values are NULLed at the stream boundary (the state
     # op already treats NULL as 0; a NaN would poison the running sum
     # forever — r11 extremes sweep)
@@ -260,18 +308,8 @@ def stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     transformWithState requires the RocksDB state store; the conf is
     set only for this query's start and restored afterwards (the
     provider is captured when the stream starts)."""
-    rocks = transform_with_state_available()
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    if rocks:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-    try:
-        from ..operators import casting as cst
-
+    rocks = _ROCKSDB if transform_with_state_available() else {}
+    with scoped_conf(spark, rocks):
         # non-finite values NULLed at the stream boundary (r11
         # extremes sweep; see stream_running_totals)
         stream = user_profile_stateful(
@@ -280,14 +318,6 @@ def stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         tbl = _drain(stream, _qname("s_prof", sf_dir), "update")
-    finally:
-        if rocks:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
     return tbl.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.round(F.max_by("total_value", "n_events"), 2).alias("total_value"),
@@ -351,8 +381,6 @@ def stream_fx_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same per-row double product to DECIMAL(18,6) and sum
     # associatively — a double sum's partition-order ulps flipped a
     # .xx5 cent boundary between engines (r11 nulls sweep)
-    from ..operators import casting as cst
-
     # non-finite products are NULLed before the decimal cast (NULL at
     # input convention, r11 extremes sweep) — the sum skips them while
     # n_events still counts the row
@@ -425,8 +453,6 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` on event_id collapses the
     duplicates with watermark-bounded state. The per-day counts must
     equal the clean batch counts — exactly what the oracle computes."""
-    from ..streaming import dedup_events
-
     src = f"{sf_dir}/events.parquet"
     # watermark-poisoning guard (r11 dates sweep)
     doubled = bound_event_time(
@@ -539,6 +565,58 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _purchase_view_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Purchases ⋈ same-user views within ±1 h as a ``how`` stream-stream
+    join over the staged slices, both sides watermarked 30 minutes
+    (columns purchase_id, p_user, p_ts, view_id, v_user, v_ts).
+
+    The stage is built once per SOURCE CONTENT under a deterministic
+    path in the temp dir (the bench re-runs these queries back-to-back;
+    re-staging per run would time the staging, not the join) and is
+    fingerprint-guarded: sweep fixtures are rewritten per run, so a bare
+    _DONE marker CAN go stale — see _staged_louter_src.
+
+    Event time is bounded on the read-back — stage-content-proof (r11
+    dates sweep); the 2099 sentinels stay inside the bound.
+    maxFilesPerTrigger=2 (r14, VERDICT r13 item 3): each micro-batch
+    pays a Spark-fixed ~0.5 s planning/offset-commit gap plus a per-side
+    state-store commit; two time slices per trigger halve the batch
+    count (4 slices + sentinel: 6 batches → 4 incl. the no-data flush)
+    while the watermark still progresses across MULTIPLE batches — state
+    from batch 1 is evicted by batch 2/3's watermark, which is the
+    eviction property the outer joins exist to prove. Their final tables
+    are batch-slicing-invariant (append-mode matches emit when found,
+    non-matches on eviction; the sentinel flushes everything), re-proven
+    against the DuckDB oracle."""
+    src = bound_event_time(_slice_stream(spark, _staged_louter_src(spark, sf_dir), 2))
+    p = (
+        src.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "30 minutes")
+    )
+    v = (
+        src.filter(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user"),
+            F.col("ts").alias("v_ts"),
+        )
+        .withWatermark("v_ts", "30 minutes")
+    )
+    return p.join(
+        v,
+        F.expr(
+            "p_user = v_user AND v_ts >= p_ts - interval 1 hour"
+            " AND v_ts <= p_ts + interval 1 hour"
+        ),
+        how,
+    )
+
+
 @register(
     "stream_stream_left_outer",
     oracle="""
@@ -565,69 +643,13 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows sit in the state store until the watermark passes their join
     window, so correctness depends on watermark propagation across
     MULTIPLE micro-batches. The source is therefore staged as
-    time-sliced files consumed one per trigger (maxFilesPerTrigger=1),
+    time-sliced files consumed two per trigger (``_purchase_view_join``),
     with a far-future sentinel slice whose only job is to push the
     final watermark past every join window (the no-data micro-batch
     then flushes remaining state). On finite input the result must
     equal the batch left join EXACTLY — matches and non-matches both.
     State is O(rate × (watermark + window)) per side at any scale."""
-    import os
-
-    from pyspark.sql import types as T
-
-    from ..streaming.pipeline import _event_schema
-
-    # Staged once per SOURCE CONTENT under a deterministic path in the
-    # temp dir (the bench re-runs this query back-to-back; re-staging
-    # per run would time the staging, not the join). The stage is
-    # fingerprint-guarded: sweep fixtures are rewritten per run, so a
-    # bare _DONE marker CAN go stale — see _staged_louter_src.
-    tmp = _staged_louter_src(spark, sf_dir)
-
-    schema = _event_schema(T.TimestampType())
-    # watermark-poisoning guard on the read-back — stage-content-proof
-    # (r11 dates sweep); the 2099 sentinels stay inside the bound.
-    # maxFilesPerTrigger=2 (r14, VERDICT r13 item 3): each micro-batch
-    # pays a Spark-fixed ~0.5 s planning/offset-commit gap plus a
-    # per-side state-store commit; two time slices per trigger halve
-    # the batch count (4 slices + sentinel: 6 batches → 4 incl. the
-    # no-data flush) while the watermark still progresses across
-    # MULTIPLE batches — state from batch 1 is evicted by batch 2/3's
-    # watermark, which is the eviction property this family exists to
-    # prove. The final table is batch-slicing-invariant (append-mode
-    # matches emit when found, non-matches on eviction; the sentinel
-    # flushes everything), re-proven against the DuckDB oracle.
-    src = bound_event_time(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(tmp)
-    )
-    p = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "30 minutes")
-    )
-    v = (
-        src.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "30 minutes")
-    )
-    joined = p.join(
-        v,
-        F.expr(
-            "p_user = v_user AND v_ts >= p_ts - interval 1 hour"
-            " AND v_ts <= p_ts + interval 1 hour"
-        ),
-        "leftOuter",
-    )
+    joined = _purchase_view_join(spark, sf_dir, "leftOuter")
     # A stream-stream join commits one state store per shuffle
     # partition PER SIDE per micro-batch; _drain sizes the count to the
     # staged source (streaming/pipeline.state_sized_shuffle).
@@ -683,8 +705,6 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
     )
     counts = _drain(st, _qname("s_wtopk", sf_dir), "append")
-    from pyspark.sql.window import Window as W
-
     ranked = counts.select(
         F.col("w.start").cast("date").alias("date"), "event_type", "n_events"
     ).withColumn(
@@ -742,8 +762,6 @@ def stream_rate_limit_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential computation, which is the point: this is the §2.8
     ladder's applyInPandasWithState rung doing something windows
     cannot express)."""
-    from ..streaming import rate_limit_token_bucket
-
     ev = read_event_stream(spark, f"{sf_dir}/events.parquet")
     limited = rate_limit_token_bucket(ev)
     return _drain(limited, _qname("s_ratelimit", sf_dir), "update")
@@ -816,13 +834,6 @@ def stream_atomic_sink_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition with no staging debris. This is the reference's
     daily-cron ingest (README.md:57, main.py:86-89) upgraded to
     exactly-once + crash-safe maintenance, proven as one driver row."""
-    import os
-    import shutil
-    import tempfile
-
-    from .. import sinks
-    from ..streaming import write_stream_to_warehouse
-
     ev = read_event_stream(spark, f"{sf_dir}/events.parquet")
     out = ev.select(
         "event_id", "user_id", "event_type", "value",
@@ -901,52 +912,7 @@ def stream_full_outer_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     user/ts — so they join to each other and drop with the user_id
     filter instead of leaking unmatched sentinel rows). Must equal the
     batch FULL JOIN exactly."""
-    import os
-
-    from pyspark.sql import types as T
-
-    from ..streaming.pipeline import _event_schema
-
-    # fingerprint-guarded shared staging (rebuilds on fixture change)
-    tmp = _staged_louter_src(spark, sf_dir)
-    schema = _event_schema(T.TimestampType())
-    # watermark-poisoning guard on the read-back — stage-content-proof
-    # (r11 dates sweep); the 2099 sentinels stay inside the bound.
-    # maxFilesPerTrigger=2: same per-batch-overhead halving as
-    # stream_stream_left_outer (r14, VERDICT r13 item 3) — see the
-    # rationale there; the full-outer result is equally
-    # batch-slicing-invariant, re-proven against the DuckDB oracle.
-    src = bound_event_time(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(tmp)
-    )
-    p = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "30 minutes")
-    )
-    v = (
-        src.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "30 minutes")
-    )
-    joined = p.join(
-        v,
-        F.expr(
-            "p_user = v_user AND v_ts >= p_ts - interval 1 hour"
-            " AND v_ts <= p_ts + interval 1 hour"
-        ),
-        "fullOuter",
-    )
+    joined = _purchase_view_join(spark, sf_dir, "fullOuter")
     out = _drain(
         joined.select(
             F.coalesce("purchase_id", F.lit(-1)).alias("purchase_id"),
@@ -987,23 +953,8 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension must equal the batch groupBy exactly. Each version is a
     NEW directory (read-version N → write N+1) — never an in-place
     overwrite of the path being read."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from ..operators.incremental import merge_apply
-    from ..streaming.pipeline import _event_schema
-
     # fingerprint-guarded shared staging (rebuilds on fixture change)
-    tmp = _staged_louter_src(spark, sf_dir)
-    schema = _event_schema(T.TimestampType())
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
+    src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     work = tempfile.mkdtemp(prefix="s_dim_merge_")
     state = {"version": -1}
     # DECIMAL(38,0) key: the r11 nulls round rebased the epoch so the
@@ -1063,14 +1014,7 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["version"] += 1
 
     try:
-        with state_sized_shuffle(src):
-            q = (
-                src.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", f"{work}/cp")
-                .trigger(availableNow=True)
-                .start()
-            )
-        _await(q)
+        _run(src, body=apply_batch, checkpoint=f"{work}/cp")
         final = read_parquet(spark, f"{work}/v{state['version']}")
         return spark.createDataFrame(
             [
@@ -1136,20 +1080,8 @@ def watermark_lag_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Spark triggers purely to let the advanced watermark finalize
     state — carries 0. That empty batch appearing in the feed is
     itself the proof that no-data finalization ran."""
-    import json
-    import os
-
-    from pyspark.sql import types as T
-
-    from ..streaming.pipeline import _event_schema
-
     # fingerprint-guarded shared staging (rebuilds on fixture change)
-    tmp = _staged_louter_src(spark, sf_dir)
-    src = (
-        spark.readStream.schema(_event_schema(T.TimestampType()))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
+    src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     # watermark-poisoning guard INSIDE the stream (r11 dates sweep):
     # the watermark tracks bounded rows; numInputRows stays a
     # source-level metric and still counts everything read
@@ -1159,26 +1091,11 @@ def watermark_lag_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day"))
         .count()
     )
-    with state_sized_shuffle(agg):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(_qname("s_wm_obs", sf_dir))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await(q)
-    import datetime as dt
-
-    rows = []
-    for p in q.recentProgress:
-        d = json.loads(p.json) if hasattr(p, "json") else p
-        wm = d.get("eventTime", {}).get("watermark")
-        wm_us = int(
-            dt.datetime.fromisoformat(wm.replace("Z", "+00:00")).timestamp()
-            * 1_000_000
-        )
-        rows.append((int(d["batchId"]), wm_us, int(d["numInputRows"])))
+    q = _run(agg, name=_qname("s_wm_obs", sf_dir))
+    rows = [
+        (int(d["batchId"]), wm_us, int(d["numInputRows"]))
+        for d, wm_us in _progress(q)
+    ]
     return spark.createDataFrame(
         rows, "batch_id long, watermark_us long, n_input_rows long"
     )
@@ -1244,15 +1161,7 @@ def stream_partial_session_eviction(
     oracle reconstructs every emission with gaps-and-islands windows —
     the timeout branch's output, the state removal, and the restart
     are all value-checked, not just row-counted."""
-    import os
-    import shutil
-    import tempfile
-
     import pyarrow.parquet as pq
-
-    from ..streaming import partial_session_flush
-
-    from ..operators import casting as cst
 
     # non-finite values contribute 0, exactly like NULL (r11 extremes
     # sweep)
@@ -1295,8 +1204,6 @@ def stream_partial_session_eviction(
             shutil.rmtree(stage)
             os.utime(dst, (now + 10 * i, now + 10 * i))
 
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=4) as pool:
             futs = [pool.submit(_stage_batch, i) for i in range(4)]
             errs = [f.exception() for f in futs]
@@ -1322,26 +1229,15 @@ def stream_partial_session_eviction(
         # ms-scale, so it is breached by then), and with the state
         # drained every later empty batch emits nothing — stop there.
         # The name is uniquified so a straggling stop never collides.
-        import time as _time
-        import uuid as _uuid
-
-        name = _qname("s_partialsess", sf_dir) + "_" + _uuid.uuid4().hex[:6]
-        flush = partial_session_flush(stream)
-        with state_sized_shuffle(flush):
-            q = (
-                flush.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
+        name = _qname("s_partialsess", sf_dir) + "_" + uuid.uuid4().hex[:6]
+        q = _start(partial_session_flush(stream), name=name, mode="update")
         # An empty source has no flush batch to wait for: its first
         # progress is already the last one with output.
         saw_data = not any(
             pq.read_metadata(os.path.join(src, f)).num_rows
             for f in os.listdir(src)
         )
-        deadline = _time.time() + _DRAIN_TIMEOUT_S
+        deadline = time.time() + _DRAIN_TIMEOUT_S
         while q.isActive:
             lp = q.lastProgress
             if lp is not None:
@@ -1350,12 +1246,12 @@ def stream_partial_session_eviction(
                 elif saw_data:
                     q.stop()
                     break
-            if _time.time() > deadline:
+            if time.time() > deadline:
                 q.stop()
                 raise TimeoutError(
                     f"stream {name} saw no flush batch within {_DRAIN_TIMEOUT_S} s"
                 )
-            _time.sleep(0.05)  # r13: finer poll — the loop only waits
+            time.sleep(0.05)  # r13: finer poll — the loop only waits
             # for the flush batch's progress row; 0.2 s granularity
             # added up to ~0.4 s of pure detection latency per run
         _await(q)
@@ -1414,29 +1310,8 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stream_dimension_merge`` / ``bloom_index_merge_maintenance``
     (delta-merged rollup/index), touching only the partitions each
     batch changes."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .. import sinks
-    from ..streaming.pipeline import _event_schema
-
     # fingerprint-guarded shared staging (rebuilds on fixture change)
-    tmp = _staged_louter_src(spark, sf_dir)
-    # ts → date crosses the session-TZ seam: pin UTC exactly as
-    # read_event_stream / load_tables do, or a hostile-TZ session
-    # shifts midnight-adjacent events onto the neighboring day (the
-    # other staged-source queries never cast to date, so this is the
-    # first one that needs the pin itself).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = _event_schema(T.TimestampType())
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
+    src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     work = tempfile.mkdtemp(prefix="s_twotab_")
     fact_t = f"{work}/fact"
     roll_t = f"{work}/rollup"
@@ -1512,15 +1387,8 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         audit["consistent"] &= torn == 0
 
     try:
-        with state_sized_shuffle(src):
-            q = (
-                src.writeStream.foreachBatch(publish_batch)
-                .option("checkpointLocation", f"{work}/cp")
-                .trigger(availableNow=True)
-                .start()
-            )
-        _await(q)
-        fact_like = spark.createDataFrame([], schema).select(
+        _run(src, body=publish_batch, checkpoint=f"{work}/cp")
+        fact_like = spark.createDataFrame([], src.schema).select(
             "event_id", "user_id", "event_type", "value",
             F.col("ts").cast("date").alias("date"),
         )
@@ -1590,28 +1458,11 @@ def stream_rocksdb_state_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     provider overhead (JNI + serde per state op) stays visible
     per-round. The rocksdbjni jar ships with pyspark — no protobuf
     needed (that gates transformWithState, not the provider)."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, _ROCKSDB):
         stream = daily_rollup(
             read_event_stream(spark, f"{sf_dir}/events.parquet")
         )
         return _drain(stream, _qname("s_rocksroll", sf_dir), "complete")
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
 
 
 @register(
@@ -1659,47 +1510,14 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: state is bounded by watermark retention per (window, type)
     key; the upsert target stays a small dimension. The staged slices
     are shared with the other multi-batch streaming probes."""
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from ..operators.incremental import merge_apply
-    from ..streaming.pipeline import _event_schema
-
-    # self-pin the engine's declared UTC date semantics: this query
-    # casts ts→date and may run first in a fresh hostile-TZ session
-    # with the staging already on disk (so no load_tables call
-    # would pin it).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # fingerprint-guarded shared staging (rebuilds on fixture change)
     staged = _staged_louter_src(spark, sf_dir)
     slice_files = sorted(
-        _glob.glob(os.path.join(staged, "part-*.parquet")),
+        glob.glob(os.path.join(staged, "part-*.parquet")),
         key=os.path.getmtime,
     )
     land = tempfile.mkdtemp(prefix="s_cl_land_")
     work = tempfile.mkdtemp(prefix="s_cl_work_")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    prev_changelog = spark.conf.get(
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-        None,
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-        "true",
-    )
     state = {"version": -1}
 
     def apply_batch(batch_df, batch_id: int) -> None:
@@ -1734,51 +1552,27 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
         # (observed: 110/150 rows, flaky by page-cache luck).
         # stream_partial_session_eviction already spaces its landed
         # files with utime for exactly this reason.
-        import time as _time
-
-        base = _time.time()
+        base = time.time()
         for i, f in enumerate(files):
             dst = os.path.join(land, os.path.basename(f))
             shutil.copy(f, dst)
             os.utime(dst, (base + i, base + i))
-        src = (
-            spark.readStream.schema(_event_schema(T.TimestampType()))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(land)
+        src = bound_event_time(_slice_stream(spark, land))
+        rollup = daily_rollup(src.filter(F.col("user_id") >= 0))
+        q = _run(
+            rollup, body=apply_batch, checkpoint=f"{work}/cp", mode="update"
         )
-        rollup = (
-            bound_event_time(src)
-            .filter(F.col("user_id") >= 0)
-            .withWatermark("ts", "1 day")
-            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
-            .select(
-                F.to_date("w.start").alias("date"), "event_type",
-                "n_events", "total_value",
-            )
-        )
-        with state_sized_shuffle(rollup):
-            q = (
-                rollup.writeStream.foreachBatch(apply_batch)
-                .outputMode("update")
-                .option("checkpointLocation", f"{work}/cp")
-                .trigger(availableNow=True)
-                .start()
-            )
-        _await(q)
-        import json as _json
+        return [p.batchId for p in q.recentProgress]
 
-        return [
-            int(_json.loads(p.json)["batchId"]) for p in q.recentProgress
-        ]
-
+    rocksdb_changelog = {
+        **_ROCKSDB,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
     try:
-        ids1 = run_phase(slice_files[:2])
-        ids2 = run_phase(slice_files[2:])
-        changelogs = _glob.glob(
+        with scoped_conf(spark, rocksdb_changelog):
+            ids1 = run_phase(slice_files[:2])
+            ids2 = run_phase(slice_files[2:])
+        changelogs = glob.glob(
             os.path.join(work, "cp", "state", "**", "*.changelog"),
             recursive=True,
         )
@@ -1801,18 +1595,6 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
             " resumed_from_checkpoint boolean",
         )
     finally:
-        for key, prev in (
-            ("spark.sql.streaming.stateStore.providerClass", prev_provider),
-            (
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                prev_changelog,
-            ),
-        ):
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
         shutil.rmtree(land, ignore_errors=True)
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1904,19 +1686,6 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     candidate and true partition counts exact. Same portable hash as
     the batch bloom rows, so DuckDB reproduces everything; the only
     pinned value is the equality boolean."""
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from ..streaming.pipeline import _event_schema
-
-    # same UTC self-pin rationale as stream_rocksdb_changelog_restart:
-    # ts→date casts must not depend on an earlier query having called
-    # load_tables in this session.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # fingerprint-guarded shared staging (rebuilds on fixture change)
     staged = _staged_louter_src(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="s_bloomidx_")
@@ -1955,20 +1724,8 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         state["rebuild"] += len(state["days_seen"])
 
     try:
-        src = (
-            spark.readStream.schema(_event_schema(T.TimestampType()))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        live = src.filter(F.col("user_id") >= 0)
-        with state_sized_shuffle(live):
-            q = (
-                live.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", f"{work}/cp")
-                .trigger(availableNow=True)
-                .start()
-            )
-        _await(q)
+        live = _slice_stream(spark, staged).filter(F.col("user_id") >= 0)
+        _run(live, body=apply_batch, checkpoint=f"{work}/cp")
         if state["version"] < 0:
             # every batch was empty: no fact dir, no index versions —
             # the ledger is all zeros and the incremental ≡ rebuild
@@ -2115,21 +1872,8 @@ def state_store_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       batch 4 reads 0 input rows yet still runs eviction for slice
       4's watermark — the flush batch, and the proof that state
       cleanup is driven by the watermark, not by data arrival."""
-    import json
-    import os
-
-    from pyspark.sql import types as T
-
-    from ..streaming.pipeline import _event_schema
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # fingerprint-guarded shared staging (rebuilds on fixture change)
-    staged = _staged_louter_src(spark, sf_dir)
-    src = (
-        spark.readStream.schema(_event_schema(T.TimestampType()))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     # watermark-poisoning guard INSIDE the stream (r11 dates sweep):
     # watermark and state track bounded rows; numInputRows stays a
     # source-level metric and still counts everything read
@@ -2140,36 +1884,18 @@ def state_store_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .count()
     )
-    with state_sized_shuffle(agg):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(_qname("s_state_metrics", sf_dir))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    q = _run(agg, name=_qname("s_state_metrics", sf_dir), mode="update")
+    rows = [
+        (
+            int(d["batchId"]),
+            int(d["numInputRows"]),
+            int(d["stateOperators"][0]["numRowsUpdated"]),
+            int(d["stateOperators"][0]["numRowsRemoved"]),
+            int(d["stateOperators"][0]["numRowsTotal"]),
+            wm_us,
         )
-    _await(q)
-    import datetime as dt
-
-    rows = []
-    for p in q.recentProgress:
-        d = json.loads(p.json)
-        so = d["stateOperators"][0]
-        wm = d.get("eventTime", {}).get("watermark")
-        wm_us = int(
-            dt.datetime.fromisoformat(wm.replace("Z", "+00:00")).timestamp()
-            * 1_000_000
-        )
-        rows.append(
-            (
-                int(d["batchId"]),
-                int(d["numInputRows"]),
-                int(so["numRowsUpdated"]),
-                int(so["numRowsRemoved"]),
-                int(so["numRowsTotal"]),
-                wm_us,
-            )
-        )
+        for d, wm_us in _progress(q)
+    ]
     return spark.createDataFrame(
         rows,
         "batch_id long, n_input long, n_updated long, n_removed long,"

@@ -29,6 +29,7 @@ from ..operators.profile import column_profile
 from ..operators.scd import scd2_merge, snapshot_diff
 from ..operators.skew import salted_join
 from ..operators.timeseries import fill_date_gaps
+from ..session import scoped_conf
 from .registry import load_tables, read_parquet, register
 
 
@@ -795,25 +796,24 @@ def bucketed_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
 
     scrub()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        write_bucketed_table(
-            orders.select("o_orderkey", "o_orderpriority"),
-            db, "orders_b", "o_orderkey", 8,
-        )
-        write_bucketed_table(
-            lineitem.select("l_orderkey", "l_extendedprice"),
-            db, "lineitem_b", "l_orderkey", 8, sort_cols=["l_orderkey"],
-        )
-        o, li = spark.table(f"{db}.orders_b"), spark.table(f"{db}.lineitem_b")
-        joined = o.join(li, o.o_orderkey == li.l_orderkey)
-        shuffle_free = not explain_has_exchange(joined)
-        n_bucketed = joined.count()
-        n_plain = orders.join(
-            lineitem, orders.o_orderkey == lineitem.l_orderkey
-        ).count()
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            write_bucketed_table(
+                orders.select("o_orderkey", "o_orderpriority"),
+                db, "orders_b", "o_orderkey", 8,
+            )
+            write_bucketed_table(
+                lineitem.select("l_orderkey", "l_extendedprice"),
+                db, "lineitem_b", "l_orderkey", 8, sort_cols=["l_orderkey"],
+            )
+            o, li = spark.table(f"{db}.orders_b"), spark.table(f"{db}.lineitem_b")
+            joined = o.join(li, o.o_orderkey == li.l_orderkey)
+            shuffle_free = not explain_has_exchange(joined)
+            n_bucketed = joined.count()
+            n_plain = orders.join(
+                lineitem, orders.o_orderkey == lineitem.l_orderkey
+            ).count()
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         scrub()
 
     return (
@@ -2209,30 +2209,6 @@ def retractable_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _with_conf(spark: SparkSession, overrides: dict):
-    """Context manager: set session confs for an eager audit run and
-    restore (or unset) them on exit — audits that flip AQE knobs must
-    never leak tuning into the long-lived session the driver and the
-    test gate share."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def cm():
-        saved = {k: spark.conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    return cm()
-
-
 def _final_plan(df: DataFrame) -> str:
     """The AQE FINAL physical plan text — callers must have executed
     ``df`` (``collect()`` on the same Dataset, not ``first()``, which
@@ -2301,7 +2277,7 @@ def aqe_skew_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         row = j.collect()[0]
         return row, _final_plan(j)
 
-    with _with_conf(
+    with scoped_conf(
         spark,
         {
             "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -2315,7 +2291,7 @@ def aqe_skew_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     ):
         split_row, split_plan = run()
-        with _with_conf(
+        with scoped_conf(
             spark, {"spark.sql.adaptive.skewJoin.enabled": "false"}
         ):
             plain_row, plain_plan = run()
@@ -2406,7 +2382,7 @@ def aqe_broadcast_demotion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         row = j.collect()[0]
         return row, _final_plan(j)
 
-    with _with_conf(
+    with scoped_conf(
         spark,
         {
             "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -2477,7 +2453,7 @@ def aqe_coalesce_partitions_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         rows = j.collect()
         return rows, _final_plan(j), j.rdd.getNumPartitions()
 
-    with _with_conf(
+    with scoped_conf(
         spark,
         {
             # fixed contrast base independent of the caller's session
@@ -2488,7 +2464,7 @@ def aqe_coalesce_partitions_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         },
     ):
         co_rows, co_plan, co_parts = run()
-        with _with_conf(
+        with scoped_conf(
             spark,
             {"spark.sql.adaptive.coalescePartitions.enabled": "false"},
         ):
@@ -2766,7 +2742,7 @@ def join_order_cost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bcast = star()
     bcast_rows = _canon_rows(bcast.collect())
     bcast_plan = _final_plan(bcast)
-    with _with_conf(
+    with scoped_conf(
         spark,
         {
             "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -2814,7 +2790,7 @@ def join_order_cost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         plain_opt = (
             spark.sql(sql)._jdf.queryExecution().optimizedPlan().toString()
         )
-        with _with_conf(
+        with scoped_conf(
             spark,
             {
                 "spark.sql.cbo.enabled": "true",
@@ -3060,14 +3036,14 @@ def stats_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def static_plan() -> str:
-        with _with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
             return (
                 q()._jdf.queryExecution().executedPlan().toString()
             )
 
     scrub()
     try:
-        with _with_conf(
+        with scoped_conf(
             spark, {"spark.sql.autoBroadcastJoinThreshold": "64KB"}
         ):
             tabs["nation"].select("n_nationkey", "n_name").write.mode(

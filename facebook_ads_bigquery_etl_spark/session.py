@@ -23,11 +23,16 @@ defaults below are the ones that matter at 100 TB:
   st_size)`` changed since the last read, relying on an archive's
   stat changing whenever its bytes do; then it runs the next
   ``sitecustomize`` on the path, if any.
+
+A query that needs a different session conf for a while (an audit
+flipping AQE knobs, a stream start pinning its state store) holds it
+through :func:`scoped_conf`, which undoes it on exit.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -84,3 +89,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict[str, str]):
+    """Hold ``overrides`` on ``spark``'s session conf inside this block.
+    On exit, also when the block raises, each key gets back the value
+    it held before, and a key that had none is unset again, so the
+    session's own default applies as before."""
+    saved = {}
+    try:
+        for k, v in overrides.items():
+            prev = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+            saved[k] = prev
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

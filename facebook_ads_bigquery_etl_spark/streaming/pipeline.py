@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import scoped_conf
 from ..sinks import _local_fs_path, spark_lists, write_day_partitioned
 
 # ---------------------------------------------------------------------------
@@ -184,19 +185,33 @@ def state_sized_shuffle(df: DataFrame):
     records it; a restart keeps the recorded count) and is restored on
     exit, so batch plans outside the block are untouched."""
     n = state_partitions(df)
-    if n is None:
+    overrides = {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
+    with scoped_conf(df.sparkSession, overrides):
         yield
-        return
-    conf = df.sparkSession.conf
-    prev = conf.get("spark.sql.shuffle.partitions", None)
-    conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            conf.unset("spark.sql.shuffle.partitions")
-        else:
-            conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _start(
+    df: DataFrame,
+    *,
+    name: str | None = None,
+    mode: str = "append",
+    body=None,
+    checkpoint: str | None = None,
+) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
+    """The one way this engine starts a stream: ``df`` drains what its
+    sources hold now (``trigger(availableNow=True)``) into the memory
+    table ``name``, or through ``body(batch_df, batch_id)`` per
+    micro-batch with its offsets checkpointed at ``checkpoint``, in
+    output ``mode``. State partitions are sized by
+    :func:`state_sized_shuffle`. The caller waits for the returned
+    query."""
+    w = df.writeStream.outputMode(mode).trigger(availableNow=True)
+    if body is None:
+        w = w.format("memory").queryName(name)
+    else:
+        w = w.foreachBatch(body).option("checkpointLocation", checkpoint)
+    with state_sized_shuffle(df):
+        return w.start()
 
 
 def _event_schema(ts_type: T.DataType) -> T.StructType:
@@ -610,13 +625,7 @@ def write_stream_to_warehouse(
             clustering_fields=clustering_fields,
         )
 
-    with state_sized_shuffle(stream_df):
-        return (
-            stream_df.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+    return _start(stream_df, body=write_batch, checkpoint=checkpoint)
 
 
 def join_event_streams(

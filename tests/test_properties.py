@@ -780,3 +780,44 @@ def test_every_public_operator_has_a_caller():
         and node.name not in used
     ]
     assert not offenders, offenders
+
+
+def _library_lines_outside(allowed_file: str, allowed_def: str, needle: str) -> list[str]:
+    """``file:line`` of every library line holding ``needle``, except
+    inside the top-level ``def allowed_def`` of ``allowed_file``."""
+    import ast
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    root = pathlib.Path(lib.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text()
+        allowed = set()
+        if path == root / allowed_file:
+            for node in ast.parse(text).body:
+                if isinstance(node, ast.FunctionDef) and node.name == allowed_def:
+                    allowed = set(range(node.lineno, node.end_lineno + 1))
+        offenders += [
+            f"{path.relative_to(root)}:{n}"
+            for n, line in enumerate(text.splitlines(), 1)
+            if needle in line and n not in allowed
+        ]
+    return offenders
+
+
+def test_one_stream_start():
+    """Every stream starts through ``streaming/pipeline._start``, which
+    sizes its state partitions and drains with ``availableNow``; no
+    other library line may open a ``.writeStream``."""
+    offenders = _library_lines_outside("streaming/pipeline.py", "_start", ".writeStream")
+    assert not offenders, offenders
+
+
+def test_one_conf_scope():
+    """Temporary session confs are held through ``session.scoped_conf``,
+    which restores a caller's value instead of erasing it; no other
+    library line may ``conf.unset(`` a key."""
+    offenders = _library_lines_outside("session.py", "scoped_conf", "conf.unset(")
+    assert not offenders, offenders

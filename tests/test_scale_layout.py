@@ -67,6 +67,19 @@ class TestBucketedJoin:
         finally:
             spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
+    def test_audit_keeps_the_callers_broadcast_threshold(self, spark):
+        """The audit disables broadcast joins for its own run only; a
+        threshold the caller set is still there afterwards."""
+        from facebook_ads_bigquery_etl_spark.plans import QUERIES
+
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        spark.conf.set(key, "1234567")
+        try:
+            QUERIES["bucketed_join_audit"](spark, SF_SMOKE).collect()
+            assert spark.conf.get(key) == "1234567"
+        finally:
+            spark.conf.unset(key)
+
     def test_unbucketed_same_join_does_shuffle(self, spark):
         orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
         lineitem = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")

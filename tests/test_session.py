@@ -171,3 +171,26 @@ def test_get_spark_keeps_callers_worker_pythonpath(monkeypatch):
         [session.WORKER_BOOTSTRAP_DIR, "/srv/libs", "/srv/more"]
     )
     assert extra == {"spark.executorEnv.PYTHONPATH": os.pathsep.join(["/srv/libs", "/srv/more"])}
+
+
+def test_scoped_conf_restores_set_keys_and_unsets_absent_ones(spark):
+    import pytest
+
+    held, absent = "spark.sql.shuffle.partitions", "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(held)
+    spark.conf.unset(absent)
+    try:
+        spark.conf.set(held, "7")
+        with session.scoped_conf(spark, {held: "3", absent: "1MB"}):
+            assert spark.conf.get(held) == "3"
+            assert spark.conf.get(absent) == "1MB"
+        assert spark.conf.get(held) == "7"
+        assert spark.conf.get(absent, None) is None
+
+        with pytest.raises(RuntimeError, match="boom"):
+            with session.scoped_conf(spark, {held: "3", absent: "1MB"}):
+                raise RuntimeError("boom")
+        assert spark.conf.get(held) == "7"
+        assert spark.conf.get(absent, None) is None
+    finally:
+        spark.conf.set(held, prev)

@@ -556,3 +556,28 @@ class TestDrainDeadline:
         assert rows == []
         assert time.time() - t0 < 30
         assert not [q for q in spark.streams.active if "partialsess" in (q.name or "")]
+
+
+class TestRocksDBConfScope:
+    def test_rocksdb_queries_leave_the_callers_state_store(self, spark):
+        """The RocksDB queries pin their state store for their own
+        start only: a caller's provider comes back, and the changelog
+        key they set is absent again afterwards."""
+        from facebook_ads_bigquery_etl_spark.plans import QUERIES
+
+        provider = "spark.sql.streaming.stateStore.providerClass"
+        changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+        prev = spark.conf.get(provider, None)
+        spark.conf.set(provider, hdfs)
+        spark.conf.unset(changelog)
+        try:
+            for name in ("stream_rocksdb_state_rollup", "stream_rocksdb_changelog_restart"):
+                assert QUERIES[name](spark, SF_SMOKE).collect()
+                assert spark.conf.get(provider) == hdfs
+                assert spark.conf.get(changelog, None) is None
+        finally:
+            if prev is None:
+                spark.conf.unset(provider)
+            else:
+                spark.conf.set(provider, prev)

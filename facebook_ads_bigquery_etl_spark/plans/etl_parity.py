@@ -19,6 +19,9 @@ See scripts/round_sites_classified.json `r13_class_b_decisions`.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +34,7 @@ from ..fixtures import (
     fb_scalar_values_sql,
     fx_values_sql,
 )
+from ..operators import materialize
 from ..operators.casting import split_required_violations
 from ..operators.integrity import round_double_sql
 from ..schemas import SCHEMA_EXCHANGE_RATE, SCHEMA_FACEBOOK_RAW, SCHEMA_FACEBOOK_STAT
@@ -311,25 +315,9 @@ def fb_json_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     cast/quarantine pipeline. Proves the transform layer is
     source-agnostic: connector batch, stream, and file landing all
     feed the same stages."""
-    import hashlib as _hashlib
-    import json as _json
-    import os as _os
-    import tempfile as _tmp
-
-    # Landing dir keyed by fixture-content hash: a stale file from an
-    # older fixture can never be read (the key changes with the data),
-    # and the temp-file + os.replace write is atomic, so a concurrent
-    # session can't observe a partial file.
-    payload = "".join(_json.dumps(rec) + "\n" for rec in FB_FIXTURE)
-    key = _hashlib.sha256(payload.encode()).hexdigest()[:16]
-    landing = _os.path.join(_tmp.gettempdir(), f"fb_landing_{key}")
-    _os.makedirs(landing, exist_ok=True)
-    part = _os.path.join(landing, "part-000.jsonl")
-    if not _os.path.exists(part):
-        fd, tmp_name = _tmp.mkstemp(dir=landing, suffix=".tmp")
-        with _os.fdopen(fd, "w") as f:
-            f.write(payload)
-        _os.replace(tmp_name, part)
+    landing = materialize.scratch("fb_json_")
+    with open(os.path.join(landing, "part-000.jsonl"), "w") as f:
+        f.writelines(json.dumps(rec) + "\n" for rec in FB_FIXTURE)
     raw = spark.read.schema(SCHEMA_FACEBOOK_RAW).json(landing)
     valid, _ = split_required_violations(
         transform_insights(raw), SCHEMA_FACEBOOK_STAT

@@ -18,11 +18,11 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
+import hashlib
 import json
 import os
 import re
 import shutil
-import tempfile
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -113,58 +113,44 @@ def _qname(base: str, sf_dir: str) -> str:
 
 def _staged_louter_src(spark: SparkSession, sf_dir: str) -> str:
     """The shared time-sliced + sentinel staging of ``sf_dir``'s events
-    for the stream-stream join family, built once per SOURCE CONTENT.
+    for the stream-stream join family: a ``materialize.stage`` built
+    once per process per SOURCE CONTENT, named from the path, mtime and
+    size of events.parquet. The sweep fixtures are REWRITTEN per run, so
+    a stage keyed by path alone would go stale: the r13 nulls-residue
+    decorrelation changed the fixture under a stale staging and the
+    engine silently computed over yesterday's rows (a phantom
+    (day, type) rollup combo that no longer existed in the fixture)."""
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    st = os.stat(src)
+    key = hashlib.sha1(f"{src}:{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()
 
-    The ``_DONE`` marker now stores a fingerprint (mtime_ns:size) of
-    the source events.parquet: the original "testdata is read-only so
-    a _DONE-marked stage never goes stale" assumption is FALSE for the
-    sweep fixtures, which are REWRITTEN per run — the r13
-    nulls-residue decorrelation changed the fixture under a stale
-    staging and the engine silently computed over yesterday's rows
-    (r13 operator review: a phantom (day, type) rollup combo that no
-    longer existed in the fixture)."""
-    tmp = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_ss_louter_" + _qname("", sf_dir).strip("_"),
-    )
-    done = os.path.join(tmp, "_DONE")
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    fp = f"{st.st_mtime_ns}:{st.st_size}"
-    if os.path.exists(done):
-        try:
-            with open(done) as fh:
-                if fh.read() == fp:
-                    return tmp
-        except OSError:
-            pass
-        shutil.rmtree(tmp, ignore_errors=True)  # stale: rebuild
-    ev = load_tables(spark, sf_dir, "events")["events"]
-    cuts = ["2024-01-08", "2024-01-15", "2024-01-23"]
-    slices = [
-        ev.filter(F.col("ts") < cuts[0]),
-        ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        ev.filter((F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2])),
-        ev.filter(F.col("ts") >= cuts[2]),
-    ]
-    for sl in slices:
-        sl.coalesce(1).write.mode("append").parquet(tmp)
-    # one sentinel per SIDE: the stream's global watermark is the MIN
-    # over every watermarked branch — see stream_stream_left_outer
-    sentinel = spark.createDataFrame(
-        [
-            (-1, "2099-01-01 00:00:00", -1, "view", 0.0, "{}"),
-            (-2, "2099-01-01 00:00:00", -1, "purchase", 0.0, "{}"),
-        ],
-        "event_id long, ts string, user_id long, event_type string,"
-        " value double, props string",
-    ).select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id",
-        "event_type", "value", "props",
-    )
-    sentinel.coalesce(1).write.mode("append").parquet(tmp)
-    with open(done, "w") as fh:
-        fh.write(fp)
-    return tmp
+    def build(tmp: str) -> None:
+        ev = load_tables(spark, sf_dir, "events")["events"]
+        cuts = ["2024-01-08", "2024-01-15", "2024-01-23"]
+        slices = [
+            ev.filter(F.col("ts") < cuts[0]),
+            ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
+            ev.filter((F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2])),
+            ev.filter(F.col("ts") >= cuts[2]),
+        ]
+        for sl in slices:
+            sl.coalesce(1).write.mode("append").parquet(tmp)
+        # one sentinel per SIDE: the stream's global watermark is the MIN
+        # over every watermarked branch — see stream_stream_left_outer
+        sentinel = spark.createDataFrame(
+            [
+                (-1, "2099-01-01 00:00:00", -1, "view", 0.0, "{}"),
+                (-2, "2099-01-01 00:00:00", -1, "purchase", 0.0, "{}"),
+            ],
+            "event_id long, ts string, user_id long, event_type string,"
+            " value double, props string",
+        ).select(
+            "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id",
+            "event_type", "value", "props",
+        )
+        sentinel.coalesce(1).write.mode("append").parquet(tmp)
+
+    return materialize.stage("louter_" + key[:16], build)
 
 
 def _slice_stream(spark: SparkSession, path: str, per_trigger: int = 1) -> DataFrame:
@@ -570,11 +556,9 @@ def _purchase_view_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
     join over the staged slices, both sides watermarked 30 minutes
     (columns purchase_id, p_user, p_ts, view_id, v_user, v_ts).
 
-    The stage is built once per SOURCE CONTENT under a deterministic
-    path in the temp dir (the bench re-runs these queries back-to-back;
-    re-staging per run would time the staging, not the join) and is
-    fingerprint-guarded: sweep fixtures are rewritten per run, so a bare
-    _DONE marker CAN go stale — see _staged_louter_src.
+    The stage is built once per process per SOURCE CONTENT (the bench
+    re-runs these queries back-to-back; re-staging per run would time
+    the staging, not the join) — see _staged_louter_src.
 
     Event time is bounded on the read-back — stage-content-proof (r11
     dates sweep); the 2099 sentinels stay inside the bound.
@@ -839,49 +823,46 @@ def stream_atomic_sink_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value",
         F.col("ts").cast("date").alias("date"),
     )
-    tmp = tempfile.mkdtemp(prefix="s_atomic_")
+    tmp = materialize.scratch("s_atomic_")
     wh = f"{tmp}/wh"
-    try:
-        q = write_stream_to_warehouse(out, wh, f"{tmp}/cp1")
-        _await(q)
-        # schema-carrying read-backs: an all-empty stream publishes
-        # zero day partitions (r10 empty sweep)
-        n1 = sinks.read_published_or_empty(spark, wh, like=out).count()
-        # full redelivery: same data, FRESH checkpoint
-        ev2 = read_event_stream(spark, f"{sf_dir}/events.parquet")
-        out2 = ev2.select(
-            "event_id", "user_id", "event_type", "value",
-            F.col("ts").cast("date").alias("date"),
-        )
-        q2 = write_stream_to_warehouse(out2, wh, f"{tmp}/cp2")
-        _await(q2)
-        n2 = sinks.read_published_or_empty(spark, wh, like=out).count()
-        sinks.compact_partitions(spark, wh)
-        n3 = sinks.read_published_or_empty(spark, wh, like=out).count()
-        parts = (
-            [d for d in os.listdir(wh) if d.startswith("date=")]
-            if os.path.isdir(wh) else []
-        )
-        single = all(
-            len([f for f in os.listdir(os.path.join(wh, p))
-                 if f.endswith(".parquet")]) == 1
-            for p in parts
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    int(n3),
-                    len(parts),
-                    bool(n1 == n2 == n3),
-                    bool(single),
-                    not os.path.isdir(os.path.join(wh, "_compact")),
-                )
-            ],
-            "n_rows long, n_partitions long, rerun_stable boolean,"
-            " compacted_single_file boolean, no_debris boolean",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    q = write_stream_to_warehouse(out, wh, f"{tmp}/cp1")
+    _await(q)
+    # schema-carrying read-backs: an all-empty stream publishes
+    # zero day partitions (r10 empty sweep)
+    n1 = sinks.read_published_or_empty(spark, wh, like=out).count()
+    # full redelivery: same data, FRESH checkpoint
+    ev2 = read_event_stream(spark, f"{sf_dir}/events.parquet")
+    out2 = ev2.select(
+        "event_id", "user_id", "event_type", "value",
+        F.col("ts").cast("date").alias("date"),
+    )
+    q2 = write_stream_to_warehouse(out2, wh, f"{tmp}/cp2")
+    _await(q2)
+    n2 = sinks.read_published_or_empty(spark, wh, like=out).count()
+    sinks.compact_partitions(spark, wh)
+    n3 = sinks.read_published_or_empty(spark, wh, like=out).count()
+    parts = (
+        [d for d in os.listdir(wh) if d.startswith("date=")]
+        if os.path.isdir(wh) else []
+    )
+    single = all(
+        len([f for f in os.listdir(os.path.join(wh, p))
+             if f.endswith(".parquet")]) == 1
+        for p in parts
+    )
+    return spark.createDataFrame(
+        [
+            (
+                int(n3),
+                len(parts),
+                bool(n1 == n2 == n3),
+                bool(single),
+                not os.path.isdir(os.path.join(wh, "_compact")),
+            )
+        ],
+        "n_rows long, n_partitions long, rerun_stable boolean,"
+        " compacted_single_file boolean, no_debris boolean",
+    )
 
 
 @register(
@@ -955,7 +936,7 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite of the path being read."""
     # fingerprint-guarded shared staging (rebuilds on fixture change)
     src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
-    work = tempfile.mkdtemp(prefix="s_dim_merge_")
+    work = materialize.scratch("s_dim_merge_")
     state = {"version": -1}
     # DECIMAL(38,0) key: the r11 nulls round rebased the epoch so the
     # ×1e5 fit a long for SANE timestamps, but a corrupt far-future/
@@ -1013,20 +994,17 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         state["version"] += 1
 
-    try:
-        _run(src, body=apply_batch, checkpoint=f"{work}/cp")
-        final = read_parquet(spark, f"{work}/v{state['version']}")
-        return spark.createDataFrame(
-            [
-                (int(r["user_id"]), int(r["n_events"]),
-                 None if r["last_value"] is None
-                 else round(float(r["last_value"]), 2))
-                for r in final.collect()
-            ],
-            "user_id long, n_events long, last_value double",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    _run(src, body=apply_batch, checkpoint=f"{work}/cp")
+    final = read_parquet(spark, f"{work}/v{state['version']}")
+    return spark.createDataFrame(
+        [
+            (int(r["user_id"]), int(r["n_events"]),
+             None if r["last_value"] is None
+             else round(float(r["last_value"]), 2))
+            for r in final.collect()
+        ],
+        "user_id long, n_events long, last_value double",
+    )
 
 
 @register(
@@ -1181,87 +1159,80 @@ def stream_partial_session_eviction(
     # unlike a parallel-subtree query nothing loses concurrency here)
     ev = ev.transform(materialize.checkpoint)
 
-    src = tempfile.mkdtemp(prefix="partial_sess_src_")
-    try:
-        now = 1_000_000_000.0
+    src = materialize.scratch("partial_sess_src_")
+    now = 1_000_000_000.0
 
-        # The four batch files are independent single-task slices of
-        # the checkpointed frame — write them CONCURRENTLY (r13, guide
-        # §2.6: four coalesce(1) jobs in sequence leave 31 cores idle
-        # per job). File-source ordering is pinned by the EXPLICIT
-        # utime ladder, not by write completion order, so parallel
-        # staging cannot reorder the replay.
-        def _stage_batch(i: int) -> None:
-            stage = os.path.join(src, f"_stage{i}")
-            ev.filter(F.col("b") == i).drop("b").coalesce(1).write.parquet(
-                stage
-            )
-            part = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"batch-{i:03d}.parquet")
-            os.replace(os.path.join(stage, part), dst)
-            shutil.rmtree(stage)
-            os.utime(dst, (now + 10 * i, now + 10 * i))
-
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [pool.submit(_stage_batch, i) for i in range(4)]
-            errs = [f.exception() for f in futs]
-        for e in errs:
-            if e is not None:
-                raise e
-
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, value double, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    # The four batch files are independent single-task slices of
+    # the checkpointed frame — write them CONCURRENTLY (r13, guide
+    # §2.6: four coalesce(1) jobs in sequence leave 31 cores idle
+    # per job). File-source ordering is pinned by the EXPLICIT
+    # utime ladder, not by write completion order, so parallel
+    # staging cannot reorder the replay.
+    def _stage_batch(i: int) -> None:
+        stage = os.path.join(src, f"_stage{i}")
+        ev.filter(F.col("b") == i).drop("b").coalesce(1).write.parquet(
+            stage
         )
-        # NOT _drain: a ProcessingTimeTimeout query never self-
-        # terminates under availableNow — the engine keeps scheduling
-        # empty batches as long as the operator uses processing-time
-        # wake-ups (found by the 10× stress probe: each run silently
-        # burned _drain's full 300 s timeout and left the query
-        # ACTIVE, colliding with the next run's name). Drain until
-        # QUIESCENT instead: the first zero-input batch after the data
-        # is, by construction, the flush batch (every deadline is
-        # ms-scale, so it is breached by then), and with the state
-        # drained every later empty batch emits nothing — stop there.
-        # The name is uniquified so a straggling stop never collides.
-        name = _qname("s_partialsess", sf_dir) + "_" + uuid.uuid4().hex[:6]
-        q = _start(partial_session_flush(stream), name=name, mode="update")
-        # An empty source has no flush batch to wait for: its first
-        # progress is already the last one with output.
-        saw_data = not any(
-            pq.read_metadata(os.path.join(src, f)).num_rows
-            for f in os.listdir(src)
+        part = next(
+            f for f in os.listdir(stage) if f.endswith(".parquet")
         )
-        deadline = time.time() + _DRAIN_TIMEOUT_S
-        while q.isActive:
-            lp = q.lastProgress
-            if lp is not None:
-                if lp["numInputRows"] > 0:
-                    saw_data = True
-                elif saw_data:
-                    q.stop()
-                    break
-            if time.time() > deadline:
+        dst = os.path.join(src, f"batch-{i:03d}.parquet")
+        os.replace(os.path.join(stage, part), dst)
+        shutil.rmtree(stage)
+        os.utime(dst, (now + 10 * i, now + 10 * i))
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futs = [pool.submit(_stage_batch, i) for i in range(4)]
+        errs = [f.exception() for f in futs]
+    for e in errs:
+        if e is not None:
+            raise e
+
+    stream = (
+        spark.readStream.schema(
+            "event_id long, user_id long, value double, ts timestamp"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    # NOT _drain: a ProcessingTimeTimeout query never self-
+    # terminates under availableNow — the engine keeps scheduling
+    # empty batches as long as the operator uses processing-time
+    # wake-ups (found by the 10× stress probe: each run silently
+    # burned _drain's full 300 s timeout and left the query
+    # ACTIVE, colliding with the next run's name). Drain until
+    # QUIESCENT instead: the first zero-input batch after the data
+    # is, by construction, the flush batch (every deadline is
+    # ms-scale, so it is breached by then), and with the state
+    # drained every later empty batch emits nothing — stop there.
+    # The name is uniquified so a straggling stop never collides.
+    name = _qname("s_partialsess", sf_dir) + "_" + uuid.uuid4().hex[:6]
+    q = _start(partial_session_flush(stream), name=name, mode="update")
+    # An empty source has no flush batch to wait for: its first
+    # progress is already the last one with output.
+    saw_data = not any(
+        pq.read_metadata(os.path.join(src, f)).num_rows
+        for f in os.listdir(src)
+    )
+    deadline = time.time() + _DRAIN_TIMEOUT_S
+    while q.isActive:
+        lp = q.lastProgress
+        if lp is not None:
+            if lp["numInputRows"] > 0:
+                saw_data = True
+            elif saw_data:
                 q.stop()
-                raise TimeoutError(
-                    f"stream {name} saw no flush batch within {_DRAIN_TIMEOUT_S} s"
-                )
-            time.sleep(0.05)  # r13: finer poll — the loop only waits
-            # for the flush batch's progress row; 0.2 s granularity
-            # added up to ~0.4 s of pure detection latency per run
-        _await(q)
-        out = spark.table(name)
-        # materialize before the source dir is deleted: memory sink
-        # rows are already driver-side, but force the table once
-        out.count()
-        return out
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+                break
+        if time.time() > deadline:
+            q.stop()
+            raise TimeoutError(
+                f"stream {name} saw no flush batch within {_DRAIN_TIMEOUT_S} s"
+            )
+        time.sleep(0.05)  # r13: finer poll — the loop only waits
+        # for the flush batch's progress row; 0.2 s granularity
+        # added up to ~0.4 s of pure detection latency per run
+    _await(q)
+    return spark.table(name)
 
 
 @register(
@@ -1312,7 +1283,7 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch changes."""
     # fingerprint-guarded shared staging (rebuilds on fixture change)
     src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
-    work = tempfile.mkdtemp(prefix="s_twotab_")
+    work = materialize.scratch("s_twotab_")
     fact_t = f"{work}/fact"
     roll_t = f"{work}/rollup"
     meta_t = f"{work}/meta"
@@ -1386,48 +1357,45 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         audit["epochs"] += 1
         audit["consistent"] &= torn == 0
 
-    try:
-        _run(src, body=publish_batch, checkpoint=f"{work}/cp")
-        fact_like = spark.createDataFrame([], src.schema).select(
-            "event_id", "user_id", "event_type", "value",
-            F.col("ts").cast("date").alias("date"),
-        )
-        roll_like = fact_like.groupBy("date", "event_type").agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        n_fact = sinks.read_published_or_empty(
-            spark, fact_t, like=fact_like
-        ).count()
-        roll = sinks.read_published_or_empty(spark, roll_t, like=roll_like)
-        # count + total in ONE action (r13 optimization)
-        r_tot = roll.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("sum_value"), 2).alias("t"),
-        ).first()
-        n_roll, total = r_tot["n"], r_tot["t"]
-        debris = any(
-            os.path.isdir(os.path.join(t, "_compact"))
-            and os.listdir(os.path.join(t, "_compact"))
-            for t in (fact_t, roll_t, meta_t)
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    int(n_fact),
-                    int(n_roll),
-                    None if total is None else float(total),
-                    audit["epochs"] >= 3,
-                    bool(audit["consistent"]),
-                    not debris,
-                )
-            ],
-            "n_fact_rows long, n_rollup_rows long, total_value double,"
-            " multi_epoch boolean, all_epochs_consistent boolean,"
-            " no_debris boolean",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    _run(src, body=publish_batch, checkpoint=f"{work}/cp")
+    fact_like = spark.createDataFrame([], src.schema).select(
+        "event_id", "user_id", "event_type", "value",
+        F.col("ts").cast("date").alias("date"),
+    )
+    roll_like = fact_like.groupBy("date", "event_type").agg(
+        F.count("*").alias("n_events"),
+        F.sum("value").alias("sum_value"),
+    )
+    n_fact = sinks.read_published_or_empty(
+        spark, fact_t, like=fact_like
+    ).count()
+    roll = sinks.read_published_or_empty(spark, roll_t, like=roll_like)
+    # count + total in ONE action (r13 optimization)
+    r_tot = roll.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.sum("sum_value"), 2).alias("t"),
+    ).first()
+    n_roll, total = r_tot["n"], r_tot["t"]
+    debris = any(
+        os.path.isdir(os.path.join(t, "_compact"))
+        and os.listdir(os.path.join(t, "_compact"))
+        for t in (fact_t, roll_t, meta_t)
+    )
+    return spark.createDataFrame(
+        [
+            (
+                int(n_fact),
+                int(n_roll),
+                None if total is None else float(total),
+                audit["epochs"] >= 3,
+                bool(audit["consistent"]),
+                not debris,
+            )
+        ],
+        "n_fact_rows long, n_rollup_rows long, total_value double,"
+        " multi_epoch boolean, all_epochs_consistent boolean,"
+        " no_debris boolean",
+    )
 
 
 @register(
@@ -1516,8 +1484,8 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
         glob.glob(os.path.join(staged, "part-*.parquet")),
         key=os.path.getmtime,
     )
-    land = tempfile.mkdtemp(prefix="s_cl_land_")
-    work = tempfile.mkdtemp(prefix="s_cl_work_")
+    land = materialize.scratch("s_cl_land_")
+    work = materialize.scratch("s_cl_work_")
     state = {"version": -1}
 
     def apply_batch(batch_df, batch_id: int) -> None:
@@ -1568,35 +1536,31 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
         **_ROCKSDB,
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     }
-    try:
-        with scoped_conf(spark, rocksdb_changelog):
-            ids1 = run_phase(slice_files[:2])
-            ids2 = run_phase(slice_files[2:])
-        changelogs = glob.glob(
-            os.path.join(work, "cp", "state", "**", "*.changelog"),
-            recursive=True,
-        )
-        changelog_engaged = len(changelogs) > 0
-        resumed = bool(ids1) and bool(ids2) and min(ids2) > max(ids1)
-        final = read_parquet(spark, f"{work}/v{state['version']}")
-        return spark.createDataFrame(
-            [
-                (
-                    r["date"], r["event_type"], int(r["n_events"]),
-                    # an all-NULL-value group sums to NULL — keep it
-                    None if r["total_value"] is None
-                    else round(float(r["total_value"]), 2),
-                    changelog_engaged, resumed,
-                )
-                for r in final.collect()
-            ],
-            "date date, event_type string, n_events long,"
-            " total_value double, changelog_engaged boolean,"
-            " resumed_from_checkpoint boolean",
-        )
-    finally:
-        shutil.rmtree(land, ignore_errors=True)
-        shutil.rmtree(work, ignore_errors=True)
+    with scoped_conf(spark, rocksdb_changelog):
+        ids1 = run_phase(slice_files[:2])
+        ids2 = run_phase(slice_files[2:])
+    changelogs = glob.glob(
+        os.path.join(work, "cp", "state", "**", "*.changelog"),
+        recursive=True,
+    )
+    changelog_engaged = len(changelogs) > 0
+    resumed = bool(ids1) and bool(ids2) and min(ids2) > max(ids1)
+    final = read_parquet(spark, f"{work}/v{state['version']}")
+    return spark.createDataFrame(
+        [
+            (
+                r["date"], r["event_type"], int(r["n_events"]),
+                # an all-NULL-value group sums to NULL — keep it
+                None if r["total_value"] is None
+                else round(float(r["total_value"]), 2),
+                changelog_engaged, resumed,
+            )
+            for r in final.collect()
+        ],
+        "date date, event_type string, n_events long,"
+        " total_value double, changelog_engaged boolean,"
+        " resumed_from_checkpoint boolean",
+    )
 
 
 @register(
@@ -1688,7 +1652,7 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     pinned value is the equality boolean."""
     # fingerprint-guarded shared staging (rebuilds on fixture change)
     staged = _staged_louter_src(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="s_bloomidx_")
+    work = materialize.scratch("s_bloomidx_")
     fact_dir = os.path.join(work, "fact")
     bit = lambda c: knuth_bucket(c, 1024)  # noqa: E731
     state = {"version": -1, "days_seen": set(), "refresh": 0, "rebuild": 0}
@@ -1723,80 +1687,77 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         state["refresh"] += len(touched)
         state["rebuild"] += len(state["days_seen"])
 
-    try:
-        live = _slice_stream(spark, staged).filter(F.col("user_id") >= 0)
-        _run(live, body=apply_batch, checkpoint=f"{work}/cp")
-        if state["version"] < 0:
-            # every batch was empty: no fact dir, no index versions —
-            # the ledger is all zeros and the incremental ≡ rebuild
-            # claim holds vacuously (r10 empty sweep)
-            return spark.createDataFrame(
-                [(0, 0, 0, 0, 0, 0, 0, 0, True)],
-                "n_fact_rows long, n_parts_total long, n_index_rows long,"
-                " n_refresh_part_scans long, n_rebuild_part_scans long,"
-                " n_parts_probed long, n_parts_true long,"
-                " n_events_found long, incr_equals_rebuild boolean",
-            )
-        # r13 optimization (guide §5.1/§1.3): fact feeds five readouts
-        # and rebuild/index appear twice in the incremental-vs-rebuild
-        # diff — persist them, read the symmetric-difference
-        # cardinality in ONE action (same exceptAll semantics), and
-        # fuse count-style readouts that share a scan into one agg
-        # (count(lit(1)) ≡ count(); coalesced SUM keeps the
-        # empty-probe 0).
-        fact = read_parquet(spark, fact_dir).persist()
-        index = read_parquet(spark, f"{work}/idx_v{state['version']}").persist()
-        rebuild = fact.select("d", bit("user_id").alias("bit")).distinct().persist()
-        diff = index.exceptAll(rebuild).unionAll(
-            rebuild.exceptAll(index)
-        ).count()
-        f_row = fact.agg(
-            F.min("user_id").alias("u"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        probe_u, n_fact_rows = f_row["u"], f_row["n"]
-        # kept as its own action: countDistinct skips NULL keys while
-        # distinct().count() keeps the NULL group — not provably the
-        # same readout; the scan behind it is the persisted fact
-        n_parts_total = fact.select("d").distinct().count()
-        probe_bit = (probe_u * 2654435761 % 1000000007) % 1024
-        n_probed = index.filter(F.col("bit") == probe_bit).count()
-        t_row = (
-            fact.filter(F.col("user_id") == probe_u)
-            .groupBy("d")
-            .agg(F.count("*").alias("n"))
-            .agg(
-                F.count(F.lit(1)).alias("n_days"),
-                F.coalesce(F.sum("n"), F.lit(0)).alias("found"),
-            )
-            .first()
-        )
-        n_true, n_found = t_row["n_days"], t_row["found"]
-        n_index_rows = index.count()
-        index.unpersist(blocking=False)
-        rebuild.unpersist(blocking=False)
-        fact.unpersist(blocking=False)
+    live = _slice_stream(spark, staged).filter(F.col("user_id") >= 0)
+    _run(live, body=apply_batch, checkpoint=f"{work}/cp")
+    if state["version"] < 0:
+        # every batch was empty: no fact dir, no index versions —
+        # the ledger is all zeros and the incremental ≡ rebuild
+        # claim holds vacuously (r10 empty sweep)
         return spark.createDataFrame(
-            [
-                (
-                    n_fact_rows,
-                    n_parts_total,
-                    n_index_rows,
-                    state["refresh"],
-                    state["rebuild"],
-                    n_probed,
-                    n_true,
-                    int(n_found),
-                    diff == 0,
-                )
-            ],
+            [(0, 0, 0, 0, 0, 0, 0, 0, True)],
             "n_fact_rows long, n_parts_total long, n_index_rows long,"
             " n_refresh_part_scans long, n_rebuild_part_scans long,"
-            " n_parts_probed long, n_parts_true long, n_events_found long,"
-            " incr_equals_rebuild boolean",
+            " n_parts_probed long, n_parts_true long,"
+            " n_events_found long, incr_equals_rebuild boolean",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    # r13 optimization (guide §5.1/§1.3): fact feeds five readouts
+    # and rebuild/index appear twice in the incremental-vs-rebuild
+    # diff — persist them, read the symmetric-difference
+    # cardinality in ONE action (same exceptAll semantics), and
+    # fuse count-style readouts that share a scan into one agg
+    # (count(lit(1)) ≡ count(); coalesced SUM keeps the
+    # empty-probe 0).
+    fact = read_parquet(spark, fact_dir).persist()
+    index = read_parquet(spark, f"{work}/idx_v{state['version']}").persist()
+    rebuild = fact.select("d", bit("user_id").alias("bit")).distinct().persist()
+    diff = index.exceptAll(rebuild).unionAll(
+        rebuild.exceptAll(index)
+    ).count()
+    f_row = fact.agg(
+        F.min("user_id").alias("u"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    probe_u, n_fact_rows = f_row["u"], f_row["n"]
+    # kept as its own action: countDistinct skips NULL keys while
+    # distinct().count() keeps the NULL group — not provably the
+    # same readout; the scan behind it is the persisted fact
+    n_parts_total = fact.select("d").distinct().count()
+    probe_bit = (probe_u * 2654435761 % 1000000007) % 1024
+    n_probed = index.filter(F.col("bit") == probe_bit).count()
+    t_row = (
+        fact.filter(F.col("user_id") == probe_u)
+        .groupBy("d")
+        .agg(F.count("*").alias("n"))
+        .agg(
+            F.count(F.lit(1)).alias("n_days"),
+            F.coalesce(F.sum("n"), F.lit(0)).alias("found"),
+        )
+        .first()
+    )
+    n_true, n_found = t_row["n_days"], t_row["found"]
+    n_index_rows = index.count()
+    index.unpersist(blocking=False)
+    rebuild.unpersist(blocking=False)
+    fact.unpersist(blocking=False)
+    return spark.createDataFrame(
+        [
+            (
+                n_fact_rows,
+                n_parts_total,
+                n_index_rows,
+                state["refresh"],
+                state["rebuild"],
+                n_probed,
+                n_true,
+                int(n_found),
+                diff == 0,
+            )
+        ],
+        "n_fact_rows long, n_parts_total long, n_index_rows long,"
+        " n_refresh_part_scans long, n_rebuild_part_scans long,"
+        " n_parts_probed long, n_parts_true long, n_events_found long,"
+        " incr_equals_rebuild boolean",
+    )
 
 
 @register(

@@ -16,11 +16,13 @@ See scripts/round_sites_classified.json `r13_class_b_decisions`.
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import casting as cst
+from ..operators import materialize
 from ..operators.expectations import constraint_audit
 from ..operators.exprs import knuth_bucket
 from ..operators.incremental import finalize, merge_states, partial_state
@@ -589,8 +591,6 @@ def zorder_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     min + {0.45,0.55}·range — identical IEEE arithmetic both engines).
     The footer readout is 2×16 files — bounded, never data-sized."""
     import glob as _glob
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -616,45 +616,42 @@ def zorder_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pk_lo, pk_hi = (mm[0] + f * (mm[1] - mm[0]) for f in (0.45, 0.55))
     sk_lo, sk_hi = (mm[2] + f * (mm[3] - mm[2]) for f in (0.45, 0.55))
 
-    tmp = tempfile.mkdtemp(prefix="zorder_audit_")
+    tmp = materialize.scratch("zorder_audit_")
     zpath, spath = f"{tmp}/zord", f"{tmp}/linear"
-    try:
-        write_zordered(li, zpath, ["l_partkey", "l_suppkey"], n_files=16)
-        (
-            li.repartitionByRange(16, "l_partkey")
-            .sortWithinPartitions("l_partkey")
-            .write.mode("overwrite").parquet(spath)
-        )
+    write_zordered(li, zpath, ["l_partkey", "l_suppkey"], n_files=16)
+    (
+        li.repartitionByRange(16, "l_partkey")
+        .sortWithinPartitions("l_partkey")
+        .write.mode("overwrite").parquet(spath)
+    )
 
-        def touch_fraction(path: str, col: str, lo: float, hi: float) -> float:
-            # zero-row part files are legal parquet (Spark's writer
-            # always emits a schema file for an empty partition 0) —
-            # they hold no row groups, are skipped by every reader,
-            # and must not crash or dilute the footer readout (r12)
-            files = _glob.glob(f"{path}/part-*.parquet")
-            touched = n_data_files = 0
-            for f in files:
-                pf = pq.ParquetFile(f)
-                md = pf.metadata
-                if md.num_row_groups == 0:
-                    continue
-                n_data_files += 1
-                idx = pf.schema_arrow.names.index(col)
-                fmin = min(md.row_group(i).column(idx).statistics.min
-                           for i in range(md.num_row_groups))
-                fmax = max(md.row_group(i).column(idx).statistics.max
-                           for i in range(md.num_row_groups))
-                touched += 1 if (fmax >= lo and fmin <= hi) else 0
-            # fully-empty input → every part file is a zero-row-group
-            # schema file → no data files to touch (r13 advisory)
-            return touched / n_data_files if n_data_files else 0.0
+    def touch_fraction(path: str, col: str, lo: float, hi: float) -> float:
+        # zero-row part files are legal parquet (Spark's writer
+        # always emits a schema file for an empty partition 0) —
+        # they hold no row groups, are skipped by every reader,
+        # and must not crash or dilute the footer readout (r12)
+        files = _glob.glob(f"{path}/part-*.parquet")
+        touched = n_data_files = 0
+        for f in files:
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
+            if md.num_row_groups == 0:
+                continue
+            n_data_files += 1
+            idx = pf.schema_arrow.names.index(col)
+            fmin = min(md.row_group(i).column(idx).statistics.min
+                       for i in range(md.num_row_groups))
+            fmax = max(md.row_group(i).column(idx).statistics.max
+                       for i in range(md.num_row_groups))
+            touched += 1 if (fmax >= lo and fmin <= hi) else 0
+        # fully-empty input → every part file is a zero-row-group
+        # schema file → no data files to touch (r13 advisory)
+        return touched / n_data_files if n_data_files else 0.0
 
-        z_pk = touch_fraction(zpath, "l_partkey", pk_lo, pk_hi)
-        z_sk = touch_fraction(zpath, "l_suppkey", sk_lo, sk_hi)
-        s_pk = touch_fraction(spath, "l_partkey", pk_lo, pk_hi)
-        s_sk = touch_fraction(spath, "l_suppkey", sk_lo, sk_hi)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    z_pk = touch_fraction(zpath, "l_partkey", pk_lo, pk_hi)
+    z_sk = touch_fraction(zpath, "l_suppkey", sk_lo, sk_hi)
+    s_pk = touch_fraction(spath, "l_partkey", pk_lo, pk_hi)
+    s_sk = touch_fraction(spath, "l_suppkey", sk_lo, sk_hi)
 
     z_worst = max(z_pk, z_sk)
     # the z-order claim is SCALE-GATED: below ~1000 rows/file the
@@ -712,34 +709,27 @@ def compaction_file_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     booleans (one glob over ~30 day dirs — bounded metadata, not
     data)."""
     import glob as _glob
-    import shutil
-    import tempfile
 
     from ..sinks import compact_partitions
 
     ev = load_tables(spark, sf_dir, "events")["events"].withColumn(
         "date", F.to_date("ts")
     )
-    tmp = tempfile.mkdtemp(prefix="compact_audit_")
+    tmp = materialize.scratch("compact_audit_")
     path = f"{tmp}/events_tbl"
-    try:
-        ev.repartition(16).write.partitionBy("date").parquet(path)
-        files_before = len(_glob.glob(f"{path}/date=*/part-*.parquet"))
-        n_dirs = len(_glob.glob(f"{path}/date=*"))
-        compact_partitions(
-            spark, path, partition_field="date", clustering_fields=["user_id"]
-        )
-        files_after = len(_glob.glob(f"{path}/date=*/part-*.parquet"))
-        # eager re-read: the temp table is gone after the finally, so
-        # the preservation check happens now, not at driver collect
-        # time; the schema-carrying reader tolerates an empty source
-        # (zero day dirs written — r10 empty sweep)
-        from ..sinks import read_published_or_empty
+    ev.repartition(16).write.partitionBy("date").parquet(path)
+    files_before = len(_glob.glob(f"{path}/date=*/part-*.parquet"))
+    n_dirs = len(_glob.glob(f"{path}/date=*"))
+    compact_partitions(
+        spark, path, partition_field="date", clustering_fields=["user_id"]
+    )
+    files_after = len(_glob.glob(f"{path}/date=*/part-*.parquet"))
+    # the schema-carrying reader tolerates an empty source (zero day
+    # dirs written — r10 empty sweep)
+    from ..sinks import read_published_or_empty
 
-        n_back = read_published_or_empty(spark, path, like=ev).count()
-        src_rows = ev.count()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    n_back = read_published_or_empty(spark, path, like=ev).count()
+    src_rows = ev.count()
     # the returned plan aggregates the SOURCE table (persistent), with
     # the layout claims as engine-verified literals
     return ev.agg(
@@ -895,9 +885,6 @@ def dpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of days the dim selects. DuckDB recomputes the surviving
     aggregate exactly; the plan marker and the DPP-equals-plain result
     equality are engine-verified booleans."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     ev = load_tables(spark, sf_dir, "events")["events"].withColumn(
@@ -909,24 +896,21 @@ def dpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     picked = dim.filter(F.col("rn") % 7 == 1)
 
-    tmp = tempfile.mkdtemp(prefix="dpp_audit_")
-    try:
-        ev.write.partitionBy("date").mode("overwrite").parquet(tmp)
-        # schema-carrying read-back: an empty source writes zero day
-        # dirs (r10 empty sweep)
-        from ..sinks import read_published_or_empty
+    tmp = materialize.scratch("dpp_audit_")
+    ev.write.partitionBy("date").mode("overwrite").parquet(tmp)
+    # schema-carrying read-back: an empty source writes zero day
+    # dirs (r10 empty sweep)
+    from ..sinks import read_published_or_empty
 
-        fact = read_published_or_empty(spark, tmp, like=ev)
-        j = fact.join(F.broadcast(picked), "date").agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        has_dpp = "dynamicpruning" in (
-            j._jdf.queryExecution().executedPlan().toString().lower()
-        )
-        dpp_row = j.first()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    fact = read_published_or_empty(spark, tmp, like=ev)
+    j = fact.join(F.broadcast(picked), "date").agg(
+        F.count("*").alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    )
+    has_dpp = "dynamicpruning" in (
+        j._jdf.queryExecution().executedPlan().toString().lower()
+    )
+    dpp_row = j.first()
 
     # the returned plan depends only on the persistent source; the
     # partitioned-table run is compared against it eagerly above
@@ -1131,22 +1115,16 @@ def orc_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC files back. Same pluggable-format seam as
     sinks.insert_rows_via_format (reference main.py:86-89's writer
     abstracted over format)."""
-    import shutil
-    import tempfile
-
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"].where(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1995-02-01").cast("timestamp"))
     )
     rev = F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
     src_row = li.agg(F.count("*").alias("n"), rev.alias("r")).collect()[0]
-    tmp = tempfile.mkdtemp(prefix="orc_audit_")
-    try:
-        li.write.mode("overwrite").orc(f"{tmp}/li_orc")
-        back = spark.read.orc(f"{tmp}/li_orc")
-        back_row = back.agg(F.count("*").alias("n"), rev.alias("r")).collect()[0]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = materialize.scratch("orc_audit_")
+    li.write.mode("overwrite").orc(f"{tmp}/li_orc")
+    back = spark.read.orc(f"{tmp}/li_orc")
+    back_row = back.agg(F.count("*").alias("n"), rev.alias("r")).collect()[0]
     return spark.createDataFrame(
         [
             (
@@ -1189,39 +1167,33 @@ def schema_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, old rows null). Row counts per batch and the null count
     in the evolved column are recomputed by DuckDB from the source;
     the schema-shape booleans are engine-verified on the read-back."""
-    import shutil
-    import tempfile
-
     orders = load_tables(spark, sf_dir, "orders")["orders"]
     v1 = orders.where(F.col("o_orderkey") % 2 == 0)
     v2 = orders.where(F.col("o_orderkey") % 2 == 1).withColumn(
         "o_priority_score", F.length("o_orderpriority").cast("double")
     )
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
+    tmp = materialize.scratch("schema_evo_")
     path = f"{tmp}/orders_tbl"
-    try:
-        v1.write.mode("overwrite").parquet(path)
-        v2.write.mode("append").parquet(path)
-        back = spark.read.option("mergeSchema", "true").parquet(path)
-        has_col = "o_priority_score" in back.columns
-        # only v1 rows count: v2 rows whose source value is NULL are
-        # NULL in the new column too, but they are not "old rows"
-        old = F.col("o_orderkey") % 2 == 0
-        row = back.agg(
-            F.count_if(old & F.col("o_priority_score").isNull()).alias("nulls_new"),
-            F.count_if(old).alias("old_rows"),
-        ).collect()[0]
-        # one action for both batch counts (r14, guide §1 — was two
-        # separate full scans of orders)
-        cnts = orders.agg(
-            F.sum((F.col("o_orderkey") % 2 == 0).cast("long")).alias("n1"),
-            F.sum((F.col("o_orderkey") % 2 == 1).cast("long")).alias("n2"),
-        ).first()
-        n1, n2 = int(cnts["n1"] or 0), int(cnts["n2"] or 0)
-        nulls_new = int(row["nulls_new"])
-        nulls_match = bool(nulls_new == n1 == int(row["old_rows"]))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    v1.write.mode("overwrite").parquet(path)
+    v2.write.mode("append").parquet(path)
+    back = spark.read.option("mergeSchema", "true").parquet(path)
+    has_col = "o_priority_score" in back.columns
+    # only v1 rows count: v2 rows whose source value is NULL are
+    # NULL in the new column too, but they are not "old rows"
+    old = F.col("o_orderkey") % 2 == 0
+    row = back.agg(
+        F.count_if(old & F.col("o_priority_score").isNull()).alias("nulls_new"),
+        F.count_if(old).alias("old_rows"),
+    ).collect()[0]
+    # one action for both batch counts (r14, guide §1 — was two
+    # separate full scans of orders)
+    cnts = orders.agg(
+        F.sum((F.col("o_orderkey") % 2 == 0).cast("long")).alias("n1"),
+        F.sum((F.col("o_orderkey") % 2 == 1).cast("long")).alias("n2"),
+    ).first()
+    n1, n2 = int(cnts["n1"] or 0), int(cnts["n2"] or 0)
+    nulls_new = int(row["nulls_new"])
+    nulls_match = bool(nulls_new == n1 == int(row["old_rows"]))
     return spark.createDataFrame(
         [(n1, n2, nulls_new, bool(has_col), nulls_match)],
         "rows_v1 long, rows_v2 long, nulls_in_new_col long,"
@@ -1354,9 +1326,6 @@ def csv_quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantine booleans are engine-verified on the actual read-back.
     Scale: CSV serialize/parse is map-only in both directions; the
     audit aggregate is one two-phase pass."""
-    import shutil
-    import tempfile
-
     orders = load_tables(spark, sf_dir, "orders")["orders"]
     # NULL price → EXPLICIT empty field (concat, not concat_ws:
     # concat_ws silently drops NULL args, which would emit a one-field
@@ -1382,44 +1351,41 @@ def csv_quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderkey") % 97 != 0)
         & cst.finite_or_null(F.col("o_totalprice")).isNull()
     ).count()
-    tmp = tempfile.mkdtemp(prefix="csv_quar_")
-    try:
-        orders.select(line.alias("value")).write.mode("overwrite").text(
-            f"{tmp}/orders_csv"
-        )
-        back = (
-            spark.read.schema("o_orderkey LONG, o_totalprice DECIMAL(18,2), _bad STRING")
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_bad")
-            .csv(f"{tmp}/orders_csv")
-        )
-        row = back.agg(
-            F.sum(F.when(F.col("_bad").isNull(), 1).otherwise(0)).alias("good"),
-            F.sum(F.when(F.col("_bad").isNotNull(), 1).otherwise(0)).alias("bad"),
-            F.sum(
-                F.when(F.col("_bad").isNull(), F.col("o_totalprice")).otherwise(
-                    F.lit(0).cast("decimal(18,2)")
-                )
+    tmp = materialize.scratch("csv_quar_")
+    orders.select(line.alias("value")).write.mode("overwrite").text(
+        f"{tmp}/orders_csv"
+    )
+    back = (
+        spark.read.schema("o_orderkey LONG, o_totalprice DECIMAL(18,2), _bad STRING")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_bad")
+        .csv(f"{tmp}/orders_csv")
+    )
+    row = back.agg(
+        F.sum(F.when(F.col("_bad").isNull(), 1).otherwise(0)).alias("good"),
+        F.sum(F.when(F.col("_bad").isNotNull(), 1).otherwise(0)).alias("bad"),
+        F.sum(
+            F.when(F.col("_bad").isNull(), F.col("o_totalprice")).otherwise(
+                F.lit(0).cast("decimal(18,2)")
             )
-            .cast("double")
-            .alias("total"),
-            F.min(
-                F.when(
-                    F.col("_bad").isNotNull(), F.col("_bad").contains("NOT_A_PRICE")
-                )
-            ).alias("quarantined_whole"),
-            # NULL-price goods must read back as exactly-as-many NULL
-            # prices (value exactness of the non-null goods is pinned
-            # by good_total vs the oracle; r11 nulls sweep)
-            F.sum(
-                F.when(
-                    F.col("_bad").isNull() & F.col("o_totalprice").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("null_good"),
-        ).collect()[0]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
+        .cast("double")
+        .alias("total"),
+        F.min(
+            F.when(
+                F.col("_bad").isNotNull(), F.col("_bad").contains("NOT_A_PRICE")
+            )
+        ).alias("quarantined_whole"),
+        # NULL-price goods must read back as exactly-as-many NULL
+        # prices (value exactness of the non-null goods is pinned
+        # by good_total vs the oracle; r11 nulls sweep)
+        F.sum(
+            F.when(
+                F.col("_bad").isNull() & F.col("o_totalprice").isNull(),
+                1,
+            ).otherwise(0)
+        ).alias("null_good"),
+    ).collect()[0]
     # empty source: the aggregates read NULL (counts coalesce to 0,
     # the total stays NULL like the oracle's SUM) and the MIN-over-
     # WHEN booleans are vacuously true (r10 empty sweep)
@@ -1573,9 +1539,6 @@ def commit_protocol_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     source table and the four booleans. This is the reference's
     BigQuery-atomic-load guarantee (main.py:86-89) rebuilt on plain
     parquet + renames, held under fault injection."""
-    import shutil
-    import tempfile
-
     from .. import sinks
 
     events = load_tables(spark, sf_dir, "events")["events"]
@@ -1586,50 +1549,47 @@ def commit_protocol_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.col("ts").cast("date").alias("date"),
     )
-    tmp = tempfile.mkdtemp(prefix="commit_audit_")
+    tmp = materialize.scratch("commit_audit_")
     table = f"{tmp}/t"
+    sinks.write_day_partitioned(df, table)
+    sinks.write_day_partitioned(df.limit(0), table, mode="append")
+    # schema-carrying read-backs: an empty source writes zero day
+    # dirs (r10 empty sweep)
+    n_before = sinks.read_published_or_empty(spark, table, like=df).count()
+
+    crashed = False
     try:
-        sinks.write_day_partitioned(df, table)
-        sinks.write_day_partitioned(df.limit(0), table, mode="append")
-        # schema-carrying read-backs: an empty source writes zero day
-        # dirs (r10 empty sweep)
-        n_before = sinks.read_published_or_empty(spark, table, like=df).count()
+        with sinks.crash_at("journaled"):
+            sinks.compact_partitions(spark, table)
+    except RuntimeError:
+        crashed = True
+    n_crashed = sinks.read_published_or_empty(spark, table, like=df).count()
+    report = sinks.recover(table, stale_after_s=0.0)
+    n_after = sinks.read_published_or_empty(spark, table, like=df).count()
+    import os
 
-        crashed = False
-        try:
-            with sinks.crash_at("journaled"):
-                sinks.compact_partitions(spark, table)
-        except RuntimeError:
-            crashed = True
-        n_crashed = sinks.read_published_or_empty(spark, table, like=df).count()
-        report = sinks.recover(table, stale_after_s=0.0)
-        n_after = sinks.read_published_or_empty(spark, table, like=df).count()
-        import os
-
-        parts = [d for d in os.listdir(table) if d.startswith("date=")]
-        single = all(
-            len([f for f in os.listdir(os.path.join(table, p))
-                 if f.endswith(".parquet")]) == 1
-            for p in parts
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    int(n_after),
-                    len(parts),
-                    bool(crashed and n_crashed == n_before
-                         and n_after == n_before),
-                    bool(report["rolled_forward"] == 1),
-                    not os.path.isdir(os.path.join(table, "_compact")),
-                    bool(single),
-                )
-            ],
-            "n_rows long, n_partitions long, stable_under_crash boolean,"
-            " rolled_forward boolean, no_debris boolean,"
-            " compacted_single_file boolean",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    parts = [d for d in os.listdir(table) if d.startswith("date=")]
+    single = all(
+        len([f for f in os.listdir(os.path.join(table, p))
+             if f.endswith(".parquet")]) == 1
+        for p in parts
+    )
+    return spark.createDataFrame(
+        [
+            (
+                int(n_after),
+                len(parts),
+                bool(crashed and n_crashed == n_before
+                     and n_after == n_before),
+                bool(report["rolled_forward"] == 1),
+                not os.path.isdir(os.path.join(table, "_compact")),
+                bool(single),
+            )
+        ],
+        "n_rows long, n_partitions long, stable_under_crash boolean,"
+        " rolled_forward boolean, no_debris boolean,"
+        " compacted_single_file boolean",
+    )
 
 
 @register(
@@ -1934,8 +1894,6 @@ def parquet_codec_matrix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zstd ~2× smaller than snappy, lz4 fastest to decode); the audit
     proves the engine reads every variant it can write."""
     import os
-    import shutil
-    import tempfile
 
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"].where(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
@@ -1945,33 +1903,30 @@ def parquet_codec_matrix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
     )
     src = li.agg(F.count("*").alias("n"), rev.alias("r")).collect()[0]
-    tmp = tempfile.mkdtemp(prefix="codec_matrix_")
+    tmp = materialize.scratch("codec_matrix_")
     rows = []
-    try:
-        for codec in ("gzip", "lz4", "snappy", "uncompressed", "zstd"):
-            path = f"{tmp}/{codec}"
-            li.write.mode("overwrite").option("compression", codec).parquet(
-                path
+    for codec in ("gzip", "lz4", "snappy", "uncompressed", "zstd"):
+        path = f"{tmp}/{codec}"
+        li.write.mode("overwrite").option("compression", codec).parquet(
+            path
+        )
+        back = read_parquet(spark, path)
+        b = back.agg(F.count("*").alias("n"), rev.alias("r")).collect()[0]
+        nbytes = sum(
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+        rows.append(
+            (
+                codec,
+                int(b["n"]),
+                # empty slice: SUM stays NULL like the oracle's
+                None if b["r"] is None else float(b["r"]),
+                bool(b["n"] == src["n"] and b["r"] == src["r"]),
+                bool(nbytes > 0),
             )
-            back = read_parquet(spark, path)
-            b = back.agg(F.count("*").alias("n"), rev.alias("r")).collect()[0]
-            nbytes = sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-            rows.append(
-                (
-                    codec,
-                    int(b["n"]),
-                    # empty slice: SUM stays NULL like the oracle's
-                    None if b["r"] is None else float(b["r"]),
-                    bool(b["n"] == src["n"] and b["r"] == src["r"]),
-                    bool(nbytes > 0),
-                )
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
     return spark.createDataFrame(
         rows,
         "codec string, n_rows long, revenue double,"
@@ -2008,8 +1963,6 @@ def compaction_binpack_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     row counts; the engine verifies per-partition equality file by
     file after a genuine re-listing."""
     import os
-    import shutil
-    import tempfile
 
     from .. import sinks
 
@@ -2018,51 +1971,48 @@ def compaction_binpack_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value",
         F.col("ts").cast("date").alias("date"),
     )
-    tmp = tempfile.mkdtemp(prefix="binpack_audit_")
+    tmp = materialize.scratch("binpack_audit_")
     table = f"{tmp}/t"
-    try:
-        # two fragmented loads → multiple small files per partition;
-        # schema-carrying read-backs tolerate an empty source (zero
-        # day dirs written — r10 empty sweep)
-        sinks.write_day_partitioned(df, table)
-        sinks.write_day_partitioned(df.limit(0), table, mode="append")
-        n_before = sinks.read_published_or_empty(spark, table, like=df).count()
-        sinks.compact_partitions(spark, table, max_records_per_file=150)
-        n_after = sinks.read_published_or_empty(spark, table, like=df).count()
-        per_day = {
-            r["date"]: r["n"]
-            for r in df.groupBy("date").agg(F.count("*").alias("n")).collect()
-        }
-        # per-partition expected file count: ceil(rows / 150)
-        import datetime as _dt
+    # two fragmented loads → multiple small files per partition;
+    # schema-carrying read-backs tolerate an empty source (zero
+    # day dirs written — r10 empty sweep)
+    sinks.write_day_partitioned(df, table)
+    sinks.write_day_partitioned(df.limit(0), table, mode="append")
+    n_before = sinks.read_published_or_empty(spark, table, like=df).count()
+    sinks.compact_partitions(spark, table, max_records_per_file=150)
+    n_after = sinks.read_published_or_empty(spark, table, like=df).count()
+    per_day = {
+        r["date"]: r["n"]
+        for r in df.groupBy("date").agg(F.count("*").alias("n")).collect()
+    }
+    # per-partition expected file count: ceil(rows / 150)
+    import datetime as _dt
 
-        ok = True
-        parts = [d for d in os.listdir(table) if d.startswith("date=")]
-        for p in parts:
-            day = _dt.date.fromisoformat(p.split("=", 1)[1])
-            nfiles = len(
-                [f for f in os.listdir(os.path.join(table, p))
-                 if f.endswith(".parquet")]
-            )
-            if nfiles != -(-per_day[day] // 150):
-                ok = False
-        return spark.createDataFrame(
-            [
-                (
-                    int(n_after),
-                    len(parts),
-                    int(sum(-(-n // 150) for n in per_day.values())),
-                    bool(ok),
-                    bool(n_before == n_after),
-                    not os.path.isdir(os.path.join(table, "_compact")),
-                )
-            ],
-            "n_rows long, n_partitions long, expected_files long,"
-            " file_counts_match boolean, rows_stable boolean,"
-            " no_debris boolean",
+    ok = True
+    parts = [d for d in os.listdir(table) if d.startswith("date=")]
+    for p in parts:
+        day = _dt.date.fromisoformat(p.split("=", 1)[1])
+        nfiles = len(
+            [f for f in os.listdir(os.path.join(table, p))
+             if f.endswith(".parquet")]
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        if nfiles != -(-per_day[day] // 150):
+            ok = False
+    return spark.createDataFrame(
+        [
+            (
+                int(n_after),
+                len(parts),
+                int(sum(-(-n // 150) for n in per_day.values())),
+                bool(ok),
+                bool(n_before == n_after),
+                not os.path.isdir(os.path.join(table, "_compact")),
+            )
+        ],
+        "n_rows long, n_partitions long, expected_files long,"
+        " file_counts_match boolean, rows_stable boolean,"
+        " no_debris boolean",
+    )
 
 
 @register(
@@ -2092,8 +2042,6 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses the same exactly-once partitioned writer — evolution is a
     query + a sink, not a special engine mode."""
     import os
-    import shutil
-    import tempfile
 
     from .. import sinks
 
@@ -2102,47 +2050,44 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "value",
         F.col("ts").cast("date").alias("date"),
     )
-    tmp = tempfile.mkdtemp(prefix="part_evo_")
-    try:
-        sinks.write_day_partitioned(day, f"{tmp}/by_day")
-        day_parts = len(
-            [d for d in os.listdir(f"{tmp}/by_day") if d.startswith("date=")]
-        )
-        # schema-carrying read-backs: an empty source writes zero
-        # partition dirs at either grain (r10 empty sweep)
-        evolved = sinks.read_published_or_empty(
-            spark, f"{tmp}/by_day", like=day
-        ).withColumn("month", F.date_format("date", "yyyy-MM"))
-        sinks.write_day_partitioned(
-            evolved, f"{tmp}/by_month", partition_field="month"
-        )
-        month_dirs = [
-            d for d in os.listdir(f"{tmp}/by_month")
-            if d.startswith("month=")
-        ]
-        n_after = sinks.read_published_or_empty(
-            spark, f"{tmp}/by_month", like=evolved, partition_field="month"
-        ).count()
-        n_src = day.count()
-        return spark.createDataFrame(
-            [
-                (
-                    int(n_after),
-                    day_parts,
-                    len(month_dirs),
-                    bool(n_after == n_src),
-                    bool(
-                        month_dirs
-                        and all(len(m) == len("month=2024-01")
-                                for m in month_dirs)
-                    ),
-                )
-            ],
-            "n_rows long, day_partitions long, month_partitions long,"
-            " rows_stable boolean, layout_is_monthly boolean",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = materialize.scratch("part_evo_")
+    sinks.write_day_partitioned(day, f"{tmp}/by_day")
+    day_parts = len(
+        [d for d in os.listdir(f"{tmp}/by_day") if d.startswith("date=")]
+    )
+    # schema-carrying read-backs: an empty source writes zero
+    # partition dirs at either grain (r10 empty sweep)
+    evolved = sinks.read_published_or_empty(
+        spark, f"{tmp}/by_day", like=day
+    ).withColumn("month", F.date_format("date", "yyyy-MM"))
+    sinks.write_day_partitioned(
+        evolved, f"{tmp}/by_month", partition_field="month"
+    )
+    month_dirs = [
+        d for d in os.listdir(f"{tmp}/by_month")
+        if d.startswith("month=")
+    ]
+    n_after = sinks.read_published_or_empty(
+        spark, f"{tmp}/by_month", like=evolved, partition_field="month"
+    ).count()
+    n_src = day.count()
+    return spark.createDataFrame(
+        [
+            (
+                int(n_after),
+                day_parts,
+                len(month_dirs),
+                bool(n_after == n_src),
+                bool(
+                    month_dirs
+                    and all(len(m) == len("month=2024-01")
+                            for m in month_dirs)
+                ),
+            )
+        ],
+        "n_rows long, day_partitions long, month_partitions long,"
+        " rows_stable boolean, layout_is_monthly boolean",
+    )
 
 
 @register(
@@ -2215,6 +2160,22 @@ def _final_plan(df: DataFrame) -> str:
     plans a separate LIMIT query and leaves this one unexecuted)."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     return plan.split("== Initial Plan ==")[0]
+
+
+_NAN = object()
+
+
+def _row_multiset(rows) -> Counter:
+    """``rows`` as a multiset of tuples with every float NaN replaced by
+    one sentinel: two result sets compare equal exactly when they hold
+    the same rows the same number of times, NaN matching NaN (a NaN
+    group total from a non-finite source value is the same through any
+    plan, but NaN != NaN would read as a divergence — r11 extremes
+    sweep)."""
+    return Counter(
+        tuple(_NAN if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in rows
+    )
 
 
 _AQE_SKEW_ORACLE = """
@@ -2473,19 +2434,7 @@ def aqe_coalesce_partitions_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     coalesced = "coalesced" in co_plan and "coalesced" not in ctl_plan
     reduced = co_parts < ctl_parts and ctl_parts == 64
 
-    # NaN-safe: a NaN group total (non-finite price in the source) is
-    # the same with and without coalescing, but NaN != NaN would read
-    # as a coalesce-changed-the-result failure (r11 extremes sweep)
-    def _canon(rows):
-        return sorted(
-            tuple(
-                "NaN" if isinstance(v, float) and math.isnan(v) else v
-                for v in r
-            )
-            for r in rows
-        )
-
-    matches = _canon(co_rows) == _canon(ctl_rows)
+    matches = _row_multiset(co_rows) == _row_multiset(ctl_rows)
     return spark.createDataFrame(
         [
             (r["g"], r["n_orders"], r["total_value"], coalesced, reduced, matches)
@@ -2526,9 +2475,6 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins row/day counts and the generation-2 total. Protocol cost is
     O(#partitions) renames per table; the journal write is the single
     commit point for the whole set."""
-    import shutil
-    import tempfile
-
     from .. import sinks
 
     ev = load_tables(spark, sf_dir, "events")["events"].select(
@@ -2546,114 +2492,111 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return fact, rollup
 
-    tmp = tempfile.mkdtemp(prefix="multi_swap_audit_")
+    tmp = materialize.scratch("multi_swap_audit_")
     fact_t, roll_t = f"{tmp}/a_fact", f"{tmp}/b_rollup"
+    f1, r1 = gen(1)
+    sinks.publish_tables_atomic(spark, [(f1, fact_t), (r1, roll_t)])
+    # schema-carrying read-backs throughout: an empty source
+    # publishes zero day partitions (r10 empty sweep)
+    v1_rollup = {
+        r["date"]: r["day_value"]
+        for r in sinks.read_published_or_empty(
+            spark, roll_t, like=r1
+        ).collect()
+    }
+
+    f2, r2 = gen(2)
+    crashed = False
     try:
-        f1, r1 = gen(1)
-        sinks.publish_tables_atomic(spark, [(f1, fact_t), (r1, roll_t)])
-        # schema-carrying read-backs throughout: an empty source
-        # publishes zero day partitions (r10 empty sweep)
-        v1_rollup = {
-            r["date"]: r["day_value"]
-            for r in sinks.read_published_or_empty(
-                spark, roll_t, like=r1
-            ).collect()
-        }
+        with sinks.crash_at("table_done:t0"):
+            sinks.publish_tables_atomic(spark, [(f2, fact_t), (r2, roll_t)])
+    except RuntimeError:
+        crashed = True
 
-        f2, r2 = gen(2)
-        crashed = False
-        try:
-            with sinks.crash_at("table_done:t0"):
-                sinks.publish_tables_atomic(spark, [(f2, fact_t), (r2, roll_t)])
-        except RuntimeError:
-            crashed = True
-
-        mixed_fact_total = sinks.read_published_or_empty(
-            spark, fact_t, like=f2
-        ).agg(F.round(F.sum("value"), 2)).first()[0] or 0.0
-        mixed_rollup = {
-            r["date"]: r["day_value"]
-            for r in sinks.read_published_or_empty(
-                spark, roll_t, like=r2
-            ).collect()
-        }
-        report = sinks.recover(fact_t, stale_after_s=0.0)
-
-        fact_df = sinks.read_published_or_empty(spark, fact_t, like=f2)
-        # row count + recovered total in ONE action (r13 optimization)
-        f_row = fact_df.agg(
-            F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("t")
-        ).first()
-        n_fact, total = f_row["n"], f_row["t"] or 0.0
-        refreshed = fact_df.groupBy("date").agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("day_value"),
-        )
-        stored = sinks.read_published_or_empty(
+    mixed_fact_total = sinks.read_published_or_empty(
+        spark, fact_t, like=f2
+    ).agg(F.round(F.sum("value"), 2)).first()[0] or 0.0
+    mixed_rollup = {
+        r["date"]: r["day_value"]
+        for r in sinks.read_published_or_empty(
             spark, roll_t, like=r2
-        ).select("date", "n_events", "day_value")
-        # both sides appear twice in the symmetric-difference union —
-        # persist the day-grain frames so the published-fact scan
-        # behind `refreshed` (and the rollup read) runs once, and fold
-        # the n_days readout into the persisted `stored` (r13)
-        refreshed = refreshed.persist()
-        stored = stored.persist()
-        n_days = stored.count()
-        # one action for the symmetric-difference cardinality instead
-        # of two — same exceptAll semantics (r13 optimization)
-        diff = (
-            refreshed.exceptAll(stored)
-            .unionAll(stored.exceptAll(refreshed))
-            .count()
-        )
-        refreshed.unpersist(blocking=False)
-        stored.unpersist(blocking=False)
-        import os
+        ).collect()
+    }
+    report = sinks.recover(fact_t, stale_after_s=0.0)
 
-        return spark.createDataFrame(
-            [
-                (
-                    int(n_fact),
-                    int(n_days),
-                    float(total),
-                    bool(
-                        crashed
-                        # rollup still gen 1 / fact gen 2 — NaN-safe:
-                        # a NaN day total (non-finite value in the
-                        # source) is the same NaN in both generations'
-                        # readbacks, but NaN != NaN would read as
-                        # "not mixed" (r11 extremes sweep)
-                        and set(mixed_rollup) == set(v1_rollup)
-                        and all(
-                            mixed_rollup[k] == v1_rollup[k]
-                            or (
-                                isinstance(mixed_rollup[k], float)
-                                and isinstance(v1_rollup[k], float)
-                                and math.isnan(mixed_rollup[k])
-                                and math.isnan(v1_rollup[k])
-                            )
-                            for k in v1_rollup
+    fact_df = sinks.read_published_or_empty(spark, fact_t, like=f2)
+    # row count + recovered total in ONE action (r13 optimization)
+    f_row = fact_df.agg(
+        F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("t")
+    ).first()
+    n_fact, total = f_row["n"], f_row["t"] or 0.0
+    refreshed = fact_df.groupBy("date").agg(
+        F.count("*").alias("n_events"),
+        F.round(F.sum("value"), 2).alias("day_value"),
+    )
+    stored = sinks.read_published_or_empty(
+        spark, roll_t, like=r2
+    ).select("date", "n_events", "day_value")
+    # both sides appear twice in the symmetric-difference union —
+    # persist the day-grain frames so the published-fact scan
+    # behind `refreshed` (and the rollup read) runs once, and fold
+    # the n_days readout into the persisted `stored` (r13)
+    refreshed = refreshed.persist()
+    stored = stored.persist()
+    n_days = stored.count()
+    # one action for the symmetric-difference cardinality instead
+    # of two — same exceptAll semantics (r13 optimization)
+    diff = (
+        refreshed.exceptAll(stored)
+        .unionAll(stored.exceptAll(refreshed))
+        .count()
+    )
+    refreshed.unpersist(blocking=False)
+    stored.unpersist(blocking=False)
+    import os
+
+    return spark.createDataFrame(
+        [
+            (
+                int(n_fact),
+                int(n_days),
+                float(total),
+                bool(
+                    crashed
+                    # rollup still gen 1 / fact gen 2 — NaN-safe:
+                    # a NaN day total (non-finite value in the
+                    # source) is the same NaN in both generations'
+                    # readbacks, but NaN != NaN would read as
+                    # "not mixed" (r11 extremes sweep)
+                    and set(mixed_rollup) == set(v1_rollup)
+                    and all(
+                        mixed_rollup[k] == v1_rollup[k]
+                        or (
+                            isinstance(mixed_rollup[k], float)
+                            and isinstance(v1_rollup[k], float)
+                            and math.isnan(mixed_rollup[k])
+                            and math.isnan(v1_rollup[k])
                         )
-                        and (
-                            abs(mixed_fact_total - total) < 0.02
-                            or (
-                                math.isnan(mixed_fact_total)
-                                and math.isnan(total)
-                            )
+                        for k in v1_rollup
+                    )
+                    and (
+                        abs(mixed_fact_total - total) < 0.02
+                        or (
+                            math.isnan(mixed_fact_total)
+                            and math.isnan(total)
                         )
-                    ),
-                    bool(report["rolled_forward"] == 1),
-                    bool(diff == 0),
-                    not os.path.isdir(os.path.join(fact_t, "_compact"))
-                    and not os.path.isdir(os.path.join(roll_t, "_compact")),
-                )
-            ],
-            "n_fact_rows long, n_days long, total_value double,"
-            " crash_left_tables_mixed boolean, recovery_converged boolean,"
-            " rollup_matches_fact boolean, no_debris boolean",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+                    )
+                ),
+                bool(report["rolled_forward"] == 1),
+                bool(diff == 0),
+                not os.path.isdir(os.path.join(fact_t, "_compact"))
+                and not os.path.isdir(os.path.join(roll_t, "_compact")),
+            )
+        ],
+        "n_fact_rows long, n_days long, total_value double,"
+        " crash_left_tables_mixed boolean, recovery_converged boolean,"
+        " rollup_matches_fact boolean, no_debris boolean",
+    )
 
 
 _JOIN_COST_ORACLE = """
@@ -2726,21 +2669,8 @@ def join_order_cost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # NaN-safe row canonicalization: a NaN revenue (non-finite price
-    # in the source) is the same through both strategies, but
-    # NaN != NaN would read as a strategy divergence (r11 extremes
-    # sweep)
-    def _canon_rows(rows):
-        return {
-            tuple(
-                "NaN" if isinstance(v, float) and math.isnan(v) else v
-                for v in r
-            )
-            for r in rows
-        }
-
     bcast = star()
-    bcast_rows = _canon_rows(bcast.collect())
+    bcast_rows = _row_multiset(bcast.collect())
     bcast_plan = _final_plan(bcast)
     with scoped_conf(
         spark,
@@ -2750,7 +2680,7 @@ def join_order_cost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     ):
         smj = star()
-        smj_rows = _canon_rows(smj.collect())
+        smj_rows = _row_multiset(smj.collect())
         smj_plan = _final_plan(smj)
 
     db_tables = {
@@ -2857,117 +2787,112 @@ def zstd_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     before it). Row content round-trips identically from both files;
     DuckDB value-checks count/cardinality/sum."""
     import os
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"].select(
         "l_returnflag", "l_extendedprice"
     )
-    tmp = tempfile.mkdtemp(prefix="zstd_audit_")
-    try:
-        a_dir, b_dir = f"{tmp}/dict", f"{tmp}/nodict"
+    tmp = materialize.scratch("zstd_audit_")
+    a_dir, b_dir = f"{tmp}/dict", f"{tmp}/nodict"
 
-        # The two probe writes MUST run sequentially: they carry
-        # CONFLICTING per-writer hadoop options, and concurrent parquet
-        # write jobs in one session leak such options between each
-        # other (measured on vanilla Spark 4.1 — 2-4 of 10 concurrent
-        # dict/nodict write pairs came out with BOTH files encoded the
-        # same way, in either direction, even with the option set
-        # explicitly on both writers; r13 optimization round, reverted
-        # concurrency). Concurrent writes with IDENTICAL options (the
-        # staged-publish pools in sinks.py) are unaffected — a leaked
-        # value equals the job's own.
-        def _write(forced_plain: bool) -> None:
-            w = li.coalesce(1).write.option("compression", "zstd")
-            if forced_plain:
-                w = w.option("parquet.enable.dictionary", "false")
-            w.parquet(b_dir if forced_plain else a_dir)
+    # The two probe writes MUST run sequentially: they carry
+    # CONFLICTING per-writer hadoop options, and concurrent parquet
+    # write jobs in one session leak such options between each
+    # other (measured on vanilla Spark 4.1 — 2-4 of 10 concurrent
+    # dict/nodict write pairs came out with BOTH files encoded the
+    # same way, in either direction, even with the option set
+    # explicitly on both writers; r13 optimization round, reverted
+    # concurrency). Concurrent writes with IDENTICAL options (the
+    # staged-publish pools in sinks.py) are unaffected — a leaked
+    # value equals the job's own.
+    def _write(forced_plain: bool) -> None:
+        w = li.coalesce(1).write.option("compression", "zstd")
+        if forced_plain:
+            w = w.option("parquet.enable.dictionary", "false")
+        w.parquet(b_dir if forced_plain else a_dir)
 
-        _write(False)
-        _write(True)
+    _write(False)
+    _write(True)
 
-        def footer(d: str):
-            f = next(
-                x for x in os.listdir(d) if x.endswith(".parquet")
-            )
-            md = pq.ParquetFile(os.path.join(d, f)).metadata
-            if md.num_row_groups == 0:
-                # footer-only file from an empty write: no pages, so
-                # no encodings/sizes to inspect (r10 empty sweep)
-                return None
-            out = {}
-            for i in range(md.num_columns):
-                col = md.row_group(0).column(i)
-                encs = set(col.encodings)
-                size = sum(
-                    md.row_group(g).column(i).total_compressed_size
-                    for g in range(md.num_row_groups)
-                )
-                out[col.path_in_schema] = (col.compression, encs, size)
-            return out
-
-        fa, fb = footer(a_dir), footer(b_dir)
-        dict_encs = {"PLAIN_DICTIONARY", "RLE_DICTIONARY"}
-        if fa is None or fb is None:
-            # empty source: every encoding claim holds vacuously,
-            # matching the oracle's literal TRUEs (r10 empty sweep)
-            both_zstd = default_dict = nodict_plain = dict_smaller = True
-        else:
-            both_zstd = all(
-                v[0] == "ZSTD" for v in list(fa.values()) + list(fb.values())
-            )
-            default_dict = bool(fa["l_returnflag"][1] & dict_encs)
-            nodict_plain = not any(
-                v[1] & dict_encs for v in fb.values()
-            )
-            dict_smaller = fa["l_returnflag"][2] < fb["l_returnflag"][2]
-
-        ra = read_parquet(spark, a_dir)
-        rb = read_parquet(spark, b_dir)
-        agg = lambda df: df.agg(  # noqa: E731
-            F.count("*").alias("n_rows"),
-            F.countDistinct("l_returnflag").alias("n_flags"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
-        ).first()
-        # the two round-trip readouts are independent actions (and
-        # carry no writer options, so the write-option leak above
-        # cannot touch them)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa_, fb_ = pool.submit(agg, ra), pool.submit(agg, rb)
-            va, vb = fa_.result(), fb_.result()
-
-        # NaN-safe: a NaN total (non-finite price in the source) still
-        # round-trips identically, but NaN != NaN would read as a
-        # failed round-trip (r11 extremes sweep)
-        def _eq(x, y):
-            if isinstance(x, float) and isinstance(y, float):
-                return x == y or (math.isnan(x) and math.isnan(y))
-            return x == y
-
-        return spark.createDataFrame(
-            [
-                (
-                    va["n_rows"],
-                    va["n_flags"],
-                    va["total_price"],
-                    bool(both_zstd),
-                    bool(default_dict),
-                    bool(nodict_plain),
-                    bool(dict_smaller),
-                    bool(all(_eq(x, y) for x, y in zip(tuple(va), tuple(vb)))),
-                )
-            ],
-            "n_rows long, n_flags long, total_price double,"
-            " both_zstd boolean, default_dict_encoded boolean,"
-            " nodict_plain_only boolean, dict_smaller_on_lowcard boolean,"
-            " roundtrip_equal boolean",
+    def footer(d: str):
+        f = next(
+            x for x in os.listdir(d) if x.endswith(".parquet")
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        md = pq.ParquetFile(os.path.join(d, f)).metadata
+        if md.num_row_groups == 0:
+            # footer-only file from an empty write: no pages, so
+            # no encodings/sizes to inspect (r10 empty sweep)
+            return None
+        out = {}
+        for i in range(md.num_columns):
+            col = md.row_group(0).column(i)
+            encs = set(col.encodings)
+            size = sum(
+                md.row_group(g).column(i).total_compressed_size
+                for g in range(md.num_row_groups)
+            )
+            out[col.path_in_schema] = (col.compression, encs, size)
+        return out
+
+    fa, fb = footer(a_dir), footer(b_dir)
+    dict_encs = {"PLAIN_DICTIONARY", "RLE_DICTIONARY"}
+    if fa is None or fb is None:
+        # empty source: every encoding claim holds vacuously,
+        # matching the oracle's literal TRUEs (r10 empty sweep)
+        both_zstd = default_dict = nodict_plain = dict_smaller = True
+    else:
+        both_zstd = all(
+            v[0] == "ZSTD" for v in list(fa.values()) + list(fb.values())
+        )
+        default_dict = bool(fa["l_returnflag"][1] & dict_encs)
+        nodict_plain = not any(
+            v[1] & dict_encs for v in fb.values()
+        )
+        dict_smaller = fa["l_returnflag"][2] < fb["l_returnflag"][2]
+
+    ra = read_parquet(spark, a_dir)
+    rb = read_parquet(spark, b_dir)
+    agg = lambda df: df.agg(  # noqa: E731
+        F.count("*").alias("n_rows"),
+        F.countDistinct("l_returnflag").alias("n_flags"),
+        F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
+    ).first()
+    # the two round-trip readouts are independent actions (and
+    # carry no writer options, so the write-option leak above
+    # cannot touch them)
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fa_, fb_ = pool.submit(agg, ra), pool.submit(agg, rb)
+        va, vb = fa_.result(), fb_.result()
+
+    # NaN-safe: a NaN total (non-finite price in the source) still
+    # round-trips identically, but NaN != NaN would read as a
+    # failed round-trip (r11 extremes sweep)
+    def _eq(x, y):
+        if isinstance(x, float) and isinstance(y, float):
+            return x == y or (math.isnan(x) and math.isnan(y))
+        return x == y
+
+    return spark.createDataFrame(
+        [
+            (
+                va["n_rows"],
+                va["n_flags"],
+                va["total_price"],
+                bool(both_zstd),
+                bool(default_dict),
+                bool(nodict_plain),
+                bool(dict_smaller),
+                bool(all(_eq(x, y) for x, y in zip(tuple(va), tuple(vb)))),
+            )
+        ],
+        "n_rows long, n_flags long, total_price double,"
+        " both_zstd boolean, default_dict_encoded boolean,"
+        " nodict_plain_only boolean, dict_smaller_on_lowcard boolean,"
+        " roundtrip_equal boolean",
+    )
 
 
 _STATS_STALE_ORACLE = """
@@ -3009,16 +2934,12 @@ def stats_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision sequence. AQE (re-enabled for the value runs) is the
     runtime backstop the engine's own aqe_broadcast_demotion_audit
     proves — this row proves why the backstop is needed."""
-    import shutil
-    import tempfile
-
     tabs = load_tables(spark, sf_dir, "orders", "lineitem", "nation")
     dim_name = "stale_stats_dim"
-    loc = tempfile.mkdtemp(prefix="stale_stats_dim_")
+    loc = materialize.scratch("stale_stats_dim_")
 
     def scrub() -> None:
         spark.sql(f"DROP TABLE IF EXISTS {dim_name}")
-        shutil.rmtree(loc, ignore_errors=True)
 
     def q() -> DataFrame:
         return (
@@ -3054,23 +2975,8 @@ def stats_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"n_name STRING) USING parquet LOCATION '{loc}'"
             )
             spark.sql(f"ANALYZE TABLE {dim_name} COMPUTE STATISTICS")
-            # NaN-safe row canonicalization: a NaN total (non-finite
-            # price in the source) is stable across the three runs,
-            # but NaN != NaN would read as instability (r11 extremes
-            # sweep)
-            def _canon(rows):
-                return {
-                    tuple(
-                        "NaN"
-                        if isinstance(v, float) and math.isnan(v)
-                        else v
-                        for v in r
-                    )
-                    for r in rows
-                }
-
             fresh = static_plan()
-            fresh_rows = _canon(q().collect())
+            fresh_rows = _row_multiset(q().collect())
 
             # bulk-append ~60k NON-MATCHING rows OUT OF BAND: straight
             # to the location, never through the catalog — REFRESH makes
@@ -3082,11 +2988,11 @@ def stats_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).write.mode("append").parquet(loc)
             spark.sql(f"REFRESH TABLE {dim_name}")
             stale = static_plan()
-            stale_rows = _canon(q().collect())
+            stale_rows = _row_multiset(q().collect())
 
             spark.sql(f"ANALYZE TABLE {dim_name} COMPUTE STATISTICS")
             refreshed = static_plan()
-            refreshed_rows = _canon(q().collect())
+            refreshed_rows = _row_multiset(q().collect())
             # data-condition the plan-shape claim: the re-analyzed
             # plan is only REQUIRED to shuffle when the refreshed
             # catalog size actually exceeds the broadcast threshold —
@@ -3186,107 +3092,102 @@ def parquet_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational side table can't give."""
     import glob as _glob
     import os
-    import shutil
-    import tempfile
 
     ev = load_tables(spark, sf_dir, "events")["events"].select(
         "event_id", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="pq_bloom_audit_")
-    try:
-        (
-            ev.coalesce(1)
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#event_id", "true")
-            .option("parquet.bloom.filter.expected.ndv#event_id", "20000")
-            .option("parquet.bloom.filter.enabled#user_id", "true")
-            .option("parquet.bloom.filter.expected.ndv#user_id", "1000")
-            .parquet(f"{tmp}/bloomed")
+    tmp = materialize.scratch("pq_bloom_audit_")
+    (
+        ev.coalesce(1)
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#event_id", "true")
+        .option("parquet.bloom.filter.expected.ndv#event_id", "20000")
+        .option("parquet.bloom.filter.enabled#user_id", "true")
+        .option("parquet.bloom.filter.expected.ndv#user_id", "1000")
+        .parquet(f"{tmp}/bloomed")
+    )
+    ev.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/control")
+
+    def bloom_offsets(path_glob: str) -> dict:
+        f = _glob.glob(path_glob)[0]
+        jvm = spark._jvm
+        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(f),
+            spark._jsc.hadoopConfiguration(),
         )
-        ev.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/control")
-
-        def bloom_offsets(path_glob: str) -> dict:
-            f = _glob.glob(path_glob)[0]
-            jvm = spark._jvm
-            infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                jvm.org.apache.hadoop.fs.Path(f),
-                spark._jsc.hadoopConfiguration(),
-            )
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-                infile
-            )
-            try:
-                if reader.getFooter().getBlocks().size() == 0:
-                    # footer-only file from an empty write: no row
-                    # group, no bloom headers (r10 empty sweep)
-                    return None
-                rg = reader.getFooter().getBlocks().get(0)
-                out = {}
-                for i in range(rg.getColumns().size()):
-                    col = rg.getColumns().get(i)
-                    out[col.getPath().toDotString()] = (
-                        col.getBloomFilterOffset()
-                    )
-                return out
-            finally:
-                reader.close()
-
-        offs = bloom_offsets(f"{tmp}/bloomed/*.parquet")
-        ctl_offs = bloom_offsets(f"{tmp}/control/*.parquet")
-        size_b = os.path.getsize(_glob.glob(f"{tmp}/bloomed/*.parquet")[0])
-        size_c = os.path.getsize(_glob.glob(f"{tmp}/control/*.parquet")[0])
-
-        back = read_parquet(spark, f"{tmp}/bloomed")
-        # row count + value sum + point key in ONE action over one
-        # scan of the bloomed file instead of three (r13 optimization;
-        # count(lit(1)) ≡ count())
-        b_row = back.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("tv"),
-            F.min("event_id").alias("pk"),
-        ).first()
-        n_rows, tv, point_key = b_row["n"], b_row["tv"], b_row["pk"]
-        # empty source: SUM stays NULL like the oracle's, the point
-        # probe finds nothing, and the footer claims hold vacuously
-        # (r10 empty sweep)
-        total_value = None if tv is None else round(float(tv), 2)
-        n_point = back.filter(F.col("event_id") == point_key).count()
-        src = ev.agg(
-            F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("v")
-        ).first()
-        if offs is None or ctl_offs is None:
-            bloom_written = dict_suppressed = size_increased = True
-        else:
-            bloom_written = bool(
-                offs["event_id"] > 0 and ctl_offs["event_id"] == -1
-            )
-            dict_suppressed = bool(offs["user_id"] == -1)
-            size_increased = bool(size_b > size_c)
-        sv = None if src["v"] is None else float(src["v"])
-        # NaN-safe: a NaN total (non-finite value in the source) still
-        # round-trips exactly, but NaN != NaN would read as a failed
-        # round-trip (r11 extremes sweep)
-        totals_equal = total_value == sv or (
-            isinstance(total_value, float)
-            and isinstance(sv, float)
-            and math.isnan(total_value)
-            and math.isnan(sv)
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            infile
         )
-        return spark.createDataFrame(
-            [
-                (
-                    n_rows,
-                    total_value,
-                    n_point,
-                    bloom_written,
-                    dict_suppressed,
-                    size_increased,
-                    n_rows == src["n"] and totals_equal,
+        try:
+            if reader.getFooter().getBlocks().size() == 0:
+                # footer-only file from an empty write: no row
+                # group, no bloom headers (r10 empty sweep)
+                return None
+            rg = reader.getFooter().getBlocks().get(0)
+            out = {}
+            for i in range(rg.getColumns().size()):
+                col = rg.getColumns().get(i)
+                out[col.getPath().toDotString()] = (
+                    col.getBloomFilterOffset()
                 )
-            ],
-            "n_rows long, total_value double, n_point_rows long,"
-            " bloom_written boolean, dict_col_suppressed boolean,"
-            " size_increased boolean, roundtrip_exact boolean",
+            return out
+        finally:
+            reader.close()
+
+    offs = bloom_offsets(f"{tmp}/bloomed/*.parquet")
+    ctl_offs = bloom_offsets(f"{tmp}/control/*.parquet")
+    size_b = os.path.getsize(_glob.glob(f"{tmp}/bloomed/*.parquet")[0])
+    size_c = os.path.getsize(_glob.glob(f"{tmp}/control/*.parquet")[0])
+
+    back = read_parquet(spark, f"{tmp}/bloomed")
+    # row count + value sum + point key in ONE action over one
+    # scan of the bloomed file instead of three (r13 optimization;
+    # count(lit(1)) ≡ count())
+    b_row = back.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.sum("value"), 2).alias("tv"),
+        F.min("event_id").alias("pk"),
+    ).first()
+    n_rows, tv, point_key = b_row["n"], b_row["tv"], b_row["pk"]
+    # empty source: SUM stays NULL like the oracle's, the point
+    # probe finds nothing, and the footer claims hold vacuously
+    # (r10 empty sweep)
+    total_value = None if tv is None else round(float(tv), 2)
+    n_point = back.filter(F.col("event_id") == point_key).count()
+    src = ev.agg(
+        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("v")
+    ).first()
+    if offs is None or ctl_offs is None:
+        bloom_written = dict_suppressed = size_increased = True
+    else:
+        bloom_written = bool(
+            offs["event_id"] > 0 and ctl_offs["event_id"] == -1
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        dict_suppressed = bool(offs["user_id"] == -1)
+        size_increased = bool(size_b > size_c)
+    sv = None if src["v"] is None else float(src["v"])
+    # NaN-safe: a NaN total (non-finite value in the source) still
+    # round-trips exactly, but NaN != NaN would read as a failed
+    # round-trip (r11 extremes sweep)
+    totals_equal = total_value == sv or (
+        isinstance(total_value, float)
+        and isinstance(sv, float)
+        and math.isnan(total_value)
+        and math.isnan(sv)
+    )
+    return spark.createDataFrame(
+        [
+            (
+                n_rows,
+                total_value,
+                n_point,
+                bloom_written,
+                dict_suppressed,
+                size_increased,
+                n_rows == src["n"] and totals_equal,
+            )
+        ],
+        "n_rows long, total_value double, n_point_rows long,"
+        " bloom_written boolean, dict_col_suppressed boolean,"
+        " size_increased boolean, roundtrip_exact boolean",
+    )

@@ -16,9 +16,7 @@ reads (``state_sized_shuffle``), not a constant.
 from __future__ import annotations
 
 import glob
-import hashlib
 import os
-import tempfile
 from contextlib import contextmanager
 from typing import Iterable
 
@@ -28,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators import materialize
 from ..session import scoped_conf
 from ..sinks import _local_fs_path, spark_lists, write_day_partitioned
 
@@ -269,18 +268,14 @@ def read_event_stream(spark: SparkSession, source: str) -> DataFrame:
 
     ``source`` may be a directory (the normal streaming landing zone)
     or a single parquet file — Spark's file source requires a
-    directory, so a lone file is staged behind a symlink dir."""
+    directory, so a lone file is staged behind a symlink in invocation
+    scratch (``operators/materialize``)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if os.path.isfile(source):
-        staged = os.path.join(
-            tempfile.gettempdir(),
-            "stream_src_" + hashlib.sha1(source.encode()).hexdigest()[:12],
-        )
-        os.makedirs(staged, exist_ok=True)
+        staged = materialize.scratch("lone_file_")
         link = os.path.join(staged, os.path.basename(source))
-        if not os.path.exists(link):
-            os.symlink(source, link)
+        os.symlink(os.path.abspath(source), link)
         source = staged
     if _ts_is_parquet_nanos(source):
         raw = spark.readStream.schema(_event_schema(T.LongType())).parquet(source)

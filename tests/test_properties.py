@@ -686,6 +686,30 @@ def test_library_stages_only_under_the_temp_dir():
     assert not offenders, offenders
 
 
+def test_query_scratch_comes_only_from_materialize():
+    """Every directory a query writes is an entry of its invocation
+    (``materialize.scratch``) or the one process-lived stage
+    (``materialize.stage``), both under the per-process root: no
+    module under plans/ or streaming/ imports ``tempfile``."""
+    import ast
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    root = pathlib.Path(lib.__file__).parent
+    offenders = []
+    paths = [*root.glob("plans/**/*.py"), *root.glob("streaming/**/*.py")]
+    for path in sorted(paths):
+        for node in ast.walk(ast.parse(path.read_text())):
+            names = (
+                [a.name for a in node.names] if isinstance(node, ast.Import)
+                else [node.module] if isinstance(node, ast.ImportFrom) else []
+            )
+            if "tempfile" in names:
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
+
+
 def test_plans_read_parquet_tables_only_through_the_footer_helper():
     """A bare ``spark.read.parquet(path)`` infers the schema in a Spark
     job; every table read in plans/ goes through

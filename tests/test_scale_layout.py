@@ -430,3 +430,16 @@ class TestPartitionPruning:
 
         with pytest.raises(Exception):
             spark.read.parquet(path).filter(F.col("k") == 3).count()
+
+
+def test_audit_row_comparison_counts_duplicates_and_matches_nan():
+    """The strategy audits (AQE coalesce, join order, stale stats)
+    compare results as row multisets: a strategy that duplicates a
+    group row differs, and a NaN total equals a NaN total."""
+    from facebook_ads_bigquery_etl_spark.plans.warehouse import _row_multiset
+
+    rows = [("a", 1, float("nan")), ("b", 2, 0.5)]
+    assert _row_multiset(rows) == _row_multiset(list(reversed(rows)))
+    assert _row_multiset([("a", 1, float("nan"))]) == _row_multiset([("a", 1, float("nan"))])
+    assert _row_multiset(rows + rows[:1]) != _row_multiset(rows)
+    assert _row_multiset([("a", 1, None)]) != _row_multiset([("a", 1, float("nan"))])

@@ -13,6 +13,16 @@ silently coerce, so this is a real operator:
   a filter. Returns (valid, quarantined) DataFrames; both derive from
   one scan (Catalyst reuses it) and neither collects to the driver.
 
+The layer is built as SQL text: the projection is one ``selectExpr``
+and the REQUIRED predicate one ``F.expr``. Built through the Column
+API, every column, cast, alias and ``|`` is its own py4j round trip
+(and a captured call site), so building the ~12-column Insights
+layer cost ~1,100 driver round trips — as much driver time as Spark
+spends on a day's rows. As text it costs a few dozen, one per column
+in the argument list of ``selectExpr`` plus a constant. Every name is
+backquoted (:func:`quote`), so a name holding a dot, space or
+backtick is one column, never a nested-field path.
+
 At 100 TB: both operators are embarrassingly parallel single-pass maps
 with full predicate/column pushdown below them — no shuffle, no skew
 surface, no driver involvement.
@@ -25,14 +35,37 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _cast_to(col: Column, dtype: T.DataType) -> Column:
-    # try_cast, not cast: Spark 4 runs ANSI mode by default, where a
-    # failed CAST aborts the job. The reference's semantic is BigQuery
-    # insert-time coercion where a bad value rejects the ROW — so bad
-    # casts become NULL here and the REQUIRED-enforcement operator
-    # routes the row to quarantine. ISO dates ("yyyy-MM-dd",
-    # reference main.py:100,136) are directly try_cast-able to DATE.
-    return col.try_cast(dtype)
+def quote(name: str) -> str:
+    """``name`` as one backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_type(dtype: T.DataType) -> str:
+    """``dtype`` as SQL type text that parses back to it: struct field
+    names are backquoted and keep NOT NULL. The text cannot say
+    containsNull=False / valueContainsNull=False — arrays and maps
+    parse back with NULL elements allowed."""
+    if isinstance(dtype, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{quote(f.name)}: {sql_type(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+            for f in dtype.fields
+        ) + ">"
+    if isinstance(dtype, T.ArrayType):
+        return f"ARRAY<{sql_type(dtype.elementType)}>"
+    if isinstance(dtype, T.MapType):
+        return f"MAP<{sql_type(dtype.keyType)}, {sql_type(dtype.valueType)}>"
+    return dtype.simpleString()
+
+
+def _non_null_containers(dtype: T.DataType) -> bool:
+    if isinstance(dtype, T.StructType):
+        return any(_non_null_containers(f.dataType) for f in dtype.fields)
+    if isinstance(dtype, T.ArrayType):
+        return not dtype.containsNull or _non_null_containers(dtype.elementType)
+    if isinstance(dtype, T.MapType):
+        return (not dtype.valueContainsNull or _non_null_containers(dtype.keyType)
+                or _non_null_containers(dtype.valueType))
+    return False
 
 
 def finite_or_null(col: Column) -> Column:
@@ -54,29 +87,39 @@ def apply_schema(df: DataFrame, target: T.StructType, rename: dict[str, str] | N
     ``rename`` maps source→target column names (the reference renames
     ``date_start`` → ``date``, main.py:204). Columns missing from the
     input become typed NULLs (caught later by REQUIRED enforcement).
+
+    try_cast, not cast: Spark 4 runs ANSI mode by default, where a
+    failed CAST aborts the job. The reference's semantic is BigQuery
+    insert-time coercion where a bad value rejects the ROW — so bad
+    casts become NULL here and the REQUIRED-enforcement operator
+    routes the row to quarantine. ISO dates ("yyyy-MM-dd", reference
+    main.py:100,136) are directly try_cast-able to DATE.
+
+    A target array or map that forbids NULL elements raises ValueError:
+    SQL type text cannot say so, and a cast that silently allowed them
+    would hand back a different schema than asked for.
     """
-    rename = rename or {}
-    src_for = {dst: src for src, dst in rename.items()}
+    src_for = {dst: src for src, dst in (rename or {}).items()}
+    present = set(df.columns)
     cols = []
     for field in target.fields:
+        if _non_null_containers(field.dataType):
+            raise ValueError(
+                f"apply_schema: {field.name!r} has an array or map without NULL "
+                f"elements, which a SQL cast cannot produce: {field.dataType}"
+            )
         src = src_for.get(field.name, field.name)
-        if src in df.columns:
-            cols.append(_cast_to(F.col(src), field.dataType).alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
+        dtype = sql_type(field.dataType)
+        value = f"try_cast({quote(src)} AS {dtype})" if src in present else f"CAST(NULL AS {dtype})"
+        cols.append(f"{value} AS {quote(field.name)}")
+    return df.selectExpr(*cols)
 
 
 def required_violation_predicate(target: T.StructType) -> Column:
     """Boolean column: true iff any REQUIRED (nullable=False) field is
     NULL — including casts that failed and became NULL."""
-    preds = [F.col(f.name).isNull() for f in target.fields if not f.nullable]
-    if not preds:
-        return F.lit(False)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
+    preds = [f"{quote(f.name)} IS NULL" for f in target.fields if not f.nullable]
+    return F.expr(" OR ".join(preds) or "false")
 
 
 def split_required_violations(df: DataFrame, target: T.StructType) -> tuple[DataFrame, DataFrame]:

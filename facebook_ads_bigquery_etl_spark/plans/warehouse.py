@@ -2860,11 +2860,14 @@ def zstd_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     # the two round-trip readouts are independent actions (and
     # carry no writer options, so the write-option leak above
-    # cannot touch them)
+    # cannot touch them); each pool target carries the caller's job
+    # group, description and tags
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa_, fb_ = pool.submit(agg, ra), pool.submit(agg, rb)
+        fa_, fb_ = (pool.submit(inheritable_thread_target(spark)(agg), df) for df in (ra, rb))
         va, vb = fa_.result(), fb_.result()
 
     # NaN-safe: a NaN total (non-finite price in the source) still

@@ -32,6 +32,7 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterator
 
 from py4j.protocol import Py4JJavaError
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -921,15 +922,10 @@ def _publish(
         # Spark job and none alone saturates the cluster, so the smaller
         # tables' jobs back-fill the big table's task tail instead of
         # waiting for it. The journal is written only after EVERY write
-        # returns, so a crash mid-staging leaves a journal-less run. The
-        # job description is thread-local: re-pinned in each worker so
-        # UI and profiler attribution survive.
-        sc = spark.sparkContext
-        desc = sc.getLocalProperty("spark.job.description")
-
+        # returns, so a crash mid-staging leaves a journal-less run. Job
+        # group, description and tags are thread-local: each pool target
+        # carries a copy of the caller's, so its jobs are the caller's.
         def stage(i: int) -> None:
-            if desc is not None:
-                sc.setJobDescription(desc)
             write_day_partitioned(
                 dfs[i],
                 ops.join(ops.join(run_dir, f"t{i}"), "data"),
@@ -945,7 +941,8 @@ def _publish(
         else:
             with ThreadPoolExecutor(max_workers=min(3, len(dfs))) as pool:
                 errs = [f.exception() for f in
-                        [pool.submit(stage, i) for i in range(len(dfs))]]
+                        [pool.submit(inheritable_thread_target(spark)(stage), i)
+                         for i in range(len(dfs))]]
             for e in errs:
                 if e is not None:
                     raise e

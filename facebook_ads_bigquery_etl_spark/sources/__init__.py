@@ -21,7 +21,7 @@ from .transport import (
 
 
 def register_all(spark) -> None:
-    """Register both connectors on a session (idempotent).
+    """Register the connectors a session does not hold yet (idempotent).
 
     The DataSource class is cloudpickled to Spark's Python worker
     processes, which do NOT inherit the driver's ``sys.path`` — a
@@ -29,6 +29,11 @@ def register_all(spark) -> None:
     deserialization. Registering the package for pickle-BY-VALUE makes
     the connectors self-contained (pure-Python, no binary deps), so
     they run on any executor without shipping the repo.
+
+    A registration pickles the class and costs tens of py4j round trips,
+    and Spark logs a WARN when it replaces a name, so a connector the
+    session already holds (every event after a session's first) is
+    left as it is; a new session (``spark.newSession()``) holds none.
     """
     import facebook_ads_bigquery_etl_spark as pkg
     from pyspark import cloudpickle
@@ -39,9 +44,10 @@ def register_all(spark) -> None:
     # session) — enable it here so every entry path (ETL runner, query
     # library, user session) gets the same pushdown-capable connector.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(FacebookInsightsDataSource)
-    spark.dataSource.register(CurrencyLayerDataSource)
-    spark.dataSource.register(BigQueryLocalDataSource)
+    held = spark._jsparkSession.sessionState().dataSourceManager()
+    for source in (FacebookInsightsDataSource, CurrencyLayerDataSource, BigQueryLocalDataSource):
+        if not held.dataSourceExists(source.name()):
+            spark.dataSource.register(source)
 
 
 __all__ = [

@@ -230,3 +230,131 @@ class TestEndToEndRunner:
         got, write_jobs = jobs_of(lambda: write_day_partitioned(frame, str(tmp_path / "bare")))
         assert got == (rows, 0) and len(write_jobs) > 0
         assert len(event_jobs) == len(write_jobs)
+
+
+class TestTransformBuildCost:
+    """The cast, normalize and REQUIRED layer is SQL text, so building
+    it costs a few dozen py4j round trips (one per column passed to
+    ``selectExpr`` plus a constant) where the Column API cost ~1,100 —
+    as much driver time as Spark spends on a day's rows."""
+
+    # transform_insights(raw).schema.json() as the Column-API layer gave it
+    SCHEMA_JSON = (
+        '{"fields":[{"metadata":{},"name":"date","nullable":true,"type":"date"},'
+        '{"metadata":{},"name":"ad_id","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"ad_name","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"adset_id","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"adset_name","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"campaign_id","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"campaign_name","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"clicks","nullable":true,"type":"long"},'
+        '{"metadata":{},"name":"impressions","nullable":true,"type":"long"},'
+        '{"metadata":{},"name":"spend","nullable":true,"type":"double"},'
+        '{"metadata":{},"name":"conversions","nullable":false,"type":{"containsNull":false,'
+        '"elementType":{"fields":[{"metadata":{},"name":"action_type","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"value","nullable":true,"type":"string"}],"type":"struct"},"type":"array"}},'
+        '{"metadata":{},"name":"actions","nullable":false,"type":{"containsNull":false,'
+        '"elementType":{"fields":[{"metadata":{},"name":"action_type","nullable":true,"type":"string"},'
+        '{"metadata":{},"name":"value","nullable":true,"type":"string"}],"type":"struct"},"type":"array"}}],'
+        '"type":"struct"}'
+    )
+    # (row..., REQUIRED violated) on fixture days 2025-01-01..03, by (ad_id, date)
+    ROWS = [
+        (dt.date(2025, 1, 1), "1001", "ad_1001", "201", "adset_201", "31", "Brand", 42, 1000, 12.34,
+         [("purchase", "3")], [("link_click", "30"), ("page_view", "55")], False),
+        (dt.date(2025, 1, 2), "1001", "ad_1001", "201", "adset_201", "31", "Brand", 39, 940, 11.8,
+         [("purchase", "2"), ("add_to_cart", "7")],
+         [("link_click", "28"), ("page_view", "49"), ("video_view", "12")], False),
+        (dt.date(2025, 1, 1), "1002", "ad_1002", "201", "adset_201", "31", "Brand", 17, 820, 9.5,
+         [], [], False),
+        (dt.date(2025, 1, 1), "1003", "ad_1003", "202", "adset_202", "31", "Brand", 5, 150, 1.25,
+         [], [], False),
+        (dt.date(2025, 1, 1), "2001", "ad_2001", "301", "adset_301", "32", "Performance", 88, 2400,
+         33.1, [], [("link_click", "61")], False),
+        (dt.date(2025, 1, 2), "2001", "ad_2001", "301", "adset_301", "32", "Performance", 91, 2500,
+         35.75, [("purchase", "5")], [("link_click", "66")], False),
+        (dt.date(2025, 1, 2), "2002", "ad_2002", "302", "adset_302", "32", "Performance", 0, 10, 0.0,
+         [], [], False),
+        (dt.date(2025, 1, 2), "9999", "ad_9999", "999", "adset_999", "99", "Broken", None, 100, 1.0,
+         [], [], True),
+    ]
+
+    @pytest.fixture()
+    def raw(self, spark):
+        from facebook_ads_bigquery_etl_spark.sources import register_all
+
+        register_all(spark)
+        return (
+            spark.read.format("facebook_insights")
+            .option("transport", "fixture")
+            .option("since", "2025-01-01").option("until", "2025-01-03")
+            .load()
+            .drop("ad_account")
+        )
+
+    @staticmethod
+    def _round_trips(build):
+        """(py4j round trips, result) of ``build()``, after one warm-up
+        build (first calls resolve JVM classes and functions once)."""
+        from py4j.clientserver import ClientServerConnection
+
+        build()
+        send = ClientServerConnection.send_command
+        calls = []
+
+        def counting(self, command):
+            calls.append(1)
+            return send(self, command)
+
+        ClientServerConnection.send_command = counting
+        try:
+            out = build()
+        finally:
+            ClientServerConnection.send_command = send
+        return len(calls), out
+
+    def test_build_is_a_constant_number_of_round_trips(self, raw):
+        from facebook_ads_bigquery_etl_spark.etl.facebook import transform_insights
+        from facebook_ads_bigquery_etl_spark.operators.casting import required_violation_predicate
+
+        n, _ = self._round_trips(
+            lambda: (transform_insights(raw), required_violation_predicate(SCHEMA_FACEBOOK_STAT))
+        )
+        assert n <= 40  # the Column-API layer made 1,110
+
+    def test_width_adds_at_most_one_round_trip_per_column(self, raw):
+        from pyspark.sql import types as T
+
+        from facebook_ads_bigquery_etl_spark.operators.casting import (
+            apply_schema,
+            required_violation_predicate,
+        )
+
+        fields = SCHEMA_FACEBOOK_STAT.fields
+        wide = T.StructType(
+            fields + [T.StructField(f"{f.name}_{k}", f.dataType, f.nullable)
+                      for k in range(3) for f in fields]
+        )
+        wide_raw = raw.selectExpr(
+            "*", *[f"`{c}` AS `{c}_{k}`" for k in range(3) for c in raw.columns]
+        ).withColumnRenamed("date_start", "date")
+
+        def cost(frame, target):
+            return self._round_trips(
+                lambda: (apply_schema(frame, target), required_violation_predicate(target))
+            )[0]
+
+        narrow_raw = raw.withColumnRenamed("date_start", "date")
+        added = len(wide.fields) - len(fields)
+        assert cost(wide_raw, wide) - cost(narrow_raw, SCHEMA_FACEBOOK_STAT) <= added
+
+    def test_schema_and_rows_are_the_column_api_layers(self, raw):
+        from facebook_ads_bigquery_etl_spark.etl.facebook import transform_insights
+        from facebook_ads_bigquery_etl_spark.operators.casting import required_violation_predicate
+
+        stat = transform_insights(raw)
+        assert stat.schema.json() == self.SCHEMA_JSON
+        got = stat.withColumn(
+            "_bad", required_violation_predicate(SCHEMA_FACEBOOK_STAT)
+        ).orderBy("ad_id", "date").collect()
+        assert [tuple(r) for r in got] == self.ROWS

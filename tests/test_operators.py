@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 from facebook_ads_bigquery_etl_spark.operators.asof import asof_join
 from facebook_ads_bigquery_etl_spark.operators.casting import (
     apply_schema,
+    required_violation_predicate,
     split_required_violations,
 )
 from facebook_ads_bigquery_etl_spark.operators.normalize import coalesce_repeated
@@ -69,6 +70,130 @@ class TestRequiredEnforcement:
         # x is nullable → row 1 is fine; rows 2 (bad date) and 3 (null n) quarantine
         assert valid.count() == 1 and valid.first()["n"] == 1
         assert quarantined.count() == 2
+
+
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _column_api_apply_schema(df, target, rename=None):
+    """The cast layer as it was built through the Column API, one
+    Column per field (names backquoted so a dotted name resolves)."""
+    src_for = {dst: src for src, dst in (rename or {}).items()}
+    cols = []
+    for f in target.fields:
+        src = src_for.get(f.name, f.name)
+        if src in df.columns:
+            cols.append(F.col(_q(src)).try_cast(f.dataType).alias(f.name))
+        else:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    return df.select(*cols)
+
+
+def _column_api_coalesce_repeated(df, colname, element_type):
+    in_type = df.schema[colname].dataType
+    normalized = F.transform(
+        F.coalesce(F.col(_q(colname)), F.array().cast(in_type)),
+        lambda e: F.struct(*[e[f.name].alias(f.name) for f in element_type.fields]),
+    )
+    return df.withColumn(colname, normalized.cast(T.ArrayType(element_type, containsNull=False)))
+
+
+class TestSqlTextQuoting:
+    """The cast and normalize layers are SQL text: names holding a
+    space, a dot or a backtick — top level and inside a nested struct —
+    and parameterized types must give what the Column API gave."""
+
+    INNER = T.StructType(
+        [T.StructField("in ner.x", T.StringType()), T.StructField("b`t", T.LongType())]
+    )
+    TARGET = T.StructType(
+        [
+            T.StructField("a b", T.LongType(), False),
+            T.StructField("c.d", T.DecimalType(18, 2), True),
+            T.StructField("e`f", INNER, True),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType()), True),
+            T.StructField("gone", T.DateType(), True),
+        ]
+    )
+    ELEMENT = T.StructType(
+        [T.StructField("x.y", T.StringType()), T.StructField("p q`", T.LongType())]
+    )
+
+    def _raw(self, spark):
+        inner = T.StructType(
+            [
+                T.StructField("in ner.x", T.StringType()),
+                T.StructField("b`t", T.StringType()),
+            ]
+        )
+        schema = T.StructType(
+            [
+                T.StructField("a b", T.StringType()),
+                T.StructField("src.c`d", T.StringType()),
+                T.StructField("e`f", inner),
+                T.StructField("m", T.MapType(T.StringType(), T.StringType())),
+            ]
+        )
+        return spark.createDataFrame(
+            [
+                ("7", "12.345", ("v", "3"), {"k": "1"}),
+                ("oops", "1e40", ("w", "nan?"), {"k": "x"}),
+                (None, None, None, None),
+            ],
+            schema,
+        )
+
+    def test_apply_schema_matches_column_api(self, spark):
+        raw = self._raw(spark)
+        rename = {"src.c`d": "c.d"}
+        got = apply_schema(raw, self.TARGET, rename)
+        want = _column_api_apply_schema(raw, self.TARGET, rename)
+        assert got.schema.json() == want.schema.json()
+        assert got.columns == ["a b", "c.d", "e`f", "m", "gone"]
+        assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+        import decimal
+
+        row = got.filter(F.col("`a b`") == 7).first()
+        assert row["c.d"] == decimal.Decimal("12.35") and row["m"] == {"k": 1}
+        assert tuple(row["e`f"]) == ("v", 3) and row["gone"] is None
+        # REQUIRED on a quoted name: "a b" failed its cast or was NULL
+        bad = got.filter(required_violation_predicate(self.TARGET)).collect()
+        assert len(bad) == 2 and all(r["a b"] is None for r in bad)
+
+    def test_coalesce_repeated_matches_column_api(self, spark):
+        wide = T.StructType(
+            [
+                T.StructField("x.y", T.StringType()),
+                T.StructField("p q`", T.StringType()),
+                T.StructField("junk", T.StringType()),
+            ]
+        )
+        schema = T.StructType(
+            [T.StructField("id", T.LongType()), T.StructField("ac tions.v`2", T.ArrayType(wide))]
+        )
+        df = spark.createDataFrame(
+            [(1, None), (2, []), (3, [("a", "5", "j"), ("b", None, None)]), (4, [None])],
+            schema,
+        )
+        got = coalesce_repeated(df, "ac tions.v`2", self.ELEMENT)
+        want = _column_api_coalesce_repeated(df, "ac tions.v`2", self.ELEMENT)
+        assert got.schema.json() == want.schema.json()
+        assert not got.schema["ac tions.v`2"].dataType.containsNull
+        assert sorted(got.collect()) == sorted(want.collect())
+
+    def test_predicate_without_required_fields_is_false(self, spark):
+        target = T.StructType([T.StructField("x.y", T.StringType(), True)])
+        pred = required_violation_predicate(target)
+        assert str(pred) == "Column<'false'>"
+        assert spark.range(1).select(pred.alias("p")).first()["p"] is False
+
+    def test_target_forbidding_null_elements_is_refused(self, spark):
+        target = T.StructType(
+            [T.StructField("a", T.ArrayType(T.LongType(), containsNull=False), True)]
+        )
+        with pytest.raises(ValueError, match="NULL elements"):
+            apply_schema(spark.createDataFrame([("1",)], "a string"), target)
 
 
 class TestCoalesceRepeated:

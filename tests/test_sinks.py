@@ -1075,6 +1075,41 @@ class TestMultiTableSwap:
         with pytest.raises(ValueError, match="duplicate"):
             sinks.publish_tables_atomic(spark, [(df, p), (df, p)])
 
+    def test_staging_jobs_carry_the_callers_group_description_and_tags(
+        self, spark, tmp_path
+    ):
+        """The concurrent staging writes run on pool threads; every job
+        they start is in the caller's job group, with its description
+        and tags, so cancelling the group or tag stops them too."""
+        import uuid
+
+        import facebook_ads_bigquery_etl_spark.sinks as sinks
+
+        sc = spark.sparkContext
+        tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+        group, tag = f"publish-{uuid.uuid4().hex}", f"tag-{uuid.uuid4().hex}"
+        fact, rollup = self._gen(spark, 1.0)
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, "publish under a group")
+        spark.addTag(tag)
+        try:
+            sinks.publish_tables_atomic(
+                spark, [(fact, str(tmp_path / "fact")), (rollup, str(tmp_path / "rollup"))]
+            )
+        finally:
+            spark.removeTag(tag)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        assert len(jobs) >= 2  # at least one per staged table
+        for j in jobs:
+            info = store.job(j)
+            assert info.description().get() == "publish under a group"
+            # a session tag reaches the job as "spark-session-…-<tag>"
+            assert any(t.endswith(f"-{tag}") for t in info.jobTags().mkString("\n").split("\n"))
+
 
 _ZERO = {
     "rolled_forward": 0, "rolled_back": 0, "cleaned": 0,

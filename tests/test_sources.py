@@ -220,6 +220,48 @@ class TestEndToEnd:
         )
         assert df.count() == 2 * 7  # 2 accounts × 7 ads × 1 day
 
+    def test_register_all_registers_each_connector_once_per_session(
+        self, spark, monkeypatch
+    ):
+        """A session that holds the connectors gets no new registration
+        (a re-registration re-pickles the class and logs Spark's
+        "replaced a previously registered data source" WARN); a new
+        session still gets all three."""
+        from pyspark.sql.datasource import DataSourceRegistration
+
+        registered = []
+        register = DataSourceRegistration.register
+
+        def counting(self, source):
+            registered.append((self.sparkSession, source.name()))
+            return register(self, source)
+
+        monkeypatch.setattr(DataSourceRegistration, "register", counting)
+        register_all(spark)
+        registered.clear()
+        register_all(spark)
+        assert registered == []
+        assert spark.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
+
+        fresh = spark.newSession()
+        jvm_session = spark._jvm.org.apache.spark.sql.SparkSession
+        # Spark checks a new name against the ACTIVE session's sources
+        jvm_session.setActiveSession(fresh._jsparkSession)
+        try:
+            register_all(fresh)
+        finally:
+            jvm_session.setActiveSession(spark._jsparkSession)
+        assert sorted(n for s, n in registered if s is fresh) == [
+            "bigquery_local", "currencylayer", "facebook_insights",
+        ]
+        df = (
+            fresh.read.format("facebook_insights")
+            .option("transport", "fixture")
+            .option("since", "2025-01-01").option("until", "2025-01-01")
+            .load()
+        )
+        assert df.count() == 4
+
 
 class TestStreamingInsights:
     def test_continuous_trigger_catches_up_day_by_day(self, spark, tmp_path):

@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import checkpoint
+from .materialize import checkpoint, persist
 
 
 def connected_components(
@@ -74,11 +74,9 @@ def connected_components(
     # lineage (a similarity self-join) — uncached, that whole pipeline
     # would run twice just to build sym (observed: 13 s vs 5 s on the
     # near-dup graph). sym is checkpointed (it seeds the loop and the
-    # first round reads it several times); the pair frame is released
-    # once sym is materialized.
-    e = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).persist()
+    # first round reads it several times).
+    e = persist(edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")))
     sym = e.union(e.select(F.col("dst"), F.col("src"))).transform(checkpoint)
-    e.unpersist(blocking=False)
 
     maps: list[DataFrame] = []
     cur = sym

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from . import materialize
 from .exprs import let
-from .text import tokens
+from .text import ngrams, tokens
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -155,30 +155,16 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     """n-word shingles as strings; distinct per document.
 
     The token array is LET-BOUND via ``transform(array(toks), tk ->
-    ...)[0]`` so it is evaluated exactly once per row: higher-order
-    lambdas are interpreted and Spark does no common-subexpression
-    elimination across the lambda boundary, so referencing the
-    ``tokens()`` expression directly inside the shingling lambda
-    re-ran split+filter once PER SHINGLE POSITION — O(L²) work per
-    document. At sf0.1 the docs are ~50 words so the bench win is
-    modest (decontaminate_docs best-of-3 0.72 → 0.67 s, overhead-
+    ...)[0]`` so it is evaluated exactly once per row (see
+    ``text.ngrams``). At sf0.1 the docs are ~50 words so the bench win
+    is modest (decontaminate_docs best-of-3 0.72 → 0.67 s, overhead-
     bound); at real corpus document lengths the quadratic term
     dominates — measured on 2000-word docs: 15.7 s unbound vs 0.39 s
     let-bound (40×) for the same 19,910 shingles."""
     toks = tokens(text_col)
     if n == 1:
         return F.array_distinct(toks)
-
-    def _shingle(tk: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.size(tk) - (n - 1))
-        shingled = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i, n)))
-        return F.array_distinct(
-            F.when(F.size(tk) >= n, shingled).otherwise(
-                F.array().cast("array<string>")
-            )
-        )
-
-    return let(toks, _shingle)
+    return let(toks, lambda tk: F.array_distinct(ngrams(tk, n)))
 
 
 def jaccard_pairs(

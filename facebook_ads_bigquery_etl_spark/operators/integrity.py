@@ -184,6 +184,30 @@ def partition_manifest(
     )
 
 
+def multiset_diff(a: DataFrame, b: DataFrame) -> tuple[int, int]:
+    """``(|a ∖ b|, |b ∖ a|)`` as multisets of rows — the counts
+    ``a.exceptAll(b).count()`` and ``b.exceptAll(a).count()`` give —
+    in one action that scans each side once.
+
+    Every row of ``a`` counts +1 and every row of ``b`` −1; the two
+    sides are unioned by position and grouped on every column, which
+    is the same row equality ``exceptAll`` uses (NULLs match, NaN
+    matches NaN, −0.0 matches 0.0). A group's positive net count is
+    its surplus in ``a``, a negative one its surplus in ``b``."""
+    cols = [f"c{i}" for i in range(len(a.columns))]
+    net = (
+        a.toDF(*cols).withColumn("_side", F.lit(1))
+        .unionAll(b.toDF(*cols).withColumn("_side", F.lit(-1)))
+        .groupBy(*cols)
+        .agg(F.sum("_side").alias("net"))
+    )
+    row = net.agg(
+        F.sum(F.when(F.col("net") > 0, F.col("net"))).alias("a_only"),
+        F.sum(F.when(F.col("net") < 0, -F.col("net"))).alias("b_only"),
+    ).first()
+    return row["a_only"] or 0, row["b_only"] or 0
+
+
 def manifest_diff(expected: DataFrame, actual: DataFrame) -> DataFrame:
     """Partitions whose (count, checksum) disagree — empty means the
     copy is intact. Full-outer on the partition key so missing and

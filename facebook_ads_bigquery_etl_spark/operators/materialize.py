@@ -20,6 +20,11 @@ invocation, of one of three kinds:
   Freeing it is destructive too: ``rmtree`` removes what the query
   wrote there, and unlinks symlinks without following them.
 
+Every cache and checkpoint in the library is such an entry: no other
+module calls ``persist``, ``unpersist``, ``cache`` or
+``localCheckpoint`` (a guard test in ``tests/test_properties.py``), so
+a query that raises midway leaks nothing past the next invocation.
+
 Opening an invocation frees every entry registered before it; nothing
 else frees an entry, apart from :func:`release` at teardown. Entries of
 one invocation therefore never free each other (two frames with the same

@@ -23,6 +23,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import materialize
+
 
 def count_min_sketch_of(df: DataFrame, col: str, eps: float, confidence: float, seed: int):
     """Build the corpus-wide sketch distributed (one pass, mergeable
@@ -63,24 +65,21 @@ def count_min_topk_audit(
     # narrow single-column frame — persist it once instead of running
     # the upstream tokenize+explode twice (~30% on the audit; in
     # production the exact branch disappears and with it this persist).
-    df = df.persist()
-    try:
-        cms = count_min_sketch_of(df, col, eps, confidence, seed)
-        bound = int(math.ceil(eps * cms.totalCount()))
-        exact = (
-            df.groupBy(col)
-            .agg(F.count("*").alias("n_exact"))
-            .orderBy(F.desc("n_exact"), col)
-            .limit(k)
+    df = materialize.persist(df)
+    cms = count_min_sketch_of(df, col, eps, confidence, seed)
+    bound = int(math.ceil(eps * cms.totalCount()))
+    exact = (
+        df.groupBy(col)
+        .agg(F.count("*").alias("n_exact"))
+        .orderBy(F.desc("n_exact"), col)
+        .limit(k)
+    )
+    rows = []
+    for r in exact.collect():  # k rows: bounded sketch readout, not a corpus scan
+        est = int(cms.estimateCount(r[col]))
+        rows.append(
+            (r[col], r["n_exact"], est >= r["n_exact"], est <= r["n_exact"] + bound)
         )
-        rows = []
-        for r in exact.collect():  # k rows: bounded sketch readout, not a corpus scan
-            est = int(cms.estimateCount(r[col]))
-            rows.append(
-                (r[col], r["n_exact"], est >= r["n_exact"], est <= r["n_exact"] + bound)
-            )
-    finally:
-        df.unpersist()
     return spark.createDataFrame(
         rows, schema=f"{col} string, n_exact long, cms_lower_ok boolean, cms_upper_ok boolean"
     )

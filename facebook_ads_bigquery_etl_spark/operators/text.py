@@ -29,6 +29,23 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda t: t != "")
 
 
+def ngrams(tk: Column, n: int) -> Column:
+    """Every run of ``n`` consecutive tokens of the token array ``tk``,
+    space-joined, in order and with repeats; empty when ``tk`` has fewer
+    than ``n`` tokens. ``tk`` is referenced once per gram position, so a
+    computed token array must come in let-bound (``exprs.let``):
+    Spark does no common-subexpression elimination across the lambda
+    boundary, and an unbound tokenizer re-runs per position — O(L²)
+    work per document."""
+    return F.when(
+        F.size(tk) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(tk) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 # GPT-2-style pre-tokenizer, simplified to syntax both Spark (Java
 # regex) and DuckDB (RE2) accept identically: contraction suffixes,
 # space-prefixed letter runs, space-prefixed digit runs, space-prefixed
@@ -291,24 +308,10 @@ def duplicated_ngrams(
     instead of the gram text and re-join the surviving hashes back for
     display — the plan shape is identical; the string form is kept
     here so the result is directly comparable against the oracle."""
-    # the word array is LET-BOUND so split() runs once per row —
-    # referencing it inside the transform lambda re-ran the full
-    # split once PER GRAM POSITION (no CSE across higher-order-lambda
-    # boundaries; same O(L²) pathology word_shingles documents, r13
-    # operator review)
     grams = df.select(
         F.col(id_col),
         F.explode(
-            let(
-                F.split(F.col(text_col), " "),
-                lambda wa: F.when(
-                    F.size(wa) >= n,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(wa) - (n - 1)),
-                        lambda i: F.concat_ws(" ", F.slice(wa, i, n)),
-                    ),
-                ).otherwise(F.array().cast("array<string>")),
-            )
+            let(F.split(F.col(text_col), " "), lambda wa: ngrams(wa, n))
         ).alias("gram"),
     )
     return (

@@ -2307,10 +2307,7 @@ def orders_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev value straddling a rounding/bucket boundary could otherwise
     change buckets between the counts action and the window action
     (advisor r9 finding). All actions now read one pinned
-    materialization, matching customer_rfm_segments; the pin is a
-    ``materialize.persist`` entry, freed when the next query invocation
-    opens (advisor r10: a bare persist() here leaked a CacheManager
-    entry per run)."""
+    materialization, matching customer_rfm_segments."""
     from ..operators.rank import with_global_cumsum
 
     orders = load_tables(spark, sf_dir, "orders")["orders"].withColumn(
@@ -3941,10 +3938,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the (metric DESC, custkey ASC) mixed-direction tie-break of
     the oracle exact. ``base`` is persisted because each score runs
     count + quantile + offset actions over it; the skinny
-    (custkey, score) frames join back on the unique customer key. The
-    pin is a ``materialize.persist`` entry, freed when the next query
-    invocation opens (advisor r10: bare persist() leaked a
-    CacheManager entry per run)."""
+    (custkey, score) frames join back on the unique customer key."""
 
     orders = load_tables(spark, sf_dir, "orders")["orders"]
     base = materialize.persist(

@@ -34,7 +34,7 @@ from ..operators import packing as pk
 from ..operators import similarity as sim
 from ..operators import text as tx
 from .registry import load_tables, register
-from ..operators.integrity import round_double_sql
+from ..operators.integrity import multiset_diff, round_double_sql
 
 # SQL fragments shared by the generated decimal-string ROUND oracle
 # sites below (hoisted because Python 3.11 f-string expressions
@@ -199,9 +199,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= 8)
         .select("a_id", "b_id")
     )
-    # Invocation-scoped persist, not a bare persist(): both audits
-    # consume the exact-pair frame, and the next query invocation frees
-    # the cache (a bare persist() here leaked an entry per run).
+    # both audits consume the exact-pair frame
     true_pairs = materialize.persist(dd.simhash_exact_pairs(docs, max_hamming=8))
     audit = _pair_set_audit(
         found, true_pairs.select("a_id", "b_id"), recall_floor_pct=40
@@ -1780,8 +1778,8 @@ def dedup_keep_best_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     + pointer-jumping form a 100 TB user actually deploys — AND the
     exact posting-join form over the SAME edge algebra (Jaccard ≥0.7,
     3-gram shingles), then pins full output-set equality row for row
-    (cluster_rep, kept_doc_id, cluster_size, quality_score) via
-    exceptAll both ways — the ``minhash_band_sweep_audit`` pattern
+    (cluster_rep, kept_doc_id, cluster_size, quality_score) via a
+    multiset diff both ways — the ``minhash_band_sweep_audit`` pattern
     lifted from pair level to cluster+argmax level. The DuckDB oracle
     independently recomputes the exact clusters (recursive closure
     over the exact pair set) so n_clusters and docs_covered are
@@ -1790,17 +1788,12 @@ def dedup_keep_best_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline at this operating point. Readout is bounded (5 scalars);
     both forms stay fully distributed."""
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    # r13 optimization (guide §5.1/§1.3): both cluster pipelines feed
-    # multiple readouts — persist them once instead of re-running the
-    # LSH pipeline 3x and the quadratic baseline 2x; fuse the
-    # count+sum readout into one action and the two directed exceptAll
-    # counts into one tagged union (same multiset semantics, the tag
-    # records which side each surplus row came from).
-    scale = dedup_keep_best_scale(spark, sf_dir).persist()
+    # the LSH pipeline feeds the count+sum readout and the diff
+    scale = materialize.persist(dedup_keep_best_scale(spark, sf_dir))
     exact_edges = dd.jaccard_pairs(
         docs, text_col="text", threshold=0.7, ngram=3
     ).select("a_id", "b_id")
-    exact = _keep_best_over_edges(docs, exact_edges).persist()
+    exact = _keep_best_over_edges(docs, exact_edges)
     # SUM over zero clusters reads back None; the oracle counts 0 over
     # its empty reps frame (r10 empty sweep)
     s_row = scale.agg(
@@ -1808,18 +1801,7 @@ def dedup_keep_best_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("cluster_size"), F.lit(0)).alias("cov"),
     ).first()
     n_clusters, docs_covered = s_row["n"], s_row["cov"]
-    d_row = (
-        scale.exceptAll(exact).select(F.lit(1).alias("s"))
-        .unionAll(exact.exceptAll(scale).select(F.lit(0).alias("s")))
-        .agg(
-            F.coalesce(F.sum("s"), F.lit(0)).alias("scale_only"),
-            F.coalesce(F.sum(1 - F.col("s")), F.lit(0)).alias("exact_only"),
-        )
-        .first()
-    )
-    n_scale_only, n_exact_only = d_row["scale_only"], d_row["exact_only"]
-    scale.unpersist(blocking=False)
-    exact.unpersist(blocking=False)
+    n_scale_only, n_exact_only = multiset_diff(scale, exact)
     return spark.createDataFrame(
         [
             (
@@ -1904,12 +1886,12 @@ def _semantic_keep_best_audit(
     booleans with documented floors). Readout is bounded; both forms
     stay fully distributed."""
     # the exact quadratic edge set feeds the member census, the
-    # kept-set derivation AND the precision diff — persist it once
-    # instead of re-running the all-pairs cosine per consumer (r13
-    # optimization, guide §5.1)
-    exact_edges = sim.embedding_dup_pairs(emb, threshold=0.4, exact=True).select(
-        "a_id", "b_id"
-    ).persist()
+    # kept-set derivation AND the precision diff
+    exact_edges = materialize.persist(
+        sim.embedding_dup_pairs(emb, threshold=0.4, exact=True).select(
+            "a_id", "b_id"
+        )
+    )
     n_vecs = emb.count()
     members = (
         exact_edges.select(F.col("a_id").alias("id"))
@@ -1917,18 +1899,15 @@ def _semantic_keep_best_audit(
         .distinct()
         .count()
     )
-    kept_exact = _semantic_kept_ids(emb, exact_edges).persist()
-    kept_scale = _semantic_kept_ids(emb, scale_edges).persist()
+    kept_exact = materialize.persist(_semantic_kept_ids(emb, exact_edges))
+    kept_scale = materialize.persist(_semantic_kept_ids(emb, scale_edges))
     n_kept_exact = kept_exact.count()
     n_kept_scale = kept_scale.count()
     n_dropped = n_vecs - n_kept_exact
     n_clusters_multi = members - n_dropped
-    scale_only_edges = scale_edges.exceptAll(exact_edges).count()
+    scale_only_edges = multiset_diff(scale_edges, exact_edges)[0]
     inter = kept_exact.join(kept_scale, "kept_id", "semi").count()
     union = n_kept_exact + n_kept_scale - inter
-    kept_exact.unpersist(blocking=False)
-    kept_scale.unpersist(blocking=False)
-    exact_edges.unpersist(blocking=False)
     return spark.createDataFrame(
         [
             (
@@ -3622,8 +3601,6 @@ def perplexity_curriculum_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = wc.join(F.broadcast(tot)).select(
         "w", F.log(F.col("c") / F.col("t")).alias("logp")
     )
-    # the pin is freed when the next query invocation opens (advisor
-    # r10: bare persist() leaked a CacheManager entry per run)
     pd_ = materialize.persist(
         tok.join(F.broadcast(lp), "w")
         .groupBy("doc_id")
@@ -4530,31 +4507,27 @@ def minhash_band_sweep_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     before fixing bands/rows for a corpus: it certifies the operating
     point. Per config the engine computes the banded pipeline end to
     end and diffs it against the exact posting-join baseline
-    (exceptAll both ways — a bounded-count readout, pairs are
+    (a multiset diff both ways — a bounded-count readout, pairs are
     corpus-pair-sized, not row-sized)."""
     import facebook_ads_bigquery_etl_spark.operators.dedup as dd
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    # r13 optimization (guide §5.1/§1.3): the exact posting-join
-    # baseline is identical for all three band configs — persist it
-    # once instead of recomputing it twice per config (6x); persist
-    # each config's verified pair set across its readouts; and since
-    # the declared output only carries (n_missed == 0 AND n_extra ==
-    # 0), read the symmetric-difference cardinality in ONE action —
-    # |A\B| + |B\A| = 0 is the same predicate.
-    exact = dd.jaccard_pairs(
-        docs, text_col="text", threshold=0.7, ngram=3
-    ).select("a_id", "b_id").persist()
+    # the exact posting-join baseline is the same for all three band
+    # configs, and each config's pair set feeds its count and its diff
+    exact = materialize.persist(
+        dd.jaccard_pairs(docs, text_col="text", threshold=0.7, ngram=3)
+        .select("a_id", "b_id")
+    )
     rows = []
     for bands in (8, 16, 32):
-        got = dd.minhash_dup_pairs(
-            docs, threshold=0.7, num_perm=64, bands=bands, ngram=3
-        ).select("a_id", "b_id").persist()
+        got = materialize.persist(
+            dd.minhash_dup_pairs(
+                docs, threshold=0.7, num_perm=64, bands=bands, ngram=3
+            ).select("a_id", "b_id")
+        )
         n_pairs = got.count()
-        n_diff = exact.exceptAll(got).unionAll(got.exceptAll(exact)).count()
-        got.unpersist(blocking=False)
-        rows.append((bands, 64 // bands, n_pairs, n_diff == 0))
-    exact.unpersist(blocking=False)
+        matches = multiset_diff(exact, got) == (0, 0)
+        rows.append((bands, 64 // bands, n_pairs, matches))
     return spark.createDataFrame(
         rows,
         "bands long, rows_per_band long, n_pairs long,"
@@ -4662,24 +4635,10 @@ def cross_lingual_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.exprs import let
 
-    def _shingle(tk):
-        # tk is let-bound: the normalize+split runs ONCE per row, not
-        # once per gram position (operators/exprs.let — the projection
-        # collapse would otherwise inline the regexp pipeline into
-        # every lambda reference, O(L²) per document).
-        idx = F.sequence(F.lit(1), F.size(tk) - 2)
-        grams3 = F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(tk, i, 3))
-        )
-        return F.array_distinct(
-            F.when(F.size(tk) >= 3, grams3).otherwise(
-                F.array().cast("array<string>")
-            )
-        )
-
-    grams = docs.select(
-        "doc_id", "lang", F.explode(let(norm, _shingle)).alias("g")
-    )
+    # let-bound: the normalize+split runs ONCE per row, not once per
+    # gram position
+    shingles = let(norm, lambda tk: F.array_distinct(tx.ngrams(tk, 3)))
+    grams = docs.select("doc_id", "lang", F.explode(shingles).alias("g"))
     bench = grams.filter(F.col("doc_id") % 11 == 0).select("g").distinct()
     corpus = grams.filter(F.col("doc_id") % 11 != 0)
     hits = (
@@ -5339,22 +5298,7 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the gram string would ride as an xxhash64 digest (the
     fingerprint-store pattern in ``incremental_dedup_new_docs``); the
     string form here keeps the row DuckDB-value-checkable."""
-    from ..operators.exprs import let
-    from ..operators.text import tokens
-
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-
-    def _shingle(tk):
-        idx = F.sequence(F.lit(1), F.size(tk) - 2)
-        grams3 = F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(tk, i, 3))
-        )
-        return F.array_distinct(
-            F.when(F.size(tk) >= 3, grams3).otherwise(
-                F.array().cast("array<string>")
-            )
-        )
-
     # the gram stream feeds three consumers (reference doc count, the
     # reference df table, the scored side) — materialize it once
     # (eager checkpoint) instead of replaying tokenize + shingle +
@@ -5362,7 +5306,7 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Generate now lives in the materialization pass — asserted there
     # by scripts/gen_plans.py PRE_AUDITS
     grams = docs.select(
-        "doc_id", F.explode(let(tokens("text"), _shingle)).alias("g")
+        "doc_id", F.explode(dd.word_shingles("text", 3)).alias("g")
     ).transform(materialize.checkpoint)
     ref_grams = grams.filter(F.col("doc_id") % 7 < 2)
     n_ref = ref_grams.select("doc_id").distinct().count()

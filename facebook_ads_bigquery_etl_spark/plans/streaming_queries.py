@@ -27,6 +27,7 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,7 +55,7 @@ from ..operators import casting as cst
 from ..operators import materialize
 from ..operators.exprs import knuth_bucket
 from ..operators.incremental import merge_apply
-from ..operators.integrity import round_double_sql
+from ..operators.integrity import multiset_diff, round_double_sql
 from .registry import load_tables, read_parquet, register
 
 
@@ -1181,8 +1182,13 @@ def stream_partial_session_eviction(
         shutil.rmtree(stage)
         os.utime(dst, (now + 10 * i, now + 10 * i))
 
+    # one wrap per submission: each thread gets its own copy of the
+    # caller's job group and tags
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [pool.submit(_stage_batch, i) for i in range(4)]
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(_stage_batch), i)
+            for i in range(4)
+        ]
         errs = [f.exception() for f in futs]
     for e in errs:
         if e is not None:
@@ -1260,7 +1266,7 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``multi_table_swap_audit`` proves under crash injection, here
     proven under live multi-epoch streaming. After EVERY epoch the
     audit re-reads both published tables and checks rollup ≡
-    groupBy(fact) (exceptAll both ways); a single torn publish would
+    groupBy(fact) (a multiset diff both ways); a single torn publish would
     flip ``all_epochs_consistent``. Terminal facts value-checked by
     DuckDB: fact row count, rollup cardinality, rollup-summed total
     value.
@@ -1341,21 +1347,8 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        # one action for the symmetric-difference cardinality instead
-        # of two (r13 optimization): same exceptAll semantics, half the
-        # probe jobs per epoch. Both sides appear twice in the union —
-        # persist the day×type-grain frames so the published-FACT scan
-        # + aggregation behind `derived` runs once per epoch, not twice
-        # (the probe's only table-sized input).
-        pr = pr.persist()
-        derived = derived.persist()
-        torn = (
-            pr.exceptAll(derived).unionAll(derived.exceptAll(pr)).count()
-        )
-        pr.unpersist(blocking=False)
-        derived.unpersist(blocking=False)
         audit["epochs"] += 1
-        audit["consistent"] &= torn == 0
+        audit["consistent"] &= multiset_diff(pr, derived) == (0, 0)
 
     _run(src, body=publish_batch, checkpoint=f"{work}/cp")
     fact_like = spark.createDataFrame([], src.schema).select(
@@ -1645,7 +1638,7 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     ``n_rebuild_part_scans`` (both value-checked from the slice cut
     dates — the gap is the measured saving, ~4× here and ∝ #batches
     in general). The terminal audit pins incremental ≡ full rebuild
-    (exceptAll both ways) and runs a point probe for the smallest
+    (a multiset diff both ways) and runs a point probe for the smallest
     user through the final index: no false negatives by construction,
     candidate and true partition counts exact. Same portable hash as
     the batch bloom rows, so DuckDB reproduces everything; the only
@@ -1700,19 +1693,15 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
             " n_parts_probed long, n_parts_true long,"
             " n_events_found long, incr_equals_rebuild boolean",
         )
-    # r13 optimization (guide §5.1/§1.3): fact feeds five readouts
-    # and rebuild/index appear twice in the incremental-vs-rebuild
-    # diff — persist them, read the symmetric-difference
-    # cardinality in ONE action (same exceptAll semantics), and
-    # fuse count-style readouts that share a scan into one agg
-    # (count(lit(1)) ≡ count(); coalesced SUM keeps the
-    # empty-probe 0).
-    fact = read_parquet(spark, fact_dir).persist()
-    index = read_parquet(spark, f"{work}/idx_v{state['version']}").persist()
-    rebuild = fact.select("d", bit("user_id").alias("bit")).distinct().persist()
-    diff = index.exceptAll(rebuild).unionAll(
-        rebuild.exceptAll(index)
-    ).count()
+    # fact feeds four readouts and index three; count-style readouts
+    # that share a scan are fused into one agg (count(lit(1)) ≡
+    # count(); coalesced SUM keeps the empty-probe 0)
+    fact = materialize.persist(read_parquet(spark, fact_dir))
+    index = materialize.persist(
+        read_parquet(spark, f"{work}/idx_v{state['version']}")
+    )
+    rebuild = fact.select("d", bit("user_id").alias("bit")).distinct()
+    diff = multiset_diff(index, rebuild)
     f_row = fact.agg(
         F.min("user_id").alias("u"),
         F.count(F.lit(1)).alias("n"),
@@ -1736,9 +1725,6 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     )
     n_true, n_found = t_row["n_days"], t_row["found"]
     n_index_rows = index.count()
-    index.unpersist(blocking=False)
-    rebuild.unpersist(blocking=False)
-    fact.unpersist(blocking=False)
     return spark.createDataFrame(
         [
             (
@@ -1750,7 +1736,7 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
                 n_probed,
                 n_true,
                 int(n_found),
-                diff == 0,
+                diff == (0, 0),
             )
         ],
         "n_fact_rows long, n_parts_total long, n_index_rows long,"

@@ -26,7 +26,7 @@ from ..operators import materialize
 from ..operators.expectations import constraint_audit
 from ..operators.exprs import knuth_bucket
 from ..operators.incremental import finalize, merge_states, partial_state
-from ..operators.integrity import render_scaled_int_sql
+from ..operators.integrity import multiset_diff, render_scaled_int_sql
 from ..operators.profile import column_profile
 from ..operators.scd import scd2_merge, snapshot_diff
 from ..operators.skew import salted_join
@@ -1751,7 +1751,7 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     partitions keep their existing (d, bit) rows (anti-join against
     the broadcast touched-date set), touched ones are recomputed from
     the merged fact. The audit then REBUILDS the index from scratch
-    and pins incremental ≡ rebuild (exceptAll both ways) — the
+    and pins incremental ≡ rebuild (a multiset diff both ways) — the
     invariant that makes incremental refresh safe to trust at 100 TB,
     where rebuilding the index means re-reading every partition but
     refreshing means re-reading only the day(s) a CDC batch touched.
@@ -1769,16 +1769,18 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     # replay resolution before the MERGE seam (r11 duplicates sweep):
     # a replayed event_id would trip merge_apply's duplicate-source
     # guard — resolve by the deterministic content-total order first.
-    # PERSISTED (r13 optimization, guide §5): fact0 feeds the delta,
-    # the stale index, the probe scalar AND the merge source — without
-    # the persist the resolve_replays window shuffle re-ran once per
-    # consumer (4×) inside this one audit.
-    fact0 = resolve_replays(
-        events.select(
-            "event_id", "user_id", "value", F.col("ts").cast("date").alias("d")
-        ),
-        ["event_id"],
-    ).persist()
+    # fact0 feeds the delta, the stale index, the probe scalar AND the
+    # merge source: persisted, the resolve_replays window shuffle runs
+    # once, not once per consumer.
+    fact0 = materialize.persist(
+        resolve_replays(
+            events.select(
+                "event_id", "user_id", "value",
+                F.col("ts").cast("date").alias("d"),
+            ),
+            ["event_id"],
+        )
+    )
     in_window = F.col("d") < F.lit("2024-01-11").cast("date")
     updates = fact0.filter((F.col("event_id") % 7 == 0) & in_window).select(
         "event_id", "user_id", (F.col("value") * 2).alias("value"), "d"
@@ -1796,14 +1798,15 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     delta = updates.unionByName(inserts)
     # merged feeds the refreshed slice, the from-scratch rebuild, the
-    # probe truth AND the partition census — persist it once instead
-    # of re-running the MERGE join per consumer (r13 optimization)
-    merged = merge_apply(
-        fact0,
-        delta,
-        keys=["event_id"],
-        update_set={"value": F.col("s.value")},
-    ).drop("op").persist()
+    # probe truth AND the partition census
+    merged = materialize.persist(
+        merge_apply(
+            fact0,
+            delta,
+            keys=["event_id"],
+            update_set={"value": F.col("s.value")},
+        ).drop("op")
+    )
 
     bit = lambda c: knuth_bucket(c, 1024)  # noqa: E731
     index0 = fact0.select("d", bit("user_id").alias("bit")).distinct()
@@ -1812,12 +1815,9 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
         "d", bit("user_id").alias("bit")
     ).distinct()
     kept = index0.join(F.broadcast(touched), "d", "anti")
-    incr = kept.unionByName(refreshed)
+    incr = materialize.persist(kept.unionByName(refreshed))
     rebuild = merged.select("d", bit("user_id").alias("bit")).distinct()
-    incr = incr.persist()
-    # one action for the symmetric-difference cardinality instead of
-    # two — same exceptAll semantics, half the jobs (r13 optimization)
-    diff = incr.exceptAll(rebuild).unionAll(rebuild.exceptAll(incr)).count()
+    diff = multiset_diff(incr, rebuild)
 
     probe_u = (
         fact0.filter((F.col("event_id") % 5 == 0) & in_window)
@@ -1847,9 +1847,6 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     n_parts_total = merged.select("d").distinct().count()
     n_touched = touched.count()
     n_index_rows = incr.count()
-    incr.unpersist(blocking=False)
-    merged.unpersist(blocking=False)
-    fact0.unpersist(blocking=False)
     return spark.createDataFrame(
         [
             (
@@ -1859,7 +1856,7 @@ def bloom_index_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
                 n_probed,
                 n_true,
                 int(n_found),
-                diff == 0,
+                diff == (0, 0),
             )
         ],
         "n_parts_total long, n_touched_parts long, n_index_rows long,"
@@ -2534,25 +2531,14 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 2).alias("day_value"),
     )
-    stored = sinks.read_published_or_empty(
-        spark, roll_t, like=r2
-    ).select("date", "n_events", "day_value")
-    # both sides appear twice in the symmetric-difference union —
-    # persist the day-grain frames so the published-fact scan
-    # behind `refreshed` (and the rollup read) runs once, and fold
-    # the n_days readout into the persisted `stored` (r13)
-    refreshed = refreshed.persist()
-    stored = stored.persist()
-    n_days = stored.count()
-    # one action for the symmetric-difference cardinality instead
-    # of two — same exceptAll semantics (r13 optimization)
-    diff = (
-        refreshed.exceptAll(stored)
-        .unionAll(stored.exceptAll(refreshed))
-        .count()
+    # the rollup read feeds the n_days readout and the diff
+    stored = materialize.persist(
+        sinks.read_published_or_empty(spark, roll_t, like=r2).select(
+            "date", "n_events", "day_value"
+        )
     )
-    refreshed.unpersist(blocking=False)
-    stored.unpersist(blocking=False)
+    n_days = stored.count()
+    diff = multiset_diff(refreshed, stored)
     import os
 
     return spark.createDataFrame(
@@ -2588,7 +2574,7 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ),
                 bool(report["rolled_forward"] == 1),
-                bool(diff == 0),
+                diff == (0, 0),
                 not os.path.isdir(os.path.join(fact_t, "_compact"))
                 and not os.path.isdir(os.path.join(roll_t, "_compact")),
             )

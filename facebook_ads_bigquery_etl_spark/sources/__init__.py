@@ -45,9 +45,27 @@ def register_all(spark) -> None:
     # library, user session) gets the same pushdown-capable connector.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     held = spark._jsparkSession.sessionState().dataSourceManager()
-    for source in (FacebookInsightsDataSource, CurrencyLayerDataSource, BigQueryLocalDataSource):
-        if not held.dataSourceExists(source.name()):
+    missing = [
+        source
+        for source in (FacebookInsightsDataSource, CurrencyLayerDataSource, BigQueryLocalDataSource)
+        if not held.dataSourceExists(source.name())
+    ]
+    if not missing:
+        return
+    # Spark checks a new name against the sources the JVM's ACTIVE
+    # session can look up, so registering on any other session (one
+    # from newSession(), say) fails as DATA_SOURCE_ALREADY_EXISTS
+    jvm_session = spark._jvm.org.apache.spark.sql.SparkSession
+    previous = jvm_session.getActiveSession()
+    jvm_session.setActiveSession(spark._jsparkSession)
+    try:
+        for source in missing:
             spark.dataSource.register(source)
+    finally:
+        if previous.isDefined():
+            jvm_session.setActiveSession(previous.get())
+        else:
+            jvm_session.clearActiveSession()
 
 
 __all__ = [

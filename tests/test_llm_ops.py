@@ -812,6 +812,30 @@ class TestBarrierCacheHygiene:
         inner(spark, SF_SMOKE)
         assert len(mat.inputs()) == 1
 
+    def test_query_that_raises_midway_leaks_no_cache(self, spark, monkeypatch):
+        """A query that raises after filling its caches leaves nothing
+        in the CacheManager once its invocation's entries are freed."""
+        from facebook_ads_bigquery_etl_spark.plans import QUERIES
+
+        mat.release()
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        assert cache.isEmpty()
+        calls = []
+        minhash_dup_pairs = dd.minhash_dup_pairs
+
+        def second_call_raises(*args, **kwargs):
+            calls.append(1)
+            if len(calls) == 2:
+                raise RuntimeError("boom")
+            return minhash_dup_pairs(*args, **kwargs)
+
+        monkeypatch.setattr(dd, "minhash_dup_pairs", second_call_raises)
+        with pytest.raises(RuntimeError, match="boom"):
+            QUERIES["minhash_band_sweep_audit"](spark, SF_SMOKE)
+        assert not cache.isEmpty()
+        mat.release()
+        assert cache.isEmpty()
+
 
 class TestKeepBestScalePath:
     def test_lsh_edge_keep_best_covers_all_docs(self, spark):

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from facebook_ads_bigquery_etl_spark.etl.dispatch import resolve_run_date
@@ -266,6 +266,35 @@ def test_manifest_invariant_under_layout_and_sensitive_to_edits(spark, rows, npa
     # row exists — uniqueness of input rows doesn't forbid it, so allow
     # either "flagged p0" or (collision) "checksum moved elsewhere too"
     assert any(r["p"] == p0 for r in flagged) or (p0, k0 + 1) in rows
+
+
+# --- multiset diff: the exceptAll counts both ways, in one action ----
+_DIFF_ROW = st.tuples(
+    st.sampled_from([None, 0, 1]),
+    st.sampled_from([None, float("nan"), -0.0, 0.0, 1.5]),
+    st.sampled_from([None, [], [1], [1, None]]),
+)
+
+
+@given(
+    st.lists(_DIFF_ROW, max_size=12),
+    st.lists(_DIFF_ROW, max_size=12),
+)
+@example(a=[], b=[(1, -0.0, [1])])
+@example(a=[(None, float("nan"), None)] * 2, b=[])
+@SPARK_SETTINGS
+def test_multiset_diff_equals_except_all_both_ways(spark, a, b):
+    """Duplicates keep their multiplicity, NULLs match NULLs, NaN
+    matches NaN and -0.0 matches 0.0 (scalars and array elements
+    alike), and either side may be empty."""
+    from facebook_ads_bigquery_etl_spark.operators.integrity import multiset_diff
+
+    schema = "k long, x double, arr array<long>"
+    da, db = spark.createDataFrame(a, schema), spark.createDataFrame(b, schema)
+    assert multiset_diff(da, db) == (
+        da.exceptAll(db).count(),
+        db.exceptAll(da).count(),
+    )
 
 
 # --- constraint audit: violation counts equal the injected counts ----
@@ -707,6 +736,34 @@ def test_query_scratch_comes_only_from_materialize():
             )
             if "tempfile" in names:
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_caches_come_only_from_materialize():
+    """Every cache and checkpoint in the library is an invocation entry
+    of ``operators/materialize.py``, so a query that raises between
+    building a cache and freeing it leaks nothing past the next
+    invocation: no other module calls ``persist``, ``unpersist``,
+    ``cache`` or ``localCheckpoint``."""
+    import ast
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    root = pathlib.Path(lib.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "operators" / "materialize.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("persist", "unpersist", "cache", "localCheckpoint")
+        and not (
+            isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "materialize"
+        )
+    ]
     assert not offenders, offenders
 
 

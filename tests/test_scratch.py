@@ -129,9 +129,11 @@ def test_half_built_louter_stage_is_rebuilt_whole(spark, tmp_path, monkeypatch):
 
 
 def test_partial_session_eviction_job_count(spark):
-    """Building the query runs the events checkpoint and nothing after
-    the drain: memory-sink rows already live on the driver, so no
-    action re-reads the result table."""
+    """Building the query runs the events checkpoint, the four staging
+    writes (their pool threads carry the caller's job group) and
+    nothing after the drain: memory-sink rows already live on the
+    driver, so no action re-reads the result table. The stream's
+    micro-batches run on the stream's own thread, outside the group."""
     sc = spark.sparkContext
     group = f"partial-sess-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -141,4 +143,4 @@ def test_partial_session_eviction_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert out.collect()
-    assert len(jobs) == 1
+    assert len(jobs) == 5

@@ -1102,7 +1102,9 @@ class TestMultiTableSwap:
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = tracker.getJobIdsForGroup(group)
-        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        # no new ungrouped job; the status store may have evicted old
+        # ones meanwhile (it drops the oldest 10 % past retainedJobs)
+        assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
         assert len(jobs) >= 2  # at least one per staged table
         for j in jobs:
             info = store.job(j)

@@ -262,6 +262,29 @@ class TestEndToEnd:
         )
         assert df.count() == 4
 
+    def test_register_all_on_a_session_that_is_not_active(self, spark):
+        """Spark checks a new source name against the ACTIVE session's
+        sources: a new session registers all three connectors anyway,
+        and the caller's active session is left as it was."""
+        jvm_session = spark._jvm.org.apache.spark.sql.SparkSession
+        register_all(spark)
+        fresh = spark.newSession()
+        active = jvm_session.getActiveSession()
+        register_all(fresh)
+        assert jvm_session.getActiveSession().equals(active)
+        held = fresh._jsparkSession.sessionState().dataSourceManager()
+        assert all(
+            held.dataSourceExists(n)
+            for n in ("bigquery_local", "currencylayer", "facebook_insights")
+        )
+        df = (
+            fresh.read.format("facebook_insights")
+            .option("transport", "fixture")
+            .option("since", "2025-01-01").option("until", "2025-01-01")
+            .load()
+        )
+        assert df.count() == 4
+
 
 class TestStreamingInsights:
     def test_continuous_trigger_catches_up_day_by_day(self, spark, tmp_path):

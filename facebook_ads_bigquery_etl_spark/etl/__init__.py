@@ -1,6 +1,6 @@
-"""The two reference pipelines (facebook insights, currency rates),
-DataFrame-first, plus the pub/sub-style dispatcher."""
+"""The two reference jobs (facebook insights, currency rates): the
+pub/sub-style dispatcher, the Insights transform and the runner that
+loads each day through its connector (``runner.handle_event``)."""
 
-from .facebook import transform_insights, run_facebook_pipeline  # noqa: F401
-from .currency import parse_currency_response, run_currency_pipeline  # noqa: F401
+from .facebook import transform_insights  # noqa: F401
 from .dispatch import dispatch_event  # noqa: F401

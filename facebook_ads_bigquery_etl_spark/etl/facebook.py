@@ -1,42 +1,25 @@
-"""Facebook Ads Insights pipeline — the reference's main ETL
-(reference main.py:147-221), re-expressed as DataFrame stages:
+"""Facebook Ads Insights transform — the reshaping step of the
+reference's main ETL (reference main.py:188-216), as DataFrame stages
+over the connector's raw rows (all-string scalars, optional nested
+lists):
 
-    raw records (all-string scalars, optional nested lists)
-      → apply_schema: rename date_start→date + explicit casts
-        (replaces BigQuery insert-time coercion, main.py:204-216)
-      → coalesce_repeated: missing/NULL actions|conversions → []
-        (main.py:192-201 semantics)
-      → REQUIRED enforcement: violations quarantined, not inserted
-        (BigQuery-side check in the reference, main.py:86-89)
-      → exactly-once day-partitioned, cluster-sorted write
-        (upgrading the at-least-once insert_rows_json)
+    → apply_schema: rename date_start→date + explicit casts
+      (replaces BigQuery insert-time coercion, main.py:204-216)
+    → coalesce_repeated: missing/NULL actions|conversions → []
+      (main.py:192-201 semantics)
 
-Every stage is a narrow JVM transformation; the only shuffle is the
-write's repartition-by-day. Scale-invariant by construction.
+Every stage is a narrow JVM transformation. REQUIRED enforcement and
+the day-partitioned write belong to the caller
+(``etl.runner.run_facebook_job``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.casting import apply_schema, split_required_violations
+from ..operators.casting import apply_schema
 from ..operators.normalize import coalesce_repeated
-from ..schemas import (
-    ACTION_ENTRY,
-    FACEBOOK_CLUSTERING_FIELDS,
-    FACEBOOK_PARTITION_FIELD,
-    SCHEMA_FACEBOOK_RAW,
-    SCHEMA_FACEBOOK_STAT,
-)
-from ..sinks import write_day_partitioned
-
-
-def raw_insights_df(spark: SparkSession, records: Iterable[dict]) -> DataFrame:
-    """Micro-batch of API records → typed raw DataFrame (the
-    reference's list-of-dicts IR, main.py:188-216)."""
-    return spark.createDataFrame(list(records), SCHEMA_FACEBOOK_RAW)
+from ..schemas import ACTION_ENTRY, SCHEMA_FACEBOOK_STAT
 
 
 def transform_insights(raw: DataFrame) -> DataFrame:
@@ -45,22 +28,3 @@ def transform_insights(raw: DataFrame) -> DataFrame:
     df = coalesce_repeated(df, "actions", ACTION_ENTRY)
     df = coalesce_repeated(df, "conversions", ACTION_ENTRY)
     return df
-
-
-def run_facebook_pipeline(
-    spark: SparkSession,
-    records: Iterable[dict],
-    warehouse_path: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Full slice: records → transform → (valid → warehouse,
-    quarantined returned to the caller). Returns (valid, quarantined)."""
-    valid, quarantined = split_required_violations(
-        transform_insights(raw_insights_df(spark, records)), SCHEMA_FACEBOOK_STAT
-    )
-    write_day_partitioned(
-        valid,
-        warehouse_path,
-        partition_field=FACEBOOK_PARTITION_FIELD,
-        clustering_fields=FACEBOOK_CLUSTERING_FIELDS,
-    )
-    return valid, quarantined

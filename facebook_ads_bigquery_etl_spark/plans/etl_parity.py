@@ -1,7 +1,7 @@
 """Reference-ETL parity queries, driver-checked against DuckDB.
 
 The driver's warehouse has no Facebook tables, so these queries run
-the real pipeline (etl/facebook.py) on the deterministic FB fixture
+the real transform (etl/facebook.py) on the deterministic FB fixture
 and the oracle recomputes the same result in pure SQL over VALUES
 literals rendered from the SAME fixture constants — including the
 reference's implicit-coercion semantics (TRY_CAST + REQUIRED row
@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.facebook import raw_insights_df, transform_insights
+from ..etl.facebook import transform_insights
 from ..fixtures import (
     FB_FIXTURE,
     FX_FIXTURE,
@@ -51,7 +51,8 @@ _REQUIRED_OK = (
 
 def _valid_fb(spark: SparkSession) -> DataFrame:
     valid, _ = split_required_violations(
-        transform_insights(raw_insights_df(spark, FB_FIXTURE)), SCHEMA_FACEBOOK_STAT
+        transform_insights(spark.createDataFrame(FB_FIXTURE, SCHEMA_FACEBOOK_RAW)),
+        SCHEMA_FACEBOOK_STAT,
     )
     return valid
 

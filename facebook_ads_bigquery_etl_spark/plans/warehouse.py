@@ -919,17 +919,7 @@ def dpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("value"), 2).alias("total_value"),
     )
     plain_row = plain.first()
-    # NaN-safe: a NaN total (non-finite value in the source) is the
-    # same through both plans, but NaN != NaN would read as a DPP
-    # result divergence (r11 extremes sweep)
-    dv, pv = dpp_row["total_value"], plain_row["total_value"]
-    totals_equal = dv == pv or (
-        isinstance(dv, float)
-        and isinstance(pv, float)
-        and math.isnan(dv)
-        and math.isnan(pv)
-    )
-    matches = dpp_row["n_events"] == plain_row["n_events"] and totals_equal
+    matches = _row_multiset([dpp_row]) == _row_multiset([plain_row])
     return plain.select(
         "n_events",
         "total_value",
@@ -1112,9 +1102,9 @@ def orc_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count and the 2dp-rounded revenue. DuckDB recomputes both
     from the parquet source; the engine pins the
     orc-read-equals-parquet-read booleans after genuinely reading the
-    ORC files back. Same pluggable-format seam as
-    sinks.insert_rows_via_format (reference main.py:86-89's writer
-    abstracted over format)."""
+    ORC files back. Same pluggable-format seam as the
+    ``bigquery_local`` connector writer (reference main.py:86-89's
+    writer abstracted over format)."""
     li = load_tables(spark, sf_dir, "lineitem")["lineitem"].where(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1995-02-01").cast("timestamp"))
@@ -2255,16 +2245,6 @@ def aqe_skew_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             plain_row, plain_plan = run()
 
     n_skewed = split_plan.count("skew=true")
-    # NaN-safe: a NaN total (non-finite price in the source) is the
-    # same with and without skew splitting, but NaN != NaN would read
-    # as a split-changed-the-result failure (r11 extremes sweep)
-    sv, pv = split_row["total_value"], plain_row["total_value"]
-    totals_equal = sv == pv or (
-        isinstance(sv, float)
-        and isinstance(pv, float)
-        and math.isnan(sv)
-        and math.isnan(pv)
-    )
     return spark.createDataFrame(
         [
             (
@@ -2272,7 +2252,7 @@ def aqe_skew_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 split_row["total_value"],
                 n_skewed,
                 n_skewed >= 1 and "skew=true" not in plain_plan,
-                split_row["n_rows"] == plain_row["n_rows"] and totals_equal,
+                _row_multiset([split_row]) == _row_multiset([plain_row]),
             )
         ],
         "n_rows long, total_value double, n_skewed_joins long,"
@@ -2549,22 +2529,9 @@ def multi_table_swap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 float(total),
                 bool(
                     crashed
-                    # rollup still gen 1 / fact gen 2 — NaN-safe:
-                    # a NaN day total (non-finite value in the
-                    # source) is the same NaN in both generations'
-                    # readbacks, but NaN != NaN would read as
-                    # "not mixed" (r11 extremes sweep)
-                    and set(mixed_rollup) == set(v1_rollup)
-                    and all(
-                        mixed_rollup[k] == v1_rollup[k]
-                        or (
-                            isinstance(mixed_rollup[k], float)
-                            and isinstance(v1_rollup[k], float)
-                            and math.isnan(mixed_rollup[k])
-                            and math.isnan(v1_rollup[k])
-                        )
-                        for k in v1_rollup
-                    )
+                    # rollup still gen 1 / fact gen 2
+                    and _row_multiset(mixed_rollup.items())
+                    == _row_multiset(v1_rollup.items())
                     and (
                         abs(mixed_fact_total - total) < 0.02
                         or (
@@ -2856,14 +2823,6 @@ def zstd_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         fa_, fb_ = (pool.submit(inheritable_thread_target(spark)(agg), df) for df in (ra, rb))
         va, vb = fa_.result(), fb_.result()
 
-    # NaN-safe: a NaN total (non-finite price in the source) still
-    # round-trips identically, but NaN != NaN would read as a
-    # failed round-trip (r11 extremes sweep)
-    def _eq(x, y):
-        if isinstance(x, float) and isinstance(y, float):
-            return x == y or (math.isnan(x) and math.isnan(y))
-        return x == y
-
     return spark.createDataFrame(
         [
             (
@@ -2874,7 +2833,7 @@ def zstd_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(default_dict),
                 bool(nodict_plain),
                 bool(dict_smaller),
-                bool(all(_eq(x, y) for x, y in zip(tuple(va), tuple(vb)))),
+                _row_multiset([va]) == _row_multiset([vb]),
             )
         ],
         "n_rows long, n_flags long, total_price double,"
@@ -3155,15 +3114,7 @@ def parquet_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         dict_suppressed = bool(offs["user_id"] == -1)
         size_increased = bool(size_b > size_c)
     sv = None if src["v"] is None else float(src["v"])
-    # NaN-safe: a NaN total (non-finite value in the source) still
-    # round-trips exactly, but NaN != NaN would read as a failed
-    # round-trip (r11 extremes sweep)
-    totals_equal = total_value == sv or (
-        isinstance(total_value, float)
-        and isinstance(sv, float)
-        and math.isnan(total_value)
-        and math.isnan(sv)
-    )
+    totals_equal = _row_multiset([(total_value,)]) == _row_multiset([(sv,)])
     return spark.createDataFrame(
         [
             (

@@ -1283,22 +1283,3 @@ def publish_tables_atomic_once(
         spark, "publish_tables_atomic_once", [*targets, meta_table],
         build_once, partition_field, fmt,
     )
-
-
-def insert_rows_via_format(
-    df: DataFrame, fmt: str, path: str, mode: str = "append", **options: str
-) -> str:
-    """The pluggable sink seam (reference ``insert_rows_bq``,
-    main.py:81-91): route the SAME DataFrame through any registered
-    write format — ``parquet``/``orc`` for warehouse files, or a
-    connector datasource like ``bigquery_local`` (a real BigQuery
-    connector drops into the same call) — with no pipeline changes.
-    ``mode='append'`` reproduces the reference's at-least-once
-    streaming-insert semantics; exactly-once day-scoped loads should
-    keep using :func:`write_day_partitioned`. Returns 'ok' for
-    signature parity with the reference."""
-    writer = df.write.format(fmt).mode(mode)
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    writer.save(path)
-    return "ok"

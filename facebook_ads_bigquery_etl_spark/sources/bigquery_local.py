@@ -7,7 +7,7 @@ duplicate). This datasource reproduces that interface shape on local
 storage so the sink seam is demonstrably pluggable: the SAME DataFrame
 routes through ``format("parquet")``, ``format("orc")`` or
 ``format("bigquery_local")`` with no pipeline changes (see
-sinks.insert_rows_via_format and tests/test_sinks.py).
+tests/test_sinks.py).
 
 Write protocol (the part a real connector would share):
 

@@ -202,13 +202,10 @@ class FacebookInsightsStreamReader(SimpleDataSourceStreamReader):
     (README.md:57), with the checkpoint as the cursor."""
 
     def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.accounts = [a for a in options.get("accounts", "act_demo").split(",") if a]
+        # each day is pulled by the batch reader over the same options
+        self.batch = FacebookInsightsReader(schema, options)
         self.since = options.get("since", "2025-01-01")
         self.until = options.get("until")  # None → unbounded (live)
-        self.fields = [f for f in options.get("fields", DEFAULT_FIELDS).split(",") if f]
-        self.transport_spec = options.get("transport", "fixture")
-        self.attempts = int(options.get("retries", "3"))
 
     def initialOffset(self) -> dict:  # noqa: N802
         return {"date": self.since}
@@ -230,20 +227,11 @@ class FacebookInsightsStreamReader(SimpleDataSourceStreamReader):
         return iter(out)
 
     def _pull(self, day: str):
-        transport = make_transport(self.transport_spec)
-        cols = [f.name for f in self.schema.fields]
-        wanted = [f for f in self.fields if f != "ad_account"]
-        rows = []
-        for acc in self.accounts:
-            records = with_retries(
-                lambda: transport.insights(acc, wanted, day, day),
-                attempts=self.attempts,
-            )
-            rows.extend(
-                tuple(acc if c == "ad_account" else _cell(rec.get(c), c) for c in cols)
-                for rec in records
-            )
-        return rows
+        return [
+            row
+            for acc in self.batch.accounts
+            for row in self.batch.read(_Slice(acc, day, day))
+        ]
 
 
 class FacebookInsightsDataSource(DataSource):

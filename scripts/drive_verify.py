@@ -2,7 +2,8 @@
 the driver's flow in a fresh process — vanilla hostile-timezone
 session, entry() smoke, Spark-vs-DuckDB oracle compare through the
 shared comparator (tests/oracle_check.py), and the ETL write-path probe
-(exactly-once + quarantine + day partitions).
+(two daily loads through etl.runner.handle_event: exactly-once +
+quarantine + day partitions).
 
 Run from anywhere:  python scripts/drive_verify.py [name ...]
 No names runs every oracle-backed query; names run exactly those.
@@ -45,20 +46,30 @@ for name in sys.argv[1:] or list(O):
         fails.append(name)
         print("  ", mismatch)
 
-# 3. ETL write-path probe (exactly-once + quarantine + day partitions)
-from facebook_ads_bigquery_etl_spark.etl.facebook import run_facebook_pipeline
-from facebook_ads_bigquery_etl_spark.fixtures import FB_FIXTURE
+# 3. ETL write-path probe: both fixture days through the runner and
+# the fixture connector, twice (exactly-once + quarantine + day
+# partitions); the Observation counts must match the landed rows
+from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
 
 wh = tempfile.mkdtemp()
 try:
-    valid, quarantined = run_facebook_pipeline(spark, FB_FIXTURE, wh)
-    nq = quarantined.count()
-    n1 = spark.read.parquet(wh).count()
-    run_facebook_pipeline(spark, FB_FIXTURE, wh)
-    n2 = spark.read.parquet(wh).count()
-    parts = [d for d in os.listdir(wh) if d.startswith("date=")]
+    def load():
+        res = [
+            handle_event(spark, {"data": "Z2V0X2ZhY2Vib29r", "attributes": {"date": d}}, wh)
+            for d in ("2025-01-01", "2025-01-02")
+        ]
+        landed = spark.read.parquet(res[0].warehouse_path).count()
+        written = sum(r.rows_written for r in res)
+        assert written == landed, f"observed {written} != landed {landed}"
+        return landed, sum(r.rows_quarantined for r in res)
+
+    n1, nq = load()
+    side = spark.read.parquet(os.path.join(wh, "quarantine", "facebook_stat"))
+    assert side.count() == nq, f"quarantine table {side.count()} != observed {nq}"
+    n2, nq2 = load()
+    parts = [d for d in os.listdir(os.path.join(wh, "facebook_stat")) if d.startswith("date=")]
     assert n1 == n2, f"exactly-once broken: {n1} != {n2}"
-    assert nq == 1, f"quarantine: {nq}"
+    assert nq == nq2 == 1, f"quarantine: {nq}, rerun {nq2}"
     assert parts, "no date= partition dirs"
     print(f"etl probe: rows={n1} rerun={n2} quarantined={nq} "
           f"partitions={len(parts)} OK")

@@ -797,8 +797,9 @@ def main() -> int:
         for label, ok in checks:
             out.append(f"- {'✅' if ok else '❌'} {label}")
         out.append("")
-        # keep the artifact reviewable: plan body without the codegen ids
-        body = re.sub(r"\(\d+\)", "(·)", plan)
+        # keep the artifact reviewable and stable across runs: plan body
+        # without the node ids and the exchange/broadcast plan ids
+        body = re.sub(r"\[plan_id=\d+\]", "[plan_id=·]", re.sub(r"\(\d+\)", "(·)", plan))
         out.append("```\n" + body.strip() + "\n```")
         out.append("")
     out.append("## Pre-materialization audits")

@@ -1,30 +1,24 @@
 """ETL pipeline + catalog tests (SURVEY §5.2-5.3): dispatch routing
-incl. the backfill-date path the reference crashes on, currency error
-envelopes, and exactly-once sink re-runs.
+incl. the backfill-date path the reference crashes on, and exactly-once
+re-runs of both daily jobs through the runner and their connectors.
 """
 
 from __future__ import annotations
 
+import base64
 import datetime as dt
 import os
 
 import pytest
 
-from facebook_ads_bigquery_etl_spark.etl.currency import (
-    CurrencyApiError,
-    parse_currency_response,
-    run_currency_pipeline,
-)
 from facebook_ads_bigquery_etl_spark.etl.dispatch import dispatch_event, resolve_run_date
-from facebook_ads_bigquery_etl_spark.etl.facebook import run_facebook_pipeline
+from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
 from facebook_ads_bigquery_etl_spark.fixtures import (
-    CURRENCYLAYER_ERR,
-    CURRENCYLAYER_OK,
-    FB_FIXTURE,
     PUBSUB_CURRENCY_BACKFILL_EVENT,
     PUBSUB_FACEBOOK_EVENT,
 )
 from facebook_ads_bigquery_etl_spark.schemas import SCHEMA_FACEBOOK_STAT
+from facebook_ads_bigquery_etl_spark.sources import FixtureTransport
 
 
 class TestDispatch:
@@ -49,58 +43,64 @@ class TestDispatch:
         assert resolve_run_date({"date": ""}, today=dt.date(2025, 1, 2)) == dt.date(2025, 1, 1)
 
 
+def _load(spark, wh, job, date, **attributes):
+    """One daily event through the runner and the fixture connector."""
+    event = {
+        "data": base64.b64encode(job.encode()).decode(),
+        "attributes": {"date": date, **attributes},
+    }
+    return handle_event(spark, event, wh, transport="fixture")
+
+
+def _per_day(spark, path):
+    return {
+        str(r["date"]): r["count"]
+        for r in spark.read.parquet(path).groupBy("date").count().collect()
+    }
+
+
 class TestCurrencyPipeline:
-    def test_success_envelope_parses_pair_lookup(self):
-        row = parse_currency_response(CURRENCYLAYER_OK, "USD", "UAH", dt.date(2025, 1, 1))
-        assert row == {"date": "2025-01-01", "currencies": "USDUAH", "rate": 41.25}
-
-    def test_error_envelope_raises_typed_error(self):
-        # The reference's error path itself crashes (logger.error(...)
-        # .format — reference main.py:143); ours must raise cleanly.
-        with pytest.raises(CurrencyApiError, match="invalid access key"):
-            parse_currency_response(CURRENCYLAYER_ERR, "USD", "UAH", dt.date(2025, 1, 1))
-
     def test_pipeline_writes_day_partition(self, spark, tmp_path):
-        out = str(tmp_path / "fx")
-        df = run_currency_pipeline(
-            spark, CURRENCYLAYER_OK, "USD", "UAH", dt.date(2025, 1, 1), out
-        )
-        assert df.first()["rate"] == 41.25
-        assert os.path.isdir(os.path.join(out, "date=2025-01-01"))
-        # re-run same day → replaced, not duplicated
-        run_currency_pipeline(spark, CURRENCYLAYER_OK, "USD", "UAH", dt.date(2025, 1, 1), out)
-        assert spark.read.parquet(out).count() == 1
+        res = _load(spark, str(tmp_path), "get_currency", "2025-01-02")
+        assert os.path.isdir(os.path.join(res.warehouse_path, "date=2025-01-02"))
+        want = FixtureTransport().rates("2025-01-02", "USD", ["UAH"])["quotes"]["USDUAH"]
+        rows = spark.read.parquet(res.warehouse_path).collect()
+        assert [(str(r["date"]), r["currencies"], r["rate"]) for r in rows] == [
+            ("2025-01-02", "USDUAH", want)
+        ]
+        assert (res.rows_written, res.rows_quarantined) == (1, 0)
 
 
 class TestFacebookPipeline:
     def test_rerun_is_exactly_once(self, spark, tmp_path):
-        wh = str(tmp_path / "fb")
-        valid, quarantined = run_facebook_pipeline(spark, FB_FIXTURE, wh)
-        assert quarantined.count() == 1  # the 'oops' clicks row
-        n1 = spark.read.parquet(wh).count()
-        run_facebook_pipeline(spark, FB_FIXTURE, wh)
-        assert spark.read.parquet(wh).count() == n1 == 7
+        wh = str(tmp_path)
+        for _ in range(2):
+            got = [
+                _load(spark, wh, "get_facebook", d)
+                for d in ("2025-01-01", "2025-01-02")
+            ]
+            assert [(r.rows_written, r.rows_quarantined) for r in got] == [(4, 0), (3, 1)]
+            assert spark.read.parquet(got[0].warehouse_path).count() == 7
 
     def test_partial_day_rerun_only_touches_its_partition(self, spark, tmp_path):
-        wh = str(tmp_path / "fb")
-        run_facebook_pipeline(spark, FB_FIXTURE, wh)
-        day1 = [r for r in FB_FIXTURE if r["date_start"] == "2025-01-01"][:2]
-        run_facebook_pipeline(spark, day1, wh)  # re-ingest a smaller day-1 batch
-        per_day = {
-            str(r["date"]): r["n"]
-            for r in spark.read.parquet(wh).groupBy("date").count().withColumnRenamed("count", "n").collect()
-        }
-        assert per_day == {"2025-01-01": 2, "2025-01-02": 3}  # day 2 untouched
+        # The fixture transport serves every fixture row once per
+        # account, so a one-account rerun is a smaller day-1 batch.
+        wh = str(tmp_path)
+        for d in ("2025-01-01", "2025-01-02"):
+            res = _load(spark, wh, "get_facebook", d, accounts="a,b")
+        assert _per_day(spark, res.warehouse_path) == {"2025-01-01": 8, "2025-01-02": 6}
+        _load(spark, wh, "get_facebook", "2025-01-01", accounts="a")
+        assert _per_day(spark, res.warehouse_path) == {"2025-01-01": 4, "2025-01-02": 6}
 
     def test_clustering_sort_within_files(self, spark, tmp_path):
         # The sort-on-write contract behind BigQuery-style clustering
         # (reference main.py:42,72-73): rows within each output file
         # are ordered by the clustering key, giving row-group min/max
         # pruning on campaign scans.
-        wh = str(tmp_path / "fb")
-        run_facebook_pipeline(spark, FB_FIXTURE, wh)
-        part = os.path.join(wh, "date=2025-01-02")
+        res = _load(spark, str(tmp_path), "get_facebook", "2025-01-02", accounts="a,b")
+        part = os.path.join(res.warehouse_path, "date=2025-01-02")
         files = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        assert files
         for f in files:
             ids = [
                 r["campaign_id"]
@@ -130,13 +130,13 @@ class TestEndToEndRunner:
         assert spark.read.parquet(res2.warehouse_path).count() == 3
 
     def test_currency_event_backfill_date(self, spark, tmp_path):
-        from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
-        from facebook_ads_bigquery_etl_spark.fixtures import PUBSUB_CURRENCY_BACKFILL_EVENT
-
         res = handle_event(spark, PUBSUB_CURRENCY_BACKFILL_EVENT, str(tmp_path))
         assert res.job == "get_currency" and res.run_date == "2025-01-01"
         row = spark.read.parquet(res.warehouse_path).first()
         assert row["currencies"] == "USDUAH" and row["rate"] > 0
+        # a same-day rerun replaces the day's rate, never duplicates it
+        handle_event(spark, PUBSUB_CURRENCY_BACKFILL_EVENT, str(tmp_path))
+        assert spark.read.parquet(res.warehouse_path).count() == 1
 
     def test_backfill_range_and_quarantine_table(self, spark, tmp_path):
         from facebook_ads_bigquery_etl_spark.etl.dispatch import dispatch_event

@@ -14,7 +14,7 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from facebook_ads_bigquery_etl_spark.etl.dispatch import resolve_run_date
-from facebook_ads_bigquery_etl_spark.etl.facebook import run_facebook_pipeline
+from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
 from facebook_ads_bigquery_etl_spark.operators.casting import apply_schema
 from facebook_ads_bigquery_etl_spark.fixtures import FB_FIXTURE
 from pyspark.sql import types as T
@@ -108,23 +108,29 @@ def test_write_read_roundtrip(spark, tmp_path_factory, batch):
     )
 
 
+_FB_DAYS = sorted({r["date_start"] for r in FB_FIXTURE})
+
+
 @SPARK_SETTINGS
-@given(st.lists(st.sampled_from(range(len(FB_FIXTURE))), min_size=1, max_size=4))
+@given(st.lists(st.sampled_from(_FB_DAYS), min_size=1, max_size=4))
 def test_pipeline_rerun_idempotence_under_interleavings(spark, tmp_path_factory, replays):
-    """Re-running day-batches in ANY order/multiplicity converges to
+    """Re-running daily loads in ANY order/multiplicity converges to
     the last-write state per day — never duplicates (the reference's
     at-least-once gap, main.py:86-89)."""
     wh = str(tmp_path_factory.mktemp("wh"))
-    run_facebook_pipeline(spark, FB_FIXTURE, wh)
-    baseline = spark.read.parquet(wh).count()
-    for i in replays:
-        rec = FB_FIXTURE[i]
-        if rec["clicks"] == "oops":
-            continue
-        # replay the full day containing record i (a daily re-pull)
-        day = [r for r in FB_FIXTURE if r["date_start"] == rec["date_start"]]
-        run_facebook_pipeline(spark, day, wh)
-    assert spark.read.parquet(wh).count() == baseline
+
+    def load(day):
+        event = {"data": "Z2V0X2ZhY2Vib29r", "attributes": {"date": day}}
+        return handle_event(spark, event, wh, transport="fixture")
+
+    def per_day(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).groupBy("date").count().collect())
+
+    path = [load(d) for d in _FB_DAYS][-1].warehouse_path
+    baseline = per_day(path)
+    for day in replays:
+        load(day)  # a daily re-pull of that day
+    assert per_day(path) == baseline
 
 
 # -- connected components vs a pure-python union-find reference -------------
@@ -787,6 +793,27 @@ def test_plans_read_parquet_tables_only_through_the_footer_helper():
         and node.func.attr == "parquet"
         and isinstance(node.func.value, ast.Attribute)
         and node.func.value.attr == "read"
+    ]
+    assert not offenders, offenders
+
+
+def test_etl_loads_only_through_the_connectors():
+    """Every daily load reads its day through a connector
+    (``etl.runner``); no module under etl/ builds a DataFrame from a
+    record list with ``createDataFrame``."""
+    import ast
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark.etl as etl
+
+    root = pathlib.Path(etl.__file__).parent
+    offenders = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(root.glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
     ]
     assert not offenders, offenders
 

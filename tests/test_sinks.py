@@ -16,10 +16,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from facebook_ads_bigquery_etl_spark.sinks import (
-    insert_rows_via_format,
-    write_day_partitioned,
-)
+from facebook_ads_bigquery_etl_spark.sinks import write_day_partitioned
 
 
 @pytest.fixture()
@@ -71,8 +68,8 @@ class TestFormatSwap:
 
         register_all(spark)
         pq, bq = str(tmp_path / "pq"), str(tmp_path / "bq")
-        assert insert_rows_via_format(frame, "parquet", pq) == "ok"
-        assert insert_rows_via_format(frame, "bigquery_local", bq) == "ok"
+        for fmt, path in (("parquet", pq), ("bigquery_local", bq)):
+            frame.write.format(fmt).mode("append").save(path)
         via_pq = _rows(spark.read.parquet(pq))
         js = spark.read.json(os.path.join(bq, "*.jsonl"))
         via_bq = sorted(
@@ -151,8 +148,8 @@ class TestBigQueryLocalSemantics:
 
         register_all(spark)
         bq = str(tmp_path / "bq")
-        insert_rows_via_format(frame, "bigquery_local", bq)
-        insert_rows_via_format(frame, "bigquery_local", bq)
+        frame.write.format("bigquery_local").mode("append").save(bq)
+        frame.write.format("bigquery_local").mode("append").save(bq)
         n = spark.read.json(os.path.join(bq, "*.jsonl")).count()
         assert n == 2 * frame.count()
 
@@ -161,9 +158,9 @@ class TestBigQueryLocalSemantics:
 
         register_all(spark)
         bq = str(tmp_path / "bq")
-        insert_rows_via_format(frame, "bigquery_local", bq)
+        frame.write.format("bigquery_local").mode("append").save(bq)
         one = frame.limit(1)
-        insert_rows_via_format(one, "bigquery_local", bq, mode="overwrite")
+        one.write.format("bigquery_local").mode("overwrite").save(bq)
         assert spark.read.json(os.path.join(bq, "*.jsonl")).count() == 1
 
     def test_staging_leaves_no_visible_rows_behind(self, spark, tmp_path, frame):
@@ -173,7 +170,7 @@ class TestBigQueryLocalSemantics:
 
         register_all(spark)
         bq = str(tmp_path / "bq")
-        insert_rows_via_format(frame, "bigquery_local", bq)
+        frame.write.format("bigquery_local").mode("append").save(bq)
         staged = os.listdir(os.path.join(bq, "_staging"))
         assert staged == []
         assert any(f.endswith(".jsonl") for f in os.listdir(bq))

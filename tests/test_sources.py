@@ -5,9 +5,12 @@ the error envelope the reference crashes on (reference main.py:143).
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, In, LessThan
 
+from facebook_ads_bigquery_etl_spark.fixtures import CURRENCYLAYER_ERR, CURRENCYLAYER_OK
 from facebook_ads_bigquery_etl_spark.sources import register_all
 from facebook_ads_bigquery_etl_spark.sources.currencylayer import CurrencyLayerReader
 from facebook_ads_bigquery_etl_spark.sources.facebook_insights import (
@@ -172,24 +175,32 @@ class TestTransports:
 
 
 class TestCurrencyLayerReader:
-    def test_error_envelope_raises_with_info(self):
-        class ErrTransport(FixtureTransport):
-            def rates(self, date, source, currencies):
-                return {"success": False, "error": {"info": "invalid access key"}}
+    """``CurrencyLayerReader.read`` is the one currencylayer envelope
+    check: a success envelope yields the day's row per pair, any other
+    raises ``TransportError`` with the API's info (the reference's
+    error path crashes before it can log, main.py:143)."""
 
+    @pytest.mark.parametrize("envelope, want", [
+        (CURRENCYLAYER_OK, [(dt.date(2025, 1, 1), "USDUAH", 41.25)]),
+        (CURRENCYLAYER_ERR, "invalid access key"),
+        ({"success": False, "error": None}, "unknown error"),
+    ], ids=["ok", "error", "error_none"])
+    def test_envelope(self, monkeypatch, envelope, want):
         import facebook_ads_bigquery_etl_spark.sources.currencylayer as cl
 
+        class EnvelopeTransport(FixtureTransport):
+            def rates(self, date, source, currencies):
+                return envelope
+
+        monkeypatch.setattr(cl, "make_transport", lambda spec: EnvelopeTransport())
         r = CurrencyLayerReader(
             cl.SCHEMA_EXCHANGE_RATE, {"since": "2025-01-01", "retries": "1"}
         )
-        r.transport_spec = "fixture"
-        orig = cl.make_transport
-        cl.make_transport = lambda spec: ErrTransport()
-        try:
-            with pytest.raises(TransportError, match="invalid access key"):
+        if isinstance(want, str):
+            with pytest.raises(TransportError, match=want):
                 list(r.read(r.partitions()[0]))
-        finally:
-            cl.make_transport = orig
+        else:
+            assert list(r.read(r.partitions()[0])) == want
 
 
 class TestEndToEnd:

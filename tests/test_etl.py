@@ -14,11 +14,14 @@ import pytest
 from facebook_ads_bigquery_etl_spark.etl.dispatch import dispatch_event, resolve_run_date
 from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
 from facebook_ads_bigquery_etl_spark.fixtures import (
+    CURRENCYLAYER_ERR,
     PUBSUB_CURRENCY_BACKFILL_EVENT,
     PUBSUB_FACEBOOK_EVENT,
 )
 from facebook_ads_bigquery_etl_spark.schemas import SCHEMA_FACEBOOK_STAT
 from facebook_ads_bigquery_etl_spark.sources import FixtureTransport
+from facebook_ads_bigquery_etl_spark.sources.transport import TransportError
+from tests.test_sources import read_envelope
 
 
 class TestDispatch:
@@ -60,6 +63,15 @@ def _per_day(spark, path):
 
 
 class TestCurrencyPipeline:
+    def test_error_envelope_raises_typed_error(self, monkeypatch):
+        # The reference's error path itself crashes (logger.error(...)
+        # .format — reference main.py:143); the job's connector must
+        # raise cleanly, naming the failed day and the API's info.
+        with pytest.raises(
+            TransportError, match="currencylayer error for 2025-01-01: invalid access key"
+        ):
+            read_envelope(monkeypatch, CURRENCYLAYER_ERR)
+
     def test_pipeline_writes_day_partition(self, spark, tmp_path):
         res = _load(spark, str(tmp_path), "get_currency", "2025-01-02")
         assert os.path.isdir(os.path.join(res.warehouse_path, "date=2025-01-02"))

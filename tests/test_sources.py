@@ -174,6 +174,22 @@ class TestTransports:
             )
 
 
+def read_envelope(monkeypatch, envelope):
+    """Read one day through ``CurrencyLayerReader`` with a transport
+    that answers every rates call with ``envelope``."""
+    import facebook_ads_bigquery_etl_spark.sources.currencylayer as cl
+
+    class EnvelopeTransport(FixtureTransport):
+        def rates(self, date, source, currencies):
+            return envelope
+
+    monkeypatch.setattr(cl, "make_transport", lambda spec: EnvelopeTransport())
+    r = CurrencyLayerReader(
+        cl.SCHEMA_EXCHANGE_RATE, {"since": "2025-01-01", "retries": "1"}
+    )
+    return list(r.read(r.partitions()[0]))
+
+
 class TestCurrencyLayerReader:
     """``CurrencyLayerReader.read`` is the one currencylayer envelope
     check: a success envelope yields the day's row per pair, any other
@@ -182,25 +198,18 @@ class TestCurrencyLayerReader:
 
     @pytest.mark.parametrize("envelope, want", [
         (CURRENCYLAYER_OK, [(dt.date(2025, 1, 1), "USDUAH", 41.25)]),
-        (CURRENCYLAYER_ERR, "invalid access key"),
         ({"success": False, "error": None}, "unknown error"),
-    ], ids=["ok", "error", "error_none"])
+    ], ids=["ok", "error_none"])
     def test_envelope(self, monkeypatch, envelope, want):
-        import facebook_ads_bigquery_etl_spark.sources.currencylayer as cl
-
-        class EnvelopeTransport(FixtureTransport):
-            def rates(self, date, source, currencies):
-                return envelope
-
-        monkeypatch.setattr(cl, "make_transport", lambda spec: EnvelopeTransport())
-        r = CurrencyLayerReader(
-            cl.SCHEMA_EXCHANGE_RATE, {"since": "2025-01-01", "retries": "1"}
-        )
         if isinstance(want, str):
             with pytest.raises(TransportError, match=want):
-                list(r.read(r.partitions()[0]))
+                read_envelope(monkeypatch, envelope)
         else:
-            assert list(r.read(r.partitions()[0])) == want
+            assert read_envelope(monkeypatch, envelope) == want
+
+    def test_error_envelope_raises_with_info(self, monkeypatch):
+        with pytest.raises(TransportError, match="invalid access key"):
+            read_envelope(monkeypatch, CURRENCYLAYER_ERR)
 
 
 class TestEndToEnd:

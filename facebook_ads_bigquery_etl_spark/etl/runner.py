@@ -24,7 +24,7 @@ from ..schemas import (
     FACEBOOK_PARTITION_FIELD,
     SCHEMA_FACEBOOK_STAT,
 )
-from ..sinks import write_day_partitioned
+from ..sinks import clear_partition, write_day_partitioned
 from ..sources import register_all
 from .dispatch import JobRequest, dispatch_event
 from .facebook import transform_insights
@@ -71,16 +71,23 @@ def run_facebook_job(
         clustering_fields=FACEBOOK_CLUSTERING_FIELDS,
         reject=bad,
     )
+    # Rejected rows land in a side table in the target schema, as cast:
+    # a value that failed its cast (clicks 'oops') is NULL there, every
+    # other column keeps its typed value. The reference loses these rows
+    # to opaque BigQuery insert errors (main.py:86-89); here they stay
+    # queryable. The side table holds each run date once, like the main
+    # table: a rerun replaces its run date's rows, and a rerun that
+    # rejects nothing clears them on the driver without a Spark job.
+    side = f"{warehouse_root}/quarantine/facebook_stat"
     if n_quarantined:
-        # Rejected rows land in a side table in the target schema, as
-        # cast: a value that failed its cast (clicks 'oops') is NULL
-        # there, every other column keeps its typed value. The
-        # reference loses these rows to opaque BigQuery insert errors
-        # (main.py:86-89); here they stay queryable. This rare path
-        # pulls the day from the connector a second time.
-        stat.filter(bad).withColumn("_quarantined_on", F.lit(d)).write.mode(
-            "append"
-        ).parquet(f"{warehouse_root}/quarantine/facebook_stat")
+        # This rare path pulls the day from the connector a second time.
+        write_day_partitioned(
+            stat.filter(bad).withColumn("_quarantined_on", F.lit(d)),
+            side,
+            partition_field="_quarantined_on",
+        )
+    else:
+        clear_partition(side, "_quarantined_on", d)
     return JobResult("get_facebook", d, n_written, n_quarantined, path)
 
 
@@ -107,13 +114,12 @@ def handle_event(
     event: dict,
     warehouse_root: str,
     transport: str = "fixture",
-    today=None,
 ) -> JobResult:
     """Decode + route + run one daily job (the reference's whole
     lifecycle, SURVEY §3). ``transport`` picks the API backend
     (fixture/synthetic for tests, http in production)."""
     register_all(spark)
-    req = dispatch_event(event, today=today)
+    req = dispatch_event(event)
     if req.job == "get_facebook":
         return run_facebook_job(spark, req, warehouse_root, transport)
     return run_currency_job(spark, req, warehouse_root, transport)

@@ -39,7 +39,6 @@ def bloom_pruned_join(
     fact: DataFrame,
     dim: DataFrame,
     on: Column | Sequence[str],
-    how: str = "inner",
 ) -> DataFrame:
     """Join shaped for runtime Bloom pruning of the fact side. On a
     real cluster (TB-scale fact scans) Catalyst's default thresholds
@@ -48,7 +47,7 @@ def bloom_pruned_join(
     :func:`ensure_runtime_bloom` to the FINAL DataFrame of the query
     (injection happens at optimization time, so the conf scope must
     cover the plan that actually executes, not an intermediate)."""
-    return fact.join(dim, on, how)
+    return fact.join(dim, on)
 
 
 def ensure_runtime_bloom(df: DataFrame) -> DataFrame:

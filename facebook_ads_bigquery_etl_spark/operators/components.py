@@ -53,12 +53,7 @@ from pyspark.sql import functions as F
 from .materialize import checkpoint, persist
 
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_rounds: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     """(node, comp) for every node appearing in ``edges``; ``comp`` is
     the minimum node id in the node's connected component.
 
@@ -75,7 +70,7 @@ def connected_components(
     # would run twice just to build sym (observed: 13 s vs 5 s on the
     # near-dup graph). sym is checkpointed (it seeds the loop and the
     # first round reads it several times).
-    e = persist(edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")))
+    e = persist(edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")))
     sym = e.union(e.select(F.col("dst"), F.col("src"))).transform(checkpoint)
 
     maps: list[DataFrame] = []
@@ -139,11 +134,7 @@ def connected_components(
     return final
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, edges: DataFrame) -> DataFrame:
     """Per document: (id, cluster_rep, cluster_size, keep). Documents
     not in any dup pair are their own singleton cluster. ``keep`` marks
     the canonical representative — the dedup'd corpus is
@@ -164,25 +155,25 @@ def dedup_clusters(
     # identity, and cluster_size counts identities, not delivery
     # copies. distinct() is a no-op on clean input.
     labeled = (
-        docs.select(F.col(id_col))
+        docs.select(F.col("doc_id"))
         .distinct()
-        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
+        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select(
-            id_col, F.coalesce("comp", F.col(id_col)).alias("__comp")
+            "doc_id", F.coalesce("comp", F.col("doc_id")).alias("__comp")
         )
     )
     # same shuffle count as the old groupBy(cluster_rep) form: one
     # agg + one join, both keyed on the component label
     per_comp = labeled.groupBy("__comp").agg(
-        F.min(id_col).alias("cluster_rep"),
+        F.min("doc_id").alias("cluster_rep"),
         F.count("*").alias("cluster_size"),
     )
     return (
         labeled.join(per_comp, "__comp")
         .select(
-            id_col,
+            "doc_id",
             "cluster_rep",
             "cluster_size",
-            (F.col(id_col) == F.col("cluster_rep")).alias("keep"),
+            (F.col("doc_id") == F.col("cluster_rep")).alias("keep"),
         )
     )

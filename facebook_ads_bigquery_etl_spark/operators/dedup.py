@@ -171,7 +171,6 @@ def jaccard_pairs(
     df: DataFrame,
     threshold: float,
     text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 1,
 ) -> DataFrame:
     """Exact n-gram-set Jaccard ≥ threshold, all pairs (a_id < b_id).
@@ -192,7 +191,7 @@ def jaccard_pairs(
     # stopword-posting blowup never reaches the aggregate.
     t = float(threshold)
     base = _spread(df).select(
-        F.col(id_col), _shingle_hashes(text_col, ngram).alias("hs")
+        F.col("doc_id"), _shingle_hashes(text_col, ngram).alias("hs")
     )
     # PK-violation safety (r11 duplicates sweep): an id replayed with
     # drifted text (at-least-once upstream) used to emit one posting
@@ -205,20 +204,20 @@ def jaccard_pairs(
     from pyspark.sql.window import Window as _W
 
     sh = (
-        base.select(F.col(id_col), F.explode("hs").alias("h"))
-        .dropDuplicates([id_col, "h"])
-        .withColumn("sz", F.count("*").over(_W.partitionBy(id_col)))
+        base.select(F.col("doc_id"), F.explode("hs").alias("h"))
+        .dropDuplicates(["doc_id", "h"])
+        .withColumn("sz", F.count("*").over(_W.partitionBy("doc_id")))
     )
     inter = (
         sh.alias("a")
         .join(
             sh.alias("b"),
             (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (F.col("b.sz") >= t * F.col("a.sz"))
             & (F.col("a.sz") >= t * F.col("b.sz")),
         )
-        .groupBy(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .agg(
             F.count("*").alias("inter"),
             F.first("a.sz").alias("na"),
@@ -361,7 +360,7 @@ def minhash_dup_pairs(
 
 # -- SimHash -----------------------------------------------------------------
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash over the token set: bit j of the sketch is the
     sign of Σ_tokens (±1 by bit j of xxhash64(token)). Emitted as 4
     16-bit chunks (array<int>) so hamming-distance bucketing can use
@@ -377,15 +376,15 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     would emit ~1.25e15 pairs). Both consumers — the bucketed
     candidates AND the exact-hamming audit baseline — inherit the
     exclusion from here, so the recall audits stay aligned."""
-    df = df.filter(F.size(tokens(text_col)) > 0)
+    df = df.filter(F.size(tokens("text")) > 0)
     # Shuffle-free AND plan-compact: the per-bit votes and the chunk
     # assembly are single nested higher-order expressions. Bit masks
     # come from one array literal (shiftleft needs a Python-int shift,
     # and 1<<63 must be spelled as the signed-long sign bit).
     masks = F.array(
-        *[F.lit((1 << j) if j < 63 else -(1 << 63)).cast("long") for j in range(bits)]
+        *[F.lit((1 << j) if j < 63 else -(1 << 63)).cast("long") for j in range(64)]
     )
-    hashes = F.transform(F.array_distinct(tokens(text_col)), lambda t: F.xxhash64(t))
+    hashes = F.transform(F.array_distinct(tokens("text")), lambda t: F.xxhash64(t))
     # let-bind the token-hash array: it sits inside the per-bit lambda,
     # so the unbound form evaluates it once per bit (64×) in the
     # expression tree — see operators/exprs.let. (Measured at 200×2000
@@ -395,7 +394,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     votes = let(
         hashes,
         lambda hs: F.transform(
-            F.sequence(F.lit(0), F.lit(bits - 1)),
+            F.sequence(F.lit(0), F.lit(63)),
             lambda j: F.aggregate(
                 hs,
                 F.lit(0),
@@ -406,10 +405,10 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
             ),
         ),
     )
-    with_votes = _spread(df).select(F.col(id_col), votes.alias("v"))
+    with_votes = _spread(df).select(F.col("doc_id"), votes.alias("v"))
     small_masks = F.array(*[F.lit(1 << r) for r in range(16)])
     chunks = F.transform(
-        F.sequence(F.lit(0), F.lit(bits // 16 - 1)),
+        F.sequence(F.lit(0), F.lit(3)),
         lambda c: F.aggregate(
             F.sequence(F.lit(0), F.lit(15)),
             F.lit(0),
@@ -420,16 +419,18 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
             ).otherwise(F.lit(0)),
         ).cast("int"),
     )
-    return with_votes.select(id_col, chunks.alias("simhash_chunks"))
+    return with_votes.select("doc_id", chunks.alias("simhash_chunks"))
 
 
-def simhash_candidates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash_candidates(df: DataFrame) -> DataFrame:
     """Near-dup candidate pairs: equal 16-bit chunk at the same
     position (catches all pairs with hamming ≤ 3), plus exact hamming
     distance for downstream thresholding."""
-    sk = simhash(df, text_col, id_col)
-    ex = sk.select(id_col, "simhash_chunks").select(
-        F.col(id_col), F.posexplode("simhash_chunks").alias("pos", "chunk"), F.col("simhash_chunks")
+    sk = simhash(df)
+    ex = sk.select("doc_id", "simhash_chunks").select(
+        F.col("doc_id"),
+        F.posexplode("simhash_chunks").alias("pos", "chunk"),
+        F.col("simhash_chunks"),
     )
     pairs = (
         ex.alias("a")
@@ -437,11 +438,11 @@ def simhash_candidates(df: DataFrame, text_col: str = "text", id_col: str = "doc
             ex.alias("b"),
             (F.col("a.pos") == F.col("b.pos"))
             & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
+            F.col("a.doc_id").alias("a_id"),
+            F.col("b.doc_id").alias("b_id"),
             F.col("a.simhash_chunks").alias("ca"),
             F.col("b.simhash_chunks").alias("cb"),
         )
@@ -455,26 +456,21 @@ def simhash_candidates(df: DataFrame, text_col: str = "text", id_col: str = "doc
     return pairs.select("a_id", "b_id", ham.alias("hamming"))
 
 
-def simhash_exact_pairs(
-    df: DataFrame,
-    max_hamming: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def simhash_exact_pairs(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     """ALL pairs with simhash hamming ≤ ``max_hamming`` by brute-force
     self-join — the correctness baseline :func:`simhash_candidates` is
     audited against. O(n²) pair space: gate/test use only, never the
     100 TB path (the pigeonhole bucketing is)."""
-    sk = materialize.persist(simhash(df, text_col, id_col))
+    sk = materialize.persist(simhash(df))
     ham = F.aggregate(
         F.zip_with("ca", "cb", lambda x, y: F.bit_count(x.bitwiseXOR(y))),
         F.lit(0),
         lambda acc, x: acc + x,
     )
     return (
-        sk.select(F.col(id_col).alias("a_id"), F.col("simhash_chunks").alias("ca"))
+        sk.select(F.col("doc_id").alias("a_id"), F.col("simhash_chunks").alias("ca"))
         .crossJoin(
-            sk.select(F.col(id_col).alias("b_id"), F.col("simhash_chunks").alias("cb"))
+            sk.select(F.col("doc_id").alias("b_id"), F.col("simhash_chunks").alias("cb"))
         )
         .filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id", ham.alias("hamming"))
@@ -486,7 +482,6 @@ def contamination_overlap(
     df: DataFrame,
     benchmark: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination: per corpus document, the number of
@@ -504,10 +499,10 @@ def contamination_overlap(
         F.explode(word_shingles(text_col, ngram)).alias("shingle")
     ).distinct()
     doc_sh = _spread(df).select(
-        F.col(id_col), F.explode(word_shingles(text_col, ngram)).alias("shingle")
+        F.col("doc_id"), F.explode(word_shingles(text_col, ngram)).alias("shingle")
     )
     return (
         doc_sh.join(F.broadcast(bench_sh), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared_shingles"))
     )

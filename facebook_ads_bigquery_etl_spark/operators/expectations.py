@@ -49,7 +49,6 @@ def constraint_audit(
     in_set: Mapping[str, Iterable] | None = None,
     unique: Sequence[Sequence[str]] = (),
     foreign_keys: Sequence[tuple[str, DataFrame, str]] = (),
-    broadcast_parents: bool = True,
 ) -> DataFrame:
     """One row per declared constraint: ``(constraint_name, n_rows,
     n_violations, passed)``.
@@ -58,7 +57,8 @@ def constraint_audit(
     declare the column in ``not_null`` too if that is the intent);
     ``in_set`` checks membership; ``unique`` counts every row beyond
     the first per key; ``foreign_keys`` are ``(child_col, parent_df,
-    parent_col)`` and count non-null child keys with no parent.
+    parent_col)`` and count non-null child keys with no parent; the
+    deduplicated parent keys are broadcast.
     """
     ranges = dict(ranges or {})
     in_set = dict(in_set or {})
@@ -107,9 +107,9 @@ def constraint_audit(
         )
 
     for child_col, parent, parent_col in foreign_keys:
-        pk = parent.select(F.col(parent_col).alias("__pk")).dropDuplicates(["__pk"])
-        if broadcast_parents:
-            pk = F.broadcast(pk)
+        pk = F.broadcast(
+            parent.select(F.col(parent_col).alias("__pk")).dropDuplicates(["__pk"])
+        )
         joined = df.select(F.col(child_col).alias("__ck")).join(
             pk, F.col("__ck") == F.col("__pk"), "left"
         )

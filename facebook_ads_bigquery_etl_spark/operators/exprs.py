@@ -30,16 +30,12 @@ def let(expr: Column, body: Callable[[Column], Column]) -> Column:
     return F.get(F.transform(F.array(expr), body), 0)
 
 
-def knuth_bucket(
-    key: Column | str,
-    buckets: int,
-    p: int = 1000000007,
-    c: int = 2654435761,
-) -> Column:
+def knuth_bucket(key: Column | str, buckets: int) -> Column:
     """PORTABLE multiplicative key hash → bucket id in ``[0, buckets)``
     — the shared hash of the bloom partition indexes and the hash
     TABLESAMPLE, chosen so DuckDB oracles reproduce it bit-for-bit
-    (``(key * c % p) % buckets`` in any engine with big-enough ints).
+    (``(key * c % p) % buckets`` with ``c = 2654435761`` and
+    ``p = 1000000007``, in any engine with big-enough ints).
 
     The key is PRE-MODDED before the Knuth multiply:
     ``((key % p) * c) % p ≡ (key * c) % p`` (modular identity, value
@@ -49,4 +45,5 @@ def knuth_bucket(
     overflow in every raw-key call site; real 100 TB surrogate-key
     spaces reach the same range."""
     k = F.col(key) if isinstance(key, str) else key
-    return (F.pmod(k, F.lit(p)) * F.lit(c)) % F.lit(p) % F.lit(buckets)
+    p = F.lit(1000000007)
+    return (F.pmod(k, p) * F.lit(2654435761)) % p % F.lit(buckets)

@@ -34,13 +34,12 @@ def with_split(
     df: DataFrame,
     id_col: str = "doc_id",
     salt: str = "split_v1",
-    train: float = 0.90,
-    val: float = 0.05,
 ) -> DataFrame:
-    """Adds ``split`` ∈ {train, val, test} by hash bucket. Thresholds
-    are integer bucket counts so both engines compare integers."""
-    t_hi = int(train * BUCKETS)
-    v_hi = int((train + val) * BUCKETS)
+    """Adds ``split`` ∈ {train, val, test} = 90/5/5% by hash bucket.
+    Thresholds are integer bucket counts so both engines compare
+    integers."""
+    t_hi = int(0.90 * BUCKETS)
+    v_hi = int((0.90 + 0.05) * BUCKETS)
     b = hash_bucket(id_col, salt)
     return df.withColumn(
         "split",
@@ -54,14 +53,14 @@ def stratified_sample(
     strata_col: str = "lang",
     id_col: str = "doc_id",
     salt: str = "mix_v1",
-    default_rate: float = 1.0,
 ) -> DataFrame:
     """Keep each row with its stratum's rate, deterministically:
-    kept ⇔ bucket(id) < rate·65536. One map-only pass; the rate table
+    kept ⇔ bucket(id) < rate·65536; a stratum missing from ``rates``
+    keeps every row. One map-only pass; the rate table
     is a CASE expression compiled into the plan (strata counts are
     config-sized, never data-sized)."""
     b = hash_bucket(id_col, salt)
-    expr = F.lit(int(default_rate * BUCKETS))
+    expr = F.lit(BUCKETS)
     for stratum, rate in sorted(rates.items()):
         expr = (
             F.when(F.col(strata_col) == stratum, F.lit(int(rate * BUCKETS)))

@@ -42,7 +42,8 @@ def _png_codec():
     (None/Sub/Up/Average/Paeth) so the decoder's unfiltering is
     genuinely exercised; the decoder validates magic, chunk CRCs and
     layout and returns ``None`` for malformed payloads
-    (quarantine-friendly, same posture as the WAV parser)."""
+    (quarantine-friendly, same posture as the WAV parser), then
+    unfilters the pixels itself — there is no native pixel path."""
     import struct as _s
     import zlib as _z
 
@@ -109,42 +110,7 @@ def _png_codec():
             + _chunk(b"IEND", b"")
         )
 
-    # Feature-detected native fast path (the round-3 verdict's libpng
-    # upgrade path, proven as a seam even where media libs are absent):
-    # the import is attempted ONCE PER WORKER PROCESS, lazily, inside
-    # the shipped closure — never on the driver — and only the PIXEL
-    # step is delegated. Validation (magic, chunk CRCs, the 8-bit-RGB
-    # non-interlaced gate) always runs in the stdlib parser first, so
-    # the accept/reject surface is identical on both branches; any
-    # native-path exception falls back to the stdlib unfilter.
-    _native: list = []  # [] unprobed / [None] absent / [fn] available
-
-    def _native_pixels(data: bytes, w: int, h: int):
-        if not _native:
-            try:
-                import io as _io
-
-                from PIL import Image as _Image
-
-                def _pil(d: bytes, pw: int, ph: int):
-                    im = _Image.open(_io.BytesIO(d))
-                    if im.mode != "RGB" or im.size != (pw, ph):
-                        return None
-                    return im.tobytes()
-
-                _native.append(_pil)
-            except Exception:
-                _native.append(None)
-        fn = _native[0]
-        if fn is None:
-            return None
-        try:
-            rgb = fn(bytes(data), w, h)
-            return rgb if rgb is not None and len(rgb) == w * h * 3 else None
-        except Exception:
-            return None
-
-    def decode(data: bytes, _pure: bool = False):
+    def decode(data: bytes):
         try:
             if bytes(data[:8]) != b"\x89PNG\r\n\x1a\n":
                 return None
@@ -177,20 +143,12 @@ def _png_codec():
                 pos += 12 + ln
             if w is None or not idat:
                 return None
-            # Full stdlib IDAT validation runs BEFORE the native fast
-            # path so both branches share one accept/reject surface
-            # (round-4 advice: a CRC-valid PNG with inconsistent IDAT
-            # could previously be accepted by PIL yet rejected here).
             raw = _z.decompress(bytes(idat))
             bpp, stride = 3, w * 3
             if len(raw) != h * (stride + 1):
                 return None
             if any(raw[y * (stride + 1)] > 4 for y in range(h)):
                 return None
-            if not _pure:
-                fast = _native_pixels(data, w, h)
-                if fast is not None:
-                    return w, h, fast
             rgb = bytearray(h * stride)
             prev = bytes(stride)
             for y in range(h):
@@ -239,8 +197,8 @@ def _jpeg_codec():
       codec.
     * ``jpeg_decode`` — header-validated via the same marker walk,
       then the pixel step is delegated to PIL when the worker has it
-      (probed once per process, inside the shipped closure, exactly
-      like the PNG fast path). Without PIL it returns None — the
+      (probed once per process, inside the shipped closure). JPEG has
+      no other pixel path: without PIL it returns None — the
       documented quarantine posture (NULL features, never a batch
       failure), so the plan/schema/partitioning stay testable in
       codec-less containers and light up unchanged where PIL exists.
@@ -335,9 +293,8 @@ def _make_image_decode():
 
     def image_decode(data: bytes):
         """Magic-byte dispatch over the decode seam: PNG → stdlib
-        codec (PIL-accelerated pixel step when present), JPEG →
-        header-validated PIL decode (None where no codec exists —
-        quarantine). Unknown magic → None. The single entry point a
+        codec, JPEG → header-validated PIL decode (None where no codec
+        exists — quarantine). Unknown magic → None. The single entry point a
         mixed 100 TB image corpus goes through; adding a format means
         adding a branch here, not a new pipeline."""
         head = bytes(data[:8]) if data is not None else b""
@@ -508,7 +465,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     bytes), computes per-item features, yields batches — the 100-TB
     shape for any decode/resize/frame-sample stage. Image payloads go
     through :func:`image_decode` (magic-byte dispatch: PNG via the
-    stdlib codec with the PIL fast path, JPEG via PIL): width/height
+    stdlib codec, JPEG via PIL): width/height
     come from the decoded pixel buffer and ``n_bytes`` is the decoded
     content size (w·h·3). When pixels can't be decoded, a JPEG header
     walk still recovers dimensions (metadata without a codec) with raw
@@ -517,7 +474,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     to decode yields NULLs (quarantine posture, not a batch failure)."""
 
     # nested fns: cloudpickle ships them by value. image_decode is the
-    # mixed-corpus entry point (PNG stdlib/PIL, JPEG PIL); when the
+    # mixed-corpus entry point (PNG stdlib, JPEG PIL); when the
     # pixel decode is unavailable or fails, a JPEG header walk still
     # recovers width/height (metadata features without a codec), and
     # only then do the dimensions go NULL (quarantine posture).
@@ -1083,9 +1040,9 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def image_dhash(media: DataFrame, grid_w: int = 9, grid_h: int = 8) -> DataFrame:
+def image_dhash(media: DataFrame) -> DataFrame:
     """Perceptual difference hash (dHash) from REAL decoded pixels:
-    decode the PNG, floor-sample a ``grid_w × grid_h`` grayscale grid
+    decode the PNG, floor-sample a 9 × 8 grayscale grid
     (the same ``src = out·src_dim // out_dim`` rule as
     :func:`resize_images`, gray = (r+g+b)//3 integer), and emit one
     bit per horizontal neighbor comparison — a 64-bit fingerprint
@@ -1107,11 +1064,11 @@ def image_dhash(media: DataFrame, grid_w: int = 9, grid_h: int = 8) -> DataFrame
             return (rgb[o] + rgb[o + 1] + rgb[o + 2]) // 3
 
         bits = []
-        for gy in range(grid_h):
-            sy = gy * h // grid_h
-            for gx in range(grid_w - 1):
-                a = gray(gx * w // grid_w, sy)
-                b = gray((gx + 1) * w // grid_w, sy)
+        for gy in range(8):
+            sy = gy * h // 8
+            for gx in range(8):
+                a = gray(gx * w // 9, sy)
+                b = gray((gx + 1) * w // 9, sy)
                 bits.append("1" if b > a else "0")
         return w, h, "".join(bits)
 

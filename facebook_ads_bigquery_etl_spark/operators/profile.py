@@ -27,10 +27,9 @@ def column_profile(
     df: DataFrame,
     numeric_cols: list[str],
     string_cols: list[str],
-    ndv_rel_err_pct: int = 2,
 ) -> DataFrame:
     """One row per profiled column: rows, nulls, exact + approx NDV,
-    an integer-arithmetic bound check (|approx-exact|·100 ≤ pct·exact),
+    an integer-arithmetic bound check (|approx-exact|·100 ≤ 2·exact),
     numeric min/max (rounded doubles) or string min/max.
 
     Numeric and string min/max land in separate typed columns — a
@@ -73,7 +72,7 @@ def column_profile(
                 F.col(f"_ndv_{c}").alias("n_distinct"),
                 (
                     F.abs(F.col(f"_andv_{c}") - F.col(f"_ndv_{c}")) * 100
-                    <= F.lit(ndv_rel_err_pct) * F.col(f"_ndv_{c}")
+                    <= F.lit(2) * F.col(f"_ndv_{c}")
                 ).alias("ndv_within_tol"),
                 (F.col(f"_min_{c}") if is_num else F.lit(None).cast("double")).alias("min_num"),
                 (F.col(f"_max_{c}") if is_num else F.lit(None).cast("double")).alias("max_num"),

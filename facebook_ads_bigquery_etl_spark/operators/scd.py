@@ -73,12 +73,11 @@ def scd2_merge(
     compare_cols: list[str],
     old_date: str,
     new_date: str,
-    end_of_time: str = "9999-12-31",
 ) -> DataFrame:
     """Build a Type-2 history from two consecutive snapshots.
 
     Output: one row per (key, version) with ``valid_from``,
-    ``valid_to`` (exclusive; ``end_of_time`` = open), ``is_current``.
+    ``valid_to`` (exclusive; 9999-12-31 = open), ``is_current``.
     Keys present in both with identical attributes get one open row;
     updates close the old version at ``new_date`` and open a new one;
     deletes close the old version with no successor; inserts open at
@@ -101,7 +100,7 @@ def scd2_merge(
     )
     old_cols = [F.col(f"old_{c}").alias(c) for c in compare_cols]
     new_cols = [F.col(f"new_{c}").alias(c) for c in compare_cols]
-    d_old, d_new, d_inf = F.lit(old_date), F.lit(new_date), F.lit(end_of_time)
+    d_old, d_new, d_inf = F.lit(old_date), F.lit(new_date), F.lit("9999-12-31")
 
     # version 1: every key that existed in the old snapshot
     v_old = joined.filter("in_old").select(

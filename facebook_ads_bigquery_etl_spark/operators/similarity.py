@@ -31,6 +31,10 @@ from pyspark.sql import functions as F
 from .exprs import let
 from .topk import top_k_per_group
 
+# The id and vector columns of every embedding table here.
+_ID_COL = "vec_id"
+_VEC_COL = "embedding"
+
 
 def _as_double(col: Column | str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -72,9 +76,7 @@ def valid_vectors(vcol: Column | str) -> Column:
     return finite_vectors(v) & (_norm(_as_double(v)) > 0)
 
 
-def _scorable(
-    df: DataFrame, id_col: str, vec_col: str, names: tuple[str, str, str]
-) -> DataFrame:
+def _scorable(df: DataFrame, names: tuple[str, str, str]) -> DataFrame:
     """(id, vector as doubles, norm) under ``names`` for the rows
     :func:`valid_vectors` admits — the one quarantine rule of the
     cosine operators. The nonzero test filters the norm the score
@@ -82,8 +84,8 @@ def _scorable(
     (``valid_vectors`` would compute it a second time)."""
     i, v, n = names
     return (
-        df.filter(finite_vectors(vec_col))
-        .select(F.col(id_col).alias(i), _as_double(vec_col).alias(v))
+        df.filter(finite_vectors(_VEC_COL))
+        .select(F.col(_ID_COL).alias(i), _as_double(_VEC_COL).alias(v))
         .withColumn(n, _norm(F.col(v)))
         .filter(F.col(n) > 0)
     )
@@ -100,8 +102,6 @@ def _cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
     cells: tuple[Callable[[Column], Column], Callable[[Column], Column]] | None,
 ) -> DataFrame:
     """The two steps every cosine top-k operator shares: generate
@@ -116,8 +116,8 @@ def _cosine_topk(
     Scale: queries broadcast (small side), corpus streams — a map-only
     stage plus the per-query top-k window (WindowGroupLimit pushes the
     k-filter below the shuffle)."""
-    q = _scorable(queries, id_col, vec_col, ("query_id", "qv", "qn"))
-    c = _scorable(embeddings, id_col, vec_col, ("neighbor_id", "cv", "cn"))
+    q = _scorable(queries, ("query_id", "qv", "qn"))
+    c = _scorable(embeddings, ("neighbor_id", "cv", "cn"))
     if cells is None:
         pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
     else:
@@ -136,17 +136,11 @@ def _cosine_topk(
     ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k of ``embeddings`` for each row of ``queries``
     → (query_id, neighbor_id, cosine, rank). Self-matches excluded;
     the baseline and the verifier of the approximate operators."""
-    return _cosine_topk(embeddings, queries, k, id_col, vec_col, None)
+    return _cosine_topk(embeddings, queries, k, None)
 
 
 # Degenerate-bucket guards for _bucket_candidates (round-7 verdict:
@@ -160,11 +154,7 @@ _DUP_TILE_ROWS = 1024  # matmul row-block: tile memory ≤ TILE×CAP floats
 def embedding_dup_pairs(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 4,
     dim: int = 64,
-    n_tables: int = 8,
     exact: bool = False,
     bucket_cap: int = _DUP_BUCKET_CAP,
 ) -> DataFrame:
@@ -183,16 +173,14 @@ def embedding_dup_pairs(
     (BLAS per-bucket candidate matmul, int-only dedup exchange) —
     shared with the IVF algebra."""
     cells = None if exact else (
-        lambda v: _table_buckets(v, n_planes, dim, n_tables, multiprobe=False)
+        lambda v: _table_buckets(v, 4, dim, 8, multiprobe=False)
     )
-    return _dup_pairs(embeddings, threshold, id_col, vec_col, cells, bucket_cap)
+    return _dup_pairs(embeddings, threshold, cells, bucket_cap)
 
 
 def _dup_pairs(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str,
-    vec_col: str,
     cells: Callable[[Column], Column] | None,
     bucket_cap: int,
 ) -> DataFrame:
@@ -214,7 +202,7 @@ def _dup_pairs(
     a dup-heavy corpus makes the candidate set too large to broadcast —
     the round-7 unconditional ``F.broadcast(cand)`` OOMed exactly
     there."""
-    base = _scorable(embeddings, id_col, vec_col, ("__id", "v", "n"))
+    base = _scorable(embeddings, ("__id", "v", "n"))
     a = base.select(
         F.col("__id").alias("a_id"), F.col("v").alias("va"), F.col("n").alias("na")
     )
@@ -371,22 +359,18 @@ def _bucket_candidates(
 def embedding_dup_pairs_ivf(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 8,
-    assign: int = 3,
     bucket_cap: int = _DUP_BUCKET_CAP,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via an IVF (coarse-quantizer)
     candidate algebra — the alternative to :func:`embedding_dup_pairs`'s
     multi-table LSH: a k-means coarse quantizer splits the corpus into
-    ``n_lists`` Voronoi cells, each vector lands in its ``assign``
+    8 Voronoi cells, each vector lands in its 3
     nearest cells (soft assignment — the recall lever for vectors near
     a cell border), and candidate pairs come only from co-resident
     cells. Candidates are exact-scored, so precision is exact and only
     recall is approximate, same contract as the LSH form.
 
-    ``assign=3`` (heavier than :func:`ivf_cosine_topk`'s ``assign=2``)
+    Assigning 3 cells (heavier than :func:`ivf_cosine_topk`'s ``assign=2``)
     because PAIR recall is harsher than point recall: a pair survives
     only if BOTH endpoints co-reside in some cell, so per-point miss
     probabilities compound. Measured edge recall vs the exact baseline
@@ -397,12 +381,11 @@ def embedding_dup_pairs_ivf(
     are DATA-ADAPTIVE (a clustered corpus gets tight cells where random
     hyperplanes split clusters in half), and the same centroid matrix
     serves the IVF ANN index (``ivf_cosine_topk``) — one trained
-    structure, two operators. Grow ``n_lists`` ∝ √n to hold cell sizes
+    structure, two operators. Grow the 8 lists ∝ √n to hold cell sizes
     flat."""
-    centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
+    centroids = train_ivf_centroids(embeddings, n_lists=8)
     return _dup_pairs(
-        embeddings, threshold, id_col, vec_col,
-        lambda v: _ivf_cells(v, centroids, assign), bucket_cap,
+        embeddings, threshold, lambda v: _ivf_cells(v, centroids, 3), bucket_cap
     )
 
 
@@ -464,11 +447,7 @@ def _table_buckets(
 
 
 def train_ivf_centroids(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    seed: int = 42,
-    max_iter: int = 10,
+    embeddings: DataFrame, n_lists: int = 16
 ) -> list[list[float]]:
     """Spherical-ish k-means coarse quantizer for an IVF index:
     vectors are L2-normalized, then clustered with the distributed
@@ -478,7 +457,7 @@ def train_ivf_centroids(
     ``.sample()`` of the corpus, which changes recall only marginally).
     Returns the centroid matrix as plain lists (plan-embeddable).
 
-    ``max_iter=10``: k-means|| initialization places centroids well
+    Ten Lloyd iterations: k-means|| initialization places centroids well
     enough that extra Lloyd rounds stop moving recall — measured at
     sf0.1: identical IVF-PQ recall at 6/10/20 iterations while
     training wall-clock halves from 20→10 (each round is a full
@@ -492,13 +471,13 @@ def train_ivf_centroids(
     # row instead of once per ELEMENT (the unbound form recomputed the
     # norm inside the division lambda: O(d²) per vector).
     unit = let(
-        _as_double(vec_col),
+        _as_double(_VEC_COL),
         lambda v: let(_norm(v), lambda n: F.transform(v, lambda x: x / n)),
     )
     # quarantine before array_to_vector: pyspark.ml hard-errors on
     # NaN/Inf elements, and a zero-norm vector would train a NaN
     # centroid (round-11 extremes sweep)
-    train = embeddings.filter(valid_vectors(vec_col)).select(
+    train = embeddings.filter(valid_vectors(_VEC_COL)).select(
         array_to_vector(unit).alias("features")
     )
     # bounded probe (scans until n_lists rows accumulate, never the
@@ -517,7 +496,7 @@ def train_ivf_centroids(
             [float(x) for x in train.first()["features"]]
         ]
     model = KMeans(
-        k=min(n_lists, n_small), seed=seed, maxIter=max_iter
+        k=min(n_lists, n_small), seed=42, maxIter=10
     ).fit(train)
     return [list(map(float, c)) for c in model.clusterCenters()]
 
@@ -557,8 +536,6 @@ def ivf_cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = 16,
     nprobe: int = 6,
     assign: int = 2,
@@ -583,7 +560,7 @@ def ivf_cosine_topk(
     (``partitionBy(cell)``), probing becomes partition pruning — only
     nprobe/n_lists of the files are read at all, which is the property
     that matters at 100 TB. Grow n_lists ∝ √n to hold list sizes flat."""
-    centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
+    centroids = train_ivf_centroids(embeddings, n_lists=n_lists)
     if not centroids:
         # empty (or fully-quarantined) corpus trains zero centroids:
         # no posting lists, no neighbors — empty-in/empty-out with the
@@ -595,7 +572,7 @@ def ivf_cosine_topk(
             [], "query_id long, neighbor_id long, cosine double, rank int"
         )
     return _cosine_topk(
-        embeddings, queries, k, id_col, vec_col,
+        embeddings, queries, k,
         (
             lambda v: _ivf_cells(v, centroids, assign),
             lambda v: _ivf_cells(v, centroids, nprobe),
@@ -607,19 +584,15 @@ def lsh_cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
-    dim: int = 64,
     n_tables: int = 8,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k, standard E2LSH-style OR-amplification:
     ``n_tables`` independent random-hyperplane tables of ``n_planes``
-    bits each; a corpus vector is a candidate if it shares ANY table's
-    bucket with the query (plus, with ``multiprobe``, buckets at
-    hamming distance 1 — vectors near a hyperplane land on either
-    side). Candidates are exact-scored and ranked; misses are only
+    bits each over 64-dim vectors; a corpus vector is a candidate if it
+    shares ANY table's bucket with the query (plus, multi-probed, the
+    buckets at hamming distance 1 — vectors near a hyperplane land on
+    either side). Candidates are exact-scored and ranked; misses are only
     pairs that collide in NO table: p_miss = (1-p^H)^L per probe set.
 
     Scale: the corpus is indexed once into L×(t,bucket) cells — an
@@ -628,17 +601,15 @@ def lsh_cosine_topk(
     work stays sublinear in n. Tune (H up, L up) together to hold
     recall while shrinking buckets at larger corpus sizes."""
     return _cosine_topk(
-        embeddings, queries, k, id_col, vec_col,
+        embeddings, queries, k,
         (
-            lambda v: _table_buckets(v, n_planes, dim, n_tables, multiprobe=False),
-            lambda v: _table_buckets(v, n_planes, dim, n_tables, multiprobe),
+            lambda v: _table_buckets(v, n_planes, 64, n_tables, multiprobe=False),
+            lambda v: _table_buckets(v, n_planes, 64, n_tables, multiprobe=True),
         ),
     )
 
 
-def quantize_audit(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_audit(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization audit: per-vector scale
     (max|x| / 127) and the reconstruction error a round-trip through
     int8 would incur. This is the storage-shrink step a 100 TB
@@ -655,11 +626,11 @@ def quantize_audit(
     widening is exact, and it pins every subsequent op to double
     precision so the result is bit-identical to any other engine
     doing the same (the oracle casts the same way)."""
-    df = df.filter(valid_vectors(vec_col))
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
+    df = df.filter(valid_vectors(_VEC_COL))
+    x = F.transform(F.col(_VEC_COL), lambda v: v.cast("double"))
     scale = F.array_max(F.transform(x, lambda v: F.abs(v))) / F.lit(127.0)
     d = df.select(
-        F.col(id_col),
+        F.col(_ID_COL),
         x.alias("x"),
         scale.alias("scale"),
         F.size(x).alias("dim"),
@@ -670,7 +641,7 @@ def quantize_audit(
     )
     d = d.withColumn("err", err)
     return d.select(
-        id_col,
+        _ID_COL,
         F.round("scale", 9).alias("scale"),
         F.round(F.array_max("err"), 9).alias("max_abs_err"),
         F.round(
@@ -685,7 +656,6 @@ def pq_audit(
     dim: int = 64,
     m: int = 8,
     k: int = 16,
-    train_n: int = 256,
 ) -> DataFrame:
     """Product quantization (Jégou et al., PAMI 2011) with an
     engine-verified distortion audit: the ``dim``-wide vector space
@@ -694,7 +664,7 @@ def pq_audit(
     (32× at 64 dims).
 
     Codebooks train DRIVER-SIDE (:func:`_train_pq_codebooks`) on a
-    BOUNDED DETERMINISTIC sample (first ``train_n`` vectors by id —
+    BOUNDED DETERMINISTIC sample (first 256 vectors by id —
     TakeOrdered, no global sort; the standard practice: FAISS trains
     PQ on a fixed-size sample regardless of corpus size, since
     codebook quality saturates).
@@ -715,7 +685,7 @@ def pq_audit(
     sub = dim // m
     sample = [
         r[vec_col]
-        for r in df.select(vec_col, "vec_id").orderBy("vec_id").limit(train_n).collect()
+        for r in df.select(vec_col, "vec_id").orderBy("vec_id").limit(256).collect()
     ]
     if not sample:
         # an empty corpus trains no codebooks; the audit booleans hold
@@ -812,22 +782,17 @@ def ivfpq_cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
     nprobe: int = 6,
     assign: int = 2,
     m: int = 8,
-    pq_k: int = 16,
     rerank: int = 40,
-    train_n: int = 256,
 ) -> DataFrame:
     """IVF-PQ — the FAISS serving pairing, end to end: the IVF coarse
-    quantizer prunes the probe set to ``nprobe`` posting lists, PQ
+    quantizer (16 lists) prunes the probe set to ``nprobe`` of them, PQ
     ASYMMETRIC DISTANCE (query subvectors against each candidate's
-    m byte codes) ranks the surviving candidates WITHOUT touching
-    their full vectors, and only the top ``rerank`` per query get
-    exact-rescored. Three cost tiers: partition pruning → 8-byte-code
+    m byte codes, 16 centroids per subspace) ranks the surviving
+    candidates WITHOUT touching their full vectors, and only the top
+    ``rerank`` per query get exact-rescored. Three cost tiers: partition pruning → 8-byte-code
     arithmetic → exact math on a bounded set.
 
     Scale: the corpus pays one map pass (cell assignment + PQ
@@ -841,14 +806,14 @@ def ivfpq_cosine_topk(
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.window import Window as W
 
-    embeddings = embeddings.filter(valid_vectors(vec_col))
-    queries = queries.filter(valid_vectors(vec_col))
-    centroids = train_ivf_centroids(embeddings, vec_col, n_lists=n_lists)
+    embeddings = embeddings.filter(valid_vectors(_VEC_COL))
+    queries = queries.filter(valid_vectors(_VEC_COL))
+    centroids = train_ivf_centroids(embeddings)
     sample = [
-        r[vec_col]
-        for r in embeddings.select(vec_col, id_col)
-        .orderBy(id_col)
-        .limit(train_n)
+        r[_VEC_COL]
+        for r in embeddings.select(_VEC_COL, _ID_COL)
+        .orderBy(_ID_COL)
+        .limit(256)
         .collect()
     ]
     if not sample:
@@ -859,7 +824,7 @@ def ivfpq_cosine_topk(
         )
     S = np.asarray(sample, dtype=np.float64)
     S = S / np.maximum(np.linalg.norm(S, axis=1, keepdims=True), 1e-12)
-    cb = _train_pq_codebooks(S, m, pq_k)
+    cb = _train_pq_codebooks(S, m, 16)
     d = S.shape[1]
     sub = d // m
 
@@ -912,14 +877,14 @@ def ivfpq_cosine_topk(
     # broadcast of the pruned set onto a plain corpus scan (map-side
     # hash join, queries×rerank rows on the build side).
     eb = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        pq_encode(F.col(vec_col)).alias("__codes"),
-        F.explode(_ivf_cells(_as_double(vec_col), centroids, assign)).alias("__cell"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        pq_encode(F.col(_VEC_COL)).alias("__codes"),
+        F.explode(_ivf_cells(_as_double(_VEC_COL), centroids, assign)).alias("__cell"),
     )
     qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.explode(_ivf_cells(_as_double(vec_col), centroids, nprobe)).alias("__cell"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).alias("__qvec"),
+        F.explode(_ivf_cells(_as_double(_VEC_COL), centroids, nprobe)).alias("__cell"),
     )
     cand = (
         qb.join(eb, "__cell")
@@ -935,7 +900,7 @@ def ivfpq_cosine_topk(
         F.col("__r") <= rerank
     )
     vecs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nvec")
+        F.col(_ID_COL).alias("neighbor_id"), F.col(_VEC_COL).alias("__nvec")
     )
     pruned = vecs.join(F.broadcast(pruned), "neighbor_id")
     cos = _dot(F.col("__qvec"), F.col("__nvec")) / (
@@ -960,13 +925,12 @@ def jl_projection_audit(
     target_dim: int = 16,
     lo: float = 0.2,
     hi: float = 2.2,
-    floor_pct: int = 90,
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection (64 → 16 dims via the
     seeded Gaussian matrix from :func:`_hyperplanes`, scaled 1/√m)
     with a distance-preservation audit: for the deterministic pair
     set (2i, 2i+1), the squared-distance ratio after/before must fall
-    inside [lo, hi] for ≥ ``floor_pct``% of pairs — the JL lemma's
+    inside [lo, hi] for ≥ 90% of pairs — the JL lemma's
     concentration made checkable. The audit row carries the exact
     mean ORIGINAL squared distance (recomputable by any engine from
     the raw vectors) plus the engine-verified distortion boolean.
@@ -1033,6 +997,6 @@ def jl_projection_audit(
                 F.lit(0),
             )
             * 100
-            >= F.lit(floor_pct) * F.count("*")
+            >= F.lit(90) * F.count("*")
         ).alias("distortion_ok"),
     )

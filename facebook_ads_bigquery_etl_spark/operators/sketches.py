@@ -42,12 +42,10 @@ def count_min_topk_audit(
     df: DataFrame,
     col: str = "token",
     k: int = 50,
-    eps: float = 1e-4,
-    confidence: float = 0.999,
-    seed: int = 42,
 ) -> DataFrame:
     """Accuracy-bound audit of CMS heavy-hitter estimates vs the exact
-    top-k: (col, n_exact, cms_lower_ok, cms_upper_ok) per candidate.
+    top-k: (col, n_exact, cms_lower_ok, cms_upper_ok) per candidate,
+    for a sketch with eps 1e-4 and confidence 0.999 (seed 42).
 
     The candidate set is the exact top-k (bounded — vocabulary-sized
     aggregate, the audit baseline); in production the candidates come
@@ -66,7 +64,8 @@ def count_min_topk_audit(
     # the upstream tokenize+explode twice (~30% on the audit; in
     # production the exact branch disappears and with it this persist).
     df = materialize.persist(df)
-    cms = count_min_sketch_of(df, col, eps, confidence, seed)
+    eps = 1e-4
+    cms = count_min_sketch_of(df, col, eps, 0.999, 42)
     bound = int(math.ceil(eps * cms.totalCount()))
     exact = (
         df.groupBy(col)

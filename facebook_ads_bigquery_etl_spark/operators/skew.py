@@ -20,7 +20,6 @@ def salted_join(
     right: DataFrame,
     on: str,
     salt: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join resilient to hot keys on the LEFT (large/skewed) side.
 
@@ -37,7 +36,7 @@ def salted_join(
     salted_r = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    return salted_l.join(salted_r, [on, "__salt"], how).drop("__salt")
+    return salted_l.join(salted_r, [on, "__salt"]).drop("__salt")
 
 
 def explain_has_exchange(df: DataFrame) -> bool:

@@ -62,14 +62,14 @@ def bpe_ish_tokens(col: Column | str) -> Column:
     )
 
 
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_stats(df: DataFrame) -> DataFrame:
     """Adds n_tokens / n_chars / n_alpha / avg_token_len /
     stopword_ratio — quality-scoring features, all codegen'd."""
     # let-bind the token array (operators/exprs.let): n_tokens and the
     # stopword count both consume it, so the unbound form tokenized
     # each document twice.
     st = let(
-        tokens(text_col),
+        tokens("text"),
         lambda tk: F.struct(
             F.size(tk).cast("long").alias("n_tokens"),
             F.size(F.filter(tk, lambda t: t.isin(*LANG_STOPWORDS["en"])))
@@ -77,8 +77,8 @@ def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
             .alias("n_stop"),
         ),
     )
-    n_chars = F.length(text_col).cast("long")
-    n_alpha = F.length(F.regexp_replace(text_col, r"\s+", "")).cast("long")
+    n_chars = F.length("text").cast("long")
+    n_alpha = F.length(F.regexp_replace("text", r"\s+", "")).cast("long")
     return (
         df.withColumn("_tok_stats", st)
         .withColumn("n_tokens", F.col("_tok_stats.n_tokens"))
@@ -106,16 +106,14 @@ def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_quality_score(
-    df: DataFrame, text_col: str = "text", out_col: str = "quality_score"
-) -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Composite document quality score in [0, 1] from the token-stats
     features: length saturation (caps at 200 tokens), English stopword
     density (caps at ratio 0.2), and a plausible-word-shape band on
     average token length. Weighted 0.4/0.3/0.3 — the standard
     pretraining-corpus gate shape (length + naturalness + shape), all
     codegen'd expressions so the filter costs one scan."""
-    df = with_token_stats(df, text_col)
+    df = with_token_stats(df)
     length_term = F.least(F.col("n_tokens") / F.lit(200.0), F.lit(1.0))
     stop_term = F.least(F.col("stopword_ratio") * F.lit(5.0), F.lit(1.0))
     shape_term = (
@@ -126,11 +124,12 @@ def with_quality_score(
     # a definite 0.0 — keeping the score total means downstream gates,
     # buckets, and mixes never have to reason about a NULL score
     return df.withColumn(
-        out_col, F.when(F.col("n_tokens") > 0, F.round(score, 7)).otherwise(F.lit(0.0))
+        "quality_score",
+        F.when(F.col("n_tokens") > 0, F.round(score, 7)).otherwise(F.lit(0.0)),
     )
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+def with_lang_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: per-language stopword-hit counts, argmax.
     A document with ZERO stopword evidence in every language gets
     ``'und'`` (undetermined) — an all-zero tie would otherwise be
@@ -144,7 +143,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pre
     # filter references it, so the unbound form re-tokenized the
     # document once per language.
     scores = let(
-        tokens(F.lower(F.col(text_col))),
+        tokens(F.lower(F.col("text"))),
         lambda tk: F.array(
             *[
                 F.struct(
@@ -157,11 +156,11 @@ def with_lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pre
     )
     best = F.array_max(scores)  # struct compare: score first, then lang
     return df.withColumn(
-        out_col, F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
+        "lang_pred", F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
     )
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerprint") -> DataFrame:
+def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit document fingerprint: xxhash64 over the
     whitespace-normalized, lowercased text. Used as the join/dedup key
     at scale — group on the 8-byte fingerprint, never the document body.
@@ -173,17 +172,11 @@ def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fing
     sweep — the same data-loss class as a '' blocking key)."""
     normalized = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
     return df.withColumn(
-        out_col,
-        F.when(F.col(text_col).isNotNull(), F.xxhash64(normalized)),
+        "fingerprint", F.when(F.col(text_col).isNotNull(), F.xxhash64(normalized))
     )
 
 
-def tf_idf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tf_idf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by smoothed TF-IDF
     (idf = ln((N+1)/(df+1)) + 1) — the classic content-signature /
     keyword-extraction primitive.
@@ -198,8 +191,8 @@ def tf_idf_top_terms(
     order that cross-engine double arithmetic reproduces exactly."""
     from .topk import top_k_per_group
 
-    toks = df.select(F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
-    tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
+    toks = df.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token"))
+    tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
     n_docs = df.agg(F.count("*").alias("n_docs"))
     scored = (
@@ -213,8 +206,8 @@ def tf_idf_top_terms(
         )
     )
     return top_k_per_group(
-        scored, [id_col], [F.desc("tfidf"), F.asc("token")], k
-    ).select(id_col, "token", "tfidf", "rank")
+        scored, ["doc_id"], [F.desc("tfidf"), F.asc("token")], k
+    ).select("doc_id", "token", "tfidf", "rank")
 
 
 # (?i): PII doesn't care about case — 'John.Doe@Example.COM' must be
@@ -224,12 +217,12 @@ PII_EMAIL = r"(?i)[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
 PII_PHONE = r"\+[0-9]{2}-[0-9]{3}-[0-9]{4}"
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Training-data cleaning: count and strip email/phone PII with
     anchored regexes (JVM codegen'd regexp_replace — a map-only stage;
     at 100 TB this runs at scan speed and shuffles nothing). Adds
     ``n_emails``, ``n_phones``, ``clean_text``."""
-    c = F.col(text_col)
+    c = F.col("text")
     return (
         df.withColumn("n_emails", F.size(F.regexp_extract_all(c, F.lit(PII_EMAIL), 0)))
         .withColumn("n_phones", F.size(F.regexp_extract_all(c, F.lit(PII_PHONE), 0)))
@@ -240,7 +233,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals per document: how much
     of the text is the same word / the same word pair repeated.
 
@@ -255,19 +248,19 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     partial-aggregates map-side before one shuffle on the compound
     key. At 100 TB this is a scan plus one combiner-friendly shuffle
     of (id, word, count) triples — never the document bodies."""
-    words = df.select(id_col, F.split(F.col(text_col), " ").alias("w"))
+    words = df.select("doc_id", F.split(F.col("text"), " ").alias("w"))
     per_word = (
-        words.select(id_col, F.explode("w").alias("word"))
-        .groupBy(id_col, "word")
+        words.select("doc_id", F.explode("w").alias("word"))
+        .groupBy("doc_id", "word")
         .agg(F.count("*").alias("n"))
     )
-    uni = per_word.groupBy(id_col).agg(
+    uni = per_word.groupBy("doc_id").agg(
         F.sum("n").alias("n_words"),
         F.count("*").alias("n_distinct_words"),
         F.max("n").alias("top_word_n"),
     )
     bi = words.select(
-        id_col,
+        "doc_id",
         F.size("w").alias("nw"),
         F.expr(
             "CASE WHEN size(w) > 1 THEN transform(sequence(1, size(w) - 1),"
@@ -275,12 +268,12 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
             " ELSE array() END"
         ).alias("bg"),
     ).select(
-        id_col,
+        "doc_id",
         F.size("bg").alias("n_bigrams"),
         (F.size("bg") - F.size(F.array_distinct("bg"))).alias("dup_bigrams"),
     )
-    return uni.join(bi, id_col).select(
-        id_col,
+    return uni.join(bi, "doc_id").select(
+        "doc_id",
         "n_words",
         "n_distinct_words",
         F.round(F.col("top_word_n").cast("double") / F.col("n_words"), 6).alias("top_word_frac"),
@@ -293,10 +286,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def duplicated_ngrams(
-    df: DataFrame, n: int = 8, min_docs: int = 2,
-    id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
+def duplicated_ngrams(df: DataFrame, n: int = 8, min_docs: int = 2) -> DataFrame:
     """Corpus-wide exact repeated-span detection: every word n-gram
     that appears in at least ``min_docs`` distinct documents, with its
     total occurrence count — the primitive behind exact-substring
@@ -309,16 +299,16 @@ def duplicated_ngrams(
     display — the plan shape is identical; the string form is kept
     here so the result is directly comparable against the oracle."""
     grams = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            let(F.split(F.col(text_col), " "), lambda wa: ngrams(wa, n))
+            let(F.split(F.col("text"), " "), lambda wa: ngrams(wa, n))
         ).alias("gram"),
     )
     return (
         grams.groupBy("gram")
         .agg(
             F.count("*").alias("n_occurrences"),
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
         )
         .filter(F.col("n_docs") >= min_docs)
     )
@@ -328,8 +318,6 @@ def chunk_documents(
     df: DataFrame,
     size: int = 32,
     overlap: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Context-window chunking: split each document's token stream
     into fixed-size windows with overlap (the standard prep for
@@ -346,13 +334,13 @@ def chunk_documents(
     if overlap >= size:
         raise ValueError(f"overlap ({overlap}) must be < size ({size})")
     step = size - overlap
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     out = (
-        df.select(id_col, toks.alias("__toks"), n.alias("__n"))
+        df.select("doc_id", toks.alias("__toks"), n.alias("__n"))
         .filter(F.col("__n") > 0)
         .select(
-            id_col,
+            "doc_id",
             "__toks",
             "__n",
             F.explode(F.sequence(F.lit(0), F.col("__n") - 1, F.lit(step))).alias(
@@ -365,7 +353,7 @@ def chunk_documents(
         " ", F.slice(F.col("__toks"), F.col("start_token") + 1, chunk_len)
     )
     return out.select(
-        id_col,
+        "doc_id",
         (F.col("start_token") / step).cast("long").alias("chunk_id"),
         F.col("start_token").cast("long"),
         chunk_len.cast("long").alias("chunk_tokens"),

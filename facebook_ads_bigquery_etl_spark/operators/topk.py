@@ -19,13 +19,13 @@ def top_k_per_group(
     partition_cols: list[str],
     order_cols: list[Column | str],
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
-    """Keep the top ``k`` rows per group. Pass fully-specified
-    ``order_cols`` (including deterministic tie-breakers) — exact
-    result parity across engines requires a total order."""
+    """Keep the top ``k`` rows per group, numbered in ``rank``. Pass
+    fully-specified ``order_cols`` (including deterministic
+    tie-breakers) — exact result parity across engines requires a
+    total order."""
     w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )

@@ -38,14 +38,14 @@ def _bin_expr(col: str, cuts: list[float]) -> Column:
     return F.size(F.filter(arr, lambda x: x <= v)).cast("long")
 
 
-def z_value_binned(bins: list[Column], bits: int = BITS) -> Column:
+def z_value_binned(bins: list[Column]) -> Column:
     """Morton interleave of per-column bin ids: bit j of column i lands
     at position j·n_cols + i. Pure expression tree, codegen'd."""
     n = len(bins)
     terms = [
         F.shiftleft(F.shiftright(b, j).bitwiseAND(F.lit(1)), j * n + i)
         for i, b in enumerate(bins)
-        for j in range(bits)
+        for j in range(BITS)
     ]
     return reduce(lambda a, b: a.bitwiseOR(b), terms)
 
@@ -93,20 +93,19 @@ def write_zordered(
     path: str,
     zcols: list[str],
     n_files: int = 16,
-    bits: int = BITS,
-    fmt: str = "parquet",
 ) -> None:
-    """Rewrite ``df`` into ``n_files`` files ordered along the Morton
-    curve of ``zcols``: equi-depth bin each column (quantile-sketch cut
-    points — robust to skewed/non-integer distributions), interleave,
-    range-repartition on the z-value (contiguous, balanced curve
-    segments per file) + within-partition sort, so each file's parquet
-    min/max footer covers a tight hyper-rectangle of the key space."""
-    probs = [i / (1 << bits) for i in range(1, 1 << bits)]
+    """Rewrite ``df`` into ``n_files`` parquet files ordered along the
+    Morton curve of ``zcols``: equi-depth bin each column
+    (quantile-sketch cut points — robust to skewed/non-integer
+    distributions), interleave, range-repartition on the z-value
+    (contiguous, balanced curve segments per file) + within-partition
+    sort, so each file's parquet min/max footer covers a tight
+    hyper-rectangle of the key space."""
+    probs = [i / (1 << BITS) for i in range(1, 1 << BITS)]
     bins = [
         _bin_expr(c, df.approxQuantile(c, probs, 0.001)) for c in zcols
     ]
-    zv = z_value_binned(bins, bits)
+    zv = z_value_binned(bins)
     zdf = df.withColumn("__z", zv)
     # File assignment is computed from SKETCHED equi-depth cuts of the
     # z-value itself (same _bin_expr trick as the per-column bins),
@@ -144,6 +143,5 @@ def write_zordered(
         .sortWithinPartitions("__z")
         .drop("__z", "__file")
         .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )

@@ -45,7 +45,6 @@ from ..streaming import (
     rate_limit_token_bucket,
     read_event_stream,
     sessionize_stream,
-    transform_with_state_available,
     user_profile_stateful,
     user_running_totals,
     write_stream_to_warehouse,
@@ -285,26 +284,19 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite-state stateful operator (transformWithState where its
-    protobuf dependency exists, applyInPandasWithState fallback here —
-    see streaming/pipeline.user_profile_stateful): running totals plus
-    a per-event-type count map, per user. The LAST emission per user
+    """Composite-state stateful operator (applyInPandasWithState — see
+    streaming/pipeline.user_profile_stateful): running totals plus a
+    per-event-type count map, per user. The LAST emission per user
     (max_by on the monotone event count) must equal the batch per-user
-    profile — the oracle recomputes it as plain SQL.
-
-    transformWithState requires the RocksDB state store; the conf is
-    set only for this query's start and restored afterwards (the
-    provider is captured when the stream starts)."""
-    rocks = _ROCKSDB if transform_with_state_available() else {}
-    with scoped_conf(spark, rocks):
-        # non-finite values NULLed at the stream boundary (r11
-        # extremes sweep; see stream_running_totals)
-        stream = user_profile_stateful(
-            read_event_stream(spark, f"{sf_dir}/events.parquet").withColumn(
-                "value", cst.finite_or_null(F.col("value"))
-            )
+    profile — the oracle recomputes it as plain SQL."""
+    # non-finite values NULLed at the stream boundary (r11 extremes
+    # sweep; see stream_running_totals)
+    stream = user_profile_stateful(
+        read_event_stream(spark, f"{sf_dir}/events.parquet").withColumn(
+            "value", cst.finite_or_null(F.col("value"))
         )
-        tbl = _drain(stream, _qname("s_prof", sf_dir), "update")
+    )
+    tbl = _drain(stream, _qname("s_prof", sf_dir), "update")
     return tbl.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.round(F.max_by("total_value", "n_events"), 2).alias("total_value"),
@@ -935,7 +927,6 @@ def stream_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension must equal the batch groupBy exactly. Each version is a
     NEW directory (read-version N → write N+1) — never an in-place
     overwrite of the path being read."""
-    # fingerprint-guarded shared staging (rebuilds on fixture change)
     src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     work = materialize.scratch("s_dim_merge_")
     state = {"version": -1}
@@ -1059,7 +1050,6 @@ def watermark_lag_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Spark triggers purely to let the advanced watermark finalize
     state — carries 0. That empty batch appearing in the feed is
     itself the proof that no-data finalization ran."""
-    # fingerprint-guarded shared staging (rebuilds on fixture change)
     src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     # watermark-poisoning guard INSIDE the stream (r11 dates sweep):
     # the watermark tracks bounded rows; numInputRows stays a
@@ -1287,7 +1277,6 @@ def stream_two_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stream_dimension_merge`` / ``bloom_index_merge_maintenance``
     (delta-merged rollup/index), touching only the partitions each
     batch changes."""
-    # fingerprint-guarded shared staging (rebuilds on fixture change)
     src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     work = materialize.scratch("s_twotab_")
     fact_t = f"{work}/fact"
@@ -1471,7 +1460,6 @@ def stream_rocksdb_changelog_restart(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: state is bounded by watermark retention per (window, type)
     key; the upsert target stays a small dimension. The staged slices
     are shared with the other multi-batch streaming probes."""
-    # fingerprint-guarded shared staging (rebuilds on fixture change)
     staged = _staged_louter_src(spark, sf_dir)
     slice_files = sorted(
         glob.glob(os.path.join(staged, "part-*.parquet")),
@@ -1643,7 +1631,6 @@ def stream_bloom_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     candidate and true partition counts exact. Same portable hash as
     the batch bloom rows, so DuckDB reproduces everything; the only
     pinned value is the equality boolean."""
-    # fingerprint-guarded shared staging (rebuilds on fixture change)
     staged = _staged_louter_src(spark, sf_dir)
     work = materialize.scratch("s_bloomidx_")
     fact_dir = os.path.join(work, "fact")
@@ -1819,7 +1806,6 @@ def state_store_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       batch 4 reads 0 input rows yet still runs eviction for slice
       4's watermark — the flush batch, and the proof that state
       cleanup is driven by the watermark, not by data arrival."""
-    # fingerprint-guarded shared staging (rebuilds on fixture change)
     src = _slice_stream(spark, _staged_louter_src(spark, sf_dir))
     # watermark-poisoning guard INSIDE the stream (r11 dates sweep):
     # watermark and state track bounded rows; numInputRows stays a

@@ -125,16 +125,28 @@ def write_day_partitioned(
     return counts["rows"] - counts["rejected"], counts["rejected"]
 
 
+def clear_partition(path: str, partition_field: str, value: str) -> None:
+    """Delete the ``partition_field=value`` directory of the table at
+    ``path`` from the driver, without a Spark job. A missing table or
+    partition is a no-op."""
+    try:
+        ops, root = _path_ops(path)
+    except _FsUnavailable:
+        ops, root = _hadoop_ops(path), path
+    part = ops.join(root, f"{partition_field}={value}")
+    if ops.isdir(part):
+        ops.rmtree(part)
+
+
 def compact_partitions(
     spark: SparkSession,
     path: str,
     partition_field: str = "date",
     clustering_fields: list[str] | None = None,
-    fmt: str = "parquet",
     max_records_per_file: int | None = None,
 ) -> None:
-    """Small-file compaction for a day-partitioned table: rewrite each
-    partition's fragments into one clustered file.
+    """Small-file compaction for a day-partitioned parquet table:
+    rewrite each partition's fragments into one clustered file.
 
     Streaming foreachBatch sinks and frequent backfills fragment
     partitions into per-micro-batch files; at 100 TB the resulting
@@ -160,14 +172,11 @@ def compact_partitions(
     try:
         _path_ops(path)
     except _FsUnavailable:
-        df = spark.read.format(fmt).load(path)
         write_day_partitioned(
-            df,
+            spark.read.parquet(path),
             path,
             partition_field=partition_field,
             clustering_fields=clustering_fields,
-            mode="overwrite",
-            fmt=fmt,
             max_records_per_file=max_records_per_file,
         )
         return
@@ -176,7 +185,6 @@ def compact_partitions(
         path,
         partition_field=partition_field,
         clustering_fields=clustering_fields,
-        fmt=fmt,
         max_records_per_file=max_records_per_file,
     )
 
@@ -822,7 +830,6 @@ def compact_partitions_atomic(
     path: str,
     partition_field: str = "date",
     clustering_fields: list[str] | None = None,
-    fmt: str = "parquet",
     max_records_per_file: int | None = None,
 ) -> None:
     """Crash-safe compaction: the staged commit (protocol above) of the
@@ -842,28 +849,27 @@ def compact_partitions_atomic(
     def build() -> "list[DataFrame] | None":
         if not has_published_data(path, partition_field):
             return None
-        return [spark.read.format(fmt).load(path)]
+        return [spark.read.parquet(path)]
 
     _publish(
         spark, "compact_partitions_atomic", [path], build, partition_field,
-        fmt, clustering_fields, max_records_per_file,
+        clustering_fields, max_records_per_file,
     )
 
 
 def publish_tables_atomic(
     spark: SparkSession,
     writes: "list[tuple[DataFrame, str]]",
-    partition_field: str = "date",
-    fmt: str = "parquet",
 ) -> None:
     """Stage and atomically publish N (DataFrame → table path) writes
-    under one journal (protocol above). Local paths or one
-    atomic-rename filesystem shared by every target: the swap renames
-    trees staged under the primary table into each target."""
+    of date-partitioned parquet under one journal (protocol above).
+    Local paths or one atomic-rename filesystem shared by every target:
+    the swap renames trees staged under the primary table into each
+    target."""
     dfs = [df for df, _ in writes]
     _publish(
         spark, "publish_tables_atomic", [p for _, p in writes],
-        lambda: dfs, partition_field, fmt,
+        lambda: dfs, "date",
     )
 
 
@@ -873,7 +879,6 @@ def _publish(
     paths: "list[str]",
     build: "Callable[[], list[DataFrame] | None]",
     partition_field: str,
-    fmt: str,
     clustering_fields: list[str] | None = None,
     max_records_per_file: int | None = None,
 ) -> bool:
@@ -931,8 +936,6 @@ def _publish(
                 ops.join(ops.join(run_dir, f"t{i}"), "data"),
                 partition_field=partition_field,
                 clustering_fields=clustering_fields,
-                mode="overwrite",
-                fmt=fmt,
                 max_records_per_file=max_records_per_file,
             )
 
@@ -1224,7 +1227,6 @@ def read_published_or_empty(
     spark: SparkSession,
     path: str,
     like: DataFrame,
-    fmt: str = "parquet",
     partition_field: str = "date",
 ) -> DataFrame:
     """Read-your-writes for a day-partitioned table that may hold ZERO
@@ -1235,7 +1237,7 @@ def read_published_or_empty(
     wrote (or would write). Partition pruning and pushdown on the
     non-empty arm are the plain reader's (r10 empty sweep)."""
     if has_published_data(path, partition_field):
-        return spark.read.format(fmt).load(path)
+        return spark.read.parquet(path)
     return spark.createDataFrame([], like.schema)
 
 
@@ -1245,8 +1247,6 @@ def publish_tables_atomic_once(
     build: "Callable[[], list[DataFrame]]",
     meta_table: str,
     batch_id: int,
-    partition_field: str = "date",
-    fmt: str = "parquet",
 ) -> bool:
     """Exactly-once :func:`publish_tables_atomic` for REPLAYABLE
     callers (Structured Streaming ``foreachBatch``): the batch id is
@@ -1267,19 +1267,18 @@ def publish_tables_atomic_once(
     them eagerly."""
 
     def build_once() -> "list[DataFrame] | None":
-        if has_published_data(meta_table, partition_field):
+        if has_published_data(meta_table):
             last = (
-                spark.read.format(fmt).load(meta_table)
-                .agg(F.max("batch_id")).first()[0]
+                spark.read.parquet(meta_table).agg(F.max("batch_id")).first()[0]
             )
             if last is not None and int(last) >= int(batch_id):
                 return None  # replayed epoch: already published
         meta = spark.createDataFrame(
             [(int(batch_id),)], "batch_id bigint"
-        ).withColumn(partition_field, F.to_date(F.lit("1970-01-01")))
+        ).withColumn("date", F.to_date(F.lit("1970-01-01")))
         return [*build(), meta]
 
     return _publish(
         spark, "publish_tables_atomic_once", [*targets, meta_table],
-        build_once, partition_field, fmt,
+        build_once, "date",
     )

@@ -52,7 +52,9 @@ class CurrencyLayerReader(DataSourceReader):
         unsupported: list[Filter] = []
         for f in filters:
             if f.attribute[0] == "date" and isinstance(f, EqualTo):
-                self.since = self.until = str(f.value)
+                # intersect with the declared range, never widen it
+                self.since = max(self.since, str(f.value))
+                self.until = min(self.until, str(f.value))
             else:
                 unsupported.append(f)
         return unsupported

@@ -117,7 +117,10 @@ class FacebookInsightsReader(DataSourceReader):
         for f in filters:
             col = f.attribute[0]
             if col == "date_start" and isinstance(f, EqualTo):
-                self.since = self.until = str(f.value)
+                # intersect with the declared range: a day outside it
+                # plans no partition
+                self.since = max(self.since, str(f.value))
+                self.until = min(self.until, str(f.value))
                 if coarse_time:
                     unsupported.append(f)
             elif col == "date_start" and isinstance(f, In):

@@ -33,11 +33,10 @@ class TransportError(RuntimeError):
 def with_retries(
     fn: Callable[[], Any],
     attempts: int = 3,
-    base_delay_s: float = 0.05,
-    retryable: tuple[type[Exception], ...] = (TransportError,),
     sleep: Callable[[float], None] = time.sleep,
 ) -> Any:
-    """Run ``fn`` with bounded exponential backoff.
+    """Run ``fn`` with bounded exponential backoff (0.05 s, doubling)
+    on :class:`TransportError`; any other exception propagates at once.
 
     Replaces the reference's unrecoverable error paths (main.py:126-130
     logs-and-returns silently; main.py:183-186 re-raises on first
@@ -47,10 +46,10 @@ def with_retries(
     for i in range(attempts):
         try:
             return fn()
-        except retryable as e:  # noqa: PERF203
+        except TransportError as e:  # noqa: PERF203
             last = e
             if i < attempts - 1:
-                sleep(base_delay_s * (2**i))
+                sleep(0.05 * (2**i))
     raise TransportError(f"gave up after {attempts} attempts: {last}") from last
 
 

@@ -26,7 +26,6 @@ from .pipeline import (
     rate_limit_token_bucket,
     read_event_stream,
     sessionize_stream,
-    transform_with_state_available,
     user_profile_stateful,
     user_running_totals,
     write_stream_to_warehouse,
@@ -43,7 +42,6 @@ __all__ = [
     "rate_limit_token_bucket",
     "read_event_stream",
     "sessionize_stream",
-    "transform_with_state_available",
     "user_profile_stateful",
     "user_running_totals",
     "write_stream_to_warehouse",

@@ -300,22 +300,24 @@ EVENT_TIME_BOUND_SQL = (
 )
 
 
-def bound_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Filter to the sane event-time validity window (see module-level
-    rationale above). Map-only, applied BELOW withWatermark."""
-    c = F.col(ts_col)
+def bound_event_time(df: DataFrame) -> DataFrame:
+    """Filter ``ts`` to the sane event-time validity window (see
+    module-level rationale above). Map-only, applied BELOW
+    withWatermark."""
+    c = F.col("ts")
     return df.filter(
         (c >= F.lit(EVENT_TIME_LO).cast("timestamp"))
         & (c < F.lit(EVENT_TIME_HI).cast("timestamp"))
     )
 
 
-def daily_rollup(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def daily_rollup(events: DataFrame) -> DataFrame:
     """Tumbling 1-day windows per event_type — the streaming twin of
     the reference's day-grain ingest (``time_increment=1``,
-    reference main.py:180). Watermark bounds both lateness and state."""
+    reference main.py:180). A 1-day watermark bounds both lateness and
+    state."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -325,22 +327,20 @@ def daily_rollup(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     )
 
 
-def dedup_events(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def dedup_events(events: DataFrame) -> DataFrame:
     """Exactly-once repair for redelivered events: duplicates of
-    ``event_id`` arriving within the watermark are dropped, state is
-    evicted after it — the fix for the reference's at-least-once
+    ``event_id`` arriving within the 1-day watermark are dropped, state
+    is evicted after it — the fix for the reference's at-least-once
     streaming inserts (main.py:86-89, no insertId)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    return events.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(["event_id"])
 
 
-def sessionize_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 day"
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Per-user session windows (gap-based, built-in session_window —
-    no custom state needed): session start/end, event count, total
-    value. North-star extension; no reference artifact."""
+    no custom state needed, 1-day watermark): session start/end, event
+    count, total value. North-star extension; no reference artifact."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
@@ -365,7 +365,7 @@ _RUNNING_STATE = T.StructType(
 )
 
 
-def user_running_totals(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def user_running_totals(events: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     running event count / value total across micro-batches (the
     arbitrary-state API Spark offers where built-in windows don't fit
@@ -383,7 +383,7 @@ def user_running_totals(events: DataFrame, watermark: str = "1 day") -> DataFram
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -417,49 +417,23 @@ _PROFILE_STATE = T.StructType(
 )
 
 
-def transform_with_state_available() -> bool:
-    """``transformWithStateInPandas`` speaks protobuf to the JVM state
-    server (pyspark/sql/streaming/proto/StateMessage_pb2); without
-    ``google.protobuf`` installed the pre-init driver worker crashes
-    before ``init`` even runs. Probe once so callers can pick the API."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_profile_stateful(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def user_profile_stateful(events: DataFrame) -> DataFrame:
     """Per-user composite-state profile: running event count / value
     total / max value plus a per-event-type count map, updated per
     micro-batch, emitting the refreshed profile for every user seen in
-    the batch.
+    the batch (1-day watermark).
 
-    Two implementations of the same semantics, picked by
-    :func:`transform_with_state_available`:
-
-    - ``transformWithStateInPandas`` (Spark 4's arbitrary-state
-      successor): ValueState + a real MapState keyed by event_type.
-      Preferred at 100 TB — state lives in the RocksDB state store
-      (spillable, incrementally checkpointed; the caller must set the
-      provider conf), ValueState/MapState are point lookups rather
-      than the whole-row deserialize/reserialize of the old API, and
-      per-state TTL is available when profiles must age out. Needs
-      ``google.protobuf`` (its state-server wire protocol).
-    - ``applyInPandasWithState`` fallback (this container lacks
-      protobuf): the map lives as sorted parallel arrays inside the
-      single state struct. Same output, coarser state granularity —
-      each update rewrites the whole per-user row, fine while the
-      per-user type set stays small (bounded by the event-type
-      vocabulary, not the stream length).
+    Built on ``applyInPandasWithState``: the map lives as sorted
+    parallel arrays inside the single state struct, so each update
+    rewrites the whole per-user row — fine while the per-user type set
+    stays small (bounded by the event-type vocabulary, not the stream
+    length). Spark 4's ``transformWithStateInPandas`` would keep a
+    real MapState keyed by event_type in the RocksDB state store, but
+    it speaks protobuf to the JVM state server and needs
+    ``google.protobuf``; it returns as the one path once that package
+    is part of the runtime.
     """
-    if not transform_with_state_available():
-        return _user_profile_aipws(events, watermark)
-    return _user_profile_tws(events, watermark)
 
-
-def _user_profile_aipws(events: DataFrame, watermark: str) -> DataFrame:
     def update(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         if state.exists:
             n, total, maxv, names, counts = state.get
@@ -495,7 +469,7 @@ def _user_profile_aipws(events: DataFrame, watermark: str) -> DataFrame:
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -503,65 +477,6 @@ def _user_profile_aipws(events: DataFrame, watermark: str) -> DataFrame:
             stateStructType=_PROFILE_STATE,
             outputMode="update",
             timeoutConf="NoTimeout",
-        )
-    )
-
-
-def _user_profile_tws(events: DataFrame, watermark: str) -> DataFrame:
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _Profile(StatefulProcessor):
-        # local subclass: cloudpickle ships it by value; the base class
-        # resolves from pyspark itself, which workers always have
-        def init(self, handle) -> None:
-            self._agg = handle.getValueState("agg", "n long, total double, maxv double")
-            self._types = handle.getMapState("types", "event_type string", "n long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            # same data-seeded max as the aipws arm (r13 operator
-            # review): a 0.0 seed misreported all-negative users
-            n, total, maxv = (
-                self._agg.get() if self._agg.exists() else (0, 0.0, None)
-            )
-            for pdf in rows:
-                vals = pdf["value"].fillna(0.0)
-                n += len(pdf)
-                total += float(vals.sum())
-                if len(vals):
-                    m = float(vals.max())
-                    maxv = m if maxv is None else max(maxv, m)
-                for et, cnt in pdf.groupby("event_type").size().items():
-                    prev = (
-                        self._types.getValue((et,))[0]
-                        if self._types.containsKey((et,))
-                        else 0
-                    )
-                    self._types.updateValue((et,), (prev + int(cnt),))
-            if maxv is None:  # unreachable: handleInputRows carries rows
-                maxv = 0.0
-            self._agg.update((n, total, maxv))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "n_types": [n_types],
-                    "max_value": [maxv],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Profile(),
-            outputStructType=_PROFILE_OUT,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 
@@ -587,12 +502,10 @@ def write_stream_to_warehouse(
     stream_df: DataFrame,
     path: str,
     checkpoint: str,
-    partition_field: str = "date",
-    clustering_fields: list[str] | None = None,
 ) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
     """foreachBatch into the exactly-once day-partitioned sink: each
     micro-batch dynamically overwrites only the
-    ``(day, __sink_batch=batch_id)`` sub-partitions it carries, so a
+    ``(date, __sink_batch=batch_id)`` sub-partitions it carries, so a
     checkpoint-replayed batch rewrites exactly its own slice
     (idempotent — end-to-end exactly-once without a transactional
     sink) while batches that arrive LATER for the same day land in
@@ -616,32 +529,26 @@ def write_stream_to_warehouse(
         write_day_partitioned(
             batch_df.withColumn("__sink_batch", F.lit(batch_id)),
             path,
-            partition_field=[partition_field, "__sink_batch"],
-            clustering_fields=clustering_fields,
+            partition_field=["date", "__sink_batch"],
         )
 
     return _start(stream_df, body=write_batch, checkpoint=checkpoint)
 
 
-def join_event_streams(
-    left: DataFrame,
-    right: DataFrame,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def join_event_streams(left: DataFrame, right: DataFrame, within: str = "1 hour") -> DataFrame:
     """Stream-stream inner join with event-time bounds — the funnel
     primitive (view → purchase within the attribution window) as a
     true two-stream join, not a batch afterthought.
 
-    Both sides carry a watermark and the join condition bounds
+    Both sides carry a 2-hour watermark and the join condition bounds
     ``right.ts`` to [left.ts, left.ts + within]: Spark can then expire
     buffered rows once the watermark passes their join window, so
     state is O(arrival rate × (watermark + within)) per side —
     independent of stream length. Without the time bound the state
     store would have to keep EVERY row forever; the bound is what
     makes the operator viable at 100 TB/day."""
-    a = left.alias("a").withWatermark("ts", watermark)
-    b = right.alias("b").withWatermark("ts", watermark)
+    a = left.alias("a").withWatermark("ts", "2 hours")
+    b = right.alias("b").withWatermark("ts", "2 hours")
     cond = F.expr(
         "a.user_id = b.user_id AND b.ts >= a.ts "
         f"AND b.ts <= a.ts + interval {within}"
@@ -819,18 +726,14 @@ _PARTIAL_STATE = T.StructType(
 )
 
 
-def partial_session_flush(
-    events: DataFrame,
-    idle_timeout_ms: int = 1,
-    watermark: str = "1 day",
-) -> DataFrame:
+def partial_session_flush(events: DataFrame) -> DataFrame:
     """PARTIAL-SESSION EVICTION on ProcessingTimeTimeout — the one
     stateful-timeout shape the engine had not exercised (round-6
     slate; EventTimeTimeout lives in rate_limit_token_bucket, session
     windows in sessionize_stream). Per user it accumulates an open
     session fragment (event count + value sum); every batch WITH data
     for the key emits the refreshed running fragment (``flushed`` =
-    false) and re-arms a processing-time deadline. A key that stays
+    false) and re-arms a 1 ms processing-time deadline. A key that stays
     idle past the deadline is flushed from the TIMEOUT branch — the
     fragment is emitted once more with ``flushed`` = true and the
     state REMOVED, so per-key state lives only while the key is hot:
@@ -876,7 +779,7 @@ def partial_session_flush(
         n += len(pdf)
         v += float(pdf["value"].sum())
         state.update((n, v))
-        state.setTimeoutDuration(idle_timeout_ms)
+        state.setTimeoutDuration(1)
         yield pd.DataFrame(
             {
                 "user_id": [key[0]],
@@ -887,7 +790,7 @@ def partial_session_flush(
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,

@@ -48,7 +48,8 @@ for name in sys.argv[1:] or list(O):
 
 # 3. ETL write-path probe: both fixture days through the runner and
 # the fixture connector, twice (exactly-once + quarantine + day
-# partitions); the Observation counts must match the landed rows
+# partitions); the Observation counts must match the landed rows, and
+# the quarantine side table the rejected rows, after each pass
 from facebook_ads_bigquery_etl_spark.etl.runner import handle_event
 
 wh = tempfile.mkdtemp()
@@ -63,10 +64,14 @@ try:
         assert written == landed, f"observed {written} != landed {landed}"
         return landed, sum(r.rows_quarantined for r in res)
 
+    def side_rows():
+        return spark.read.parquet(os.path.join(wh, "quarantine", "facebook_stat")).count()
+
     n1, nq = load()
-    side = spark.read.parquet(os.path.join(wh, "quarantine", "facebook_stat"))
-    assert side.count() == nq, f"quarantine table {side.count()} != observed {nq}"
+    assert side_rows() == nq, f"quarantine table {side_rows()} != observed {nq}"
     n2, nq2 = load()
+    # the side table holds each run date once, like the main table
+    assert side_rows() == nq2, f"quarantine table after rerun {side_rows()} != {nq2}"
     parts = [d for d in os.listdir(os.path.join(wh, "facebook_stat")) if d.startswith("date=")]
     assert n1 == n2, f"exactly-once broken: {n1} != {n2}"
     assert nq == nq2 == 1, f"quarantine: {nq}, rerun {nq2}"

@@ -171,6 +171,33 @@ class TestEndToEndRunner:
         # quarantined rows are stored as cast: the failed 'oops' cast is NULL
         assert row["clicks"] is None and row["impressions"] == 100
 
+    def test_rerun_keeps_one_copy_of_quarantined_rows(self, spark, tmp_path, monkeypatch):
+        """The side table holds each run date once, like the main table:
+        a rerun replaces the day's rejected rows, and a rerun that
+        rejects nothing clears them."""
+        from pyspark.sql import functions as F
+
+        from facebook_ads_bigquery_etl_spark.etl import runner
+
+        event = {"data": "Z2V0X2ZhY2Vib29r", "attributes": {"date": "2025-01-02"}}
+        side = tmp_path / "quarantine" / "facebook_stat"
+        for _ in range(2):
+            res = handle_event(spark, event, str(tmp_path), transport="fixture")
+            assert res.rows_quarantined == 1
+        q = spark.read.parquet(str(side))
+        assert q.count() == 1
+        assert [str(r["_quarantined_on"]) for r in q.collect()] == ["2025-01-02"]
+
+        transform = runner.transform_insights
+        monkeypatch.setattr(
+            runner,
+            "transform_insights",
+            lambda raw: transform(raw).withColumn("clicks", F.coalesce("clicks", F.lit(0))),
+        )
+        res = handle_event(spark, event, str(tmp_path), transport="fixture")
+        assert (res.rows_written, res.rows_quarantined) == (4, 0)
+        assert not (side / "_quarantined_on=2025-01-02").exists()
+
     @pytest.mark.parametrize("day, transport", [
         ("2030-06-01", "fixture"),  # a day the fixture has no rows for
         ("2025-01-02", "synthetic:0"),

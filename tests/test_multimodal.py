@@ -16,13 +16,6 @@ from facebook_ads_bigquery_etl_spark.operators import multimodal as mm
 from tests.conftest import SF_SMOKE
 
 
-def png_decode_pure(data: bytes):
-    """The stdlib-only decode path, bypassing the native fast path, so
-    branch equality (PIL output == stdlib output) is assertable
-    whenever PIL is installed."""
-    return mm.png_decode(data, _pure=True)
-
-
 @pytest.fixture(scope="module")
 def media(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(120)
@@ -103,29 +96,18 @@ class TestPngCodec:
             + chunk(b"IEND", b"")
         )
         assert mm.png_decode(payload) is None
-        assert png_decode_pure(payload) is None
 
     def test_native_fast_path_seam(self):
-        """The feature-detected native branch (PIL when present) must
-        be byte-identical to the stdlib unfilter on the same payloads,
-        and the dispatching decode must agree with the pure path
-        regardless of which branch actually ran. Where PIL is absent
-        (this container) the probe exercises the fallback arm; where
-        it exists, the equality covers the PIL arm too."""
+        """The stdlib decoder (the one PNG pixel path) round-trips every
+        filter type the encoder cycles through and rejects a payload
+        with a corrupted chunk."""
         for d in (0, 7, 57, 300):
             w, h = mm.image_dims(d)
             rgb = mm.image_rgb(d, w, h)
             payload = mm.png_encode(w, h, rgb)
-            assert png_decode_pure(payload) == (w, h, rgb)
-            assert mm.png_decode(payload) == png_decode_pure(payload)
-        # identical reject surface on both paths: validation happens
-        # before the branch, so malformed payloads never reach PIL
+            assert mm.png_decode(payload) == (w, h, rgb)
         bad = payload[:30] + bytes([payload[30] ^ 0xFF]) + payload[31:]
-        assert mm.png_decode(bad) is None and png_decode_pure(bad) is None
-        try:
-            import PIL  # noqa: F401
-        except ImportError:
-            pytest.skip("PIL absent in this environment: fallback arm proven")
+        assert mm.png_decode(bad) is None
 
 
 class TestExtractFeatures:
@@ -472,9 +454,6 @@ class TestAdviceR4Hardening:
         short_raw = self._rebuild_png(good, lambda raw: raw[:-1])
         for bad in (bad_filter, short_raw):
             assert bad != good
-            assert png_decode_pure(bad) is None
-            # the dispatching decode must agree: stdlib validation runs
-            # BEFORE the native branch, so PIL never sees these
             assert mm.png_decode(bad) is None
         # sanity: the rebuild helper itself round-trips unmutated input
         assert mm.png_decode(self._rebuild_png(good, lambda raw: raw)) == (

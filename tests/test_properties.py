@@ -929,3 +929,74 @@ def test_one_conf_scope():
     library line may ``conf.unset(`` a key."""
     offenders = _library_lines_outside("session.py", "scoped_conf", "conf.unset(")
     assert not offenders, offenders
+
+
+def test_every_option_is_passed():
+    """Every parameter default of a library ``def`` (methods included)
+    is passed by some call in the library, bench.py,
+    __spark_entry__.py, perfbench/, scripts/ or tests/: by keyword, by
+    position (``self``/``cls`` not counted; a class's ``__init__`` is
+    called by the class name) or through ``*args``/``**kwargs``. A call
+    matches every def sharing its callee's last name. An option that no
+    call passes has one value in use, and that value is a constant."""
+    import ast
+    import collections
+    import pathlib
+
+    import facebook_ads_bigquery_etl_spark as lib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    lib_root = pathlib.Path(lib.__file__).parent
+    sources = [
+        *lib_root.rglob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+        *(repo / "perfbench").rglob("*.py"),
+        *(repo / "scripts").rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+    ]
+    calls = collections.defaultdict(list)
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                calls[f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)].append(node)
+
+    def passes(call: ast.Call, name: str, index: int | None) -> bool:
+        return (
+            any(k.arg in (None, name) for k in call.keywords)
+            or any(isinstance(a, ast.Starred) for a in call.args)
+            or (index is not None and index < len(call.args))
+        )
+
+    offenders = []
+    for path in sorted(lib_root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            cls = owner.get(node)
+            cls = cls if isinstance(cls, ast.ClassDef) else None
+            args = node.args
+            positional = [a.arg for a in args.posonlyargs + args.args]
+            if cls and positional[:1] in (["self"], ["cls"]):
+                positional = positional[1:]
+            callers = calls[node.name] + (
+                calls[cls.name] if cls and node.name == "__init__" else []
+            )
+            options = [
+                (name, i)
+                for i, name in enumerate(positional)
+                if i >= len(positional) - len(args.defaults)
+            ] + [
+                (a.arg, None)
+                for a, d in zip(args.kwonlyargs, args.kw_defaults)
+                if d is not None
+            ]
+            offenders += [
+                f"{path.relative_to(lib_root)}:{node.lineno} {node.name}({name})"
+                for name, i in options
+                if not any(passes(c, name, i) for c in callers)
+            ]
+    assert not offenders, f"{len(offenders)} options no call passes: {offenders}"

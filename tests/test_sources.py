@@ -22,7 +22,10 @@ from facebook_ads_bigquery_etl_spark.sources.transport import (
     TransportError,
     with_retries,
 )
-from facebook_ads_bigquery_etl_spark.schemas import SCHEMA_FACEBOOK_RAW
+from facebook_ads_bigquery_etl_spark.schemas import (
+    SCHEMA_EXCHANGE_RATE,
+    SCHEMA_FACEBOOK_RAW,
+)
 
 
 def _reader(**options) -> FacebookInsightsReader:
@@ -109,6 +112,11 @@ class TestPredicatePushdown:
         rest = r.pushFilters([EqualTo(("date_start",), "2025-06-15")])
         assert rest == []  # fully handled API-side
         assert len(r.partitions()) == 2  # 2 accounts × 1 day
+
+    def test_date_equality_outside_range_plans_nothing(self):
+        r = _reader(accounts="a", since="2025-01-01", until="2025-01-03")
+        assert r.pushFilters([EqualTo(("date_start",), "2025-02-01")]) == []
+        assert r.partitions() == []  # narrowed, never widened past until
 
     def test_range_bounds_narrow_grid(self):
         r = _reader(accounts="a", since="2025-01-01", until="2025-12-31")
@@ -210,6 +218,17 @@ class TestCurrencyLayerReader:
     def test_error_envelope_raises_with_info(self, monkeypatch):
         with pytest.raises(TransportError, match="invalid access key"):
             read_envelope(monkeypatch, CURRENCYLAYER_ERR)
+
+    @pytest.mark.parametrize("day, want", [
+        ("2025-01-02", ["2025-01-02"]),
+        ("2025-02-01", []),
+    ], ids=["inside", "outside"])
+    def test_date_equality_intersects_range(self, day, want):
+        r = CurrencyLayerReader(
+            SCHEMA_EXCHANGE_RATE, {"since": "2025-01-01", "until": "2025-01-03"}
+        )
+        assert r.pushFilters([EqualTo(("date",), day)]) == []
+        assert [p.date for p in r.partitions()] == want
 
 
 class TestEndToEnd:
